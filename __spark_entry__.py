@@ -129,38 +129,6 @@ R12_CHANGED = [
     "doc_bpe_token_count",
 ]
 
-# Spark plans that changed in the r12 OPTIMIZATION passes (persist of
-# dual-referenced intermediates, SQL-template expression blocks, fused
-# argmax pivot, Hash-Min round fusion, two-lane pipeline overlap,
-# shared quality pass): their pre-optimization floors describe a plan
-# that no longer exists, so they start fresh (ADVICE r11).
-R12_PLAN_CHANGED = [
-    "statements_annual", "statements_annual_v1", "statements_annual_v2",
-    "ratios_annual", "screener", "ratios_lookup",
-    "doc_simhash", "doc_simhash_neardup",
-    "doc_minhash_lsh_dedup", "doc_minhash_jaccard_est",
-    "doc_dedup_clusters", "doc_dedup_keep_best", "doc_corpus_build",
-    "doc_semantic_dedup", "doc_editdist_clusters",
-    "emb_ann_topk", "emb_prefix_rerank_topk", "emb_cosine_neardup",
-    "emb_lsh_ann_topk", "emb_lsh_neardup", "emb_knn_graph",
-    "emb_knn_refine", "emb_ivf_ann_topk", "emb_ivf_pq_ann_topk",
-    "emb_pq_ann_topk", "emb_hard_negatives", "emb_hard_negatives_ann",
-    "emb_dedup_clusters", "emb_ann_recall", "emb_ann_recall_sampled",
-    "emb_ivf_recall", "emb_ivfpq_recall", "emb_nearest_centroid",
-    "emb_kmeans_iter",
-    "image_neardup", "image_dedup_clusters",
-    "audio_neardup", "audio_dedup_clusters",
-]
-
-# bench.py reads this to reset per-query floors ONCE when a plan
-# changes (new queries have no floor). Epoch r12b: the optimization
-# passes landed after the first r12 bench run had already consumed the
-# "r12" epoch, so the changed set re-fires under a fresh key.
-FLOOR_RESET = {
-    "epoch": "r12b",
-    "queries": sorted(set(R12_NEW) | set(R12_PLAN_CHANGED)),
-}
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full reference pipeline (ingest-shaped facts ->

@@ -51,26 +51,6 @@ def priority_dedup(
     return latest_wins(df, keys, [priority, *order_by])
 
 
-def latest_wins_argmax(
-    df: DataFrame,
-    keys: Sequence[str],
-    value_col: str,
-    order_key: Column,
-) -> DataFrame:
-    """Argmax form of :func:`latest_wins` for when only one payload column
-    is needed: ``groupBy(keys).agg(max_by(value, order_key))``.
-
-    Identical winner to the window form when ``order_key`` encodes the
-    same total order ASCENDING (max = the row the window's DESC order
-    ranks first). Physically far cheaper at scale: hash aggregate with
-    map-side partial combine -- no per-partition sort, one shuffle whose
-    payload is already reduced map-side.
-    """
-    return df.groupBy(*keys).agg(
-        F.max_by(F.col(value_col), order_key).alias(value_col)
-    )
-
-
 def desc_nulls_last_key(col: Column, floor: Column) -> Column:
     """Build an ascending argmax key equivalent to ``col DESC NULLS LAST``:
     NULL sorts below every real value (replaced by ``floor``)."""

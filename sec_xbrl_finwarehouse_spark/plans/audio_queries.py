@@ -83,9 +83,9 @@ def q_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clip pairs by fingerprint Hamming distance, banded for
     scale: (band, 9-bit key) equi-join candidates, exact
-    ``bit_count(xor) <= AUDIO_HAM_MAX`` (= 6) verification, Hamming filter
-    BEFORE the pair distinct (survivor-sized shuffle). Lossless by
-    pigeonhole; NULL fingerprints (too-short clips) never band."""
+    ``bit_count(xor) <= AUDIO_HAM_MAX`` (= AUDIO_BANDS - 1) verification,
+    Hamming filter BEFORE the pair distinct (survivor-sized shuffle).
+    Lossless by pigeonhole; NULL fingerprints (too-short clips) never band."""
     # persisted: both self-join sides + the guide §4.4 pushdown
     # duplication of the Arrow fingerprint kernel (see the image twin).
     # The banded join is the image family's banded_hamming_pairs (this

@@ -1128,481 +1128,6 @@ WHERE rank <= {TOPK}
 """
 
 
-# ---- IVF as a STORED index (pre-partitioned by cell) -----------------------
-
-def build_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
-    """Materialize the IVF layout the q_emb_ivf_ann_topk docstring
-    promises at 100 TB: the corpus written ONCE, hash-partitioned on its
-    coarse-quantizer cell (``partitionBy("cell")``), plus the centroid
-    table beside it. After this, every ANN query touches only its NPROBE
-    probed cells -- partition pruning does the skipping, no full-corpus
-    scan ever again. This is the FAISS IVF-Flat build step re-expressed
-    as a parquet layout decision."""
-    e = _embeddings(spark, sf_dir)
-    cent = _centroids(e)
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), "emb"
-    )
-    # assignment via the one-row-broadcast projection (_nearest_cells):
-    # the index build is the ONE job that must touch the whole corpus,
-    # so it must not use the crossJoin + per-vector window form that
-    # multiplies and shuffles corpus x n_cells rows
-    assigned = (
-        corpus.crossJoin(_cells_one_row(cent))
-        .select("neighbor_id", "emb",
-                _nearest_cells(F.col("emb"), 1)[0]["cell"].alias("cell"))
-    )
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{index_dir}/corpus"
-    )
-    cent.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-
-
-def append_ivf_index(
-    spark: SparkSession, index_dir: str, new_vectors: DataFrame
-) -> int:
-    """INCREMENTAL index maintenance: add ``new_vectors(neighbor_id,
-    emb)`` to a stored IVF index WITHOUT rebuilding it -- the routine a
-    production vector store runs per ingest batch while
-    :func:`build_ivf_index` runs only when the quantizer is re-trained.
-
-    The stored centroid table is the FIXED trained quantizer (FAISS
-    semantics: appends never move centroids -- retraining is an explicit
-    rebuild, because silently drifting centroids would re-route queries
-    away from previously indexed vectors). New vectors are assigned via
-    the same one-row-broadcast projection as the build, then appended
-    to the cell-partitioned corpus: parquet ``append`` only ADDS files
-    under the touched ``cell=...`` directories, so untouched cells --
-    at 100 TB, nearly all of them -- are not read, not rewritten, and
-    keep serving concurrent probes from their existing files.
-
-    Idempotence is cell-pruned: already-present neighbor_ids are
-    dropped by an anti-join against ONLY the touched cells' stored ids
-    (partition pruning keeps the re-append guard batch-sized, never
-    index-sized), so replaying an ingest batch is a no-op -- the same
-    at-least-once-to-exactly-once contract as sinks.append_if_absent.
-    Returns the number of vectors actually appended. The touched-cell
-    list is a driver-side collect, bounded by the centroid count --
-    metadata-sized, like the partition lists in sinks.py."""
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    # persist the ASSIGNMENT, the subplan every downstream step reads:
-    # the touched-cell collect, the anti-join, and the write would
-    # otherwise each re-run the batch scan + centroid projection
-    assigned = (
-        new_vectors.select("neighbor_id", "emb")
-        .crossJoin(_cells_one_row(cent))
-        .select("neighbor_id", "emb",
-                _nearest_cells(F.col("emb"), 1)[0]["cell"].alias("cell"))
-        .persist()
-    )
-    try:
-        touched = [
-            r["cell"] for r in assigned.select("cell").distinct().collect()
-        ]
-        if not touched:
-            return 0
-        stored_ids = (
-            spark.read.parquet(f"{index_dir}/corpus")
-            .filter(F.col("cell").isin(touched))
-            .select("cell", "neighbor_id")
-        )
-        # BREAK THE LINEAGE before the append: the novel set is derived
-        # from a scan of {index_dir}/corpus -- the same path the write
-        # below appends to. A persist() alone is advisory: on executor
-        # loss a recomputation would re-run the anti-join and re-list
-        # the corpus INCLUDING files this very write already committed,
-        # silently shrinking the batch mid-write. localCheckpoint
-        # (eager) materializes the rows and truncates the plan, so no
-        # recomputation can ever re-read the mutating path.
-        novel = assigned.join(
-            stored_ids, ["cell", "neighbor_id"], "left_anti"
-        ).localCheckpoint(eager=True)
-        n = novel.count()
-        if n:
-            novel.write.mode("append").partitionBy("cell").parquet(
-                f"{index_dir}/corpus"
-            )
-        return n
-    finally:
-        assigned.unpersist()
-
-
-def build_ivf_index_versioned(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> None:
-    """The IVF layout written THROUGH THE VERSIONED SINK instead of
-    plain parquet: corpus assignments go through
-    ``sinks.upsert_partitioned`` (hive-partitioned on cell, so probes
-    keep their dynamic partition pruning) and the centroid table
-    through ``sinks.write_replace`` -- which buys the index everything
-    the storage layer gives marts: atomic publish (a probe never sees a
-    half-written index), snapshot isolation (in-flight probes pin the
-    version they started on while an append publishes), retained-
-    version TIME TRAVEL (probe the index as it was before an ingest
-    batch -- the debugging/repro read no plain-parquet index can
-    offer), restore/clone, and OCC against concurrent writers. This is
-    the upgrade path streaming/ivf_ingest.py's crash-window caveat
-    names: the torn-batch window of plain appends disappears because a
-    version is all-or-nothing."""
-    from .. import sinks
-
-    e = _embeddings(spark, sf_dir)
-    cent = _centroids(e)
-    assigned = (
-        e.filter(F.col("vec_id") >= N_QUERIES)
-        .select(F.col("vec_id").alias("neighbor_id"), "emb")
-        .crossJoin(_cells_one_row(cent))
-        .select("neighbor_id", "emb",
-                _nearest_cells(F.col("emb"), 1)[0]["cell"].alias("cell"))
-    )
-    sinks.write_replace(cent, f"{index_dir}/centroids")
-    sinks.upsert_partitioned(
-        spark, f"{index_dir}/corpus", assigned,
-        keys=["cell", "neighbor_id"], partition_col="cell", audit=False,
-    )
-
-
-def append_ivf_index_versioned(
-    spark: SparkSession, index_dir: str, new_vectors: DataFrame
-) -> int:
-    """Incremental append to a VERSIONED IVF index: assignment under
-    the fixed stored quantizer (same FAISS semantics as
-    :func:`append_ivf_index`), then one ``upsert_partitioned`` commit
-    -- untouched cell partitions are hard-linked into the new version
-    (zero copy, zero read), touched cells are merged by (cell,
-    neighbor_id) key so replays are idempotent BY KEY, and the pointer
-    swap publishes atomically (no torn-batch window at all -- the
-    difference from the plain-parquet appender). Returns the number of
-    cell partitions rewritten.
-
-    Split-aware: on an :func:`optimize_ivf_index`-ed index the
-    by-key merge alone cannot see an id stored under a SUB-cell (the
-    quantizer assigns the parent cell), so replayed ids in split
-    parents are dropped by a (quantizer-cell, id) anti-join against
-    only the touched parents' storage cells -- partition-pruned,
-    batch-sized, same contract as the plain appender's guard -- and
-    the version's cell map is carried forward so the commit never
-    loses the split layout. The cell map, the anti-join's stored side,
-    and the publish are all PINNED to one version: the map is read as
-    of the version the upsert commits against (``occ=True``), so a
-    concurrent :func:`optimize_ivf_index` publish surfaces as a
-    retryable ConcurrentWriteError instead of a torn merge that could
-    re-add replayed ids or carry a stale (pre-split) map forward."""
-    import json
-    import os as _os
-
-    from .. import sinks
-
-    path = f"{index_dir}/corpus"
-    cur = sinks.current_data_dir(path)
-    pinned = _os.path.basename(cur) if cur else None
-    cent = sinks.read_table(spark, f"{index_dir}/centroids")
-    assigned = (
-        new_vectors.select("neighbor_id", "emb")
-        .crossJoin(_cells_one_row(cent))
-        .select("neighbor_id", "emb",
-                _nearest_cells(F.col("emb"), 1)[0]["cell"].alias("cell"))
-    )
-    cellmap = _ivf_cellmap(path, version=pinned) if pinned else {}
-    extra = {IVF_CELLMAP_META: json.dumps(cellmap)} if cellmap else None
-    if cellmap:
-        batch = assigned.persist()
-        try:
-            touched = [
-                r["cell"]
-                for r in batch.select("cell").distinct().collect()
-            ]
-            split_touched = [p for p in touched if p in cellmap]
-            if split_touched:
-                storage = [
-                    sc for p in split_touched
-                    for sc in (_ivf_storage_cells(p, cellmap) + [p])
-                ]
-                stored_pairs = (
-                    sinks.read_table(spark, path, version=pinned)
-                    .filter(F.col("cell").isin(storage))
-                    .select(_ivf_parent(F.col("cell")).alias("cell"),
-                            "neighbor_id")
-                )
-                # localCheckpoint: same mutating-path lineage-break
-                # rationale as the plain appender
-                batch = batch.join(
-                    stored_pairs, ["cell", "neighbor_id"], "left_anti"
-                ).localCheckpoint(eager=True)
-            return sinks.upsert_partitioned(
-                spark, path, batch,
-                keys=["cell", "neighbor_id"], partition_col="cell",
-                audit=False, manifest_extra=extra,
-                occ=pinned if pinned else True,
-            )
-        finally:
-            assigned.unpersist()
-    return sinks.upsert_partitioned(
-        spark, path, assigned,
-        keys=["cell", "neighbor_id"], partition_col="cell", audit=False,
-        manifest_extra=extra, occ=pinned if pinned else True,
-    )
-
-
-# ---- IVF cell maintenance: split/rebalance hot cells -----------------------
-
-# storage-cell encoding for split cells: quantizer cell p's sub-cell s
-# is stored under (p + 1) * IVF_SPLIT_BASE + s (the +1 keeps parent
-# 0's sub-cells out of the quantizer-label range). Quantizer labels
-# are far below the base, so parent(storage) = (storage >> 12) - 1
-# for storage >= base, identity otherwise -- pure arithmetic, no
-# lookup table in the data path.
-IVF_SPLIT_BASE = 4096
-# the parent decode shifts by log2(base): DERIVED, so raising the base
-# for a wider quantizer (the optimize guard's advertised remedy) cannot
-# leave a stale hardcoded shift silently mis-decoding parents
-_IVF_SPLIT_SHIFT = IVF_SPLIT_BASE.bit_length() - 1
-assert IVF_SPLIT_BASE == 1 << _IVF_SPLIT_SHIFT, \
-    "IVF_SPLIT_BASE must be a power of two (shift-decoded)"
-IVF_CELLMAP_META = "_ivf_cellmap.json"
-
-
-def _ivf_parent(cell_col):
-    """Quantizer cell of a storage cell (identity for unsplit cells)."""
-    return F.when(
-        cell_col >= IVF_SPLIT_BASE,
-        F.shiftright(cell_col, _IVF_SPLIT_SHIFT) - 1,
-    ).otherwise(cell_col)
-
-
-def _ivf_cellmap(path: str, version: str | None = None) -> dict[int, int]:
-    """The quantizer-cell -> n_subcells map committed atomically with
-    the corpus version (empty for a never-optimized index)."""
-    import json
-
-    from .. import sinks
-
-    raw = sinks.read_version_meta(path, IVF_CELLMAP_META, version=version)
-    return {int(k): int(v) for k, v in json.loads(raw).items()} if raw \
-        else {}
-
-
-def _ivf_storage_cells(parent: int, cellmap: dict[int, int]) -> list[int]:
-    n = cellmap.get(parent, 1)
-    if n <= 1:
-        return [parent]
-    return [(parent + 1) * IVF_SPLIT_BASE + s for s in range(n)]
-
-
-def _expand_probe_cells(
-    spark: SparkSession, probes: DataFrame, cellmap: dict[int, int]
-) -> DataFrame:
-    """Rewrite a probe list's quantizer cells into STORAGE cells: split
-    parents fan out to their sub-cells (plus the parent itself, which
-    post-split appends repopulate); unsplit cells pass through. The
-    mapping is centroid-count-sized -- a broadcast join, so the stored
-    scan's dynamic partition pruning sees the exact storage-cell
-    list."""
-    if not cellmap:
-        return probes
-    rows = []
-    for p, n in cellmap.items():
-        rows.append((p, p))  # appends land in the parent dir post-split
-        for sc in _ivf_storage_cells(p, cellmap):
-            if sc != p:
-                rows.append((p, sc))
-    mapdf = spark.createDataFrame(rows, "parent int, storage int")
-    return (
-        probes.join(
-            F.broadcast(mapdf), probes["cell"] == mapdf["parent"], "left"
-        )
-        .withColumn("cell", F.coalesce("storage", "cell"))
-        .drop("parent", "storage")
-    )
-
-
-def optimize_ivf_index(
-    spark: SparkSession, index_dir: str, max_cell_rows: int
-) -> int:
-    """Split/rebalance HOT cells of a versioned IVF index:
-    :func:`append_ivf_index_versioned` grows a skew-heavy quantizer
-    cell without bound (one giant inverted list = one straggler task
-    and one giant file per probe touching it), so this maintenance
-    pass re-shards any quantizer cell holding more than
-    ``max_cell_rows`` vectors into ceil(n / max) hash-assigned
-    sub-cells (``xxhash64(neighbor_id) mod n_subs`` -- balanced and
-    deterministic). The split is TRANSPARENT to search: the quantizer
-    is untouched, probes expand a split cell to the union of its
-    sub-cells (:func:`_expand_probe_cells`), and that union holds
-    exactly the parent's rows -- so probe results are BIT-IDENTICAL
-    before and after (asserted in tests/test_ivf_index.py). Semantic
-    re-clustering of a hot region is a quantizer retrain, i.e. an
-    explicit rebuild -- same FAISS split of responsibilities as
-    append's fixed-quantizer contract.
-
-    Runs under the versioned sink via :func:`sinks.replace_where`:
-    only the re-sharded parents' partitions are rewritten (everything
-    else hard-links), the cell->n_subs map commits ATOMICALLY with the
-    data as version metadata, and a crash mid-optimize leaves the
-    previous version current. Idempotent: a second run with the same
-    threshold finds every layout already at its desired shape and
-    publishes nothing. Returns the number of quantizer cells
-    re-sharded.
-
-    OCC: the current version is resolved ONCE at entry; the stats
-    scan, the rewrite scan, and the publish are all pinned to it
-    (``expect_version`` threads through replace_where), so a versioned
-    append committing mid-optimize surfaces as ConcurrentWriteError --
-    retry the optimize -- instead of being silently dropped from the
-    rewritten partitions (the same torn-merge class the appender's
-    own ``occ=`` pinning closes from the other side)."""
-    import json
-    import math
-    import os as _os
-
-    from .. import sinks
-
-    path = f"{index_dir}/corpus"
-    cur = sinks.current_data_dir(path)
-    if cur is None:
-        raise FileNotFoundError(f"{path}: no index to optimize")
-    base = _os.path.basename(cur)
-    # legacy flat layouts have no version to pin (single-writer only)
-    pinned = base if base.startswith("v_") else None
-    corpus = sinks.read_table(spark, path, version=pinned)
-    # per-quantizer-cell widths + the present storage layout: both
-    # centroid-count-sized driver lists (metadata, like every
-    # partition list in sinks.py)
-    stats = corpus.groupBy(
-        _ivf_parent(F.col("cell")).alias("parent")
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.collect_set("cell").alias("present"),
-    ).collect()
-    # the arithmetic storage encoding REQUIRES quantizer labels below
-    # the base -- a quantizer with >= IVF_SPLIT_BASE cells would alias
-    # real cells with sub-cells and silently corrupt probes, so fail
-    # loudly here (raise the base for wide quantizers)
-    max_parent = max((r["parent"] for r in stats), default=0)
-    if max_parent >= IVF_SPLIT_BASE:
-        raise ValueError(
-            f"quantizer cell {max_parent} >= IVF_SPLIT_BASE "
-            f"{IVF_SPLIT_BASE}: the split encoding would alias it; "
-            "raise IVF_SPLIT_BASE for this quantizer width"
-        )
-    cellmap: dict[int, int] = {}
-    rewrite: dict[int, int] = {}
-    values: list[int] = []
-    for r in stats:
-        n_subs = min(
-            math.ceil(r["n"] / max_cell_rows), IVF_SPLIT_BASE - 1
-        ) if r["n"] > max_cell_rows else 1
-        if n_subs > 1:
-            cellmap[r["parent"]] = n_subs
-        desired = set(_ivf_storage_cells(r["parent"], cellmap))
-        if set(r["present"]) != desired:
-            rewrite[r["parent"]] = n_subs
-            values.extend(r["present"])
-    if not rewrite:
-        return 0
-    storage = None
-    for p, n_subs in rewrite.items():
-        tgt = (
-            F.lit(p).cast("int") if n_subs == 1
-            else (
-                F.lit((p + 1) * IVF_SPLIT_BASE)
-                + F.pmod(F.xxhash64("neighbor_id"), F.lit(n_subs))
-            ).cast("int")
-        )
-        cond = _ivf_parent(F.col("cell")) == p
-        storage = F.when(cond, tgt) if storage is None \
-            else storage.when(cond, tgt)
-    inc = (
-        corpus.filter(
-            _ivf_parent(F.col("cell")).isin(list(rewrite))
-        )
-        .withColumn("cell", storage)
-    )
-    sinks.replace_where(
-        spark, path, "cell", values, inc,
-        manifest_extra={IVF_CELLMAP_META: json.dumps(cellmap)},
-        expect_version=pinned,
-    )
-    return len(rewrite)
-
-
-def q_emb_ivf_index_probe_versioned(
-    spark: SparkSession, sf_dir: str, index_dir: str,
-    version: str | None = None,
-) -> DataFrame:
-    """Probe a VERSIONED IVF index -- optionally AS OF a retained
-    version (``version`` from ``sinks.list_versions``): the time-travel
-    ANN read, e.g. to reproduce yesterday's retrieval results before an
-    ingest batch changed the candidate set. Identical contract to
-    :func:`q_emb_ivf_index_probe` otherwise; the stored scan keeps its
-    cell partition pruning because versions preserve the hive layout.
-    Split-aware: probes expand through the version's cell map (committed
-    atomically with the data), so an :func:`optimize_ivf_index` pass is
-    invisible here except for better task balance. The version pointer
-    is resolved ONCE and pins both the cell map and the corpus scan --
-    resolving twice could tear across a concurrent optimize publish
-    (stale map against the re-sharded layout: split-parent probes
-    would silently match nothing)."""
-    import os as _os
-
-    from .. import sinks
-
-    if version is None:
-        cur = sinks.current_data_dir(f"{index_dir}/corpus")
-        version = _os.path.basename(cur) if cur else None
-
-    cent = sinks.read_table(spark, f"{index_dir}/centroids")
-    queries = _embeddings(spark, sf_dir).filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"))
-    probes = (
-        queries.crossJoin(_cells_one_row(cent))
-        .select("query_id", "qemb",
-                F.explode(F.transform(
-                    _nearest_cells(F.col("qemb"), NPROBE), lambda s: s["cell"]
-                )).alias("cell"))
-    )
-    probes = _expand_probe_cells(
-        spark, probes, _ivf_cellmap(f"{index_dir}/corpus", version=version)
-    )
-    stored = sinks.read_table(spark, f"{index_dir}/corpus", version=version)
-    scored = stored.join(F.broadcast(probes), "cell").select(
-        "query_id", "neighbor_id",
-        F.round(_cosine(F.col("qemb"), F.col("emb")), 6).alias("cosine"),
-    )
-    return _topk_per_query(scored)
-
-
-def q_emb_ivf_index_probe(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> DataFrame:
-    """ANN top-k against a STORED IVF index: identical output contract to
-    q_emb_ivf_ann_topk, but the corpus side is the pre-partitioned
-    parquet and the probe list arrives via a broadcast join on the
-    partition column -- Spark's dynamic partition pruning then reads
-    ONLY the probed cell directories (verified in
-    tests/test_ivf_index.py by inspecting the scan's pruning filters).
-    At 100 TB this is the difference between scanning NPROBE/cells of
-    the data and scanning all of it."""
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    queries = _embeddings(spark, sf_dir).filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"))
-    probes = (
-        queries.crossJoin(_cells_one_row(cent))
-        .select("query_id", "qemb",
-                F.explode(F.transform(
-                    _nearest_cells(F.col("qemb"), NPROBE), lambda s: s["cell"]
-                )).alias("cell"))
-    )
-    stored = spark.read.parquet(f"{index_dir}/corpus")
-    scored = stored.join(F.broadcast(probes), "cell").select(
-        "query_id", "neighbor_id",
-        F.round(_cosine(F.col("qemb"), F.col("emb")), 6).alias("cosine"),
-    )
-    return _topk_per_query(scored)
-
-
 # ---- k-means Lloyd iterations (iterative algorithm, oracle-paired) ---------
 
 KMEANS_ITERS = 2
@@ -1867,15 +1392,8 @@ def _pq_cbooks_one_row(e: DataFrame):
     IVF+PQ queries; because the structs are the same (label, centroid)
     pairs :func:`_cells_one_row` holds, the IVFPQ query also feeds it to
     :func:`_nearest_cells` as its coarse quantizer."""
-    return _pq_cbooks_one_row_from_cent(_centroids(e))
-
-
-def _pq_cbooks_one_row_from_cent(cent: DataFrame):
-    """:func:`_pq_cbooks_one_row` from an already-built (or STORED)
-    centroid table -- the stored-index probe path reads centroids from
-    parquet instead of recomputing them from the corpus."""
     return F.broadcast(
-        cent.groupBy().agg(
+        _centroids(e).groupBy().agg(
             F.array_sort(
                 F.collect_list(F.struct("c_label", "centroid"))
             ).alias("cbooks")
@@ -2079,8 +1597,7 @@ def q_emb_ivf_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     refine pool ({N_QUERIES} x {PQ_REFINE} rows) is broadcast back
     against the corpus for its vectors -- two corpus scans (codes +
     gather), ZERO corpus shuffles; at 100 TB the encoded table is
-    written partitioned by cell (exactly :func:`build_ivf_index`'s
-    layout, codes instead of floats) so partition pruning skips the
+    written partitioned by cell so partition pruning skips the
     unprobed cells, and the gather is an id-keyed point fetch (FAISS
     stores the refine vectors beside the codes the same way). ``cell``
     and ``adist`` ride through so cell-pruning and quantization error
@@ -2123,10 +1640,9 @@ def _ivfpq_search(
     query_carry: tuple = (),
     scored_filter=None,
 ) -> DataFrame:
-    """The probe + ADC + refine pipeline shared by the inline query,
-    the stored-index probe, and the ANN hard-negative miner:
-    ``encoded`` is the (neighbor_id, [carry], cell, codes) table
-    (inline subplan or stored parquet), ``vectors`` the (neighbor_id,
+    """The probe + ADC + refine pipeline shared by the inline query
+    and the ANN hard-negative miner: ``encoded`` is the (neighbor_id,
+    [carry], cell, codes) table, ``vectors`` the (neighbor_id,
     emb) refine store, ``queries`` at least (query_id, qemb) plus any
     ``query_carry`` columns riding the probe side. ``carry`` is the
     single encoded-side column carried through the pool cut into the
@@ -2314,48 +1830,6 @@ FROM (
 )
 WHERE rank <= {TOPK}
 """
-
-
-def build_ivfpq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
-    """Materialize the IVFPQ layout the q_emb_ivf_pq_ann_topk docstring
-    promises at 100 TB: the corpus encoded ONCE into (neighbor_id,
-    codes) rows written hive-partitioned by coarse ``cell`` (the probe
-    reads only probed cell directories via dynamic partition pruning),
-    the full vectors beside them as the refine store (FAISS's
-    IndexRefineFlat keeps exactly this pairing), and the centroid table
-    the probe rebuilds its codebook from. The codes table is ~{PQ_M}
-    bytes of payload per vector vs {EMB_DIM * 4} for floats -- the
-    32x storage cut is the point of the layout."""
-    e = _embeddings(spark, sf_dir)
-    cent = _centroids(e)
-    corpus = e.filter(F.col("vec_id") >= N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), "emb"
-    )
-    encoded = _ivfpq_encode(corpus, _pq_cbooks_one_row_from_cent(cent))
-    encoded.write.mode("overwrite").partitionBy("cell").parquet(
-        f"{index_dir}/codes"
-    )
-    corpus.write.mode("overwrite").parquet(f"{index_dir}/vectors")
-    cent.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-
-
-def q_emb_ivfpq_index_probe(
-    spark: SparkSession, sf_dir: str, index_dir: str
-) -> DataFrame:
-    """IVFPQ+refine against the STORED index: identical output contract
-    to q_emb_ivf_pq_ann_topk, but the codes side is the pre-partitioned
-    parquet (dynamic partition pruning reads only probed cells --
-    asserted in tests/test_ivf_index.py) and the refine gather reads the
-    stored vector table by id. No corpus-wide work happens at query
-    time at all: cell assignment and encoding were paid once at build."""
-    cent = spark.read.parquet(f"{index_dir}/centroids")
-    cbooks_one_row = _pq_cbooks_one_row_from_cent(cent)
-    queries = _embeddings(spark, sf_dir).filter(
-        F.col("vec_id") < N_QUERIES
-    ).select(F.col("vec_id").alias("query_id"), F.col("emb").alias("qemb"))
-    encoded = spark.read.parquet(f"{index_dir}/codes")
-    vectors = spark.read.parquet(f"{index_dir}/vectors")
-    return _ivfpq_search(encoded, vectors, queries, cbooks_one_row)
 
 
 EMB_IVF_PQ_ANN_TOPK_SQL = f"""

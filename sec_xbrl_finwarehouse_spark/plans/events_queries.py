@@ -920,10 +920,10 @@ def q_event_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 state history per user: consecutive same-type event runs
     collapse into validity intervals [valid_from, valid_to) with
     ``valid_to`` NULL on the current state — the slowly-changing-
-    dimension build every warehouse derives from an event/change feed
-    (and the consumer shape of ``sinks.table_changes``). Classic
-    gaps-and-islands: a change flag via ``lag``, a running sum as the
-    island id, one aggregate per island, ``lead`` for the interval end.
+    dimension build every warehouse derives from an event/change feed.
+    Classic gaps-and-islands: a change flag via ``lag``, a running sum as
+    the island id, one aggregate per island, ``lead`` for the interval
+    end.
     All three windows share ONE user_id partitioning -- a single
     shuffle at any scale; per-user window width is the user's event
     count, never the corpus."""

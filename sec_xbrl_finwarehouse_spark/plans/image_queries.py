@@ -87,13 +87,14 @@ def q_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def banded_hamming_pairs(sh: DataFrame, hcol: str) -> DataFrame:
     """(doc_id, ``hcol`` 63-bit hash) table -> verified near-dup pairs
     (d1, d2, hamming): (band, 9-bit key) equi-join candidates, exact
-    ``bit_count(xor) <= IMG_HAM_MAX`` (= 6) verification, Hamming filter
-    BEFORE the pair distinct (survivor-sized shuffle -- the ordering
-    measured on the SimHash twin). Lossless by pigeonhole: <= 6
-    differing bits cannot touch all 7 bands. The caller persists ``sh``
-    (it feeds both self-join sides). ONE spelling of the banded join
-    shared by the image, audio, and cross-modal queries (the audio
-    family's banding constants alias these by design)."""
+    ``bit_count(xor) <= IMG_HAM_MAX`` (= IMG_BANDS - 1) verification,
+    Hamming filter BEFORE the pair distinct (survivor-sized shuffle --
+    the ordering measured on the SimHash twin). Lossless by pigeonhole:
+    IMG_BANDS - 1 differing bits cannot touch all IMG_BANDS bands. The
+    caller persists ``sh`` (it feeds both self-join sides). ONE spelling
+    of the banded join shared by the image, audio, and cross-modal
+    queries (the audio family's banding constants alias these by
+    design)."""
     banded = sh.select(
         "doc_id", hcol,
         F.explode(F.array(*[

@@ -684,14 +684,6 @@ FROM sh
 
 # ---- n-gram Jaccard near-dup (exhaustive, oracle-checkable) ----------------
 
-def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = _documents(spark, sf_dir)
-    return (
-        d.select("doc_id", _tokens(F.col("text")).alias("toks"))
-        .select("doc_id", _shingles(F.col("toks")).alias("shingles"))
-    )
-
-
 def _doc_shingles_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) rows, distinct per doc.
 

@@ -18,9 +18,15 @@ multi-executor cluster:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import SparkSession
+
+# this process's private shuffle/spill directory, made on first use
+_private_local_dir: str | None = None
 
 
 def default_parallelism() -> int:
@@ -28,6 +34,24 @@ def default_parallelism() -> int:
     if cpus and cpus.isdigit():
         return int(cpus)
     return os.cpu_count() or 8
+
+
+def _local_dir() -> str | None:
+    """The ``spark.local.dir`` to set, or None to leave it unset.
+
+    A launcher that sets ``SPARK_LOCAL_DIRS`` has chosen the directory
+    (Spark prefers it over ``spark.local.dir``), so nothing is set or
+    created. Otherwise each process gets its own tmpfs directory,
+    removed at exit: a directory shared by concurrent sessions lets one
+    session's cleanup delete shuffle files another is still reading."""
+    global _private_local_dir
+    if os.environ.get("SPARK_LOCAL_DIRS") or not os.path.isdir("/dev/shm"):
+        return None
+    if _private_local_dir is None:
+        _private_local_dir = tempfile.mkdtemp(prefix="spark-local-",
+                                              dir="/dev/shm")
+        atexit.register(shutil.rmtree, _private_local_dir, ignore_errors=True)
+    return _private_local_dir
 
 
 def get_spark(
@@ -57,7 +81,7 @@ def get_spark(
         # NOTE deliberately NO spark.driver.memory here: in-process
         # SparkSession creation cannot resize an already-launched JVM, so
         # setting it in the factory silently does nothing. Heap size
-        # belongs to the launcher -- bench.py seeds PYSPARK_SUBMIT_ARGS
+        # belongs to the launcher -- perfbench/run.py seeds PYSPARK_SUBMIT_ARGS
         # (which DOES apply, it is read before JVM launch), spark-submit
         # users pass --driver-memory.
         .config("spark.ui.enabled", "false")
@@ -89,10 +113,9 @@ def get_spark(
     # made shuffle-bound queries 5-10x slower run-to-run. RAM-backed
     # local dirs are also the standard production choice (NVMe/ramdisk
     # shuffle volumes) and change no query semantics.
-    if os.path.isdir("/dev/shm"):
-        shuffle_dir = "/dev/shm/spark-local"
-        os.makedirs(shuffle_dir, exist_ok=True)
-        builder = builder.config("spark.local.dir", shuffle_dir)
+    local_dir = _local_dir()
+    if local_dir:
+        builder = builder.config("spark.local.dir", local_dir)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
 

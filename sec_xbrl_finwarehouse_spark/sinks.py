@@ -69,7 +69,6 @@ from .operators.upsert import upsert_latest_wins
 
 CREATED_AT = "created_at"
 UPDATED_AT = "updated_at"
-_AUDIT_COLS = (CREATED_AT, UPDATED_AT)
 
 
 _POINTER = "_CURRENT"
@@ -104,9 +103,9 @@ EXPECT_ABSENT = ""
 
 # per-version commit-sequence file: the CONTENT-ADDRESSED version order.
 # Directory mtime is only creation order while nothing outside the
-# writer touches the tree -- restore()/clone() hard-link trees, and an
-# external cp/rsync of a table directory rewrites every mtime, silently
-# reordering history (retain-prune would then count the wrong versions).
+# writer touches the tree -- an external cp/rsync of a table directory
+# rewrites every mtime, silently reordering history (retain-prune
+# would then count the wrong versions).
 # Every publish writes a monotonic sequence number (max existing + 1,
 # assigned INSIDE the commit lock) into the version directory instead;
 # mtime remains only the legacy fallback for pre-_SEQ versions.
@@ -116,28 +115,6 @@ _SEQ_FILE = "_SEQ"
 # commit-lock timeout) can still be between its move-in and its _SEQ
 # stamp; old enough unstamped dirs are pre-_SEQ legacy debris
 _STAGE_GRACE_SEC = 300.0
-
-# meta files a DATA-CHANGING publish must never copy from the previous
-# version: _SEQ is re-stamped inside the commit lock, and a stale
-# _FILE_STATS manifest on a version whose files changed would make
-# read_table_pruned silently drop the unlisted files (the invariant
-# commit_meta_only documents — stats only survive link-identical
-# publishes). STATS_META (defined with the stats writer below) asserts
-# its membership here so the two constants cannot drift apart.
-_NO_CARRY_META = {_SEQ_FILE, "_FILE_STATS"}
-
-
-def _carry_meta_forward(src_dir: str, version_dir: str) -> None:
-    """Copy the previous version's commit-metadata (``_``-prefixed)
-    files — stream txn markers, ingest watermarks, index cell maps —
-    into an unpublished version directory, minus :data:`_NO_CARRY_META`.
-    Callers write their own ``manifest_extra`` AFTER this, so
-    caller-supplied values overlay the carried ones."""
-    for name in os.listdir(src_dir):
-        src = os.path.join(src_dir, name)
-        if (name.startswith("_") and name not in _NO_CARRY_META
-                and os.path.isfile(src)):
-            shutil.copy2(src, os.path.join(version_dir, name))
 
 
 def _version_seq(path: str, name: str) -> int | None:
@@ -213,8 +190,7 @@ def _publish_version(
     inside ``path``), then prune all but the newest ``retain`` versions
     (current included). The default keeps current + previous: a reader
     that resolved the pointer an instant before the swap still finds
-    every file it is scanning; ``vacuum`` reclaims superseded versions
-    once no readers can be in flight. A larger ``retain`` keeps a
+    every file it is scanning. A larger ``retain`` keeps a
     time-travel history (:func:`list_versions` / ``read_table(...,
     version=...)``) at the cost of storing the superseded copies —
     bounded and predictable, like a Delta/Iceberg retention window.
@@ -362,22 +338,6 @@ def _write_manifest_extra(
             f.write(content)
 
 
-def vacuum(path: str) -> int:
-    """Drop every retained version except the current one; returns the
-    number of directories removed. Run when no readers are in flight
-    (the table-format VACUUM contract)."""
-    cur = current_data_dir(path)
-    if cur is None or cur == path:
-        return 0
-    keep = os.path.basename(cur)
-    removed = 0
-    for name in os.listdir(path):
-        if name.startswith("v_") and name != keep:
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
-            removed += 1
-    return removed
-
-
 def read_table(
     spark: SparkSession, path: str, version: str | None = None
 ) -> DataFrame | None:
@@ -406,10 +366,6 @@ def with_audit_cols(df: DataFrame) -> DataFrame:
     per query, like the reference's single-transaction now())."""
     now = F.current_timestamp()
     return df.withColumn(CREATED_AT, now).withColumn(UPDATED_AT, now)
-
-
-def _data_cols(df: DataFrame) -> list[str]:
-    return [c for c in df.columns if c not in _AUDIT_COLS]
 
 
 class ConstraintViolation(ValueError):
@@ -464,7 +420,6 @@ def write_replace(
     expect_version: str | None = None,
     checks: Sequence[tuple[str, str]] | None = None,
     unique_key: Sequence[str] | None = None,
-    stats_cols: Sequence[str] | None = None,
 ) -> None:
     """Full-table publish via manifest-pointer commit.
 
@@ -475,15 +430,15 @@ def write_replace(
     swap leaves the previous version live and intact -- a failed publish
     never leaves the table missing or half-written. Readers overlapping
     the publish see the old version or the new one, never a mix; the
-    superseded version's files are retained until the next publish (or
-    :func:`vacuum`) so in-flight scans keep resolving.
+    superseded version's files are retained until the next publish so
+    in-flight scans keep resolving.
 
     ``manifest_extra`` maps filenames (must start with ``_`` so parquet
     scans ignore them) to string contents written INSIDE the version
     directory before the pointer swap -- metadata that commits
-    atomically with the data it describes (e.g. the streaming sink's
-    committed-batch id). A version published without a given file simply
-    has no such metadata.
+    atomically with the data it describes (e.g. the facts version a
+    mart refresh was built from). A version published without a given
+    file simply has no such metadata.
 
     ``checks`` (Delta-constraint semantics: ``[(name, sql_condition)]``,
     every row must satisfy every condition) and ``unique_key`` gate the
@@ -499,14 +454,7 @@ def write_replace(
         if bad:
             shutil.rmtree(tmp, ignore_errors=True)
             raise ConstraintViolation(path, bad)
-    extra = dict(manifest_extra or {})
-    if stats_cols:
-        import json as _json
-
-        extra[STATS_META] = _json.dumps(
-            _collect_file_stats(tmp, list(stats_cols))
-        )
-    _write_manifest_extra(tmp, extra)
+    _write_manifest_extra(tmp, manifest_extra)
     legacy_flat = os.path.exists(path) and not os.path.exists(
         os.path.join(path, _POINTER)
     )
@@ -688,9 +636,8 @@ def upsert_partitioned(
     Passing a version NAME instead of True pins the expectation to a
     version the CALLER already resolved -- the guard a caller needs
     when its merge DECISIONS (not just the merged rows) depend on what
-    it read earlier, e.g. the IVF appender's split-aware dedup against
-    the version's cell map: any publish racing in after the caller's
-    read fails this commit instead of tearing it.
+    it read earlier: any publish racing in after the caller's read
+    fails this commit instead of tearing it.
     """
     if partition_col not in keys:
         raise ValueError(
@@ -788,100 +735,6 @@ def upsert_partitioned(
     finally:
         shutil.rmtree(staging, ignore_errors=True)
 
-
-def replace_where(
-    spark: SparkSession,
-    path: str,
-    partition_col: str,
-    values: Sequence,
-    incoming: DataFrame,
-    manifest_extra: dict[str, str] | None = None,
-    expect_version: str | None = None,
-) -> int:
-    """Delta-style ``replaceWhere`` on the versioned store: publish a
-    version in which the partitions whose ``partition_col`` is in
-    ``values`` are DROPPED and ``incoming``'s rows (written
-    hive-partitioned on ``partition_col``) stand in their place, with
-    every other partition hard-linked (zero copy, zero read). Unlike
-    :func:`upsert_partitioned` this can REMOVE a partition value and
-    MOVE rows to new partition values -- the primitive a storage
-    reorganization (cell split, re-bucketing) needs, where a key's
-    partition assignment itself changes. ``incoming`` may target
-    partition values outside ``values``; any such existing partition
-    is replaced as well (it is part of the rewrite footprint).
-
-    Atomic publish; ``expect_version`` enables the same OCC contract as
-    every versioned writer — a reorganizer computes ``incoming`` from a
-    snapshot read, so it MUST pass the snapshot's version or a writer
-    committing in between is silently erased from the rewritten
-    partitions (the torn-merge class). ``None`` is last-write-wins,
-    acceptable only for single-writer maintenance windows.
-
-    The previous version's ``_`` commit-metadata files (stream txn
-    markers, ingest watermarks, index cell maps) are carried forward
-    and overlaid by ``manifest_extra`` — a partition reorganization
-    must not erase a stream's idempotence marker. ``_FILE_STATS`` is
-    deliberately dropped (data changed; see :data:`_NO_CARRY_META`).
-    Returns the number of partitions written."""
-    cur = current_data_dir(path)
-    if cur is None:
-        raise FileNotFoundError(f"{path}: no current version to reorganize")
-    cur_names = [n for n in os.listdir(cur) if not n.startswith((".", "_"))]
-    if cur_names and not any(
-        n.startswith(f"{partition_col}=") for n in cur_names
-    ):
-        raise ValueError(
-            f"{path}: current version is not hive-partitioned on "
-            f"{partition_col!r}"
-        )
-    dropped = {f"{partition_col}={v}" for v in values}
-    staging = f"{path}.__staging__{uuid.uuid4().hex}"
-    incoming.write.mode("overwrite").partitionBy(partition_col).parquet(
-        staging
-    )
-    try:
-        rewritten = [n for n in os.listdir(staging)
-                     if n.startswith(f"{partition_col}=")]
-        if not rewritten and dropped:
-            # an empty incoming under non-empty `values` would publish
-            # a version that silently DELETES those partitions -- a
-            # reorganization must re-insert the rows it displaces, so
-            # treat this as caller error (deletion is sinks.merge's
-            # explicit tombstone clause, never an accident here)
-            raise ValueError(
-                f"{path}: replace_where got an empty incoming frame "
-                f"while dropping {sorted(dropped)} -- refusing to "
-                "publish a silent partition deletion"
-            )
-        version_dir = os.path.join(path, f"v_{uuid.uuid4().hex}")
-        try:
-            os.mkdir(version_dir)
-            for name in os.listdir(cur):   # kept partitions: hard-link
-                if (name.startswith(f"{partition_col}=")
-                        and name not in dropped and name not in rewritten):
-                    src = os.path.join(cur, name)
-                    dst = os.path.join(version_dir, name)
-                    os.mkdir(dst)
-                    for f in os.listdir(src):
-                        if not f.startswith("."):
-                            os.link(os.path.join(src, f),
-                                    os.path.join(dst, f))
-            for name in rewritten:         # rewritten partitions: move in
-                os.rename(os.path.join(staging, name),
-                          os.path.join(version_dir, name))
-            _carry_meta_forward(cur, version_dir)
-            _write_manifest_extra(version_dir, manifest_extra)
-            _publish_version(path, version_dir,
-                             expect_version=expect_version)
-        except Exception:
-            # no-orphan contract (see write_replace)
-            shutil.rmtree(version_dir, ignore_errors=True)
-            raise
-        return len(rewritten)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-
-
 def commit_meta_only(path: str, manifest_extra: dict[str, str]) -> None:
     """Publish a new version with IDENTICAL data (hard links to the
     current part-files) and updated ``manifest_extra`` — the
@@ -898,15 +751,12 @@ def commit_meta_only(path: str, manifest_extra: dict[str, str]) -> None:
     silently publish an empty version (the mirror image of
     upsert_partitioned's layout guard).
 
-    Prior ``_`` metadata files (stats, stream txn markers) are COPIED
-    forward, then overlaid with ``manifest_extra``. That carry-forward
-    is safe precisely BECAUSE the data is identical: per-file stats
-    remain exact for every linked file. Data-changing publishes
-    (append_if_absent, upsert) deliberately do NOT carry stats forward
-    — :func:`read_table_pruned` reads ONLY files listed in the stats
-    manifest, so stale stats on a version with new files would
-    silently drop them from pruned reads; dropping the manifest
-    degrades to the full-scan fallback instead."""
+    Prior ``_`` metadata files (stream txn markers, watermarks) are
+    COPIED forward, then overlaid with ``manifest_extra``. That
+    carry-forward is safe precisely BECAUSE the data is identical.
+    Data-changing publishes (append_if_absent, upsert) deliberately do
+    NOT carry metadata forward: it may describe files the new version
+    no longer holds."""
     cur = current_data_dir(path)
     if cur is None:
         raise FileNotFoundError(f"no table at {path}: nothing to commit")
@@ -954,76 +804,6 @@ def _publish_linked_version(
         # safe to drop on ANY publish failure
         shutil.rmtree(version_dir, ignore_errors=True)
         raise
-
-
-def clone(src_path: str, dst_path: str, version: str | None = None) -> str:
-    """SHALLOW CLONE: materialize a table (or one retained version of
-    it) at a NEW path by hard-linking its part-files -- the Delta
-    ``SHALLOW CLONE`` analogue for dev/test forks and snapshot
-    hand-offs: zero bytes copied, the clone is immediately a
-    first-class versioned table (its own ``_CURRENT``, its own
-    publishes, its own retention), and writes to either table never
-    affect the other (every publish creates NEW files; linked inodes
-    are only ever deleted, never mutated, under the immutable-version
-    contract). ``_`` metadata is carried from the source version (its
-    stats describe exactly the linked files) plus a ``_cloned_from``
-    provenance marker. Returns the clone's version name."""
-    # same guard as restore(): only v_ version directories are
-    # cloneable -- a staging dir or arbitrary subpath must never be
-    # publishable as a table
-    if version is not None and not version.startswith("v_"):
-        raise FileNotFoundError(
-            f"version {version!r} is not a retained version name"
-        )
-    src = (
-        os.path.join(src_path, version)
-        if version is not None
-        else current_data_dir(src_path)
-    )
-    if src is None or not os.path.isdir(src):
-        raise FileNotFoundError(
-            f"nothing to clone at {src_path} (version={version!r})"
-        )
-    if os.path.exists(os.path.join(dst_path, _POINTER)):
-        raise FileExistsError(f"table already exists at {dst_path}")
-    os.makedirs(dst_path, exist_ok=True)
-    return _publish_linked_version(
-        dst_path, src,
-        {"_cloned_from": f"{src_path}@{os.path.basename(src)}"},
-    )
-
-
-def restore(path: str, version: str) -> str:
-    """RESTORE a retained superseded version as the new CURRENT table
-    -- the table-format rollback (Delta ``RESTORE`` / Iceberg
-    rollback): the bad publish stays in history (auditable), and the
-    restore is itself a NEW version whose data is hard links to the
-    restored version's part-files -- zero bytes copied, zero mutated,
-    and the usual atomic pointer swap (readers see the pre-restore or
-    post-restore table, never a mix). Returns the new version name.
-
-    ``_`` metadata is carried forward from the RESTORED version (its
-    stats describe exactly the linked files), then a ``_restored_from``
-    marker records provenance. Restoring the current version is
-    rejected -- there is nothing to roll back.
-
-    Retention: a restore NEVER prunes -- every currently retained
-    version (including the one being rolled back, the audit evidence)
-    survives; later data publishes re-apply their own ``retain``
-    windows, and ``vacuum`` reclaims on demand."""
-    vdir = os.path.join(path, version)
-    if not os.path.isdir(vdir) or not version.startswith("v_"):
-        raise FileNotFoundError(
-            f"version {version!r} not retained at {path}; "
-            f"available: {[v['version'] for v in list_versions(path)]}"
-        )
-    cur = current_data_dir(path)
-    if cur is not None and os.path.basename(cur) == version:
-        raise ValueError(f"{version!r} is already current: nothing to restore")
-    return _publish_linked_version(
-        path, vdir, {"_restored_from": version},
-        retain=len(_versions_newest_first(path)) + 1,
-    )
 
 
 def append_if_absent(
@@ -1135,32 +915,6 @@ def table_bytes(path: str) -> int:
     return total
 
 
-def compact(
-    spark: SparkSession, path: str, target_file_bytes: int = 128 << 20
-) -> int:
-    """Small-files compaction: rewrite a stored table into
-    ``ceil(table_bytes / target_file_bytes)`` files via write-then-swap;
-    returns the new file count.
-
-    Streaming appends (``append_if_absent``) and frequent small-batch
-    ingests accumulate many tiny part files; at scale each file costs a
-    namenode/listing entry, a scan task, and a parquet footer read, so
-    periodic compaction to ~128 MB files is routine table maintenance
-    (the OPTIMIZE of Delta/Iceberg, expressed on plain parquet). Sizing
-    comes from the actual on-disk bytes -- a pure metadata read, no job.
-    Data content is unchanged (same rows, no dedup or ordering
-    guarantee); the swap keeps readers on the old version until the
-    compacted one is fully published."""
-    n_files = max(1, -(-table_bytes(path) // target_file_bytes))
-    df = read_table(spark, path)
-    # no checkpoint needed: the scan is pinned to the current version
-    # directory, which write_replace retains (as "previous") through and
-    # beyond the pointer swap -- the staging write reads the old files,
-    # and they outlive the publish.
-    write_replace(df.repartition(n_files), path)
-    return n_files
-
-
 def write_bucketed(
     df: DataFrame,
     name: str,
@@ -1207,463 +961,3 @@ def write_bucketed(
     )
 
 
-def table_changes(
-    spark: SparkSession,
-    path: str,
-    keys: Sequence[str],
-    version: str | None = None,
-) -> DataFrame | None:
-    """Change data feed: the row-level diff that turns a versioned
-    table into an incremental source (Delta CDF semantics on the
-    manifest sink). Compares the CURRENT version against a retained
-    prior one (default: the immediately previous) and emits each
-    changed row with a ``_change_type`` column:
-
-    * ``insert``           -- key exists now, not before
-    * ``update_postimage`` -- key in both, any data column changed
-    * ``delete``           -- key existed before, gone now (the row is
-      the OLD image -- there is no new one)
-
-    Unchanged keys are not emitted, so a downstream consumer applies
-    exactly the delta. Audit columns are excluded from the comparison
-    (an upsert refreshes ``updated_at`` even for no-op merges).
-
-    Returns None when no prior version is retained (nothing to diff).
-    Plan shape: one full-outer join on the PK -- both sides shuffle
-    once on the same key, or not at all when the table is stored
-    bucketed on it; cost scales with table size, not history depth,
-    and only the two compared snapshots are read."""
-    versions = [v["version"] for v in list_versions(path)]
-    if version is None:
-        if len(versions) < 2:
-            return None
-        version = versions[1]
-    cur = read_table(spark, path)
-    prev = read_table(spark, path, version=version)
-    key_list = list(keys)
-    data_cols = [c for c in cur.columns
-                 if c not in key_list and c not in _AUDIT_COLS]
-    # presence markers, not key-NULL checks: a legitimately NULL key
-    # column must not read as "absent" on either side
-    c = cur.withColumn("__c_present", F.lit(True)).alias("c")
-    p = prev.withColumn("__p_present", F.lit(True)).alias("p")
-    cond = [c[k].eqNullSafe(p[k]) for k in key_list]
-    joined = c.join(p, cond, "full_outer")
-    c_struct = F.struct(*[c[x] for x in data_cols])
-    p_struct = F.struct(*[p[x] for x in data_cols])
-    in_cur = c["__c_present"].isNotNull()
-    in_prev = p["__p_present"].isNotNull()
-    change = (
-        F.when(~in_prev, F.lit("insert"))
-        .when(~in_cur, F.lit("delete"))
-        .when(~c_struct.eqNullSafe(p_struct), F.lit("update_postimage"))
-    )
-    out_cols = [
-        F.when(in_cur, c[k]).otherwise(p[k]).alias(k) for k in key_list
-    ] + [
-        F.when(in_cur, c[x]).otherwise(p[x]).alias(x) for x in data_cols
-    ]
-    return (
-        joined.withColumn("_change_type", change)
-        .filter(F.col("_change_type").isNotNull())
-        .select(*out_cols, "_change_type")
-    )
-
-
-def _zorder_guard(n_cols: int, bits: int) -> None:
-    if bits * n_cols > 63:
-        raise ValueError(
-            f"bits*len(cols) = {bits * n_cols} exceeds the 63 usable "
-            "bits of a long; lower bits (e.g. 63 // len(cols))"
-        )
-
-
-def _interleave(q, bits: int, n_cols: int, col_idx: int):
-    """Place bit b of the quantized rank ``q`` at position
-    ``b * n_cols + col_idx`` (the Morton interleave)."""
-    spread = F.lit(0).cast("long")
-    for b in range(bits):
-        spread = spread.bitwiseOR(
-            F.shiftleft(
-                F.shiftright(q, b).bitwiseAND(F.lit(1)),
-                b * n_cols,
-            )
-        )
-    return F.shiftleft(spread, col_idx)
-
-
-def zorder_value(cols: Sequence[str], bits: int = 16):
-    """Z-order (Morton) clustering key over ``cols``: each column is
-    rank-normalized to ``bits`` bits via a percent_rank window, then the
-    bit planes are interleaved — rows close in the z-curve are close in
-    EVERY listed dimension at once. Pure built-in expressions (bit ops
-    + a per-column window), returns a Column to sort by.
-
-    Why rank-normalize: raw values skew the curve (a heavy-hitter key
-    collapses whole z-ranges); ranks give uniform occupancy, the same
-    choice Delta's OPTIMIZE ZORDER makes. The unpartitioned rank window
-    is the dimension/mart-table form; :func:`zorder_value_binned` is
-    the big-table substitute.
-    """
-    from pyspark.sql import Window as W
-
-    _zorder_guard(len(cols), bits)
-    z = F.lit(0).cast("long")
-    for i, c in enumerate(cols):
-        rank = F.percent_rank().over(W.orderBy(F.col(c)))
-        q = F.least(
-            F.floor(rank * (1 << bits)).cast("long"), F.lit((1 << bits) - 1)
-        )
-        z = z.bitwiseOR(_interleave(q, bits, len(cols), i))
-    return z
-
-
-def zorder_value_binned(df: DataFrame, cols: Sequence[str], bits: int = 8):
-    """The 100 TB z-order key: rank bins come from ONE driver-side
-    ``approxQuantile`` pass per column (Greenwald-Khanna sketch --
-    distributed, single scan, no shuffle) instead of a global
-    percent_rank window, so no stage ever funnels the table through one
-    partition. The edges become a broadcast literal array and each
-    row's bin is computed map-side (count of edges <= value, a
-    vectorized JVM ``aggregate`` over <= 2^bits elements).
-
-    ``bits`` defaults to 8 (256 bins/column): row groups hold millions
-    of rows at scale, so 256 distinct strides per dimension already
-    saturate what min/max skipping can use; 2^16 bins would only bloat
-    the literal edge arrays. Approximation error moves rows near bin
-    BOUNDARIES only -- clustering quality degrades smoothly, never
-    correctness (the key is just a sort key)."""
-    _zorder_guard(len(cols), bits)
-    probs = [j / (1 << bits) for j in range(1, 1 << bits)]
-    rel_err = 1.0 / (1 << (bits + 2))
-    z = F.lit(0).cast("long")
-    for i, c in enumerate(cols):
-        edges = sorted(set(df.stat.approxQuantile(c, probs, rel_err)))
-        arr = F.array(*[F.lit(float(e)) for e in edges])
-        q = F.aggregate(
-            arr,
-            F.lit(0).cast("long"),
-            lambda acc, e: acc + F.when(
-                F.col(c).cast("double") >= e, F.lit(1)
-            ).otherwise(F.lit(0)).cast("long"),
-        )
-        z = z.bitwiseOR(_interleave(q, bits, len(cols), i))
-    return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    n_files: int | None = None,
-    bits: int | None = None,
-    method: str = "quantile",
-) -> None:
-    """Publish ``df`` clustered along the z-curve of ``cols`` so parquet
-    row-group min/max stats are TIGHT in every listed column — filters
-    on ANY of them skip most row groups at scan time (multi-column data
-    skipping, the OPTIMIZE ZORDER of Delta/Iceberg on plain parquet +
-    the manifest sink). A single-column sort gives perfect skipping on
-    one column and none on the rest; the z-curve trades a little of the
-    first column's tightness for skipping on all of them.
-
-    The layout pass is one range exchange on the z-value; with
-    ``n_files`` unset the session's shuffle parallelism decides the
-    file count.
-
-    ``method``: "quantile" (the DEFAULT — :func:`zorder_value_binned`:
-    one approxQuantile sketch pass per column, map-side binning, NO
-    window anywhere in the plan — the 100 TB fact-table path; ``bits``
-    capped at 8) or "rank" (exact percent_rank windows — these are
-    UNPARTITIONED, funneling the whole table through one task, so the
-    rank path is opt-in and only for small dimension/mart tables where
-    exact rank bins matter more than parallelism).
-    """
-    # bits defaults per method (quantile's sketch caps at 8); an
-    # EXPLICIT bits>8 with quantile is an error, not a silent downgrade
-    if bits is None:
-        bits = 8 if method == "quantile" else 16
-    elif method == "quantile" and bits > 8:
-        raise ValueError(
-            f"write_zordered: bits={bits} exceeds the quantile method's "
-            "8-bit sketch resolution; pass method='rank' for exact "
-            "high-resolution z-values (small tables only) or bits<=8"
-        )
-    zcol = (
-        zorder_value_binned(df, list(cols), bits=bits)
-        if method == "quantile"
-        else zorder_value(list(cols), bits=bits)
-    )
-    clustered = df.withColumn("__z", zcol)
-    parts = n_files or clustered.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    clustered = (
-        clustered.repartitionByRange(int(parts), F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )
-    # record per-file min/max for the clustered columns so
-    # read_table_pruned skips whole files on any of them
-    write_replace(clustered, path, stats_cols=list(cols))
-
-
-def read_evolving(spark: SparkSession, *paths: str) -> DataFrame:
-    """Schema-evolution read: union batches written over time with
-    DIFFERENT (additive) schemas into the superset schema, missing
-    columns NULL-filled.
-
-    ``mergeSchema`` makes the parquet source reconcile footers across
-    all inputs instead of trusting the first file -- the standard knob
-    for long-lived ingest directories where new columns appear in later
-    batches. Reconciliation is footer-metadata-only (no data job); reads
-    of old files project the absent columns as NULL at scan time. Column
-    REMOVALS and type changes are not handled here -- those are breaking
-    changes a real pipeline routes through a table format with schema
-    enforcement."""
-    return spark.read.option("mergeSchema", "true").parquet(*paths)
-
-
-def merge(
-    spark: SparkSession,
-    path: str,
-    source: DataFrame,
-    on: Sequence[str],
-    when_matched_update: bool = True,
-    when_matched_delete: str | None = None,
-    when_not_matched_insert: bool = True,
-    audit: bool = True,
-) -> dict[str, int]:
-    """General MERGE INTO over the versioned sink — the superset of
-    ``upsert`` (update+insert) and ``append_if_absent`` (insert only),
-    plus conditional delete, mirroring the three WHEN clauses of
-    SQL/Delta MERGE and the reference's ``ON CONFLICT`` family:
-
-    * matched + ``when_matched_delete`` condition true -> row removed
-      (the condition is a SQL boolean over SOURCE columns, e.g. a
-      tombstone flag ``"is_deleted"``);
-    * matched otherwise -> updated from source when
-      ``when_matched_update`` (created_at carried, updated_at
-      refreshed), else kept as stored;
-    * unmatched source row -> inserted when ``when_not_matched_insert``
-      (tombstones for absent keys are ignored, not inserted).
-
-    Returns counts {"updated": u, "inserted": i, "deleted": d}.
-
-    Plan shape: ONE full-outer join on the merge keys classifies every
-    row; both sides shuffle once on the same key (or not at all over a
-    bucketed store). The rewrite publishes through the manifest commit
-    — MERGE is atomic, and a crash mid-merge leaves the old version
-    current. Source must be unique on ``on`` (enforced — a source
-    with duplicate keys makes MERGE ambiguous, the same error SQL
-    MERGE raises)."""
-    key_list = list(on)
-    existing = read_table(spark, path)
-    dup = (
-        source.groupBy(*key_list).count().filter(F.col("count") > 1).count()
-    )
-    if dup:
-        raise ValueError(
-            f"MERGE source has {dup} duplicate key groups on {key_list}"
-        )
-    # NULL condition result = not deleted (SQL three-valued logic must
-    # not leak a source row into the skip branch)
-    del_cond = (
-        F.coalesce(F.expr(when_matched_delete).cast("boolean"), F.lit(False))
-        if when_matched_delete is not None
-        else F.lit(False)
-    )
-    if existing is None:
-        inserts = source.filter(~del_cond) if when_matched_delete else source
-        out = with_audit_cols(inserts) if audit else inserts
-        write_replace(out, path)
-        n = inserts.count()
-        return {"updated": 0, "inserted": n, "deleted": 0}
-
-    data_cols = [c for c in existing.columns if c not in _AUDIT_COLS]
-    src_cols = [c for c in data_cols if c in source.columns]
-    s = source.withColumn("__s_present", F.lit(True)).alias("s")
-    t2 = existing.withColumn("__t_present", F.lit(True)).alias("t")
-    joined = t2.join(s, key_list, "full_outer")
-    in_src = s["__s_present"].isNotNull()
-    in_tgt = t2["__t_present"].isNotNull()
-
-    action = (
-        F.when(in_tgt & in_src & del_cond, F.lit("delete"))
-        .when(in_tgt & in_src,
-              F.lit("update") if when_matched_update else F.lit("keep"))
-        .when(~in_tgt & in_src & ~del_cond,
-              F.lit("insert") if when_not_matched_insert else F.lit("skip"))
-        .when(~in_tgt & in_src, F.lit("skip"))   # tombstone for absent key
-        .otherwise(F.lit("keep"))                 # target-only row
-    )
-    take_src = F.col("__action").isin("update", "insert")
-    merged = joined.withColumn("__action", action).filter(
-        ~F.col("__action").isin("delete", "skip")
-    )
-    now = F.current_timestamp()
-    out_cols = [F.coalesce(t2[k], s[k]).alias(k) for k in key_list]
-    for c in data_cols:
-        if c in key_list:
-            continue
-        if c in src_cols:
-            out_cols.append(
-                F.when(take_src, s[c]).otherwise(t2[c]).alias(c)
-            )
-        else:
-            out_cols.append(t2[c].alias(c))
-    if audit:
-        out_cols.append(
-            F.coalesce(t2[CREATED_AT], now).alias(CREATED_AT)
-        )
-        out_cols.append(
-            F.when(take_src, now).otherwise(t2[UPDATED_AT]).alias(UPDATED_AT)
-        )
-    counts = {
-        r["__action"]: r["n"]
-        for r in joined.withColumn("__action", action)
-        .groupBy("__action").agg(F.count("*").alias("n")).collect()
-    }
-    write_replace(merged.select(*out_cols), path)
-    return {
-        "updated": int(counts.get("update", 0)),
-        "inserted": int(counts.get("insert", 0)),
-        "deleted": int(counts.get("delete", 0)),
-    }
-
-
-STATS_META = "_FILE_STATS"
-# pruned reads trust the stats manifest to list EVERY live file, so a
-# data-changing publish must never copy it forward (see _NO_CARRY_META)
-assert STATS_META in _NO_CARRY_META
-
-
-def _stat_encode(v):
-    """JSON-safe, TYPED encoding of a parquet footer min/max value.
-    Plain ``json.dumps(default=str)`` would stringify dates/timestamps/
-    decimals, and :func:`read_table_pruned` would then compare a str
-    against the caller's date bound — a TypeError at best, silent
-    mis-pruning at worst. Values whose type has no faithful encoding
-    (e.g. raw bytes) return ``None`` → the column's stats entry is
-    dropped for that file and the file is never pruned on it."""
-    import datetime
-    import decimal
-
-    if isinstance(v, bool):
-        return v
-    if isinstance(v, (int, float, str)):
-        return v
-    if isinstance(v, datetime.datetime):
-        return {"__t": "ts", "v": v.isoformat()}
-    if isinstance(v, datetime.date):
-        return {"__t": "date", "v": v.isoformat()}
-    if isinstance(v, decimal.Decimal):
-        return {"__t": "dec", "v": str(v)}
-    return None
-
-
-def _stat_decode(v):
-    """Inverse of :func:`_stat_encode`: typed dicts come back as native
-    date/datetime/Decimal so lo/hi comparisons run on real values."""
-    if isinstance(v, dict) and "__t" in v:
-        import datetime
-        import decimal
-
-        t, s = v["__t"], v["v"]
-        if t == "ts":
-            return datetime.datetime.fromisoformat(s)
-        if t == "date":
-            return datetime.date.fromisoformat(s)
-        if t == "dec":
-            return decimal.Decimal(s)
-    return v
-
-
-def _collect_file_stats(
-    staged_dir: str, cols: Sequence[str]
-) -> dict[str, dict[str, list]]:
-    """Per-file [min, max] for ``cols`` from the parquet footers — a
-    driver-side metadata walk (no data read, no job), the same stats a
-    Delta/Iceberg commit records per file. Only numeric/str min-max
-    make pruning sense; files lacking stats for a column simply have no
-    entry (and are never pruned on it)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, dict[str, list]] = {}
-    for name in sorted(os.listdir(staged_dir)):
-        if not name.endswith(".parquet") or name.startswith("."):
-            continue
-        meta = pq.ParquetFile(os.path.join(staged_dir, name)).metadata
-        idx = {meta.schema.column(i).name: i
-               for i in range(meta.num_columns)}
-        stats: dict[str, list] = {}
-        for c in cols:
-            if c not in idx:
-                continue
-            mins, maxs = [], []
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(idx[c]).statistics
-                if st is None or st.min is None or st.max is None:
-                    mins = []
-                    break
-                mins.append(st.min)
-                maxs.append(st.max)
-            if mins:
-                lo, hi = _stat_encode(min(mins)), _stat_encode(max(maxs))
-                if lo is not None and hi is not None:
-                    stats[c] = [lo, hi]
-        out[name] = stats
-    return out
-
-
-def read_table_pruned(
-    spark: SparkSession, path: str, col: str, lo=None, hi=None
-) -> DataFrame | None:
-    """File-level data skipping from the stats manifest: read ONLY the
-    files whose [min, max] for ``col`` intersects [lo, hi], then
-    re-apply the predicate exactly. At 100 TB this is the listing-level
-    skip Delta performs from its per-file stats — whole files never
-    enter the scan, before parquet row-group pruning even starts.
-    Combine with :func:`write_zordered` (stats tight in EVERY clustered
-    column) for multi-dimension skipping.
-
-    Falls back to the full table (predicate still applied) when the
-    current version was published without stats for ``col``."""
-    import json
-
-    data_dir = current_data_dir(path)
-    if data_dir is None:
-        return None
-    pred = F.lit(True)
-    if lo is not None:
-        pred = pred & (F.col(col) >= F.lit(lo))
-    if hi is not None:
-        pred = pred & (F.col(col) <= F.lit(hi))
-    raw = read_version_meta(path, STATS_META)
-    if raw is None:
-        return spark.read.parquet(data_dir).filter(pred)
-    stats = json.loads(raw)
-    keep = []
-    for name, file_stats in stats.items():
-        rng = file_stats.get(col)
-        if rng is None:
-            keep.append(name)  # no stats: cannot prune, must read
-            continue
-        fmin, fmax = _stat_decode(rng[0]), _stat_decode(rng[1])
-        try:
-            if (hi is not None and fmin > hi) or \
-                    (lo is not None and fmax < lo):
-                continue
-        except TypeError:
-            # stats/bounds type mismatch (e.g. a legacy default=str
-            # manifest vs a date bound): pruning is an OPTIMIZATION,
-            # so an incomparable pair must read the file, never skip it
-            keep.append(name)
-            continue
-        keep.append(name)
-    if not keep:
-        # empty selection: preserve schema via a zero-file-safe read
-        return spark.read.parquet(data_dir).filter(F.lit(False))
-    return spark.read.parquet(
-        *[os.path.join(data_dir, n) for n in keep]
-    ).filter(pred)

@@ -1,6 +1,6 @@
 """CSV/TSV document ingestion — the other wire format training-data
 deliveries arrive in (index dumps, vendor exports, spreadsheet-born
-metadata). Same design contract as sources/jsonl_docs.py:
+metadata). Design contract:
 
 * **Explicit schema + pinned column ORDER, never inference.** CSV has
   no field names on the wire; the delivery contract is positional

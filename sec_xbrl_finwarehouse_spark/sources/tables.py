@@ -71,9 +71,12 @@ def parallelize_scan(
     at sf0.1 (32 cores slower than 8: doc_bpe_encode 0.59x,
     audio_fingerprint 0.68x, image_neardup 0.81x; PERF_r12 scaling
     block). The row count comes from parquet footers (driver-side
-    metadata, no job); width = clamp(rows / min_split_rows, 1, target).
-    At real scale rows >> target x min_split_rows and the clamp is a
-    no-op -- this only stops the LOW end from over-splitting.
+    metadata, no job); width = clamp(rows / min_split_rows, 1, target),
+    applied also when many small files already give ``target`` splits.
+    A frame with no input files (in-memory) has an unknown row count
+    and keeps ``target``. At real scale rows >> target x min_split_rows
+    and the clamp is a no-op -- this only stops the LOW end from
+    over-splitting.
     """
     from ..session import default_parallelism
 
@@ -82,34 +85,44 @@ def parallelize_scan(
     max_pb = _parse_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     )
+    paths = [uri[len("file://"):] if uri.startswith("file://") else uri
+             for uri in df.inputFiles()]
     est_splits = 0
-    paths = []
-    for uri in df.inputFiles():
-        path = uri[len("file://"):] if uri.startswith("file://") else uri
-        paths.append(path)
+    for path in paths:
         try:
             size = os.path.getsize(path)
         except OSError:
             return df  # non-local storage: trust the source's splits
         est_splits += max(1, -(-size // max_pb))
         if est_splits >= target:
-            return df
+            break
+    width = target
     if min_split_rows and min_split_rows > 0:
-        n_rows = _footer_rows(paths)
+        n_rows = _footer_rows(paths, target * min_split_rows)
         if n_rows >= 0:
-            target = max(1, min(target, -(-n_rows // min_split_rows)))
+            width = max(1, min(target, -(-n_rows // min_split_rows)))
+    if est_splits >= target and width == target:
+        return df
     if keys:
-        return df.repartition(target, *keys)
-    return df.repartition(target)
+        return df.repartition(width, *keys)
+    return df.repartition(width)
 
 
-def _footer_rows(paths: list[str]) -> int:
-    """Total row count from local parquet footers; -1 when unreadable
-    (caller then keeps the byte-estimated width)."""
+def _footer_rows(paths: list[str], enough: int) -> int:
+    """Row count from local parquet footers, read only until it reaches
+    ``enough``; -1 when unknown -- no files (an in-memory frame) or an
+    unreadable footer (caller then keeps the byte-estimated width)."""
+    if not paths:
+        return -1
     try:
         import pyarrow.parquet as pq
 
-        return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+        total = 0
+        for p in paths:
+            total += pq.ParquetFile(p).metadata.num_rows
+            if total >= enough:
+                break
+        return total
     except Exception:
         return -1
 

@@ -24,10 +24,8 @@ a prefix; the warehouse table must pick up ONLY the new ones):
 
 Metadata durability note: the two commit paths differ deliberately.
 An appending run publishes via ``append_if_absent``, which carries
-ONLY the watermark — per-file stats from a prior publish are dropped,
-because ``read_table_pruned`` reads only stats-listed files and stale
-stats on a version with NEW files would silently drop them; the table
-degrades to full-scan reads until the next stats-bearing publish. The
+ONLY the watermark — metadata from a prior publish may describe files
+the new version no longer matches, so it is dropped. The
 duplicates-only path's ``commit_meta_only`` copies prior metadata
 forward, which is safe precisely because its data is identical.
 

@@ -4,11 +4,11 @@ import os
 
 import pytest
 
-# Seed the driver heap BEFORE the JVM launches (same idiom as bench.py /
-# tools/scale_proof.py): the in-process default is 1 GiB, which leaves a
-# 32-task local stage only ~30 MB of headroom per task -- the heavier
-# suites (streaming dedup ingest, IVFPQ index) OOM intermittently at
-# that margin. Respect an operator-provided value.
+# Seed the JVM heap BEFORE the JVM launches (same idiom as
+# perfbench/run.py and tools/scale_proof.py): the in-process default is
+# 1 GiB, which leaves a 32-task local stage only ~30 MB of headroom per
+# task -- the heavier suites OOM intermittently at that margin. Respect
+# an operator-provided value.
 os.environ.setdefault(
     "PYSPARK_SUBMIT_ARGS",
     f"--driver-memory {os.environ.get('SPARK_DRIVER_MEMORY', '8g')} "

@@ -125,18 +125,18 @@ def test_append_if_absent_dedups_within_batch(spark, tmp_path):
     assert sinks.read_table(spark, path).count() == 2
 
 
-def test_compact_reduces_files_preserves_rows(spark, tmp_path):
-    from sec_xbrl_finwarehouse_spark.sinks import compact
-
+def test_write_replace_migrates_legacy_flat_layout(spark, tmp_path):
+    """A pre-manifest flat parquet directory rewritten from its own scan
+    keeps every row and is read from the new version afterwards."""
     path = str(tmp_path / "t.parquet")
     df = spark.range(0, 10_000).withColumn("v", F.col("id") * 2)
     df.repartition(24).write.parquet(path)  # legacy flat layout on purpose
     import glob
     before = len(glob.glob(f"{path}/*.parquet"))
     assert before >= 24
-    n = compact(spark, path, target_file_bytes=1 << 30)  # everything -> 1 file
-    after = glob.glob(f"{sinks.current_data_dir(path)}/*.parquet")
-    assert n == 1 and len(after) == 1
+    sinks.write_replace(sinks.read_table(spark, path).repartition(1), path)
+    cur = sinks.current_data_dir(path)
+    assert cur != path and len(glob.glob(f"{cur}/*.parquet")) == 1
     got = sinks.read_table(spark, path)
     assert got.count() == 10_000
     assert got.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
@@ -166,10 +166,7 @@ def test_publish_retains_exactly_one_prior_version(spark, tmp_path):
         sinks.write_replace(_mk(spark, [(i, "x")]), path)
     versions = [p for p in os.listdir(path) if p.startswith("v_")]
     assert len(versions) == 2  # current + previous, older ones pruned
-    assert sinks.vacuum(path) == 1
-    assert [p for p in os.listdir(path) if p.startswith("v_")] == [
-        os.path.basename(sinks.current_data_dir(path))
-    ]
+    assert os.path.basename(sinks.current_data_dir(path)) in versions
     assert _rows(spark, path) == {(3, "x")}
 
 
@@ -262,20 +259,6 @@ def test_upsert_partitioned_requires_partition_key(spark, tmp_path):
         )
 
 
-def test_read_evolving_merges_additive_schemas(spark, tmp_path):
-    from sec_xbrl_finwarehouse_spark.sinks import read_evolving
-
-    p1 = str(tmp_path / "b1.parquet")
-    p2 = str(tmp_path / "b2.parquet")
-    spark.createDataFrame([(1, "a")], "id long, name string").write.parquet(p1)
-    spark.createDataFrame(
-        [(2, "b", 9.5)], "id long, name string, score double"
-    ).write.parquet(p2)
-    got = read_evolving(spark, p1, p2).orderBy("id").collect()
-    assert [r["id"] for r in got] == [1, 2]
-    assert got[0]["score"] is None and got[1]["score"] == 9.5
-
-
 def test_time_travel_versions(spark, tmp_path):
     """retain=N keeps a readable history: list_versions enumerates
     newest-first, read_table(version=...) reproduces each superseded
@@ -306,84 +289,6 @@ def test_time_travel_versions(spark, tmp_path):
 
     with pytest.raises(FileNotFoundError):
         read_table(spark, table, version="v_nonexistent")
-
-
-def test_table_changes_cdf(spark, tmp_path):
-    """Change data feed between retained versions: inserts, updates
-    (postimage), deletes (old image); unchanged keys not emitted; audit
-    columns excluded from the comparison."""
-    from sec_xbrl_finwarehouse_spark.sinks import (
-        table_changes, write_replace,
-    )
-
-    table = str(tmp_path / "cdf_table")
-    gen0 = spark.createDataFrame(
-        [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
-        "k int, tag string, v double",
-    )
-    write_replace(gen0, table)
-    assert table_changes(spark, table, ["k"]) is None  # no prior version
-
-    gen1 = spark.createDataFrame(
-        [(1, "a", 10.0),        # unchanged -> not emitted
-         (2, "b", 99.0),        # update
-         (4, "d", 40.0)],       # insert; k=3 deleted
-        "k int, tag string, v double",
-    )
-    write_replace(gen1, table)
-
-    changes = {r["k"]: r for r in
-               table_changes(spark, table, ["k"]).collect()}
-    assert set(changes) == {2, 3, 4}
-    assert changes[2]["_change_type"] == "update_postimage"
-    assert changes[2]["v"] == 99.0          # postimage carries NEW values
-    assert changes[3]["_change_type"] == "delete"
-    assert changes[3]["v"] == 30.0          # delete carries the OLD image
-    assert changes[4]["_change_type"] == "insert"
-
-
-def test_table_changes_ignores_audit_churn(spark, tmp_path):
-    """An upsert that rewrites a key with IDENTICAL data refreshes
-    updated_at; the CDF must not report it as a change."""
-    from sec_xbrl_finwarehouse_spark.sinks import table_changes
-
-    table = str(tmp_path / "cdf_audit")
-    batch = spark.createDataFrame([(1, 5.0)], "k int, v double")
-    sinks.upsert(spark, table, batch, keys=["k"])
-    sinks.upsert(spark, table, batch, keys=["k"])  # no-op merge
-    out = table_changes(spark, table, ["k"]).collect()
-    assert out == []
-
-
-def test_table_changes_round_trip(spark, tmp_path):
-    """Applying the change feed to the PREVIOUS snapshot reproduces the
-    CURRENT one exactly — the consumer contract of a CDF."""
-    from sec_xbrl_finwarehouse_spark.sinks import (
-        list_versions, read_table, table_changes, write_replace,
-    )
-
-    table = str(tmp_path / "cdf_rt")
-    write_replace(spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0), (4, "d", 4.0)],
-        "k int, tag string, v double"), table)
-    write_replace(spark.createDataFrame(
-        [(1, "a", 1.0), (2, "B", 2.5), (5, "e", 5.0)],
-        "k int, tag string, v double"), table)
-
-    prev_name = list_versions(table)[1]["version"]
-    prev = read_table(spark, table, version=prev_name)
-    feed = table_changes(spark, table, ["k"])
-
-    deletes = feed.filter(F.col("_change_type") == "delete").select("k")
-    upserts = feed.filter(F.col("_change_type") != "delete").drop("_change_type")
-    rebuilt = (
-        prev.join(deletes, "k", "left_anti")
-        .join(upserts.select("k"), "k", "left_anti")  # drop stale rows
-        .unionByName(upserts)
-    )
-    got = {tuple(r) for r in rebuilt.collect()}
-    want = {tuple(r) for r in read_table(spark, table).collect()}
-    assert got == want
 
 
 def test_optimistic_concurrency_rejects_stale_commit(spark, tmp_path):
@@ -498,57 +403,9 @@ def test_constraint_gate_rejects_bad_publish(spark, tmp_path):
     assert leftovers == []
 
 
-def test_merge_three_clause(spark, tmp_path):
-    """General MERGE: update / insert / conditional delete in one
-    atomic publish, counts returned, audit semantics preserved."""
-    from sec_xbrl_finwarehouse_spark.sinks import merge, read_table
-
-    table = str(tmp_path / "merge_t")
-    base = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", 2.0), (3, "c", 3.0)],
-        "k int, tag string, v double",
-    )
-    out = merge(spark, table, base, on=["k"])
-    assert out == {"updated": 0, "inserted": 3, "deleted": 0}
-    created0 = {r["k"]: r["created_at"]
-                for r in read_table(spark, table).collect()}
-
-    src = spark.createDataFrame(
-        [(2, "B", 20.0, False),   # update
-         (3, "c", 3.0, True),     # matched + tombstone -> delete
-         (4, "d", 40.0, False),   # insert
-         (5, "e", 50.0, True)],   # tombstone for absent key -> skip
-        "k int, tag string, v double, is_deleted boolean",
-    )
-    out = merge(spark, table, src, on=["k"],
-                when_matched_delete="is_deleted")
-    assert out == {"updated": 1, "inserted": 1, "deleted": 1}
-
-    rows = {r["k"]: r for r in read_table(spark, table).collect()}
-    assert set(rows) == {1, 2, 4}
-    assert rows[2]["v"] == 20.0 and rows[2]["tag"] == "B"
-    assert rows[2]["created_at"] == created0[2]  # carried through update
-    assert rows[1]["updated_at"] == created0[1]  # untouched row unchanged
-
-    # duplicate-key source is ambiguous -> error, table untouched
-    dup = spark.createDataFrame(
-        [(9, "x", 1.0), (9, "y", 2.0)], "k int, tag string, v double")
-    with pytest.raises(ValueError):
-        merge(spark, table, dup, on=["k"])
-    assert set(r["k"] for r in read_table(spark, table).collect()) == {1, 2, 4}
-
-    # insert-only mode (ON CONFLICT DO NOTHING semantics)
-    src2 = spark.createDataFrame(
-        [(2, "Z", 99.0), (6, "f", 6.0)], "k int, tag string, v double")
-    out = merge(spark, table, src2, on=["k"], when_matched_update=False)
-    rows = {r["k"]: r for r in read_table(spark, table).collect()}
-    assert out["inserted"] == 1 and rows[2]["v"] == 20.0 and 6 in rows
-
-
 # ---------------------------------------------------------------------------
-# round-7/8 storage-bug regression tests: NULL-partition survival,
-# no-orphan publish failures, typed DATE stats pruning, legacy-flat
-# migration safety, NULL-key audit carry-over
+# storage-bug regression tests: no-orphan publish failures, legacy-flat
+# migration safety
 # ---------------------------------------------------------------------------
 
 
@@ -679,137 +536,14 @@ def test_legacy_migration_failure_restores_flat_files(spark, tmp_path):
     assert any(n.startswith("v_legacy_") for n in os.listdir(path))
 
 
-def test_read_table_pruned_date_stats(spark, tmp_path):
-    """Typed (DATE) per-file stats must prune files correctly; a legacy
-    stringified-stats manifest must never SKIP a file (pruning is an
-    optimization, incomparable pairs read the file)."""
-    import json
-
-    path = str(tmp_path / "t")
-    df = spark.sql(
-        "SELECT sequence(to_date('2024-01-01'), to_date('2024-12-27'), "
-        "interval 3 days) AS ds"
-    ).selectExpr("explode(ds) AS d").withColumn("v", F.lit(1))
-    sinks.write_replace(
-        df.repartitionByRange(4, "d").sortWithinPartitions("d"),
-        path, stats_cols=["d"],
-    )
-    import datetime
-
-    lo, hi = datetime.date(2024, 6, 1), datetime.date(2024, 6, 30)
-    pruned = sinks.read_table_pruned(spark, path, "d", lo=lo, hi=hi)
-    want = {r["d"] for r in df.filter(
-        (F.col("d") >= F.lit(lo)) & (F.col("d") <= F.lit(hi))).collect()}
-    assert {r["d"] for r in pruned.collect()} == want
-    # the June window fits one range partition: files were SKIPPED
-    n_total = len([n for n in os.listdir(sinks.current_data_dir(path))
-                   if n.endswith(".parquet")])
-    assert len(pruned.inputFiles()) < n_total
-
-    # legacy manifest: stats stringified (old default=str encoding)
-    data_dir = sinks.current_data_dir(path)
-    meta = os.path.join(data_dir, sinks.STATS_META)
-    stats = json.loads(open(meta).read())
-    legacy = {
-        f: {c: [str(sinks._stat_decode(rng[0])),
-                str(sinks._stat_decode(rng[1]))]
-            for c, rng in cols.items()}
-        for f, cols in stats.items()
-    }
-    open(meta, "w").write(json.dumps(legacy))
-    fallback = sinks.read_table_pruned(spark, path, "d", lo=lo, hi=hi)
-    assert {r["d"] for r in fallback.collect()} == want
-    # nothing skipped: every file read (never mis-prune on str-vs-date)
-    assert len(fallback.inputFiles()) == n_total
-
-
-def test_restore_rolls_back_as_new_version(spark, tmp_path):
-    """RESTORE: a retained superseded version becomes current again via
-    a NEW hard-linked version (history grows, nothing is mutated); the
-    provenance marker names the source; restoring current is rejected;
-    an unretained name raises."""
-    path = str(tmp_path / "t")
-    v1 = spark.createDataFrame([(1, "good")], "id int, v string")
-    v2 = spark.createDataFrame([(1, "bad"), (2, "oops")], "id int, v string")
-    sinks.write_replace(v1, path, retain=3)
-    good = next(x["version"] for x in sinks.list_versions(path)
-                if x["is_current"])
-    sinks.write_replace(v2, path, retain=3)
-    assert {r["v"] for r in sinks.read_table(spark, path).collect()} == \
-        {"bad", "oops"}
-
-    new_v = sinks.restore(path, good)
-    assert {r["v"] for r in sinks.read_table(spark, path).collect()} == \
-        {"good"}
-    cur = sinks.current_data_dir(path)
-    assert os.path.basename(cur) == new_v != good
-    with open(os.path.join(cur, "_restored_from"), encoding="utf-8") as f:
-        assert f.read() == good
-    # the restored-FROM version is still retained and identical
-    assert {r["v"] for r in
-            sinks.read_table(spark, path, version=good).collect()} == \
-        {"good"}
-
-    with pytest.raises(ValueError):
-        sinks.restore(path, new_v)          # already current
-    with pytest.raises(FileNotFoundError):
-        sinks.restore(path, "v_nonexistent")
-
-
-def test_clone_is_independent_zero_copy_table(spark, tmp_path):
-    """SHALLOW CLONE: the clone serves the source's data immediately,
-    carries provenance, and diverges independently -- a publish to the
-    clone never changes the source and vice versa. Cloning onto an
-    existing table is rejected."""
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    sinks.write_replace(
-        spark.createDataFrame([(1, "a")], "id int, v string"), src
-    )
-    v = sinks.clone(src, dst)
-    assert [r["v"] for r in sinks.read_table(spark, dst).collect()] == ["a"]
-    cur = sinks.current_data_dir(dst)
-    assert os.path.basename(cur) == v
-    with open(os.path.join(cur, "_cloned_from"), encoding="utf-8") as f:
-        assert f.read().startswith(src + "@v_")
-    # divergence: write to the clone, source untouched (and vice versa)
-    sinks.write_replace(
-        spark.createDataFrame([(2, "clone-only")], "id int, v string"), dst
-    )
-    sinks.write_replace(
-        spark.createDataFrame([(3, "src-only")], "id int, v string"), src
-    )
-    assert [r["v"] for r in sinks.read_table(spark, dst).collect()] == \
-        ["clone-only"]
-    assert [r["v"] for r in sinks.read_table(spark, src).collect()] == \
-        ["src-only"]
-    with pytest.raises(FileExistsError):
-        sinks.clone(src, dst)
-    with pytest.raises(FileNotFoundError):
-        sinks.clone(str(tmp_path / "nope"), str(tmp_path / "d2"))
-
-
-def test_clone_rejects_non_version_names(spark, tmp_path):
-    """Only v_ version directories are cloneable: a staging dir or
-    arbitrary subpath must never become a published table."""
-    src = str(tmp_path / "src")
-    sinks.write_replace(
-        spark.createDataFrame([(1, "a")], "id int, v string"), src
-    )
-    os.mkdir(os.path.join(src, "_staging_deadbeef"))
-    with pytest.raises(FileNotFoundError):
-        sinks.clone(src, str(tmp_path / "d"), version="_staging_deadbeef")
-    with pytest.raises(FileNotFoundError):
-        sinks.clone(src, str(tmp_path / "d"), version="..")
-
-
 def test_version_order_survives_mtime_scramble(spark, tmp_path):
     """Content-addressed history: version order comes from the _SEQ
     commit sequence persisted at publish, NOT directory mtime. An
     external copy of the whole table tree (cp/rsync -- every mtime
     rewritten, here deliberately scrambled to REVERSE creation order)
     must still enumerate versions correctly, time-travel to the right
-    snapshots, diff the right pair in table_changes, and retain-prune
-    the genuinely oldest version on the next publish."""
+    snapshots, and retain-prune the genuinely oldest version on the
+    next publish."""
     import shutil as _sh
     import time as _time
 
@@ -838,14 +572,6 @@ def test_version_order_survives_mtime_scramble(spark, tmp_path):
             spark, dst, version=v["version"]).collect()}
         assert got == snapshots[gen]
 
-    # CDF diffs current against the TRUE previous (gen1: ids 0,1), not
-    # the mtime-youngest directory (gen0 after the scramble): id 2 is
-    # the insert, ids 0/1 are gen-column updates. Against gen0 the set
-    # would instead be {(1, insert), (2, insert), (0, update)}.
-    changes = sinks.table_changes(spark, dst, ["id"]).collect()
-    assert {(r["id"], r["_change_type"]) for r in changes} == \
-        {(2, "insert"), (0, "update_postimage"), (1, "update_postimage")}
-
     # retain-prune on the copied table drops the genuinely oldest
     sinks.write_replace(
         spark.range(4).withColumn("gen", F.lit(3)), dst, retain=3)
@@ -860,7 +586,7 @@ def test_version_order_survives_mtime_scramble(spark, tmp_path):
 from hypothesis import HealthCheck, given, settings  # noqa: E402
 from hypothesis import strategies as st  # noqa: E402
 
-# ops are interpreted by _run_version_store_schedule below
+# ops are interpreted by the schedule test below
 _op = st.one_of(
     st.tuples(st.just("upsert"),
               st.dictionaries(st.integers(0, 4), st.integers(0, 99),
@@ -868,8 +594,10 @@ _op = st.one_of(
     st.tuples(st.just("stale_write"),
               st.dictionaries(st.integers(0, 4), st.integers(0, 99),
                               min_size=1, max_size=3)),
-    st.tuples(st.just("restore"), st.integers(0, 3)),
-    st.tuples(st.just("vacuum"), st.just(0)),
+    st.tuples(st.just("append"),
+              st.dictionaries(st.integers(0, 6), st.integers(0, 99),
+                              min_size=1, max_size=3)),
+    st.tuples(st.just("rollback"), st.integers(0, 3)),
 )
 
 
@@ -879,14 +607,15 @@ _op = st.one_of(
 def test_version_store_occ_schedule_no_lost_updates(spark, tmp_path_factory,
                                                     schedule):
     """Randomized interleavings of occ-upsert / stale-OCC-write /
-    restore / vacuum against a sequential model: (1) a stale writer
+    append-if-absent / rollback (a retained version read by time travel
+    and republished) against a sequential model: (1) a stale writer
     (its read snapshot superseded by an interloper's commit) ALWAYS
     fails with ConcurrentWriteError and changes nothing -- the
     interloper's update is never lost; (2) after every successful op
     the stored table equals the model exactly; (3) no operation --
     including the failed commits -- leaves an orphan v_* directory
     (every v_* on disk is the one the pointer or retention accounts
-    for, and vacuum collapses history to exactly the current one)."""
+    for)."""
     path = str(tmp_path_factory.mktemp("occ_sched") / "t")
 
     def df_of(d):
@@ -936,20 +665,24 @@ def test_version_store_occ_schedule_no_lost_updates(spark, tmp_path_factory,
                 sinks.write_replace(df_of(arg), path, retain=4,
                                     expect_version=stale)
             assert v_dirs() == dirs_before
-        elif op == "restore":
+        elif op == "append":
+            sinks.append_if_absent(spark, path, df_of(arg), keys=["k"],
+                                   audit=False)
+            for k, v in arg.items():
+                model.setdefault(k, v)
+            record_current()
+        elif op == "rollback":
             targets = [v["version"] for v in sinks.list_versions(path)
                        if not v["is_current"] and v["version"] in by_version]
             if not targets:
                 continue
             target = targets[arg % len(targets)]
-            new_v = sinks.restore(path, target)
+            cur = os.path.basename(sinks.current_data_dir(path))
+            sinks.write_replace(
+                sinks.read_table(spark, path, version=target), path,
+                retain=4, expect_version=cur)
             model = dict(by_version[target])
-            by_version[new_v] = dict(model)
-        elif op == "vacuum":
-            if sinks.current_data_dir(path) is None:
-                continue
-            sinks.vacuum(path)
-            assert len(v_dirs()) == 1
+            record_current()
         assert table_dict() == model
         # no orphans: every v_* directory on disk is enumerated by the
         # version catalog (an orphan would corrupt retain accounting)
@@ -984,107 +717,6 @@ def test_prune_spares_young_unstamped_dirs_reclaims_old(spark, tmp_path):
     assert not os.path.isdir(staged)
     # and the committed current version is intact
     assert sinks.read_table(spark, path).count() == 1
-
-
-def test_replace_where_moves_rows_and_drops_partitions(spark, tmp_path):
-    """r10 storage primitive: a reorganization can DROP partition
-    values and MOVE rows to new ones -- kept partitions hard-link,
-    dropped directories disappear, the publish is atomic, and an empty
-    incoming under non-empty values is refused (never a silent
-    deletion)."""
-    path = str(tmp_path / "t")
-    sinks.upsert_partitioned(
-        spark, path,
-        _mkp(spark, [(1, "a", 10), (2, "b", 10), (3, "c", 20),
-                     (4, "d", 30)]),
-        keys=["part", "k"], partition_col="part", audit=False,
-    )
-    v1 = sinks.current_data_dir(path)
-    inodes_before = {p: _inodes(v1, p) for p in _pdirs(v1)}
-
-    # split part=10 into part=101/part=102 (rows MOVE partition)
-    n = sinks.replace_where(
-        spark, path, "part", [10],
-        _mkp(spark, [(1, "a", 101), (2, "b", 102)]),
-        manifest_extra={"_reorg": "10->101,102"},
-    )
-    assert n == 2
-    v2 = sinks.current_data_dir(path)
-    assert _pdirs(v2) == ["part=101", "part=102", "part=20", "part=30"]
-    got = {(r["k"], r["v"], r["part"])
-           for r in sinks.read_table(spark, path).collect()}
-    assert got == {(1, "a", 101), (2, "b", 102), (3, "c", 20),
-                   (4, "d", 30)}
-    # untouched partitions: same inodes (hard links)
-    assert _inodes(v2, "part=20") == inodes_before["part=20"]
-    assert _inodes(v2, "part=30") == inodes_before["part=30"]
-    # manifest extra committed atomically with the version
-    assert sinks.read_version_meta(path, "_reorg") == "10->101,102"
-    # the pre-reorg version is retained and time-travels intact
-    old = os.path.basename(v1)
-    back = {(r["k"], r["part"]) for r in
-            sinks.read_table(spark, path, version=old).collect()}
-    assert back == {(1, 10), (2, 10), (3, 20), (4, 30)}
-
-    # incoming may also overwrite an EXISTING partition it targets
-    sinks.replace_where(
-        spark, path, "part", [], _mkp(spark, [(9, "z", 20)])
-    )
-    got = {(r["k"], r["part"])
-           for r in sinks.read_table(spark, path).collect()}
-    assert got == {(1, 101), (2, 102), (9, 20), (4, 30)}
-
-    # empty incoming + non-empty values: refused, table unchanged
-    cur = sinks.current_data_dir(path)
-    with pytest.raises(ValueError, match="silent partition deletion"):
-        sinks.replace_where(
-            spark, path, "part", [30],
-            _mkp(spark, [(1, "a", 10)]).filter("k > 100"),
-        )
-    assert sinks.current_data_dir(path) == cur
-
-
-def test_replace_where_occ_and_meta_carry_forward(spark, tmp_path):
-    """r11 (ADVICE): replace_where is a read-modify-write, so (a) a
-    publish racing in between the reorganizer's snapshot and its commit
-    must surface as ConcurrentWriteError when the snapshot version is
-    pinned via expect_version, and (b) the previous version's commit
-    metadata (txn markers, watermarks) rides the reorg -- overlaid by
-    manifest_extra -- while _FILE_STATS (stale for changed files) is
-    dropped."""
-    path = str(tmp_path / "t")
-    sinks.upsert_partitioned(
-        spark, path, _mkp(spark, [(1, "a", 10), (3, "c", 20)]),
-        keys=["part", "k"], partition_col="part", audit=False,
-        manifest_extra={"_watermark": "w1", "_keepme": "v0"},
-    )
-    # plant a stats manifest on the current version: it must NOT ride
-    with open(os.path.join(sinks.current_data_dir(path),
-                           sinks.STATS_META), "w") as f:
-        f.write("{}")
-    v1 = os.path.basename(sinks.current_data_dir(path))
-
-    # (b) pinned reorg commits, carrying meta with overlay
-    sinks.replace_where(
-        spark, path, "part", [10], _mkp(spark, [(1, "a", 101)]),
-        manifest_extra={"_watermark": "w2"}, expect_version=v1,
-    )
-    assert sinks.read_version_meta(path, "_watermark") == "w2"  # overlay
-    assert sinks.read_version_meta(path, "_keepme") == "v0"     # carried
-    assert sinks.read_version_meta(path, sinks.STATS_META) is None
-    v2 = sinks.current_data_dir(path)
-
-    # (a) a reorg still pinned to the superseded snapshot must fail --
-    # the torn-merge guard -- and leave the winner's version current
-    with pytest.raises(sinks.ConcurrentWriteError):
-        sinks.replace_where(
-            spark, path, "part", [20],
-            _mkp(spark, [(3, "c", 202)]), expect_version=v1,
-        )
-    assert sinks.current_data_dir(path) == v2  # loser left no trace
-    got = {(r["k"], r["part"])
-           for r in sinks.read_table(spark, path).collect()}
-    assert got == {(1, 101), (3, 20)}
 
 
 def test_upsert_partitioned_occ_rejects_racing_publish(spark, tmp_path):

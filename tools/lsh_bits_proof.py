@@ -9,7 +9,7 @@ turns that sentence into a measurement: on the 20x sign-flip
 decorrelated corpus (the honest near-dup embedding workload from
 tools/scale_proof.py) it runs ``q_emb_knn_graph`` at ``lsh_bits`` = 8
 (the oracle-pinned default) and 9, STRICTLY INTERLEAVED in one process
-(this host throttles in bursts; see bench.py), and reports per-bucket
+(wall time on a shared VM drifts in bursts), and reports per-bucket
 density, candidate-pair mass, and min-of-3 wall clock for each
 setting. Expected: +1 bit roughly halves mean bucket population and
 candidate mass, pulling wall clock toward the 10x point's -- density
