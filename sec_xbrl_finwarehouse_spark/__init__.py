@@ -5,10 +5,12 @@ Layout:
     session     -- tuned SparkSession factory (AQE, UTC, arrow)
     schemas     -- StructTypes + tag constants from the reference warehouse
     sources/    -- parquet star-schema loaders, companyfacts JSON flatten, SEC HTTP client
-    operators/  -- window dedup, pivot, upsert, as-of join, sessionize,
-                   text dedup (exact/minhash/simhash), similarity search, text analysis
+    operators/  -- natural-key dedup, pivot, upsert, Hash-Min connected components
     plans/      -- statements_annual (v1/v2/v3), ratios_annual, API query builders,
-                   star-schema facts adapter
+                   star-schema facts adapter, text/event/embedding query packs
+    sinks       -- versioned parquet tables: atomic publish, upsert, insert-if-absent
+    materialize -- the mart build (companies, statements_annual, ratios_annual)
+    api, serving, cli -- the HTTP endpoints and the seed/ingest/build/ratios/serve CLI
     streaming/  -- Structured Streaming variants of the event operators
 
 Everything is DataFrame/Spark-SQL first: no RDDs, no row-at-a-time Python

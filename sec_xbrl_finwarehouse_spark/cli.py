@@ -135,7 +135,7 @@ def cmd_ingest(args) -> int:
     flatten/filter/dedup, then commit filings and facts with
     insert-if-absent semantics (ON CONFLICT DO NOTHING)."""
     from . import sinks
-    from .materialize import FACT_KEYS
+    from .schemas import FACTS_NATURAL_KEY
     from .sources.companyfacts import (
         dedup_facts,
         derive_filings,
@@ -195,7 +195,7 @@ def cmd_ingest(args) -> int:
         )
         n_facts = sinks.append_if_absent(
             spark, os.path.join(warehouse, "facts"), facts,
-            keys=list(FACT_KEYS),
+            keys=list(FACTS_NATURAL_KEY),
         )
         print(f"ingested {n_spooled} companies: "
               f"filings files committed={n_filings}, "
@@ -211,6 +211,7 @@ def cmd_build(args) -> int:
     """build_statements_annual_v3.py parity: statements_annual mart
     from the ingested facts table (PK upsert, idempotent rebuild)."""
     from . import sinks
+    from .materialize import MART_KEYS
     from .plans.statements import build_statements
 
     warehouse = _warehouse(args)
@@ -218,10 +219,10 @@ def cmd_build(args) -> int:
     facts = sinks.read_table(spark, os.path.join(warehouse, "facts"))
     if facts is None:
         raise SystemExit("facts table is empty: run `ingest` first")
-    statements = build_statements(facts, version=args.version)
+    statements = build_statements(facts, version="v3")
     path = os.path.join(warehouse, "statements_annual")
-    sinks.upsert(spark, path, statements, keys=["cik", "fiscal_year"])
-    print(f"built statements_annual ({args.version}) -> {path}")
+    sinks.upsert(spark, path, statements, keys=list(MART_KEYS))
+    print(f"built statements_annual (v3) -> {path}")
     return 0
 
 
@@ -229,6 +230,7 @@ def cmd_ratios(args) -> int:
     """compute_ratios.py parity: ratios_annual mart from the statements
     mart (PK upsert, idempotent rebuild)."""
     from . import sinks
+    from .materialize import MART_KEYS
     from .plans.ratios import compute_ratios
 
     warehouse = _warehouse(args)
@@ -240,7 +242,7 @@ def cmd_ratios(args) -> int:
         raise SystemExit("statements_annual is empty: run `build` first")
     ratios = compute_ratios(statements)
     path = os.path.join(warehouse, "ratios_annual")
-    sinks.upsert(spark, path, ratios, keys=["cik", "fiscal_year"])
+    sinks.upsert(spark, path, ratios, keys=list(MART_KEYS))
     print(f"built ratios_annual -> {path}")
     return 0
 
@@ -307,8 +309,6 @@ def _parser() -> argparse.ArgumentParser:
 
     build = sub.add_parser("build", help="build statements_annual",
             parents=[shared])
-    build.add_argument("--version", default="v3",
-                       choices=("v1", "v2", "v3"))
     build.set_defaults(func=cmd_build)
 
     ratios = sub.add_parser("ratios", help="build ratios_annual",

@@ -30,28 +30,19 @@ from .session import default_parallelism
 from .sources.tables import table_path
 
 
+# primary key of statements_annual and ratios_annual (db/schema.sql);
+# every mart upsert, the CLI's included, keys on it
+MART_KEYS = ("cik", "fiscal_year")
+
+
 def build_all_marts(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str, str]:
     """Materialize companies, statements_annual, and ratios_annual marts
     under ``out_dir`` via idempotent PK upserts. Returns mart -> path."""
-    lineitem = spark.read.parquet(table_path(sf_dir, "lineitem"))
-    supplier = spark.read.parquet(table_path(sf_dir, "supplier"))
-
-    companies = star_companies(supplier)
-    facts = synthetic_facts(lineitem, entity_partitions=default_parallelism())
-    statements = build_statements(facts, version="v3")
-    ratios = compute_ratios(statements)
-
-    paths = {
-        "companies": f"{out_dir}/companies",
-        "statements_annual": f"{out_dir}/statements_annual",
-        "ratios_annual": f"{out_dir}/ratios_annual",
-    }
-    sinks.upsert(spark, paths["companies"], companies, keys=["cik"])
-    sinks.upsert(spark, paths["statements_annual"], statements,
-                 keys=["cik", "fiscal_year"])
-    sinks.upsert(spark, paths["ratios_annual"], ratios,
-                 keys=["cik", "fiscal_year"])
-    return paths
+    facts = synthetic_facts(
+        spark.read.parquet(table_path(sf_dir, "lineitem")),
+        entity_partitions=default_parallelism(),
+    )
+    return build_marts_from_facts(spark, facts, sf_dir, out_dir)
 
 
 def materialize_facts_bucketed(
@@ -117,16 +108,11 @@ def build_marts_from_facts(
     )
     sinks.upsert(spark, paths["companies"], companies, keys=["cik"])
     sinks.upsert(spark, paths["statements_annual"], statements,
-                 keys=["cik", "fiscal_year"])
+                 keys=list(MART_KEYS))
     sinks.upsert(spark, paths["ratios_annual"], ratios,
-                 keys=["cik", "fiscal_year"], manifest_extra=extra)
+                 keys=list(MART_KEYS), manifest_extra=extra)
     return paths
 
-
-# natural key of a stored fact row (db/schema.sql:39 UNIQUE constraint,
-# re-expressed over FACTS_SCHEMA columns)
-FACT_KEYS = ("cik", "taxonomy", "tag", "unit", "period_start",
-             "period_end", "filing_accession_no")
 
 # manifest_extra file (on the statements mart) naming the facts table
 # version the last refresh consumed — the incremental-diff baseline
@@ -236,9 +222,9 @@ def refresh_marts_incremental(
     ratios = compute_ratios(statements)
 
     n_stmt = 0
-    for mart, df, keycols in (
-        ("statements_annual", statements, ["cik", "fiscal_year"]),
-        ("ratios_annual", ratios, ["cik", "fiscal_year"]),
+    for mart, df in (
+        ("statements_annual", statements),
+        ("ratios_annual", ratios),
     ):
         path = f"{out_dir}/{mart}"
         # advance the baseline pointer atomically with the FINAL mart
@@ -262,19 +248,19 @@ def refresh_marts_incremental(
             # _merge_with_audit: a plain equi-join would reset
             # created_at for NULL-keyed rows on every refresh
             prior = stored.select(
-                *[F.col(k).alias(f"__pk_{k}") for k in keycols],
+                *[F.col(k).alias(f"__pk_{k}") for k in MART_KEYS],
                 F.col(sinks.CREATED_AT).alias("__prior_created"),
             )
             cond = functools.reduce(
                 lambda a, b: a & b,
-                [df[k].eqNullSafe(prior[f"__pk_{k}"]) for k in keycols],
+                [df[k].eqNullSafe(prior[f"__pk_{k}"]) for k in MART_KEYS],
             )
             fresh = (
                 df.join(prior, cond, "left")
                 .withColumn(sinks.CREATED_AT,
                             F.coalesce("__prior_created", now))
                 .withColumn(sinks.UPDATED_AT, now)
-                .drop("__prior_created", *[f"__pk_{k}" for k in keycols])
+                .drop("__prior_created", *[f"__pk_{k}" for k in MART_KEYS])
             )
             sinks.write_replace(
                 kept.unionByName(fresh.select(*stored.columns)), path,

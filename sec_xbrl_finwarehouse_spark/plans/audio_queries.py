@@ -101,10 +101,10 @@ def q_audio_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``keep`` marking the canonical clip -- what "dedup the audio
     shards" executes at 100 TB. Same plan spine as
     image_queries.q_image_dedup_clusters."""
-    from .text_queries import CC_MAX_ITERS, hash_min_components
+    from ..operators.connected_components import hash_min_components
 
     pairs = q_audio_neardup(spark, sf_dir).select("d1", "d2")
-    labels = hash_min_components(pairs, CC_MAX_ITERS).withColumnRenamed(
+    labels = hash_min_components(pairs).withColumnRenamed(
         "node_id", "doc_id"
     )
     docs = _documents(spark, sf_dir).select("doc_id")

@@ -530,7 +530,7 @@ def q_doc_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     get their own 'empty' bucket: CCNet drops them, and an explicit
     label keeps that decision visible downstream.
 
-    The score frame is persisted (conf-driven level, _persist_hot): it
+    The score frame is persisted (_persist_hot, MEMORY_AND_DISK): it
     feeds both the threshold aggregate and the final projection, and
     without it the whole two-pass tokenize+LM pipeline would execute
     twice (doc-count-sized, so MEMORY_AND_DISK is safe even at scale).

@@ -27,6 +27,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.audiofp import text_phash_afp_column
 from ..operators.connected_components import hash_min_components
@@ -34,7 +35,6 @@ from .audio_queries import AUDIO_NEARDUP_SQL
 from .image_queries import ORACLES as _IMG_ORACLES
 from .image_queries import banded_hamming_pairs
 from .text_queries import (
-    CC_MAX_ITERS,
     DOC_JACCARD_PAIRS_SQL,
     _documents,
     _persist_hot,
@@ -43,7 +43,7 @@ from .text_queries import (
 
 
 def cluster_union_pair_graphs(
-    docs: DataFrame, pair_graphs: list[DataFrame], max_iters: int = CC_MAX_ITERS
+    docs: DataFrame, pair_graphs: list[DataFrame]
 ) -> DataFrame:
     """Union (d1, d2) pair DataFrames from any number of evidence
     sources, drop duplicate edges (the same pair often survives in
@@ -55,7 +55,7 @@ def cluster_union_pair_graphs(
     for pg in pair_graphs[1:]:
         pairs = pairs.unionByName(pg.select("d1", "d2"))
     pairs = pairs.dropDuplicates(["d1", "d2"])
-    labels = hash_min_components(pairs, max_iters).withColumnRenamed(
+    labels = hash_min_components(pairs).withColumnRenamed(
         "node_id", "doc_id"
     )
     return (
@@ -138,7 +138,12 @@ def q_multimodal_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lanes = [(("text", text),), (("image", image), ("audio", audio))]
     with ThreadPoolExecutor(max_workers=len(lanes)) as pool:
-        list(pool.map(_lane, lanes))
+        # one wrap per lane: each gets its own copy of the caller's
+        # local properties (job group) to set its description on
+        futs = [pool.submit(inheritable_thread_target(spark)(_lane), lane)
+                for lane in lanes]
+        for fut in futs:
+            fut.result()
     return cluster_union_pair_graphs(
         _documents(spark, sf_dir), [text, image, audio]
     )

@@ -17,8 +17,7 @@ every incoming document batch probes them map-side:
   scan of the train docs agrees with the from-scratch query row for
   row -- that agreement is unit-tested (tests/test_decontam_index.py).
 
-Same family as plans/incremental_dedup.py (MinHash index) and the stored
-IVF indexes: build once, probe per batch, corpus-sized work never.
+Build once, probe per batch, corpus-sized work never.
 No counterpart in `/root/reference/`.
 """
 

@@ -673,7 +673,7 @@ def q_emb_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # two sides' projections alias differently so exchange reuse cannot
     # fire -- unpersisted, the Arrow bucket UDF (and the scan under it)
     # executed once per side (guide §1.2/§4). LSH_TABLES rows per
-    # vector; at 100 TB set the hot-set level to DISK_ONLY (conf).
+    # vector; MEMORY_AND_DISK spills them at 100 TB.
     b = _persist_hot(
         e.select("vec_id", buckets("emb").alias("bks"))
         .select("vec_id", F.posexplode("bks").alias("tbl", "bucket"))

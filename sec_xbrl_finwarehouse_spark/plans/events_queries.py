@@ -1009,8 +1009,8 @@ def kmv_frac_col(col: str = "h"):
 def kmv_k_smallest(h: DataFrame, group_cols: list[str],
                    k: int = KMV_K) -> DataFrame:
     """k smallest DISTINCT ``h`` values per group, ranked (``rk``
-    column retained) — the sketch builder shared by the batch queries
-    and streaming/kmv_stream.py. Two-phase pruning: phase 1 ranks
+    column retained) — the sketch builder shared by the batch queries.
+    Two-phase pruning: phase 1 ranks
     within (group, input partition) and discards past rank k BEFORE
     the group-keyed exchange, so no window partition ever holds a
     group's full distinct-hash set."""
@@ -1133,8 +1133,8 @@ _HLL_W_BITS = 4 * KMV_HEX - HLL_P
 
 def hll_registers(h: DataFrame, group_cols: list[str]) -> DataFrame:
     """(group..., h) md5-hex rows -> one max-rho register per (group,
-    bucket) -- the HLL state fold shared by the batch query and
-    streaming/hll_stream.py so the two can never drift. ``rho`` uses
+    bucket) -- the HLL state fold shared by the distinct-count and
+    sliding-window queries so the two can never drift. ``rho`` uses
     the TRAILING-zero rank of the remainder bits (w & -w isolates the
     lowest set bit, an exact power of two whose log2 is exact in a
     double), which is distributed identically to the classic
@@ -1170,8 +1170,8 @@ def hll_estimate_col() -> Column:
     """Estimate from per-group register aggregates ``z_present`` (sum of
     2^-mreg over populated registers) and ``n_buckets`` (populated
     register count): the raw harmonic-mean estimate with the standard
-    small-range LinearCounting correction. Shared by the batch query
-    and the streaming twin."""
+    small-range LinearCounting correction. Shared by the distinct-count
+    and sliding-window queries."""
     z = F.col("z_present") + (HLL_M - F.col("n_buckets"))
     raw = F.lit(HLL_ALPHA * HLL_M * HLL_M) / z
     v = F.lit(HLL_M) - F.col("n_buckets")
@@ -1200,8 +1200,8 @@ def q_event_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the register fold is a max-monoid groupBy (map-side
     combined, <= m = {HLL_M} rows per group ever -- TRUE bounded state,
     unlike the audit's distinct agg, which a 100 TB deployment drops);
-    merging two sketches is elementwise register max, the semilattice
-    streaming/hll_stream.py exploits for exactly-once-by-algebra."""
+    merging two sketches is elementwise register max, a semilattice,
+    so a replayed merge leaves the sketch unchanged."""
     e = _events(spark, sf_dir)
     d = e.select("event_type", "user_id").distinct()
     h = d.select(
@@ -1297,9 +1297,8 @@ def q_event_hll_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism/portability: identical register arithmetic to
     ``q_event_hll_distinct`` (shared :func:`hll_registers` +
-    :func:`hll_estimate_col`); the merge is the same max-semilattice
-    the streaming twin exploits, applied across TIME instead of across
-    micro-batches -- the DuckDB oracle reproduces every estimate
+    :func:`hll_estimate_col`); the merge is the same max-semilattice,
+    applied across TIME -- the DuckDB oracle reproduces every estimate
     bit-exactly.
 
     Scale shape: the daily fold is a max-monoid groupBy bounded at
@@ -1405,9 +1404,9 @@ CM_TOPK = 20
 def cm_with_cells(df: DataFrame, item_col: str = "user_id") -> DataFrame:
     """Append the {CM_D} (j, pos) Count-Min cell coordinates of
     ``item_col`` to every row -- the sketch's hash arithmetic, shared
-    by the batch query (counter build AND estimate probe) and
-    streaming/cm_stream.py so the three can never drift. ``_CM_POS_SQL``
-    below is its oracle twin."""
+    by the counter build AND the estimate probe of both Count-Min
+    queries so they can never drift. ``_CM_POS_SQL`` below is its
+    oracle twin."""
     return (
         df.withColumn(
             "j", F.explode(F.array(*[F.lit(i) for i in range(CM_D)]))
@@ -1445,9 +1444,8 @@ def q_event_cm_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduces every estimate AND the ranking bit-exactly.
 
     Scale shape: the counter fold is an additive groupBy bounded at
-    {CM_D}x{CM_W} cells per type (map-side combined -- the monoid
-    histogram_stream.py exploits; a CountMin stream would carry the
-    same load-bearing-watermark story). The candidate side here is the
+    {CM_D}x{CM_W} cells per type (map-side combined: counters are a
+    sum monoid). The candidate side here is the
     exact per-(type, user) audit agg (the honest small-SF cost); a
     100 TB deployment keeps only the sketch and probes it with an
     externally supplied candidate stream -- the estimate join below is
@@ -1579,8 +1577,7 @@ def q_event_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the per-(type, user) pre-aggregation is one map-side
     combinable shuffle (shared with the exact audit); the signed fold
     is an additive groupBy bounded at {AMS_R} rows per type -- the
-    same sum-monoid the histogram/HLL streaming twins exploit, so an
-    AMS stream inherits their exactly-once-by-algebra story verbatim.
+    same sum monoid as the histogram and Count-Min counters.
     The audit's exact F2 pays the honest (type, user) agg; a 100 TB
     deployment keeps only the R counters per type."""
     e = _events(spark, sf_dir)

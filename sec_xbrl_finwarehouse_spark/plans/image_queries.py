@@ -258,12 +258,12 @@ def q_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     themselves via the left join. Edge-sized iteration width,
     localCheckpoint lineage truncation, scalar fixpoint action --
     see operators/connected_components.py."""
-    from .text_queries import CC_MAX_ITERS, hash_min_components
+    from ..operators.connected_components import hash_min_components
 
     pairs = q_image_neardup(spark, sf_dir).select(
         F.col("d1").alias("d1"), F.col("d2").alias("d2")
     )
-    labels = hash_min_components(pairs, CC_MAX_ITERS).withColumnRenamed(
+    labels = hash_min_components(pairs).withColumnRenamed(
         "node_id", "doc_id"
     )
     docs = _documents(spark, sf_dir).select("doc_id")

@@ -134,22 +134,13 @@ def _documents(
 
 
 def _persist_hot(df: DataFrame) -> DataFrame:
-    """Persist a multiply-consumed intermediate at a conf-driven level.
-
-    ``spark.finwarehouse.hotSetStorageLevel`` (default MEMORY_AND_DISK,
-    i.e. spill-don't-recompute) controls the level; ``NONE`` disables
-    persistence entirely. At 100 TB the distinct (doc_id, shingle) set is
-    corpus-sized, so an in-memory cache is a cliff: set DISK_ONLY there
-    (pay one serialized write, never evict hot executor memory) or NONE
-    if the downstream consumers are cheap enough to recompute."""
+    """Persist a multiply-consumed intermediate at MEMORY_AND_DISK
+    (spill, don't recompute). The level is named explicitly:
+    ``persist()``'s default, MEMORY_AND_DISK_DESER, caches deserialized
+    rows instead."""
     from pyspark import StorageLevel
 
-    level_name = df.sparkSession.conf.get(
-        "spark.finwarehouse.hotSetStorageLevel", "MEMORY_AND_DISK"
-    )
-    if level_name.upper() == "NONE":
-        return df
-    return df.persist(getattr(StorageLevel, level_name.upper()))
+    return df.persist(StorageLevel.MEMORY_AND_DISK)
 
 
 def _tokens(col):
@@ -698,8 +689,8 @@ def _doc_shingles_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def shingles_exploded_of(docs: DataFrame) -> DataFrame:
     """(doc_id, text) frame -> distinct (doc_id, shingle) rows; the
-    DataFrame-input twin of :func:`_doc_shingles_exploded` used by the
-    incremental-dedup path, where the new batch is not a stored table."""
+    DataFrame-input twin of :func:`_doc_shingles_exploded`, for inputs
+    that are not a stored table (the decontamination index)."""
     toks = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
     return toks.select(
         "doc_id", F.explode(_shingles(F.col("toks"))).alias("shingle")
@@ -725,12 +716,11 @@ def _jaccard_from_exploded(ex: DataFrame, pairs: DataFrame | None) -> DataFrame:
       that survives 100 TB: verification work scales with what LSH
       actually surfaced, never with corpus-wide shingle collisions.
 
-    ``ex`` is persisted (conf-driven level, see ``_persist_hot``): it
-    feeds three consumers (sizes + both intersection sides) and
-    recomputing the tokenize+shingle scan per consumer measured ~2x the
-    whole query's runtime. The persisted set is column-pruned (doc_id,
-    shingle) but corpus-sized at 100 TB -- set
-    spark.finwarehouse.hotSetStorageLevel=DISK_ONLY there."""
+    ``ex`` is persisted (``_persist_hot``, MEMORY_AND_DISK): it feeds
+    three consumers (sizes + both intersection sides) and recomputing
+    the tokenize+shingle scan per consumer measured ~2x the whole
+    query's runtime. The persisted set is column-pruned (doc_id,
+    shingle) but corpus-sized at 100 TB, where it spills to disk."""
     ex = _persist_hot(ex)
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     if pairs is None:
@@ -942,9 +932,7 @@ def minhash_bands_of(ex: DataFrame) -> DataFrame:
     Hash each shingle ONCE (xxhash64 -> pmod p), derive the
     {MINHASH_HASHES} signature values as affine permutations of that
     single hash (MINHASH_COEFFS), one groupBy(doc_id) with partial mins,
-    then explode to band keys. Shared by the batch dedup query and the
-    incremental-index path (plans/incremental_dedup.py) so stored and
-    freshly-computed signatures are always comparable.
+    then explode to band keys (the input of :func:`_lsh_candidates`).
 
     r12 OPTIMIZATION: composed as ONE ``spark.sql`` template instead of
     ~400 Column objects (128 min terms + 64 band structs, each costing
@@ -981,6 +969,22 @@ def minhash_bands_of(ex: DataFrame) -> DataFrame:
     )
 
 
+def _lsh_candidates(ex: DataFrame) -> DataFrame:
+    """(doc_id, shingle) rows -> distinct (d1 < d2) candidate pairs: the
+    documents that share at least one LSH band key. One self-join on
+    (band, bh) over the persisted band table."""
+    bands = _persist_hot(minhash_bands_of(ex))  # n_docs x 64 rows -- small even at scale
+    a = bands.alias("a")
+    b = bands.alias("b")
+    return (
+        a.join(b, (F.col("a.band") == F.col("b.band"))
+               & (F.col("a.bh") == F.col("b.bh"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .distinct()
+    )
+
+
 def q_doc_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup: signatures -> banded buckets -> candidate
     pairs -> EXACT Jaccard verification on candidates only. Output
@@ -996,18 +1000,8 @@ def q_doc_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     down to candidates before the heavy aggregation). Everything is
     built-in expressions -- no Python in the hot path."""
     ex = _doc_shingles_exploded(spark, sf_dir)
-    bands = _persist_hot(minhash_bands_of(ex))  # n_docs x 64 rows -- small even at scale
-    a = bands.alias("a")
-    b = bands.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bh") == F.col("b.bh"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
     return (
-        _jaccard_from_exploded(ex, cand)
+        _jaccard_from_exploded(ex, _lsh_candidates(ex))
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("d1", "d2", "jaccard")
     )
@@ -1047,17 +1041,9 @@ def q_doc_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same pair pipeline as q_doc_minhash_lsh_dedup, but sharing THIS
     # persisted shingle set (calling the query would re-scan + re-persist
     # its own copy; measured ~2x the whole audit)
-    bands = _persist_hot(minhash_bands_of(ex))
-    a, b = bands.alias("a"), bands.alias("b")
     # persisted: the candidate set feeds BOTH the exact-Jaccard verify
     # chain and the signature doc-id semi-join below.
-    cand = _persist_hot(
-        a.join(b, (F.col("a.band") == F.col("b.band"))
-               & (F.col("a.bh") == F.col("b.bh"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
+    cand = _persist_hot(_lsh_candidates(ex))
     pairs = (
         _jaccard_from_exploded(ex, cand)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
@@ -1189,9 +1175,6 @@ FROM e
 
 # ---- dedup clusters (connected components over near-dup pairs) -------------
 
-CC_MAX_ITERS = 20
-
-
 def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs -> dedup clusters: connected components over the
     LSH-verified pair graph, every document mapped to its component's
@@ -1206,7 +1189,7 @@ def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph and left-joins the corpus so singletons keep themselves.
     """
     pairs = q_doc_minhash_lsh_dedup(spark, sf_dir).select("d1", "d2")
-    labels = hash_min_components(pairs, CC_MAX_ITERS).withColumnRenamed(
+    labels = hash_min_components(pairs).withColumnRenamed(
         "node_id", "doc_id"
     )
     docs = _documents(spark, sf_dir).select("doc_id")
@@ -1292,6 +1275,8 @@ def q_doc_dedup_keep_best(
         )
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         with ThreadPoolExecutor(max_workers=1) as pool:
 
             def _materialize() -> None:
@@ -1300,7 +1285,7 @@ def q_doc_dedup_keep_best(
                 )
                 quality.count()
 
-            fut = pool.submit(_materialize)
+            fut = pool.submit(inheritable_thread_target(spark)(_materialize))
             clusters = q_doc_dedup_clusters(spark, sf_dir).select(
                 "doc_id", "cluster_rep"
             )
@@ -1694,13 +1679,15 @@ def q_doc_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=1) as pool:
 
         def _materialize() -> None:
             spark.sparkContext.setJobDescription("doc_corpus_build: quality pass")
             shared_q.count()
 
-        fut = pool.submit(_materialize)
+        fut = pool.submit(inheritable_thread_target(spark)(_materialize))
         dedup = q_doc_dedup_keep_best(spark, sf_dir, quality=shared_q).select(
             "doc_id", "cluster_rep", "n_tokens", F.col("keep").alias("dedup_keep")
         )
@@ -2695,7 +2682,7 @@ def q_doc_editdist_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = q_doc_editdist_neardup(spark, sf_dir).select(
         F.col("doc_id_a").alias("d1"), F.col("doc_id_b").alias("d2")
     )
-    labels = hash_min_components(pairs, CC_MAX_ITERS).withColumnRenamed(
+    labels = hash_min_components(pairs).withColumnRenamed(
         "node_id", "doc_id"
     )
     docs = _documents(spark, sf_dir).select("doc_id")

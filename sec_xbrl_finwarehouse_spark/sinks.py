@@ -901,20 +901,6 @@ def _parquet_num_rows(part_path: str) -> int:
     return pq.ParquetFile(part_path).metadata.num_rows
 
 
-def table_bytes(path: str) -> int:
-    """On-disk bytes of the CURRENT version of a stored table
-    (driver-side directory walk; retained prior versions not counted)."""
-    data_dir = current_data_dir(path)
-    if data_dir is None:
-        return 0
-    total = 0
-    for root, _dirs, files in os.walk(data_dir):
-        for f in files:
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(root, f))
-    return total
-
-
 def write_bucketed(
     df: DataFrame,
     name: str,

@@ -4,10 +4,9 @@ a prefix; the warehouse table must pick up ONLY the new ones):
 
 * the set of already-ingested shard paths is the table's watermark,
   committed as ``manifest_extra`` INSIDE the version directory — data
-  and watermark land in one atomic publish (the same
-  watermark-in-manifest design as streaming/stream_sink.py), so there
-  is no state where samples landed but their shards were not recorded,
-  or vice versa;
+  and watermark land in one atomic publish, so there is no state
+  where samples landed but their shards were not recorded, or vice
+  versa;
 * each run lists the pool (a metadata-only ``binaryFile`` listing, no
   shard bytes touched), diffs against the watermark, and reads ONLY
   the new shards' members — ingest cost is proportional to NEW data,

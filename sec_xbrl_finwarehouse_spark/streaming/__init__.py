@@ -1,4 +1,3 @@
-from .dedup_ingest import foreach_batch_dedup_ingest  # noqa: F401
 from .events_stream import (  # noqa: F401
     sessionize_stream,
     stream_events,

@@ -142,6 +142,36 @@ def test_cli_pipeline_end_to_end(spark, offline_env):
         spark, o["warehouse"] + "/ratios_annual").count() == 1
 
 
+def test_cli_reingest_fact_under_new_accession_adds_no_row(
+    spark, offline_env, tmp_path
+):
+    """The facts natural key (db/schema.sql:39 UNIQUE) has value and
+    filed but no accession number: a stored fact repeated under another
+    filing is the same row, which ON CONFLICT DO NOTHING keeps once."""
+    o = offline_env
+    # --warehouse: an earlier test's load_env may have left its own
+    # WAREHOUSE_DIR in os.environ, which wins over this test's .env
+    base = ["--env-file", o["env"], "--warehouse", o["warehouse"]]
+    assert cli.main(base + ["seed", "--tickers-json",
+                            o["tickers_json"]]) == 0
+    assert cli.main(base + ["ingest", "--from-json", o["spool"]]) == 0
+    facts_path = o["warehouse"] + "/facts"
+    assert sinks.read_table(spark, facts_path).count() == 9
+
+    spool2 = tmp_path / "docs2"
+    spool2.mkdir()
+    (spool2 / f"{CIK10}.json").write_text(json.dumps({
+        "entityName": "TestCo",
+        "cik": 320193,
+        "facts": {"us-gaap": {"GrossProfit": {"units": {"USD": [
+            _fact(40.0, "a3", "10-K", "2021-03-01",
+                  "2020-01-01", "2020-12-31"),
+        ]}}}},
+    }))
+    assert cli.main(base + ["ingest", "--from-json", str(spool2)]) == 0
+    assert sinks.read_table(spark, facts_path).count() == 9
+
+
 def test_cli_serve_responds(offline_env):
     o = offline_env
     base = ["--env-file", o["env"]]

@@ -11,10 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from sec_xbrl_finwarehouse_spark import sinks
-from sec_xbrl_finwarehouse_spark.materialize import (
-    FACT_KEYS,
-    refresh_marts_incremental,
-)
+from sec_xbrl_finwarehouse_spark.materialize import refresh_marts_incremental
 from sec_xbrl_finwarehouse_spark.plans.ratios import compute_ratios
 from sec_xbrl_finwarehouse_spark.plans.star_facts import synthetic_facts
 from sec_xbrl_finwarehouse_spark.plans.statements import build_statements

@@ -232,60 +232,6 @@ def test_pii_scan_total_and_consistent(spark, texts):
         assert r["has_pii"] == (sum(counts) > 0)
 
 
-batches_strategy = st.lists(
-    st.lists(
-        st.tuples(st.integers(min_value=0, max_value=4),
-                  st.integers(min_value=-100, max_value=100)),
-        min_size=1, max_size=5,
-    ),
-    min_size=1, max_size=3,
-)
-
-
-@settings(max_examples=8, deadline=None,
-          suppress_health_check=[HealthCheck.function_scoped_fixture])
-@given(batches=batches_strategy, data=st.data())
-def test_stream_sink_replays_never_change_outcome(spark, tmp_path, batches,
-                                                  data):
-    """Exactly-once property: delivering batches 0..n in order, with an
-    ARBITRARY already-committed batch replayed after each step (the
-    at-least-once failure model), yields exactly the table that
-    once-each delivery yields — last-wins per key, batch order."""
-    import uuid as _uuid
-
-    from sec_xbrl_finwarehouse_spark import sinks
-    from sec_xbrl_finwarehouse_spark.streaming.stream_sink import (
-        foreach_batch_upsert,
-    )
-
-    table = str(tmp_path / f"prop_{_uuid.uuid4().hex}")
-    sink = foreach_batch_upsert(table, ["k"], app_id="prop", audit=False)
-
-    def frame(rows):
-        return spark.createDataFrame(
-            [(k, v) for k, v in rows], "k int, v int"
-        )
-
-    for i, rows in enumerate(batches):
-        sink(frame(rows), i)
-        j = data.draw(st.integers(min_value=0, max_value=i), label="replay")
-        sink(frame(batches[j]), j)  # replayed delivery of a committed id
-
-    got = {r["k"]: r["v"] for r in sinks.read_table(spark, table).collect()}
-    # per key: the LAST batch containing the key wins; within that
-    # batch, duplicate keys may resolve to any of the batch's values
-    # for it (upsert_latest_wins ties are unordered within one batch)
-    all_keys = {k for rows in batches for k, _ in rows}
-    assert set(got) == all_keys
-    for k, v in got.items():
-        candidates = set()
-        for rows in batches:
-            vals = {bv for bk, bv in rows if bk == k}
-            if vals:
-                candidates = vals
-        assert v in candidates, (k, v, candidates)
-
-
 # ---- span dedup vs a pure-Python reference ---------------------------------
 
 # docs built from a small PHRASE POOL so duplicated >=k-token spans
@@ -514,39 +460,38 @@ kmv_batches = st.lists(
 @given(batches=kmv_batches, order=st.randoms(use_true_random=False))
 @_SETTINGS
 def test_kmv_merge_is_order_and_replay_invariant(spark, batches, order):
-    """The semilattice property streaming/kmv_stream.py's delivery
-    story rests on, under generated inputs: merging batches in ANY
+    """The semilattice property that makes ``kmv_k_smallest`` sketches
+    mergeable, under generated inputs: folding batches into a sketch
+    (k smallest distinct hashes of stored-sketch union batch) in ANY
     order, with ANY batch replayed, yields the same sketch as one
-    merge of everything -- including empty batches, duplicate values
+    build over everything -- including empty batches, duplicate values
     within and across batches, and groups that never reach k."""
-    from sec_xbrl_finwarehouse_spark.streaming.kmv_stream import (
-        SKETCH_SCHEMA,
-        hashes_of,
-        merge_kmv_sketch,
+    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
+        kmv_k_smallest,
     )
 
     k = 8  # small k so generated data crosses the truncation boundary
 
     def frame(rows):
-        return hashes_of(
-            spark.createDataFrame(rows, "g string, u long")
-            if rows else
-            spark.createDataFrame([], "g string, u long"),
-            "g", "u",
+        return spark.createDataFrame(rows, "g string, u long").select(
+            "g", F.md5(F.col("u").cast("string")).alias("h")
         )
 
-    empty = spark.createDataFrame([], SKETCH_SCHEMA)
+    def merge(stored, batch):
+        return kmv_k_smallest(stored.unionByName(batch), ["g"], k).drop("rk")
+
+    empty = frame([])
     # incremental, shuffled order, with the first batch replayed at the end
     sequence = list(batches)
     order.shuffle(sequence)
     sequence.append(batches[0])
     acc = empty
     for b in sequence:
-        acc = merge_kmv_sketch(acc, frame(b), k)
+        acc = merge(acc, frame(b))
     got = sorted(map(tuple, acc.collect()))
     # one-shot reference over the concatenation
     all_rows = [r for b in batches for r in b]
-    want = sorted(map(tuple, merge_kmv_sketch(empty, frame(all_rows), k).collect()))
+    want = sorted(map(tuple, merge(empty, frame(all_rows)).collect()))
     assert got == want
 
 
@@ -564,41 +509,48 @@ cm_batches = st.lists(
 def test_cm_merge_is_order_invariant_and_exactly_additive(
     spark, batches, order
 ):
-    """The monoid property streaming/cm_stream.py's watermark story
-    rests on, under generated inputs: merging batches in ANY order
-    yields the same counters as one merge of everything (commutative +
-    associative), the total count equals d x the row count exactly
-    (every row increments exactly CM_D cells), and -- the flip side
-    the watermark exists for -- replaying a batch visibly inflates its
-    cells (addition is NOT idempotent)."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import CM_D
-    from sec_xbrl_finwarehouse_spark.streaming.cm_stream import (
-        CM_SCHEMA,
-        cells_of,
-        merge_cm,
+    """The monoid property ``event_cm_sliding``'s summed daily counters
+    rest on, under generated inputs: per-batch ``cm_with_cells``
+    counters merged by per-cell SUM in ANY order equal one build over
+    everything (commutative + associative), the total count equals
+    d x the row count exactly (every row increments exactly CM_D
+    cells), and -- why each day must fold exactly once -- merging a
+    batch twice visibly inflates its cells (addition is NOT
+    idempotent)."""
+    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
+        CM_D,
+        cm_with_cells,
     )
 
     def frame(rows):
-        return cells_of(
-            spark.createDataFrame(rows, "g string, u long")
-            if rows else
-            spark.createDataFrame([], "g string, u long"),
-            "g", "u",
+        return (
+            cm_with_cells(
+                spark.createDataFrame(rows, "g string, u long"), "u"
+            )
+            .groupBy("g", "j", "pos")
+            .agg(F.count(F.lit(1)).alias("c"))
         )
 
-    empty = spark.createDataFrame([], CM_SCHEMA)
+    def merge(stored, batch):
+        return (
+            stored.unionByName(batch)
+            .groupBy("g", "j", "pos")
+            .agg(F.sum("c").alias("c"))
+        )
+
+    empty = frame([])
     sequence = list(batches)
     order.shuffle(sequence)
     acc = empty
     for b in sequence:
-        acc = merge_cm(acc, frame(b))
+        acc = merge(acc, frame(b))
     got = sorted(map(tuple, acc.collect()))
     all_rows = [r for b in batches for r in b]
-    want = sorted(map(tuple, merge_cm(empty, frame(all_rows)).collect()))
+    want = sorted(map(tuple, merge(empty, frame(all_rows)).collect()))
     assert got == want
     assert sum(c for *_, c in got) == len(all_rows) * CM_D
     if all_rows:
-        replayed = merge_cm(acc, frame(batches[0]))
+        replayed = merge(acc, frame(batches[0]))
         n2 = replayed.agg(F.sum("c")).collect()[0][0]
         assert n2 == (len(all_rows) + len(batches[0])) * CM_D
 

@@ -26,19 +26,11 @@ ENTRY_POINTS = ("__spark_entry__", f"{PACKAGE}.__main__", f"{PACKAGE}.api")
 KNOWN_UNREACHED = frozenset(f"{PACKAGE}.{m}" for m in (
     "operators.skew",
     "plans.decontam_index",
-    "plans.incremental_dedup",
     "sources.csv_docs",
     "sources.webdataset",
     "sources.webdataset_ingest",
     "streaming",
-    "streaming.cm_stream",
-    "streaming.corpus_ingest",
-    "streaming.dedup_ingest",
     "streaming.events_stream",
-    "streaming.histogram_stream",
-    "streaming.hll_stream",
-    "streaming.kmv_stream",
-    "streaming.stream_sink",
 ))
 
 

@@ -4,6 +4,7 @@ distance; unrelated docs far), and language-ID marker/CJK routing."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sec_xbrl_finwarehouse_spark.plans.text_queries import (
@@ -279,6 +280,40 @@ def test_corpus_build_selection_conjunction(spark, tmp_path):
            for r in tq.q_doc_corpus_build(spark, str(sf)).collect()}
     assert got == {0: False, 1: True, 2: False, 3: True}
     shutil.rmtree(sf, ignore_errors=True)
+
+
+@pytest.mark.parametrize("query", ["q_doc_dedup_keep_best",
+                                   "q_doc_corpus_build"])
+def test_side_thread_jobs_stay_in_callers_job_group(spark, tmp_path, query):
+    """Both queries run their quality pass on a side thread. Every job
+    the call starts (side thread included) lands in the caller's job
+    group, so per-group accounting and cancelJobGroup see all of it."""
+    from sec_xbrl_finwarehouse_spark.plans import text_queries as tq
+
+    base = [f"w{i}" for i in range(40)]
+    texts = [" ".join(base), " ".join(base + ["x1", "x2"]),
+             " ".join(f"q{i}" for i in range(30))]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    _docs(spark, texts).coalesce(1).write.parquet(str(sf / "documents.parquet"))
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    group = f"side-thread-{query}"
+    drain()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, query)
+    try:
+        getattr(tq, query)(spark, str(sf)).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    drain()
+    assert tracker.getJobIdsForGroup(group)
+    # only new ids count: the status store evicts the oldest jobs
+    assert set(tracker.getJobIdsForGroup(None)) - ungrouped_before == set()
 
 
 def test_decontaminate_flags_cross_split_overlap(spark, tmp_path):
