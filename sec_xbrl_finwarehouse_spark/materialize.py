@@ -10,15 +10,14 @@ than a blind overwrite -- running it twice leaves identical data with
 ``created_at`` preserved from the first run.
 
 Scale notes: each mart write is one PK-keyed merge (sinks.upsert); the
-statements/ratios marts share the facts derivation lazily, and because
-every stage keys on cik(-prefixed) columns, the whole rebuild reuses one
-entity partitioning (see star_facts.synthetic_facts). At 100 TB the mart
+ratios mart is computed from the published statements mart, so the facts
+derivation runs once, and because every stage keys on cik(-prefixed)
+columns, the whole rebuild reuses one entity partitioning (see
+star_facts.synthetic_facts). At 100 TB the mart
 paths point at partitioned object-store tables and nothing here changes.
 """
 
 from __future__ import annotations
-
-import functools
 
 from pyspark.sql import SparkSession
 
@@ -45,47 +44,16 @@ def build_all_marts(spark: SparkSession, sf_dir: str, out_dir: str) -> dict[str,
     return build_marts_from_facts(spark, facts, sf_dir, out_dir)
 
 
-def materialize_facts_bucketed(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str,
-    table_name: str = "facts_bucketed",
-    buckets: int | None = None,
-) -> str:
-    """Ingest-time bucketing: persist the facts long table hash-bucketed
-    (and per-bucket sorted) on ``cik``.
-
-    This is the stored-layout form of ``synthetic_facts``'s
-    ``entity_partitions`` exchange: pay the entity shuffle ONCE at
-    ingest, record it in the catalog, and every later mart rebuild over
-    ``spark.table(table_name)`` plans its (cik[, fiscal_year[, tag]])
-    aggregations, windows, and self-joins with ZERO exchange -- the
-    scan itself reports the hash partitioning. The runtime repartition
-    uses the SAME count and hash family as the writer's bucketing, so
-    each task holds exactly one bucket's rows and the writer emits one
-    file per bucket (avoiding the tasks x buckets small-files blowup
-    of bucketing an unaligned frame).
-
-    At 100 TB this replaces the reference's Postgres PK clustering
-    (db/schema.sql:30-38): nightly rebuilds read the bucketed facts and
-    never shuffle the fact table again.
-    """
-    n = buckets or default_parallelism()
-    facts = synthetic_facts(
-        spark.read.parquet(table_path(sf_dir, "lineitem")),
-        entity_partitions=n,
-    )
-    sinks.write_bucketed(facts, table_name, path, ["cik"], buckets=n)
-    return table_name
-
-
 def build_marts_from_facts(
     spark: SparkSession, facts, sf_dir: str, out_dir: str,
     facts_version: str | None = None,
 ) -> dict[str, str]:
     """The mart builds of :func:`build_all_marts`, from an
-    already-materialized facts frame (e.g. ``spark.table(...)`` over a
-    bucketed facts table, making the whole rebuild exchange-free).
+    already-materialized facts frame (e.g. :func:`sinks.read_table` of
+    the ingested facts table). Ratios are computed from the
+    statements_annual version this build just published -- as
+    ``cli.cmd_ratios`` does -- so the statements plan (facts scan,
+    dedup window, pivot) runs once, not once per mart.
 
     ``facts_version`` (a :func:`sinks.list_versions` name) records
     WHICH facts version this build consumed -- the refresh baseline
@@ -97,7 +65,6 @@ def build_marts_from_facts(
     supplier = spark.read.parquet(table_path(sf_dir, "supplier"))
     companies = star_companies(supplier)
     statements = build_statements(facts, version="v3")
-    ratios = compute_ratios(statements)
     paths = {
         "companies": f"{out_dir}/companies",
         "statements_annual": f"{out_dir}/statements_annual",
@@ -109,6 +76,7 @@ def build_marts_from_facts(
     sinks.upsert(spark, paths["companies"], companies, keys=["cik"])
     sinks.upsert(spark, paths["statements_annual"], statements,
                  keys=list(MART_KEYS))
+    ratios = compute_ratios(sinks.read_table(spark, paths["statements_annual"]))
     sinks.upsert(spark, paths["ratios_annual"], ratios,
                  keys=list(MART_KEYS), manifest_extra=extra)
     return paths
@@ -233,39 +201,17 @@ def refresh_marts_incremental(
             {FACTS_BASELINE_META: cur_version}
             if mart == "ratios_annual" else None
         )
-        stored = sinks.read_table(spark, path)
-        if stored is None:
-            sinks.write_replace(sinks.with_audit_cols(df), path,
-                                manifest_extra=extra)
-        else:
-            kept = stored.join(F.broadcast(touched), "cik", "left_anti")
-            # the rebuilt rows are the FULL truth for touched ciks (a
-            # fiscal year that vanished from the rebuild must drop), so
-            # carry created_at for keys that already existed but do NOT
-            # union stored touched-cik rows back in
-            now = F.current_timestamp()
-            # NULL-safe key match, same invariant as sinks'
-            # _merge_with_audit: a plain equi-join would reset
-            # created_at for NULL-keyed rows on every refresh
-            prior = stored.select(
-                *[F.col(k).alias(f"__pk_{k}") for k in MART_KEYS],
-                F.col(sinks.CREATED_AT).alias("__prior_created"),
-            )
-            cond = functools.reduce(
-                lambda a, b: a & b,
-                [df[k].eqNullSafe(prior[f"__pk_{k}"]) for k in MART_KEYS],
-            )
-            fresh = (
-                df.join(prior, cond, "left")
-                .withColumn(sinks.CREATED_AT,
-                            F.coalesce("__prior_created", now))
-                .withColumn(sinks.UPDATED_AT, now)
-                .drop("__prior_created", *[f"__pk_{k}" for k in MART_KEYS])
-            )
-            sinks.write_replace(
-                kept.unionByName(fresh.select(*stored.columns)), path,
-                manifest_extra=extra,
-            )
+        stored, expect = sinks._snapshot(spark, path)
+        # the rebuilt rows are the FULL truth for touched ciks (a fiscal
+        # year that vanished from the rebuild must drop), so carry
+        # created_at for keys that already existed but do NOT union
+        # stored touched-cik rows back in
+        fresh = sinks._stamp_audit(stored, df, MART_KEYS)
+        if stored is not None:
+            fresh = stored.join(F.broadcast(touched), "cik", "left_anti") \
+                .unionByName(fresh)
+        sinks.write_replace(fresh, path, manifest_extra=extra,
+                            expect_version=expect)
         if mart == "statements_annual":
             n_stmt = df.count()
     return {"touched_ciks": n_touched, "statements_rows": n_stmt}

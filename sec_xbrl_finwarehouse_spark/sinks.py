@@ -11,25 +11,23 @@ in-place conflict resolution, so each write mode here maps onto the
 idiom that actually scales on an object store / distributed FS:
 
 * ``write_replace``  -- full-table write + manifest-pointer commit: the
-  new version is written to its own immutable directory under the table
-  root, then published by atomically replacing the ``_CURRENT`` pointer
-  file. Readers resolve the pointer once at read time and scan ONE
-  version directory, so a reader overlapping a publish sees the old
-  version or the new one, never a half-swapped mix -- and because the
-  previous version's files are retained until the NEXT publish, a
-  reader that resolved just before the swap still finds every file it
-  listed (the window a bare directory-rename swap leaves open). A query
-  that READS the table it is rebuilding (the self-overwrite trap Spark
-  errors on or, worse, truncates with) is safe for the same reason: the
-  scan's file list points at the old version directory throughout.
+  new version is written to its own immutable directory, then published
+  by atomically replacing the ``_CURRENT`` pointer file. Readers resolve
+  the pointer once at read time and scan ONE version directory, so a
+  reader overlapping a publish sees the old version or the new one,
+  never a half-swapped mix -- and because the previous version's files
+  are retained until the NEXT publish, a reader that resolved just
+  before the swap still finds every file it listed. A query that READS
+  the table it is rebuilding (the self-overwrite trap Spark errors on
+  or, worse, truncates with) is safe for the same reason: the scan's
+  file list points at the old version directory throughout.
 * ``upsert`` (S5) -- ON CONFLICT DO UPDATE: merge incoming over stored
   with :func:`~.operators.upsert.upsert_latest_wins`, preserving
   ``created_at`` for keys that already existed and refreshing
-  ``updated_at`` for upserted keys (v3.py:164-175), then write-then-swap
-  the merged table. At 100 TB this is the compaction-style merge every
+  ``updated_at`` for upserted keys (v3.py:164-175), then publish the
+  merged table. At 100 TB this is the compaction-style merge every
   copy-on-write table format (Delta/Iceberg/Hudi COW) performs; the
-  shuffle is one exchange on the PK. Partition the stored table on a
-  key prefix so the rewrite touches only affected partitions.
+  shuffle is one exchange on the PK.
 * ``append_if_absent`` (S6) -- ON CONFLICT DO NOTHING: anti-join
   incoming against stored keys, then commit ONLY the new rows: a new
   version directory hard-links every existing part-file (zero data
@@ -38,6 +36,17 @@ idiom that actually scales on an object store / distributed FS:
   path (ingest_facts.py:119-143) -- and re-running the same batch is a
   byte-identical no-op (zero fresh rows publishes no new version,
   leaving even timestamps untouched).
+
+Every publish goes through ONE commit path. The writer builds the
+complete version directory in a staging sibling OUTSIDE the table root
+(:func:`_staging`); :func:`_commit` then, under the table's commit lock,
+checks ``_CURRENT`` against the version the writer read, stamps the
+``_SEQ`` commit sequence, renames the staged directory into the root as
+``v_<hex>`` and ``os.replace``-s the pointer. So the root only ever
+holds committed, stamped versions. The read-modify-write publishes
+(``upsert``, ``append_if_absent``, ``commit_meta_only``) always commit
+against the version they read: a publish that lands in between makes
+them raise :class:`ConcurrentWriteError` instead of losing its update.
 
 Audit columns (F12): ``created_at`` is assigned once when a key first
 enters the table; ``updated_at`` refreshes whenever an upsert overwrites
@@ -49,12 +58,14 @@ Pointer replacement is ``os.replace`` (atomic on POSIX); version
 directories are immutable once published. This is the minimal form of
 the manifest commit every table format (Delta/Iceberg/Hudi) performs --
 on S3 the same pointer lives in a conditional-PUT object or a catalog
-entry; the sink's contract (stage, validate, atomically publish,
-retain the prior version for in-flight readers) is unchanged.
+entry; the sink's contract (stage, atomically publish, retain the prior
+version for in-flight readers) is unchanged. A directory without
+``_CURRENT`` is not a table.
 """
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import os
 import shutil
@@ -73,22 +84,29 @@ UPDATED_AT = "updated_at"
 
 _POINTER = "_CURRENT"
 
+# per-version commit-sequence file: the CONTENT-ADDRESSED version order.
+# Directory mtime is only creation order while nothing outside the
+# writer touches the tree -- an external cp/rsync of a table directory
+# rewrites every mtime, silently reordering history (retain-prune
+# would then count the wrong versions). Every publish writes a
+# monotonic sequence number (max existing + 1, assigned INSIDE the
+# commit lock) into the version directory instead.
+_SEQ_FILE = "_SEQ"
+
+
+def _pointer_value(path: str) -> str | None:
+    try:
+        with open(os.path.join(path, _POINTER), encoding="ascii") as f:
+            return f.read().strip()
+    except FileNotFoundError:
+        return None
+
 
 def current_data_dir(path: str) -> str | None:
-    """Resolve the manifest pointer to the active version directory.
-
-    Returns None if the table does not exist. A pre-manifest flat
-    parquet directory (no ``_CURRENT`` inside) resolves to itself, so
-    tables written by older versions of this sink stay readable.
-    """
-    pointer = os.path.join(path, _POINTER)
-    if os.path.exists(pointer):
-        with open(pointer, encoding="ascii") as f:
-            version = f.read().strip()
-        return os.path.join(path, version)
-    if os.path.exists(path):
-        return path  # legacy flat layout
-    return None
+    """Resolve the manifest pointer to the active version directory;
+    None if the table does not exist."""
+    version = _pointer_value(path)
+    return None if version is None else os.path.join(path, version)
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -101,25 +119,11 @@ class ConcurrentWriteError(RuntimeError):
 # sentinel for "I expect the table not to exist yet"
 EXPECT_ABSENT = ""
 
-# per-version commit-sequence file: the CONTENT-ADDRESSED version order.
-# Directory mtime is only creation order while nothing outside the
-# writer touches the tree -- an external cp/rsync of a table directory
-# rewrites every mtime, silently reordering history (retain-prune
-# would then count the wrong versions).
-# Every publish writes a monotonic sequence number (max existing + 1,
-# assigned INSIDE the commit lock) into the version directory instead;
-# mtime remains only the legacy fallback for pre-_SEQ versions.
-_SEQ_FILE = "_SEQ"
-# grace window before an UNSTAMPED v_ dir may be reclaimed by the
-# post-commit prune: long enough that no live commit (bounded by the
-# commit-lock timeout) can still be between its move-in and its _SEQ
-# stamp; old enough unstamped dirs are pre-_SEQ legacy debris
-_STAGE_GRACE_SEC = 300.0
-
 
 def _version_seq(path: str, name: str) -> int | None:
     """The commit sequence persisted in a version's manifest, or None
-    for a pre-_SEQ (legacy) version."""
+    if ``name`` is not a committed version (or vanished under a
+    concurrent prune)."""
     try:
         with open(os.path.join(path, name, _SEQ_FILE),
                   encoding="ascii") as f:
@@ -128,20 +132,20 @@ def _version_seq(path: str, name: str) -> int | None:
         return None
 
 
-def _pointer_value(path: str) -> str | None:
-    pointer = os.path.join(path, _POINTER)
-    if not os.path.exists(pointer):
-        return None
-    with open(pointer, encoding="ascii") as f:
-        return f.read().strip()
+def _write_synced(file_path: str, text: str) -> None:
+    with open(file_path, "w", encoding="ascii") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
 
 
 class _commit_lock:
     """Tiny mutual-exclusion window around check-pointer + swap-pointer
     (POSIX has no file CAS). O_CREAT|O_EXCL lock file, bounded retry;
     a lock older than ``stale_s`` is from a dead writer and is broken.
-    The critical section is microseconds (one read + one rename), so
-    contention is resolved in the first few retries."""
+    The critical section is a few metadata operations (one read, one
+    stamp, two renames), so contention is resolved in the first few
+    retries."""
 
     def __init__(self, path: str, timeout_s: float = 5.0,
                  stale_s: float = 60.0):
@@ -150,7 +154,6 @@ class _commit_lock:
         self.stale_s = stale_s
 
     def __enter__(self):
-        import time
         deadline = time.monotonic() + self.timeout_s
         while True:
             try:
@@ -159,8 +162,7 @@ class _commit_lock:
                 return self
             except FileExistsError:
                 try:
-                    import time as _t
-                    if _t.time() - os.path.getmtime(self.lock) > self.stale_s:
+                    if time.time() - os.path.getmtime(self.lock) > self.stale_s:
                         os.unlink(self.lock)  # dead writer
                         continue
                 except OSError:
@@ -179,146 +181,112 @@ class _commit_lock:
         return False
 
 
-def _publish_version(
-    path: str,
-    version_dir: str,
-    retain: int = 2,
-    expect_version: str | None = None,
-    cleanup_staged_on_fail: bool = True,
-) -> None:
-    """Atomically repoint ``_CURRENT`` at ``version_dir`` (already moved
-    inside ``path``), then prune all but the newest ``retain`` versions
-    (current included). The default keeps current + previous: a reader
-    that resolved the pointer an instant before the swap still finds
-    every file it is scanning. A larger ``retain`` keeps a
-    time-travel history (:func:`list_versions` / ``read_table(...,
-    version=...)``) at the cost of storing the superseded copies —
-    bounded and predictable, like a Delta/Iceberg retention window.
+@contextlib.contextmanager
+def _staging(path: str):
+    """A fresh staging directory name beside the table root (same
+    filesystem, so the commit's rename cannot cross devices, but outside
+    the root, so no reader or prune ever lists it). Removed on exit:
+    after a commit it has been renamed away, after any failure it goes
+    with whatever it held."""
+    staged = f"{path}.__staging__{uuid.uuid4().hex}"
+    try:
+        yield staged
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
 
-    ``expect_version`` enables optimistic concurrency: the commit goes
-    through only if the pointer still names that version
-    (:data:`EXPECT_ABSENT` = "the table must not exist yet"); on a
-    mismatch the staged version directory is removed and
-    :class:`ConcurrentWriteError` raised — the table keeps the other
-    writer's commit. ``None`` preserves last-write-wins."""
-    version = os.path.basename(version_dir)
-    pointer = os.path.join(path, _POINTER)
+
+def _commit(
+    path: str,
+    staged: str,
+    expect_version: str | None = None,
+    retain: int = 2,
+    manifest_extra: dict[str, str] | None = None,
+) -> str:
+    """THE commit: publish the complete version directory ``staged``
+    (built by the caller inside :func:`_staging`) as the table's current
+    version, and return its name.
+
+    Under the commit lock: check that the pointer still names
+    ``expect_version`` (:data:`EXPECT_ABSENT` = "the table must not
+    exist yet"; None = last write wins) or raise
+    :class:`ConcurrentWriteError`; stamp ``_SEQ``; rename ``staged``
+    into the root as ``v_<hex>``; atomically replace the pointer. Then
+    prune all but the newest ``retain`` versions (current included).
+    The default keeps current + previous: a reader that resolved the
+    pointer an instant before the swap still finds every file it is
+    scanning. A larger ``retain`` keeps a time-travel history
+    (:func:`list_versions` / ``read_table(..., version=...)``) at the
+    cost of storing the superseded copies -- bounded and predictable,
+    like a Delta/Iceberg retention window."""
+    _write_manifest_extra(staged, manifest_extra)
+    os.makedirs(path, exist_ok=True)
+    version = f"v_{uuid.uuid4().hex}"
     tmp_pointer = os.path.join(path, f".{_POINTER}.{uuid.uuid4().hex}")
-    with open(tmp_pointer, "w", encoding="ascii") as f:
-        f.write(version)
-        f.flush()
-        os.fsync(f.fileno())
     try:
+        _write_synced(tmp_pointer, version)
         with _commit_lock(path):
-            if expect_version is not None:
-                now = _pointer_value(path)
-                expected = None if expect_version == EXPECT_ABSENT \
-                    else expect_version
-                if now != expected:
-                    raise ConcurrentWriteError(
-                        f"{path}: expected current version "
-                        f"{expected!r}, found {now!r}"
-                    )
-            # stamp the commit sequence INSIDE the lock: max over every
-            # retained version (the staged dir itself may carry a stale
-            # _SEQ copied forward by a linked publish -- it is <= max
-            # and gets overwritten here), so the order is decided by
-            # the serialized commits, never by filesystem timestamps
-            seqs = [
-                s for s in (
-                    _version_seq(path, n)
-                    for n in os.listdir(path)
-                    if n.startswith("v_")
-                    and os.path.isdir(os.path.join(path, n))
+            found = _pointer_value(path)
+            if expect_version is not None and found != (expect_version or None):
+                raise ConcurrentWriteError(
+                    f"{path}: expected current version "
+                    f"{expect_version or None!r}, found {found!r}"
                 )
-                if s is not None
-            ]
-            seq_path = os.path.join(version_dir, _SEQ_FILE)
-            with open(seq_path, "w", encoding="ascii") as f:
-                f.write(str((max(seqs) if seqs else 0) + 1))
-                f.flush()
-                os.fsync(f.fileno())
-            os.replace(tmp_pointer, pointer)  # THE commit point (atomic on POSIX)
-    except ConcurrentWriteError:
-        # the commit did NOT happen (lock timeout or OCC mismatch):
-        # remove the staged pointer AND the already-moved-in version
-        # directory, or version enumeration would treat the orphan as
-        # the newest version and the next publish's retain-prune could
-        # delete the genuine previous version under in-flight readers.
-        # ``cleanup_staged_on_fail=False`` is for callers whose
-        # version_dir holds the ONLY copy of pre-existing data (the
-        # legacy-flat migration) -- they restore it themselves
-        try:
+            # the order is decided by the serialized commits, never by
+            # filesystem timestamps
+            seq = max(_committed_versions(path).values(), default=0) + 1
+            _write_synced(os.path.join(staged, _SEQ_FILE), str(seq))
+            os.rename(staged, os.path.join(path, version))
+            try:
+                os.replace(tmp_pointer, os.path.join(path, _POINTER))
+            except OSError:
+                # not committed: an unreferenced v_ dir would be counted
+                # as the newest version by retain-prune and time travel
+                shutil.rmtree(os.path.join(path, version), ignore_errors=True)
+                raise
+    finally:
+        with contextlib.suppress(FileNotFoundError):
             os.unlink(tmp_pointer)
-        except OSError:
-            pass
-        if cleanup_staged_on_fail:
-            shutil.rmtree(version_dir, ignore_errors=True)
-        raise
     # post-commit retain-prune is best-effort: the pointer swap above
-    # already committed, so a prune failure must never propagate into a
-    # caller's cleanup path (which would remove the committed version)
+    # already committed. It runs outside the lock over ONE listing, so a
+    # version committed after that listing is never a prune candidate.
     try:
-        keep = set(_versions_newest_first(path)[: max(retain, 1)])
-        keep.add(version)
-        now = time.time()
-        for name in os.listdir(path):
-            if not name.startswith("v_") or name in keep:
-                continue
-            if _version_seq(path, name) is None:
-                # an UNSTAMPED v_ dir is either a concurrent writer's
-                # staged version (it moves in and stamps its _SEQ while
-                # holding the commit lock; this prune deliberately runs
-                # outside it) or pre-_SEQ legacy debris. Under the _SEQ
-                # ordering an unstamped dir sorts OLDEST, so pruning it
-                # here would destroy an in-flight last-write-wins
-                # publish mid-commit -- leave young unstamped dirs
-                # alone and reclaim only ones old enough that no live
-                # commit can still be stamping them.
-                try:
-                    age = now - os.path.getmtime(os.path.join(path, name))
-                except OSError:
-                    continue
-                if age < _STAGE_GRACE_SEC:
-                    continue
-            shutil.rmtree(os.path.join(path, name), ignore_errors=True)
+        for name in _versions_newest_first(path)[max(retain, 1):]:
+            if name != version:
+                shutil.rmtree(os.path.join(path, name), ignore_errors=True)
     except OSError:
         pass
+    return version
+
+
+def _committed_versions(path: str) -> dict[str, int]:
+    """Version directory name -> ``_SEQ`` for every committed version
+    under ``path``."""
+    if not os.path.isdir(path):
+        return {}
+    seqs = {n: _version_seq(path, n) for n in os.listdir(path)
+            if n.startswith("v_")}
+    return {n: s for n, s in seqs.items() if s is not None}
 
 
 def _versions_newest_first(path: str) -> list[str]:
-    """Version directory names under ``path``, newest first, ordered by
-    the persisted ``_SEQ`` commit sequence -- content-addressed, so a
-    cp/rsync of the table tree (which rewrites every mtime) cannot
-    reorder history. Pre-_SEQ legacy versions sort BELOW every stamped
-    version (they are older by construction: once a stamped publish
-    exists, all later publishes stamp too) and amongst themselves by
-    mtime, the best signal available for them."""
-    if not os.path.exists(path):
-        return []
-    vs = [n for n in os.listdir(path) if n.startswith("v_")
-          and os.path.isdir(os.path.join(path, n))]
-
-    def key(n: str) -> tuple:
-        seq = _version_seq(path, n)
-        if seq is None:
-            return (0, os.path.getmtime(os.path.join(path, n)))
-        return (1, seq)
-
-    return sorted(vs, key=key, reverse=True)
+    """Committed version directory names under ``path``, newest first,
+    ordered by the persisted ``_SEQ`` commit sequence -- content-
+    addressed, so a cp/rsync of the table tree (which rewrites every
+    mtime) cannot reorder history."""
+    seqs = _committed_versions(path)
+    return sorted(seqs, key=seqs.__getitem__, reverse=True)
 
 
 def list_versions(path: str) -> list[dict]:
     """Time-travel catalog: every retained version of a stored table,
     newest first, with its commit time and whether it is current."""
-    cur = current_data_dir(path)
-    cur_name = os.path.basename(cur) if cur else None
+    cur = _pointer_value(path)
     return [
         {
             "version": name,
             "committed_at": os.path.getmtime(os.path.join(path, name)),
             "seq": _version_seq(path, name),
-            "is_current": name == cur_name,
+            "is_current": name == cur,
         }
         for name in _versions_newest_first(path)
     ]
@@ -338,6 +306,17 @@ def _write_manifest_extra(
             f.write(content)
 
 
+def _version_dir(path: str, version: str | None) -> str | None:
+    """The current version directory, or the retained ``version``
+    (raises if it is no longer retained)."""
+    if version is None:
+        return current_data_dir(path)
+    vdir = os.path.join(path, version)
+    if not os.path.isdir(vdir):
+        raise FileNotFoundError(f"version {version!r} not retained under {path}")
+    return vdir
+
+
 def read_table(
     spark: SparkSession, path: str, version: str | None = None
 ) -> DataFrame | None:
@@ -348,17 +327,18 @@ def read_table(
     ``version`` (a name from :func:`list_versions`) time-travels to a
     retained superseded version -- the audit/debug read every table
     format offers. Raises if the named version is no longer retained."""
-    if version is not None:
-        vdir = os.path.join(path, version)
-        if not os.path.isdir(vdir):
-            raise FileNotFoundError(
-                f"version {version!r} not retained under {path}"
-            )
-        return spark.read.parquet(vdir)
+    data_dir = _version_dir(path, version)
+    return None if data_dir is None else spark.read.parquet(data_dir)
+
+
+def _snapshot(spark: SparkSession, path: str) -> tuple[DataFrame | None, str]:
+    """The current version as a frame (None: no table yet) and the
+    ``expect_version`` that commits against exactly that version -- the
+    read half of every read-modify-write publish."""
     data_dir = current_data_dir(path)
     if data_dir is None:
-        return None
-    return spark.read.parquet(data_dir)
+        return None, EXPECT_ABSENT
+    return spark.read.parquet(data_dir), os.path.basename(data_dir)
 
 
 def with_audit_cols(df: DataFrame) -> DataFrame:
@@ -368,70 +348,22 @@ def with_audit_cols(df: DataFrame) -> DataFrame:
     return df.withColumn(CREATED_AT, now).withColumn(UPDATED_AT, now)
 
 
-class ConstraintViolation(ValueError):
-    """A staged publish failed its data-quality checks. The table was
-    NOT modified: the previous version stays current and the staged
-    files are removed. ``.counts`` maps check name -> violating rows."""
-
-    def __init__(self, path: str, counts: dict[str, int]):
-        self.counts = counts
-        super().__init__(f"publish to {path} rejected: {counts}")
-
-
-def _check_staged(
-    spark: SparkSession,
-    staged_dir: str,
-    checks: Sequence[tuple[str, str]] | None,
-    unique_key: Sequence[str] | None,
-) -> dict[str, int]:
-    """Validate a staged version from its own files (the data is
-    already on disk — no recompute of the writer's plan). Row checks
-    run as ONE aggregation pass; the unique-key check is one groupBy.
-    Returns {check_name: n_violations} for failing checks only."""
-    staged = spark.read.parquet(staged_dir)
-    counts: dict[str, int] = {}
-    if checks:
-        aggs = [
-            F.sum(F.when(~F.expr(cond), 1).otherwise(0)).alias(name)
-            for name, cond in checks
-        ]
-        row = staged.agg(*aggs).first()
-        for name, _ in checks:
-            n = row[name]
-            if n:
-                counts[name] = int(n)
-    if unique_key:
-        dupes = (
-            staged.groupBy(*unique_key).count()
-            .filter(F.col("count") > 1)
-            .agg(F.sum(F.col("count") - 1).alias("extra"))
-            .first()["extra"]
-        )
-        if dupes:
-            counts[f"unique({', '.join(unique_key)})"] = int(dupes)
-    return counts
-
-
 def write_replace(
     df: DataFrame,
     path: str,
     manifest_extra: dict[str, str] | None = None,
     retain: int = 2,
     expect_version: str | None = None,
-    checks: Sequence[tuple[str, str]] | None = None,
-    unique_key: Sequence[str] | None = None,
 ) -> None:
     """Full-table publish via manifest-pointer commit.
 
-    The frame is written to a staging sibling (same filesystem, so the
-    move into the table root cannot cross devices), moved in as an
-    immutable ``v_<hex>`` version directory, and published by atomically
-    replacing the ``_CURRENT`` pointer. A failure before the pointer
-    swap leaves the previous version live and intact -- a failed publish
-    never leaves the table missing or half-written. Readers overlapping
-    the publish see the old version or the new one, never a mix; the
-    superseded version's files are retained until the next publish so
-    in-flight scans keep resolving.
+    The frame is written to a staging sibling and committed as a new
+    immutable ``v_<hex>`` version (:func:`_commit`). A failure before
+    the pointer swap leaves the previous version live and intact -- a
+    failed publish never leaves the table missing or half-written.
+    Readers overlapping the publish see the old version or the new one,
+    never a mix; the superseded version's files are retained until the
+    next publish so in-flight scans keep resolving.
 
     ``manifest_extra`` maps filenames (must start with ``_`` so parquet
     scans ignore them) to string contents written INSIDE the version
@@ -440,61 +372,13 @@ def write_replace(
     mart refresh was built from). A version published without a given
     file simply has no such metadata.
 
-    ``checks`` (Delta-constraint semantics: ``[(name, sql_condition)]``,
-    every row must satisfy every condition) and ``unique_key`` gate the
-    publish: validation runs on the STAGED files (one aggregation pass,
-    no recompute of the writer's plan), and any violation removes the
-    staging and raises :class:`ConstraintViolation` — bad data can
-    never become the current version, readers keep the last good one.
+    ``expect_version`` makes the publish conditional on the pointer
+    still naming that version (see :func:`_commit`); None is last
+    write wins.
     """
-    tmp = f"{path}.__staging__{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(tmp)
-    if checks or unique_key:
-        bad = _check_staged(df.sparkSession, tmp, checks, unique_key)
-        if bad:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise ConstraintViolation(path, bad)
-    _write_manifest_extra(tmp, manifest_extra)
-    legacy_flat = os.path.exists(path) and not os.path.exists(
-        os.path.join(path, _POINTER)
-    )
-    version_dir = os.path.join(path, f"v_{uuid.uuid4().hex}")
-    try:
-        if legacy_flat:
-            # one-time migration: tuck the flat files into a version dir
-            # so the pre-swap layout stays readable as "previous". The
-            # moved files are the ONLY copy of the pre-migration table,
-            # so a failed publish (commit-lock timeout, stale lock from
-            # a crashed writer) must move them BACK, never delete them
-            legacy_v = os.path.join(path, f"v_legacy_{uuid.uuid4().hex}")
-            os.mkdir(legacy_v)
-            moved = []
-            for name in os.listdir(path):
-                if not name.startswith(("v_", ".")):
-                    os.rename(os.path.join(path, name),
-                              os.path.join(legacy_v, name))
-                    moved.append(name)
-            try:
-                _publish_version(path, legacy_v,
-                                 cleanup_staged_on_fail=False)
-            except Exception:
-                for name in moved:
-                    os.rename(os.path.join(legacy_v, name),
-                              os.path.join(path, name))
-                os.rmdir(legacy_v)
-                raise
-        os.makedirs(path, exist_ok=True)
-        os.rename(tmp, version_dir)
-        _publish_version(path, version_dir, retain=retain,
-                         expect_version=expect_version)
-    except Exception:
-        # any pre-commit failure (OSError, ConcurrentWriteError, ...):
-        # neither the staging dir nor the staged version dir may
-        # survive — an orphaned v_<hex> would be enumerated as a real
-        # version by retain-pruning and time travel
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(version_dir, ignore_errors=True)
-        raise
+    with _staging(path) as staged:
+        df.write.parquet(staged)
+        _commit(path, staged, expect_version, retain, manifest_extra)
 
 
 def read_version_meta(
@@ -505,21 +389,14 @@ def read_version_meta(
     travel); None if the table or the file does not exist. Because the
     file lives inside the version directory, the value observed is
     always the one committed atomically with the data being read."""
-    if version is not None:
-        data_dir = os.path.join(path, version)
-        if not os.path.isdir(data_dir):
-            raise FileNotFoundError(
-                f"version {version!r} not retained under {path}"
-            )
-    else:
-        data_dir = current_data_dir(path)
+    data_dir = _version_dir(path, version)
     if data_dir is None:
         return None
-    meta = os.path.join(data_dir, name)
-    if not os.path.exists(meta):
+    try:
+        with open(os.path.join(data_dir, name), encoding="utf-8") as f:
+            return f.read()
+    except FileNotFoundError:
         return None
-    with open(meta, encoding="utf-8") as f:
-        return f.read()
 
 
 def upsert(
@@ -529,7 +406,6 @@ def upsert(
     keys: Sequence[str],
     audit: bool = True,
     retain: int = 2,
-    occ: bool = False,
     manifest_extra: dict[str, str] | None = None,
 ) -> None:
     """S5 as a stored-table write: ON CONFLICT (keys) DO UPDATE.
@@ -538,48 +414,27 @@ def upsert(
     rows of both survive. With ``audit``, surviving stored rows keep
     their timestamps, overwritten/new keys get ``updated_at = now`` and
     ``created_at`` carried over from the stored row when the key existed
-    (db/schema.sql:61 + v3.py:175 semantics). Publishes via
-    write-then-swap, so the read-modify-write of the SAME table is safe.
+    (db/schema.sql:61 + v3.py:175 semantics). The merge reads one
+    version and commits only if that version is still current, so a
+    publish that lands in between raises :class:`ConcurrentWriteError`
+    (re-read and retry) instead of being lost.
     """
-    expect: str | None = None
-    if occ:
-        # resolve the snapshot ONCE: the merge reads this version and
-        # the commit requires the pointer to still name it (read-
-        # modify-write without lost updates; ConcurrentWriteError on
-        # interleave -> caller re-reads and retries)
-        data_dir = current_data_dir(path)
-        if data_dir is None:
-            expect = EXPECT_ABSENT
-        elif data_dir != path:  # legacy flat layout has no version name
-            expect = os.path.basename(data_dir)
-        existing = (
-            None if data_dir is None else spark.read.parquet(data_dir)
-        )
-    else:
-        existing = read_table(spark, path)
+    existing, expect = _snapshot(spark, path)
     write_replace(
         _merge_with_audit(existing, incoming, keys, audit), path,
-        retain=retain, expect_version=expect,
-        manifest_extra=manifest_extra,
+        manifest_extra=manifest_extra, retain=retain, expect_version=expect,
     )
 
 
-def _merge_with_audit(
-    existing: DataFrame | None,
-    incoming: DataFrame,
-    keys: Sequence[str],
-    audit: bool,
+def _stamp_audit(
+    existing: DataFrame | None, incoming: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
-    """The upsert merge (latest wins on ``keys``) with the reference's
-    audit semantics: created_at survives an overwrite, updated_at
-    refreshes for upserted keys (db/schema.sql:61, v3.py:175)."""
-    if not audit:
-        return incoming if existing is None else upsert_latest_wins(
-            existing, incoming, keys
-        )
-    now = F.current_timestamp()
+    """``incoming`` with the audit columns of a write over ``existing``:
+    ``updated_at = now``, and ``created_at`` carried over from the stored
+    row of the same key (else now), in ``existing``'s column order."""
     if existing is None:
         return with_audit_cols(incoming)
+    now = F.current_timestamp()
     # NULL-safe equi-join: the merge groups NULL keys together
     # (upsert_latest_wins windows NULL as a value), so the audit
     # carry-over must match them too -- a plain equi-join would reset
@@ -592,148 +447,38 @@ def _merge_with_audit(
         lambda a, b: a & b,
         [incoming[k].eqNullSafe(prior[f"__pk_{k}"]) for k in keys],
     )
-    stamped = (
+    return (
         incoming.join(prior, cond, "left")
         .withColumn(CREATED_AT, F.coalesce(F.col("__prior_created"), now))
         .withColumn(UPDATED_AT, now)
-        .drop("__prior_created", *[f"__pk_{k}" for k in keys])
+        .select(*existing.columns)
     )
-    return upsert_latest_wins(existing, stamped.select(*existing.columns), keys)
 
 
-def upsert_partitioned(
-    spark: SparkSession,
-    path: str,
+def _merge_with_audit(
+    existing: DataFrame | None,
     incoming: DataFrame,
     keys: Sequence[str],
-    partition_col: str,
-    audit: bool = True,
-    manifest_extra: dict[str, str] | None = None,
-    occ: bool | str = False,
-) -> int:
-    """Partition-pruned copy-on-write upsert: the table is stored
-    hive-partitioned on ``partition_col`` (which must be a key prefix --
-    every key's rows live in exactly one partition), and an upsert
-    REWRITES ONLY THE PARTITIONS THE BATCH TOUCHES. Untouched
-    partitions are HARD-LINKED into the new version (zero data copy,
-    zero read), so the cost of an incremental upsert scales with the
-    batch's partition footprint, not the table -- the Delta/Iceberg/
-    Hudi COW behavior, on plain parquet + the manifest pointer. This is
-    how the daily mart refresh stays cheap at 100 TB: the stored scan
-    is partition-pruned to the touched values (only those directories
-    are listed or read), the merge shuffles only touched-partition
-    rows, and the pointer swap publishes the whole new version
-    atomically. Returns the number of partitions rewritten.
+    audit: bool,
+) -> DataFrame:
+    """The upsert merge (latest wins on ``keys``) with the reference's
+    audit semantics: created_at survives an overwrite, updated_at
+    refreshes for upserted keys (db/schema.sql:61, v3.py:175)."""
+    if audit:
+        incoming = _stamp_audit(existing, incoming, keys)
+    if existing is None:
+        return incoming
+    return upsert_latest_wins(existing, incoming, keys)
 
-    ``partition_col`` must be one of ``keys`` (otherwise a key could
-    move between partitions and the untouched-partition reuse would
-    leave a stale copy behind).
 
-    ``occ=True`` turns the read-merge-publish into an optimistic
-    read-modify-write (same contract as :func:`upsert`): the publish
-    goes through only if the pointer still names the version this call
-    read its stored side from, else :class:`ConcurrentWriteError`.
-    Passing a version NAME instead of True pins the expectation to a
-    version the CALLER already resolved -- the guard a caller needs
-    when its merge DECISIONS (not just the merged rows) depend on what
-    it read earlier: any publish racing in after the caller's read
-    fails this commit instead of tearing it.
-    """
-    if partition_col not in keys:
-        raise ValueError(
-            f"partition_col {partition_col!r} must be one of keys {list(keys)}"
-        )
-    cur = current_data_dir(path)
-    if isinstance(occ, str):
-        expect = occ
-    elif occ:
-        expect = EXPECT_ABSENT if cur is None else os.path.basename(cur)
-    else:
-        expect = None
-    if cur is None:
-        tmp = f"{path}.__staging__{uuid.uuid4().hex}"
-        _merge_with_audit(None, incoming, keys, audit).write.mode(
-            "overwrite"
-        ).partitionBy(partition_col).parquet(tmp)
-        version_dir = os.path.join(path, f"v_{uuid.uuid4().hex}")
-        os.makedirs(path, exist_ok=True)
-        try:
-            os.rename(tmp, version_dir)
-            _write_manifest_extra(version_dir, manifest_extra)
-            _publish_version(path, version_dir, expect_version=expect)
-        except Exception:
-            # same no-orphan contract as write_replace: a failed publish
-            # (OSError, manifest write, OCC) must not leave a v_<hex>
-            # visible to retain-pruning/time travel; everything here is
-            # staged output, recomputable
-            shutil.rmtree(tmp, ignore_errors=True)
-            shutil.rmtree(version_dir, ignore_errors=True)
-            raise
-        return len([n for n in os.listdir(version_dir)
-                    if n.startswith(f"{partition_col}=")])
-    # the untouched-partition hard-link pass below only preserves
-    # `partition_col=` directories; a current version that is NOT laid
-    # out hive-partitioned (e.g. written flat by write_replace) would
-    # silently lose every stored row, so refuse it up front
-    cur_names = [n for n in os.listdir(cur) if not n.startswith((".", "_"))]
-    if cur_names and not any(
-        n.startswith(f"{partition_col}=") for n in cur_names
-    ):
-        raise ValueError(
-            f"{path}: current version is not hive-partitioned on "
-            f"{partition_col!r} (no {partition_col}= directories); "
-            "rewrite it with upsert_partitioned/partitionBy first"
-        )
-    # touched partition values: a partition-count-sized driver list,
-    # the same metadata any table-format commit materializes
-    touched = [
-        r[0] for r in incoming.select(partition_col).distinct().collect()
-    ]
-    # NULL-safe membership: isin() never matches NULL (three-valued
-    # logic), but a NULL partition value is stored under
-    # __HIVE_DEFAULT_PARTITION__ and the staged rewrite DOES replace
-    # that directory — without the isNull() arm the stored NULL rows
-    # would be silently dropped
-    non_null = [t for t in touched if t is not None]
-    member = (
-        F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    )
-    if any(t is None for t in touched):
-        member = member | F.col(partition_col).isNull()
-    stored_touched = read_table(spark, path).filter(member)
-    merged = _merge_with_audit(stored_touched, incoming, keys, audit)
-    staging = f"{path}.__staging__{uuid.uuid4().hex}"
-    merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    try:
-        rewritten = [n for n in os.listdir(staging)
-                     if n.startswith(f"{partition_col}=")]
-        version_dir = os.path.join(path, f"v_{uuid.uuid4().hex}")
-        try:
-            os.mkdir(version_dir)
-            for name in os.listdir(cur):   # untouched partitions: link
-                if name.startswith(f"{partition_col}=") \
-                        and name not in rewritten:
-                    src = os.path.join(cur, name)
-                    dst = os.path.join(version_dir, name)
-                    os.mkdir(dst)
-                    for f in os.listdir(src):
-                        if not f.startswith("."):
-                            os.link(os.path.join(src, f),
-                                    os.path.join(dst, f))
-            for name in rewritten:         # touched partitions: move in
-                os.rename(os.path.join(staging, name),
-                          os.path.join(version_dir, name))
-            _write_manifest_extra(version_dir, manifest_extra)
-            _publish_version(path, version_dir, expect_version=expect)
-        except Exception:
-            # no-orphan contract (see write_replace): version_dir holds
-            # only hard links + staged copies, safe to drop on ANY
-            # publish failure, not just ConcurrentWriteError
-            shutil.rmtree(version_dir, ignore_errors=True)
-            raise
-        return len(rewritten)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+def _link_parts(src: str, dst: str) -> None:
+    """Hard-link every part-file of the flat version directory ``src``
+    into ``dst`` -- the zero-copy data share of appends and meta-only
+    commits."""
+    for name in os.listdir(src):
+        if name.endswith(".parquet") and not name.startswith("."):
+            os.link(os.path.join(src, name), os.path.join(dst, name))
+
 
 def commit_meta_only(path: str, manifest_extra: dict[str, str]) -> None:
     """Publish a new version with IDENTICAL data (hard links to the
@@ -741,69 +486,30 @@ def commit_meta_only(path: str, manifest_extra: dict[str, str]) -> None:
     watermark-advance commit for incremental ingest: a run that found
     work to record but no new rows (e.g. a re-listed source chunk whose
     samples were all duplicates) must still move its watermark, or it
-    re-scans the same chunk forever. Same atomicity as every publish:
-    readers see the old version or the new one, never a mix; a failure
-    removes the version directory (links only — data is never at
-    risk).
+    re-scans the same chunk forever. Commits against the version it
+    linked (:class:`ConcurrentWriteError` if another publish landed).
 
-    Both flat and hive-partitioned (``col=value/`` subdirectory)
-    layouts are linked recursively — a partitioned table must not
-    silently publish an empty version (the mirror image of
-    upsert_partitioned's layout guard).
-
-    Prior ``_`` metadata files (stream txn markers, watermarks) are
-    COPIED forward, then overlaid with ``manifest_extra``. That
-    carry-forward is safe precisely BECAUSE the data is identical.
-    Data-changing publishes (append_if_absent, upsert) deliberately do
-    NOT carry metadata forward: it may describe files the new version
-    no longer holds."""
+    Prior ``_`` metadata files (watermarks and the like) are COPIED
+    forward, then overlaid with ``manifest_extra``. That carry-forward
+    is safe precisely BECAUSE the data is identical. Data-changing
+    publishes (append_if_absent, upsert) deliberately do NOT carry
+    metadata forward: it may describe files the new version no longer
+    holds."""
     cur = current_data_dir(path)
     if cur is None:
         raise FileNotFoundError(f"no table at {path}: nothing to commit")
-    _publish_linked_version(path, cur, manifest_extra)
-
-
-def _link_parquet_tree(src: str, dst: str) -> None:
-    """Hard-link every part-file (flat or hive-partitioned layout)
-    from ``src`` into ``dst`` -- the zero-copy data share behind
-    meta-only commits and restores."""
-    for name in os.listdir(src):
-        sp = os.path.join(src, name)
-        if os.path.isdir(sp):
-            dp = os.path.join(dst, name)
-            os.makedirs(dp, exist_ok=True)
-            _link_parquet_tree(sp, dp)
-        elif name.endswith(".parquet") and not name.startswith("."):
-            os.link(sp, os.path.join(dst, name))
-
-
-def _publish_linked_version(
-    path: str, src_dir: str, manifest_extra: dict[str, str],
-    retain: int = 2,
-) -> str:
-    """Publish a new version whose data is hard links to ``src_dir``'s
-    part-files, carrying ``src_dir``'s ``_`` metadata forward and
-    overlaying ``manifest_extra``. Returns the new version name."""
-    version_dir = os.path.join(path, f"v_{uuid.uuid4().hex}")
-    try:
-        os.mkdir(version_dir)
-        _link_parquet_tree(src_dir, version_dir)
-        for name in os.listdir(src_dir):
-            if name.startswith("_") and os.path.isfile(
-                os.path.join(src_dir, name)
-            ):
-                # COPIED, not linked: the overlay below must never
-                # write through a shared inode into the old version
-                shutil.copyfile(os.path.join(src_dir, name),
-                                os.path.join(version_dir, name))
-        _write_manifest_extra(version_dir, manifest_extra)
-        _publish_version(path, version_dir, retain=retain)
-        return os.path.basename(version_dir)
-    except Exception:
-        # no-orphan contract (see write_replace): links + copies only,
-        # safe to drop on ANY publish failure
-        shutil.rmtree(version_dir, ignore_errors=True)
-        raise
+    with _staging(path) as staged:
+        os.mkdir(staged)
+        _link_parts(cur, staged)
+        for name in os.listdir(cur):
+            if name.startswith("_") and os.path.isfile(os.path.join(cur, name)):
+                # COPIED, not linked: the overlay and the _SEQ stamp
+                # must never write through a shared inode into the old
+                # version
+                shutil.copyfile(os.path.join(cur, name),
+                                os.path.join(staged, name))
+        _commit(path, staged, os.path.basename(cur),
+                manifest_extra=manifest_extra)
 
 
 def append_if_absent(
@@ -818,15 +524,17 @@ def append_if_absent(
 
     Only rows whose key is absent from the stored table are committed,
     as NEW files -- existing data is never rewritten (the append-only
-    fast path of ingest_facts.py:119-143). The fresh rows are staged to
-    a side directory; the commit hard-links every current part-file
-    (zero data copy, same filesystem) plus the staged new files into a
-    new version directory and swaps the pointer, so the append is
-    atomic too: overlapping readers see the table with or without the
-    whole batch, never a partial batch. Returns the number of new
-    part-files committed (0 => the batch was a pure duplicate, no new
-    version is published, and the table is byte-identical -- the S6
-    idempotence contract).
+    fast path of ingest_facts.py:119-143). The fresh rows are staged; the
+    commit hard-links every part-file of the version the anti-join read
+    (zero data copy, same filesystem) beside them and swaps the pointer,
+    so the append is atomic too: overlapping readers see the table with
+    or without the whole batch, never a partial batch. The commit is
+    conditional on that version still being current, so a concurrent
+    append can never make this one publish a key twice
+    (:class:`ConcurrentWriteError`; the retry's anti-join sees the other
+    rows). Returns the number of new part-files committed (0 => the
+    batch was a pure duplicate, no new version is published, and the
+    table is byte-identical -- the S6 idempotence contract).
 
     Key comparison is NULL-SAFE -- a deliberate deviation from the
     reference's plain-UNIQUE Postgres constraint (db/schema.sql:39),
@@ -836,12 +544,13 @@ def append_if_absent(
     operator-level ``operators.upsert.insert_if_absent`` keeps plain
     equality for exact oracle parity with NOT EXISTS.
     """
-    existing = read_table(spark, path)
+    existing, expect = _snapshot(spark, path)
     fresh = incoming.dropDuplicates(list(keys))
     if audit:
         fresh = with_audit_cols(fresh)
     if existing is None:
-        write_replace(fresh, path, manifest_extra=manifest_extra)
+        write_replace(fresh, path, manifest_extra=manifest_extra,
+                      expect_version=expect)
         return 1
     # NULL-SAFE anti-join: a nullable key column (e.g. period_start on
     # stock facts) under plain equality NEVER matches its stored twin
@@ -851,47 +560,24 @@ def append_if_absent(
     # absence probe must be too.
     f = fresh.select(*existing.columns).alias("f")
     e = existing.select(*keys).alias("e")
-    cond = None
-    for k in keys:
-        c = F.col(f"f.{k}").eqNullSafe(F.col(f"e.{k}"))
-        cond = c if cond is None else (cond & c)
-    fresh = f.join(e, cond, "left_anti")
-    staging = f"{path}.__staging__{uuid.uuid4().hex}"
-    fresh.write.mode("overwrite").parquet(staging)
-    try:
-        new_parts = [
-            name
-            for name in os.listdir(staging)
-            if name.startswith("part-")
-            and not name.endswith(".crc")
-            and _parquet_num_rows(os.path.join(staging, name)) > 0
-        ]
+    cond = functools.reduce(
+        lambda a, b: a & b,
+        [F.col(f"f.{k}").eqNullSafe(F.col(f"e.{k}")) for k in keys],
+    )
+    with _staging(path) as staged:
+        f.join(e, cond, "left_anti").write.parquet(staged)
+        new_parts = 0
+        for name in os.listdir(staged):
+            if name.startswith("part-") and not name.endswith(".crc"):
+                if _parquet_num_rows(os.path.join(staged, name)) > 0:
+                    new_parts += 1
+                else:
+                    os.unlink(os.path.join(staged, name))
         if not new_parts:
             return 0  # pure duplicate: publish nothing
-        cur = current_data_dir(path)
-        version_dir = os.path.join(path, f"v_{uuid.uuid4().hex}")
-        try:
-            os.mkdir(version_dir)
-            for name in os.listdir(cur):
-                if name.endswith(".parquet") and not name.startswith("."):
-                    os.link(os.path.join(cur, name),
-                            os.path.join(version_dir, name))
-            for name in new_parts:
-                os.rename(
-                    os.path.join(staging, name),
-                    os.path.join(version_dir,
-                                 f"append-{uuid.uuid4().hex}-{name}"),
-                )
-            _write_manifest_extra(version_dir, manifest_extra)
-            _publish_version(path, version_dir)
-        except Exception:
-            # no-orphan contract (see write_replace): hard links +
-            # staged copies only, safe to drop on ANY publish failure
-            shutil.rmtree(version_dir, ignore_errors=True)
-            raise
-        return len(new_parts)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+        _link_parts(os.path.join(path, expect), staged)
+        _commit(path, staged, expect, manifest_extra=manifest_extra)
+    return new_parts
 
 
 def _parquet_num_rows(part_path: str) -> int:
@@ -899,51 +585,3 @@ def _parquet_num_rows(part_path: str) -> int:
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(part_path).metadata.num_rows
-
-
-def write_bucketed(
-    df: DataFrame,
-    name: str,
-    path: str,
-    keys: Sequence[str],
-    buckets: int = 32,
-) -> None:
-    """Persist ``df`` hash-bucketed (and per-bucket sorted) on ``keys``
-    so recurring joins and aggregations on those keys run with ZERO
-    shuffle.
-
-    Bucketing trades one layout-time shuffle for every future one: the
-    writer hash-partitions rows into ``buckets`` files per partition
-    and records the layout in the catalog; a later equi-join between
-    two tables bucketed the same way (same keys, same count) is planned
-    as a SortMergeJoin with NO Exchange on either side, and a
-    ``groupBy`` on the bucket keys aggregates in place. At 100 TB this
-    is the difference between re-shuffling the fact table on every
-    nightly mart build and never shuffling it again — the same reason
-    the reference keys its Postgres facts table on (cik, fy, tag)
-    (db/schema.sql:30-38): the storage layout IS the join strategy.
-
-    Equality filters on the first bucket key also prune at the FILE
-    level (the scan reads only the one matching bucket —
-    ``SelectedBucketsCount`` in the plan), independent of parquet
-    row-group stats.
-
-    Sizing: pick ``buckets`` so one bucket of the LARGEST co-bucketed
-    table fits an executor core's working set (~128-512 MB compressed);
-    all tables joined together must share the same count. The table is
-    registered in the session catalog as ``name`` with files at
-    ``path`` (query via ``spark.table(name)`` — a plain
-    ``read.parquet`` sees the same rows but not the bucket metadata,
-    so it plans shuffles again).
-    """
-    key_list = list(keys)
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .option("path", path)
-        .bucketBy(buckets, key_list[0], *key_list[1:])
-        .sortBy(key_list[0], *key_list[1:])
-        .saveAsTable(name)
-    )
-
-

@@ -1,5 +1,5 @@
 """Two-writer OCC stress on the versioned sink at 10x size: a
-read-modify-write ``upsert(occ=True)`` racing another writer's publish
+read-modify-write ``upsert`` racing another writer's publish
 must surface ConcurrentWriteError -- never a silent drop or a torn
 merge -- and the losing writer's retry must land with zero data loss.
 
@@ -46,7 +46,7 @@ def _build(spark, sf10x, tmp_path) -> str:
     path = str(tmp_path / "emb10x")
     sinks.upsert(spark, path,
                  spark.read.parquet(f"{sf10x}/embeddings.parquet"),
-                 keys=["vec_id"], occ=True)
+                 keys=["vec_id"])
     assert sinks.read_table(spark, path).count() >= COPIES * 400
     return path
 
@@ -112,7 +112,7 @@ def test_occ_upsert_loses_to_append_then_retry_lands(
     _race(monkeypatch, lambda: sinks.append_if_absent(
         spark, path, appended, keys=["vec_id"]))
     with pytest.raises(sinks.ConcurrentWriteError):
-        sinks.upsert(spark, path, update, keys=["vec_id"], occ=True)
+        sinks.upsert(spark, path, update, keys=["vec_id"])
     monkeypatch.undo()
 
     # the append won: its rows are current, nothing of the upsert landed
@@ -122,12 +122,12 @@ def test_occ_upsert_loses_to_append_then_retry_lands(
     _assert_clean_loss(path, tmp_path)
 
     # retry: the upsert lands on the post-append snapshot
-    sinks.upsert(spark, path, update, keys=["vec_id"], occ=True)
+    sinks.upsert(spark, path, update, keys=["vec_id"])
     after = _id_counts(spark, path)
     assert set(after) == set(before) | app_ids | upd_ids
     assert all(n == 1 for n in after.values())
     # replay the same batch: idempotent by key
-    sinks.upsert(spark, path, update, keys=["vec_id"], occ=True)
+    sinks.upsert(spark, path, update, keys=["vec_id"])
     assert _id_counts(spark, path) == after
 
 
@@ -148,7 +148,7 @@ def test_occ_upsert_loses_to_rewrite_then_retry_lands(
         sinks.read_table(spark, path).filter(F.col("vec_id") % 2 == 0),
         path))
     with pytest.raises(sinks.ConcurrentWriteError):
-        sinks.upsert(spark, path, update, keys=["vec_id"], occ=True)
+        sinks.upsert(spark, path, update, keys=["vec_id"])
     monkeypatch.undo()
 
     # the rewrite won: exactly its rows, none of the upsert's
@@ -156,7 +156,7 @@ def test_occ_upsert_loses_to_rewrite_then_retry_lands(
     _assert_clean_loss(path, tmp_path)
 
     # retry: lands on the rewritten table, the removed rows stay removed
-    sinks.upsert(spark, path, update, keys=["vec_id"], occ=True)
+    sinks.upsert(spark, path, update, keys=["vec_id"])
     after = _id_counts(spark, path)
     assert set(after) == kept | upd_ids
     assert all(n == 1 for n in after.values())

@@ -1,4 +1,5 @@
-"""Every module of the package is reachable from an entry point.
+"""Every module, and every public top-level name, of the package is
+reachable from an entry point.
 
 An ``ast`` import walk (imports inside functions count) from
 ``__spark_entry__`` (entry/queries/oracle_sql), the console entry
@@ -13,6 +14,15 @@ sources, kept with their own tests until a later change wires them in
 or deletes them. The list may only shrink: the test fails when a module
 outside it is unreached, and also when a listed module is deleted or
 becomes reachable, so a stale entry cannot hide a new dead module.
+
+The name pass applies the same rule one level down: every public
+top-level function and class of every package module must be referenced
+(as a name, an attribute or an imported name -- matched by bare name)
+from a reached module, ``__spark_entry__.py`` or ``perfbench/``. String
+constants in ``perfbench/`` count too, because the tracer wraps
+functions by name. A name only ``tests/`` use is dead code its tests
+keep alive. ``KNOWN_TEST_ONLY`` freezes the names that predate the pass
+and shrinks like ``KNOWN_UNREACHED``.
 """
 
 from __future__ import annotations
@@ -33,6 +43,39 @@ KNOWN_UNREACHED = frozenset(f"{PACKAGE}.{m}" for m in (
     "streaming.events_stream",
 ))
 
+KNOWN_TEST_ONLY = frozenset(
+    f"{PACKAGE}.{module}.{name}"
+    for module, names in {
+        "functions.audiofp": ("audio_fingerprint_features",),
+        "functions.multimodal": ("audio_features", "audio_metadata",
+                                 "image_features", "resize_images",
+                                 "sample_frames"),
+        "functions.phash": ("image_phash_features",),
+        "materialize": ("attach_warehouse", "build_all_marts",
+                        "refresh_marts_incremental"),
+        "operators.skew": ("salted_join",),
+        "plans.decontam_index": ("build_decontam_index",
+                                 "decontaminate_incremental"),
+        "sinks": ("commit_meta_only",),
+        "sources.csv_docs": ("read_csv_docs",),
+        "sources.webdataset": ("read_webdataset_members",
+                               "read_webdataset_samples", "write_webdataset",
+                               "write_webdataset_shards"),
+        "sources.webdataset_ingest": ("ingest_webdataset_incremental",
+                                      "ingested_shards"),
+        "streaming.events_stream": ("click_view_stream_join", "dedup_stream",
+                                    "enrich_stream", "funnel_stream",
+                                    "sessionize_stream", "stream_events",
+                                    "user_running_totals", "windowed_counts"),
+    }.items()
+    for name in names
+)
+
+
+def _parse(path: str) -> ast.Module:
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
 
 def _path(module: str) -> str | None:
     base = os.path.join(ROOT, *module.split("."))
@@ -46,10 +89,8 @@ def _imports(module: str, path: str) -> set[str]:
     """Module names ``path`` imports, resolved against the repo root;
     ``from m import x`` yields ``m.x`` too when that is a module."""
     is_pkg = path.endswith("__init__.py")
-    with open(path, encoding="utf-8") as f:
-        tree = ast.parse(f.read(), path)
     out: set[str] = set()
-    for node in ast.walk(tree):
+    for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Import):
             out.update(a.name for a in node.names)
         elif isinstance(node, ast.ImportFrom):
@@ -99,3 +140,53 @@ def test_every_package_module_is_reached_from_an_entry_point():
     assert not new_dead, f"modules no entry point imports: {new_dead}"
     stale = sorted(KNOWN_UNREACHED - unreached)
     assert not stale, f"drop from KNOWN_UNREACHED (gone or reached): {stale}"
+
+
+def _references(path: str, strings: bool = False) -> set[str]:
+    """Bare names ``path`` uses: names, attributes, imported names and,
+    with ``strings``, string constants."""
+    out: set[str] = set()
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Name):
+            out.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            out.add(node.attr)
+        elif isinstance(node, ast.alias):
+            out.add(node.name.rsplit(".", 1)[-1])
+        elif strings and isinstance(node, ast.Constant) \
+                and isinstance(node.value, str):
+            out.add(node.value)
+    return out
+
+
+def live_references() -> set[str]:
+    live = _references(os.path.join(ROOT, "__spark_entry__.py"))
+    for mod in reachable():
+        if mod.startswith(PACKAGE):
+            live |= _references(_path(mod))
+    for dirpath, _dirs, files in os.walk(os.path.join(ROOT, "perfbench")):
+        for fn in files:
+            if fn.endswith(".py"):
+                live |= _references(os.path.join(dirpath, fn), strings=True)
+    return live
+
+
+def public_names() -> set[str]:
+    """``module.name`` of every public top-level function and class."""
+    return {
+        f"{mod}.{node.name}"
+        for mod in package_modules()
+        for node in _parse(_path(mod)).body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                             ast.ClassDef))
+        and not node.name.startswith("_")
+    }
+
+
+def test_every_public_name_is_used_outside_tests():
+    live = live_references()
+    test_only = {q for q in public_names() if q.rsplit(".", 1)[1] not in live}
+    new_dead = sorted(test_only - KNOWN_TEST_ONLY)
+    assert not new_dead, f"public names only tests use: {new_dead}"
+    stale = sorted(KNOWN_TEST_ONLY - test_only)
+    assert not stale, f"drop from KNOWN_TEST_ONLY (gone or used): {stale}"

@@ -1,39 +1,12 @@
-"""Executed-plan evidence for two scale mechanisms the engine relies
-on: read-side partition pruning against hive-partitioned sink tables,
-and AQE skew-join splitting under a manufactured hot key. These are
-the runtime behaviors the 100 TB story assumes; asserting them against
-real plans keeps a refactor from silently losing either."""
+"""Executed-plan evidence for a scale mechanism the engine relies on:
+AQE skew-join splitting under a manufactured hot key. This is a
+runtime behavior the 100 TB story assumes; asserting it against real
+plans keeps a refactor from silently losing it."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
-
-from sec_xbrl_finwarehouse_spark import sinks
-
-
-def test_partitioned_table_read_prunes_partitions(spark, tmp_path):
-    """A day-filtered scan of a day-partitioned sink table must carry
-    the filter as a PartitionFilter (directory-level pruning: only the
-    matching day's files are listed/read), not a post-scan Filter."""
-    table = str(tmp_path / "events_by_day")
-    df = spark.createDataFrame(
-        [(d, i, float(i)) for d in ("2024-01-01", "2024-01-02",
-                                    "2024-01-03") for i in range(5)],
-        "day string, event_id int, v double",
-    )
-    sinks.upsert_partitioned(spark, table, df, keys=["day", "event_id"],
-                             partition_col="day")
-
-    scan = sinks.read_table(spark, table).filter(
-        F.col("day") == "2024-01-02"
-    )
-    plan = scan._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(day" in plan
-    # the day predicate must appear in PartitionFilters, not PushedFilters
-    pf = plan.split("PartitionFilters: [")[1].split("]")[0]
-    assert "2024-01-02" in pf
-    assert scan.count() == 5
 
 
 def test_aqe_splits_skewed_join(spark, tmp_path):

@@ -125,23 +125,6 @@ def test_append_if_absent_dedups_within_batch(spark, tmp_path):
     assert sinks.read_table(spark, path).count() == 2
 
 
-def test_write_replace_migrates_legacy_flat_layout(spark, tmp_path):
-    """A pre-manifest flat parquet directory rewritten from its own scan
-    keeps every row and is read from the new version afterwards."""
-    path = str(tmp_path / "t.parquet")
-    df = spark.range(0, 10_000).withColumn("v", F.col("id") * 2)
-    df.repartition(24).write.parquet(path)  # legacy flat layout on purpose
-    import glob
-    before = len(glob.glob(f"{path}/*.parquet"))
-    assert before >= 24
-    sinks.write_replace(sinks.read_table(spark, path).repartition(1), path)
-    cur = sinks.current_data_dir(path)
-    assert cur != path and len(glob.glob(f"{cur}/*.parquet")) == 1
-    got = sinks.read_table(spark, path)
-    assert got.count() == 10_000
-    assert got.agg(F.sum("v")).first()[0] == df.agg(F.sum("v")).first()[0]
-
-
 def test_reader_across_publish_sees_old_version_intact(spark, tmp_path):
     """A reader that resolved the manifest pointer BEFORE a publish must
     keep scanning the complete old version (never a mixed or half-swapped
@@ -179,84 +162,6 @@ def test_append_publishes_atomically_via_new_version(spark, tmp_path):
     sinks.append_if_absent(spark, path, _mk(spark, [(2, "b"), (3, "c")]), ["k"])
     assert {r["k"] for r in pinned.collect()} == {1}       # old version
     assert _rows(spark, path) == {(1, "a"), (2, "b"), (3, "c")}  # new
-
-
-def _mkp(spark, rows):
-    """(k, v, part) rows for the partitioned-upsert tests."""
-    return spark.createDataFrame(
-        [{"k": k, "v": v, "part": p} for k, v, p in rows]
-    )
-
-
-def _pdirs(data_dir):
-    return sorted(n for n in os.listdir(data_dir) if n.startswith("part="))
-
-
-def _inodes(data_dir, pdir):
-    d = os.path.join(data_dir, pdir)
-    return {f: os.stat(os.path.join(d, f)).st_ino
-            for f in os.listdir(d) if f.endswith(".parquet")}
-
-
-def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
-    path = str(tmp_path / "t")
-    n = sinks.upsert_partitioned(
-        spark, path,
-        _mkp(spark, [(1, "a", 10), (2, "b", 10), (3, "c", 20), (4, "d", 30)]),
-        keys=["part", "k"], partition_col="part",
-    )
-    assert n == 3
-    v1 = sinks.current_data_dir(path)
-    assert _pdirs(v1) == ["part=10", "part=20", "part=30"]
-    inodes_before = {p: _inodes(v1, p) for p in _pdirs(v1)}
-
-    # second batch touches ONLY part=10 (update k=2, insert k=5)
-    n = sinks.upsert_partitioned(
-        spark, path, _mkp(spark, [(2, "B2", 10), (5, "e", 10)]),
-        keys=["part", "k"], partition_col="part",
-    )
-    assert n == 1
-    v2 = sinks.current_data_dir(path)
-    assert v2 != v1
-    got = {(r["k"], r["v"], r["part"])
-           for r in sinks.read_table(spark, path).collect()}
-    assert got == {(1, "a", 10), (2, "B2", 10), (5, "e", 10),
-                   (3, "c", 20), (4, "d", 30)}
-    # untouched partitions are the SAME inodes (hard links, no rewrite)
-    assert _inodes(v2, "part=20") == inodes_before["part=20"]
-    assert _inodes(v2, "part=30") == inodes_before["part=30"]
-    # the touched partition was rewritten (all-new files)
-    assert not (set(_inodes(v2, "part=10").values())
-                & set(inodes_before["part=10"].values()))
-
-
-def test_upsert_partitioned_new_partition_and_audit(spark, tmp_path):
-    path = str(tmp_path / "t")
-    sinks.upsert_partitioned(
-        spark, path, _mkp(spark, [(1, "a", 10)]),
-        keys=["part", "k"], partition_col="part",
-    )
-    first = {r["k"]: r for r in sinks.read_table(spark, path).collect()}
-    n = sinks.upsert_partitioned(
-        spark, path, _mkp(spark, [(1, "A2", 10), (9, "z", 99)]),
-        keys=["part", "k"], partition_col="part",
-    )
-    assert n == 2  # part=10 rewritten, part=99 created
-    rows = {r["k"]: r for r in sinks.read_table(spark, path).collect()}
-    assert rows[1]["v"] == "A2" and rows[9]["part"] == 99
-    # created_at preserved across the overwrite of k=1
-    assert rows[1][sinks.CREATED_AT] == first[1][sinks.CREATED_AT]
-    assert rows[1][sinks.UPDATED_AT] >= first[1][sinks.UPDATED_AT]
-
-
-def test_upsert_partitioned_requires_partition_key(spark, tmp_path):
-    import pytest
-
-    with pytest.raises(ValueError, match="must be one of keys"):
-        sinks.upsert_partitioned(
-            spark, str(tmp_path / "t"), _mkp(spark, [(1, "a", 10)]),
-            keys=["k"], partition_col="part",
-        )
 
 
 def test_time_travel_versions(spark, tmp_path):
@@ -329,8 +234,8 @@ def test_optimistic_concurrency_rejects_stale_commit(spark, tmp_path):
 
 def test_occ_upsert_retry_preserves_both_writers(spark, tmp_path):
     """The lost-update scenario OCC exists for: writer 2's merge was
-    computed against a snapshot writer 1 replaced. With occ=True the
-    stale merge errors instead of silently dropping writer 1's key;
+    computed against a snapshot writer 1 replaced. The stale merge
+    errors instead of silently dropping writer 1's key;
     the retry merges against the fresh snapshot and BOTH keys survive."""
     from unittest.mock import patch
 
@@ -358,92 +263,18 @@ def test_occ_upsert_retry_preserves_both_writers(spark, tmp_path):
 
     with patch.object(S, "_merge_with_audit", merge_then_interleave):
         with pytest.raises(S.ConcurrentWriteError):
-            S.upsert(spark, table, w2, keys=["k"], occ=True)
+            S.upsert(spark, table, w2, keys=["k"])
 
     # retry from a fresh snapshot: nothing lost
-    S.upsert(spark, table, w2, keys=["k"], occ=True)
+    S.upsert(spark, table, w2, keys=["k"])
     got = {r["k"] for r in S.read_table(spark, table).collect()}
     assert got == {0, 1, 2}
 
 
-def test_constraint_gate_rejects_bad_publish(spark, tmp_path):
-    """Delta-style CHECK/unique gates: violations abort the publish
-    (staged files removed, previous version still current); clean data
-    passes. SQL CHECK semantics: a NULL condition result passes."""
-    from sec_xbrl_finwarehouse_spark.sinks import (
-        ConstraintViolation, current_data_dir, read_table, write_replace,
-    )
-
-    table = str(tmp_path / "gated")
-    checks = [("non_negative", "v >= 0"),
-              ("k_present", "k IS NOT NULL")]
-    good = spark.createDataFrame(
-        [(1, 1.0), (2, None), (3, 3.0)], "k int, v double")  # NULL v passes
-    write_replace(good, table, checks=checks, unique_key=["k"])
-    v_before = current_data_dir(table)
-
-    bad_value = spark.createDataFrame(
-        [(1, 1.0), (2, -5.0), (4, -1.0)], "k int, v double")
-    with pytest.raises(ConstraintViolation) as ei:
-        write_replace(bad_value, table, checks=checks, unique_key=["k"])
-    assert ei.value.counts == {"non_negative": 2}
-
-    dup_key = spark.createDataFrame(
-        [(1, 1.0), (1, 2.0), (2, 2.0)], "k int, v double")
-    with pytest.raises(ConstraintViolation) as ei:
-        write_replace(dup_key, table, checks=checks, unique_key=["k"])
-    assert ei.value.counts == {"unique(k)": 1}
-
-    # table untouched by both rejected publishes; no staging left behind
-    assert current_data_dir(table) == v_before
-    assert read_table(spark, table).count() == 3
-    import os as _os
-    leftovers = [n for n in _os.listdir(tmp_path)
-                 if n.startswith("gated.__staging__")]
-    assert leftovers == []
-
-
 # ---------------------------------------------------------------------------
-# storage-bug regression tests: no-orphan publish failures, legacy-flat
-# migration safety
+# storage-bug regression tests: no-orphan publish failures, racing
+# writers
 # ---------------------------------------------------------------------------
-
-
-def test_upsert_partitioned_null_partition_rows_survive(spark, tmp_path):
-    """A NULL partition value lives under __HIVE_DEFAULT_PARTITION__ and
-    the staged rewrite replaces that directory: without the NULL-safe
-    membership arm the stored NULL rows were silently dropped by any
-    later upsert touching the NULL partition."""
-    path = str(tmp_path / "t")
-    df = spark.createDataFrame(
-        [("a", 1, "x"), ("a", 2, "y"), (None, 3, "null-part")],
-        "part string, id int, v string",
-    )
-    sinks.upsert_partitioned(spark, path, df, keys=["part", "id"],
-                             partition_col="part")
-    first = {(r["part"], r["id"]): r
-             for r in sinks.read_table(spark, path).collect()}
-    assert first[(None, 3)]["v"] == "null-part"
-
-    # second batch updates the NULL partition AND adds a sibling row
-    batch2 = spark.createDataFrame(
-        [(None, 3, "null-part-v2"), (None, 4, "new-null")],
-        "part string, id int, v string",
-    )
-    sinks.upsert_partitioned(spark, path, batch2, keys=["part", "id"],
-                             partition_col="part")
-    after = {(r["part"], r["id"]): r
-             for r in sinks.read_table(spark, path).collect()}
-    assert set(after) == {("a", 1), ("a", 2), (None, 3), (None, 4)}
-    assert after[(None, 3)]["v"] == "null-part-v2"
-    # NULL-key audit carry-over (eqNullSafe join): created_at survives
-    assert after[(None, 3)][sinks.CREATED_AT] \
-        == first[(None, 3)][sinks.CREATED_AT]
-    assert after[(None, 3)][sinks.UPDATED_AT] \
-        >= first[(None, 3)][sinks.UPDATED_AT]
-    # untouched 'a' partition: bit-identical stamps
-    assert after[("a", 1)][sinks.CREATED_AT] == first[("a", 1)][sinks.CREATED_AT]
-    assert after[("a", 1)][sinks.UPDATED_AT] == first[("a", 1)][sinks.UPDATED_AT]
 
 
 def _orphan_versions(path, known):
@@ -460,8 +291,7 @@ def test_failed_publish_leaves_no_orphan_version(spark, tmp_path, monkeypatch):
     df = spark.createDataFrame(
         [("a", 1, "x"), ("b", 2, "y")], "part string, id int, v string"
     )
-    sinks.upsert_partitioned(spark, path, df, keys=["part", "id"],
-                             partition_col="part")
+    sinks.upsert(spark, path, df, keys=["part", "id"])
     committed = {v["version"] for v in sinks.list_versions(path)}
     before = {(r["part"], r["id"], r["v"])
               for r in sinks.read_table(spark, path).collect()}
@@ -469,13 +299,13 @@ def test_failed_publish_leaves_no_orphan_version(spark, tmp_path, monkeypatch):
     def boom(*a, **kw):
         raise OSError("disk full")
 
-    monkeypatch.setattr(sinks, "_publish_version", boom)
+    monkeypatch.setattr(sinks, "_commit", boom)
     with pytest.raises(OSError):
-        sinks.upsert_partitioned(
+        sinks.upsert(
             spark, path,
             spark.createDataFrame([("a", 1, "X2")],
                                   "part string, id int, v string"),
-            keys=["part", "id"], partition_col="part",
+            keys=["part", "id"],
         )
     with pytest.raises(OSError):
         sinks.append_if_absent(
@@ -504,36 +334,6 @@ def test_occ_mismatch_leaves_no_orphan_version(spark, tmp_path):
                             expect_version="v_nonexistent")
     assert _orphan_versions(path, committed) == []
     assert _rows(spark, path) == {(1, "a")}
-
-
-def test_legacy_migration_failure_restores_flat_files(spark, tmp_path):
-    """The one-time legacy-flat migration MOVES the only copy of the
-    table into v_legacy_*; a commit failure there (held/stale lock)
-    must move the files back, never delete them."""
-    path = str(tmp_path / "t")
-    # legacy layout: plain parquet at path, no _CURRENT pointer
-    _mk(spark, [(1, "a"), (2, "b")]).write.parquet(path)
-    flat_files = sorted(n for n in os.listdir(path)
-                        if not n.startswith((".", "_")))
-    os.makedirs(path, exist_ok=True)
-    lock = os.path.join(path, "._COMMIT_LOCK")
-    open(lock, "w").close()  # fresh lock: publishes time out at ~5 s
-    try:
-        with pytest.raises(sinks.ConcurrentWriteError):
-            sinks.write_replace(_mk(spark, [(3, "c")]), path)
-    finally:
-        os.unlink(lock)
-    # pre-migration data restored in place, still readable, no v_ dirs
-    assert sorted(n for n in os.listdir(path)
-                  if not n.startswith((".", "_"))) == flat_files
-    got = {tuple(r) for r in spark.read.parquet(path)
-           .select("k", "v").collect()}
-    assert got == {(1, "a"), (2, "b")}
-    assert [n for n in os.listdir(path) if n.startswith("v_")] == []
-    # and the retry (lock released) migrates + publishes normally
-    sinks.write_replace(_mk(spark, [(3, "c")]), path)
-    assert _rows(spark, path) == {(3, "c")}
-    assert any(n.startswith("v_legacy_") for n in os.listdir(path))
 
 
 def test_version_order_survives_mtime_scramble(spark, tmp_path):
@@ -606,7 +406,7 @@ _op = st.one_of(
 @given(schedule=st.lists(_op, min_size=1, max_size=5))
 def test_version_store_occ_schedule_no_lost_updates(spark, tmp_path_factory,
                                                     schedule):
-    """Randomized interleavings of occ-upsert / stale-OCC-write /
+    """Randomized interleavings of upsert / stale-OCC-write /
     append-if-absent / rollback (a retained version read by time travel
     and republished) against a sequential model: (1) a stale writer
     (its read snapshot superseded by an interloper's commit) ALWAYS
@@ -644,7 +444,7 @@ def test_version_store_occ_schedule_no_lost_updates(spark, tmp_path_factory,
     for op, arg in schedule:
         if op == "upsert":
             sinks.upsert(spark, path, df_of(arg), keys=["k"],
-                         audit=False, occ=True, retain=4)
+                         audit=False, retain=4)
             model.update(arg)
             record_current()
         elif op == "stale_write":
@@ -655,7 +455,7 @@ def test_version_store_occ_schedule_no_lost_updates(spark, tmp_path_factory,
             # ... interloper B commits first (this update must survive)
             interloper = {k: v + 1000 for k, v in arg.items()}
             sinks.upsert(spark, path, df_of(interloper), keys=["k"],
-                         audit=False, occ=True, retain=4)
+                         audit=False, retain=4)
             model.update(interloper)
             record_current()
             dirs_before = v_dirs()
@@ -689,66 +489,68 @@ def test_version_store_occ_schedule_no_lost_updates(spark, tmp_path_factory,
         assert v_dirs() == {v["version"] for v in sinks.list_versions(path)}
 
 
-def test_prune_spares_young_unstamped_dirs_reclaims_old(spark, tmp_path):
-    """The post-commit retain-prune must NOT delete an unstamped v_ dir
-    that is young enough to be a concurrent writer's staged-but-not-yet-
-    committed version (under _SEQ ordering it sorts OLDEST, so the old
-    prune would destroy an in-flight publish mid-commit), while an
-    unstamped dir older than the grace window -- pre-_SEQ legacy debris
-    -- is still reclaimed."""
+def test_append_race_publishes_each_key_once(spark, tmp_path, monkeypatch):
+    """ON CONFLICT DO NOTHING under a racing writer: another append of
+    the same key lands after this append's anti-join. The late writer
+    must fail its commit (it linked files of a version that is no longer
+    current) rather than publish the key twice; its retry sees the other
+    row and appends nothing."""
     path = str(tmp_path / "t")
-    df = spark.createDataFrame([(1, "a")], "k int, v string")
-    sinks.write_replace(df, path)
+    sinks.append_if_absent(spark, path, _mk(spark, [(1, "a")]), ["k"])
+    real_num_rows = sinks._parquet_num_rows
+    fired = []
 
-    staged = os.path.join(path, "v_inflight_stage")
-    os.makedirs(staged)
-    with open(os.path.join(staged, "part-0.parquet"), "wb") as fh:
-        fh.write(b"staged")
+    def num_rows_then_interleave(part_path):
+        if not fired:
+            fired.append(True)
+            sinks.append_if_absent(spark, path, _mk(spark, [(2, "other")]),
+                                   ["k"])
+        return real_num_rows(part_path)
 
-    # young unstamped dir: survives a publish's prune
-    sinks.write_replace(df, path)
-    sinks.write_replace(df, path)
-    assert os.path.isdir(staged), "in-flight staged version was pruned"
-
-    # backdate past the grace window: now it is legacy debris
-    old = __import__("time").time() - sinks._STAGE_GRACE_SEC - 10
-    os.utime(staged, (old, old))
-    sinks.write_replace(df, path)
-    assert not os.path.isdir(staged)
-    # and the committed current version is intact
-    assert sinks.read_table(spark, path).count() == 1
-
-
-def test_upsert_partitioned_occ_rejects_racing_publish(spark, tmp_path):
-    """occ=True / occ=<version> turn the partitioned upsert into an
-    optimistic read-modify-write: a publish that raced in after the
-    caller's read fails the commit (ConcurrentWriteError), the table
-    keeps the other writer's version."""
-    path = str(tmp_path / "t")
-    sinks.upsert_partitioned(
-        spark, path, _mkp(spark, [(1, "a", 10)]),
-        keys=["part", "k"], partition_col="part", audit=False,
-    )
-    v1 = os.path.basename(sinks.current_data_dir(path))
-    # another writer publishes
-    sinks.upsert_partitioned(
-        spark, path, _mkp(spark, [(2, "b", 20)]),
-        keys=["part", "k"], partition_col="part", audit=False,
-    )
-    v2 = sinks.current_data_dir(path)
-    # a commit pinned to the superseded version must fail...
+    monkeypatch.setattr(sinks, "_parquet_num_rows", num_rows_then_interleave)
     with pytest.raises(sinks.ConcurrentWriteError):
-        sinks.upsert_partitioned(
-            spark, path, _mkp(spark, [(3, "c", 30)]),
-            keys=["part", "k"], partition_col="part", audit=False,
-            occ=v1,
-        )
-    assert sinks.current_data_dir(path) == v2  # loser left no trace
-    # ...and occ=True (expect what THIS call reads) still commits
-    sinks.upsert_partitioned(
-        spark, path, _mkp(spark, [(3, "c", 30)]),
-        keys=["part", "k"], partition_col="part", audit=False, occ=True,
-    )
-    got = {(r["k"], r["part"])
-           for r in sinks.read_table(spark, path).collect()}
-    assert got == {(1, 10), (2, 20), (3, 30)}
+        sinks.append_if_absent(spark, path, _mk(spark, [(2, "mine")]), ["k"])
+    monkeypatch.undo()
+    assert fired
+    assert sinks.append_if_absent(
+        spark, path, _mk(spark, [(2, "mine")]), ["k"]) == 0
+    got = sorted(tuple(r) for r in sinks.read_table(spark, path)
+                 .select("k", "v").collect())
+    assert got == [(1, "a"), (2, "other")]
+    assert [p for p in os.listdir(tmp_path) if "__staging__" in p] == []
+
+
+def test_staged_publish_survives_racing_prunes(spark, tmp_path, monkeypatch):
+    """A publish is staged outside the table root, so a racing writer's
+    retain-prune can never reach it: writer A has staged its version
+    when writer B publishes twice with retain=1; A then commits and its
+    rows are current. At every commit the root holds only stamped
+    (committed) version directories."""
+    path = str(tmp_path / "t")
+    sinks.write_replace(_mk(spark, [(0, "first")]), path)
+    real_commit = sinks._commit
+    roots = []
+
+    def v_dirs_stamped():
+        names = [n for n in os.listdir(path) if n.startswith("v_")]
+        return names and all(
+            os.path.isfile(os.path.join(path, n, "_SEQ")) for n in names)
+
+    def commit_after_racer(table, staged, *args, **kwargs):
+        if not roots:  # writer A: B commits twice before A does
+            roots.append("A staged")
+            for i in (1, 2):
+                sinks.write_replace(_mk(spark, [(i, "B")]), path, retain=1)
+            assert os.path.isdir(staged)
+        assert v_dirs_stamped()
+        version = real_commit(table, staged, *args, **kwargs)
+        assert v_dirs_stamped()
+        roots.append(version)
+        return version
+
+    monkeypatch.setattr(sinks, "_commit", commit_after_racer)
+    sinks.write_replace(_mk(spark, [(9, "A")]), path)
+    monkeypatch.undo()
+    assert len(roots) == 4  # A's staging, B's two commits, A's commit
+    assert os.path.basename(sinks.current_data_dir(path)) == roots[-1]
+    assert _rows(spark, path) == {(9, "A")}

@@ -426,31 +426,3 @@ def test_commit_meta_only_preserves_data_and_prior_meta(spark, tmp_path):
     assert sinks.read_version_meta(table, "_other") == "keepme"
     got = sinks.read_table(spark, table)
     assert {(r["k"], r["v"]) for r in got.collect()} == {(1, "a"), (2, "b")}
-
-
-def test_commit_meta_only_hive_partitioned_layout(spark, tmp_path):
-    """A meta-only commit on a hive-partitioned table must link the
-    partition subdirectories recursively — publishing an EMPTY version
-    (and letting retention prune the real data) is the silent-loss
-    failure upsert_partitioned's layout guard exists to prevent."""
-    from sec_xbrl_finwarehouse_spark import sinks
-
-    table = str(tmp_path / "pt")
-    df = spark.createDataFrame(
-        [(1, "a", "p1"), (2, "b", "p2")], "k int, v string, part string"
-    )
-    sinks.upsert_partitioned(spark, table, df, keys=("part", "k"),
-                             partition_col="part")
-    before = {
-        (r["k"], r["v"], r["part"])
-        for r in sinks.read_table(spark, table).select(
-            "k", "v", "part").collect()
-    }
-    sinks.commit_meta_only(table, {"_wm": "1"})
-    assert sinks.read_version_meta(table, "_wm") == "1"
-    after = {
-        (r["k"], r["v"], r["part"])
-        for r in sinks.read_table(spark, table).select(
-            "k", "v", "part").collect()
-    }
-    assert after == before and len(after) == 2
