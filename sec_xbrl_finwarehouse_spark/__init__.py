@@ -5,7 +5,7 @@ Layout:
     session     -- tuned SparkSession factory (AQE, UTC, arrow)
     schemas     -- StructTypes + tag constants from the reference warehouse
     sources/    -- parquet star-schema loaders, companyfacts JSON flatten, SEC HTTP client
-    operators/  -- natural-key dedup, pivot, upsert, Hash-Min connected components
+    operators/  -- natural-key dedup, pivot, upsert, union-find connected components
     plans/      -- statements_annual (v1/v2/v3), ratios_annual, API query builders,
                    star-schema facts adapter, text/event/embedding query packs
     sinks       -- versioned parquet tables: atomic publish, upsert, insert-if-absent

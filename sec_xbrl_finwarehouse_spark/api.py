@@ -143,8 +143,10 @@ def create_app(companies: DataFrame, ratios: DataFrame) -> Callable:
 def serve(companies: DataFrame, ratios: DataFrame,
           host: str = "127.0.0.1", port: int = 8000) -> None:
     """Run the app under stdlib wsgiref (local/dev serving; put any real
-    WSGI server in front for production)."""
+    WSGI server in front for production). Prints the bound address once
+    the socket is listening, so ``port=0`` (any free port) is usable."""
     from wsgiref.simple_server import make_server
 
     with make_server(host, port, create_app(companies, ratios)) as srv:
+        print(f"serving on http://{host}:{srv.server_port}", flush=True)
         srv.serve_forever()

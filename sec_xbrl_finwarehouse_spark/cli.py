@@ -264,7 +264,6 @@ def cmd_serve(args) -> int:
     )
     if companies is None or ratios is None:
         raise SystemExit("marts missing: run seed/ingest/build/ratios first")
-    print(f"serving on http://{args.host}:{args.port}")
     api.serve(companies, ratios, host=args.host, port=args.port)
     return 0
 

@@ -1,162 +1,87 @@
-"""Distributed connected components via Hash-Min label propagation.
+"""Connected components of a pair graph: union-find on the driver.
 
-The dedup-decision step shared by the text and embedding near-dup
-pipelines: pairwise similarity edges in, per-node component label out
-(min node id reachable = representative). Extracted from the text
-clusters query so every modality (documents, embeddings, any future
-pair source) reuses one implementation.
+The dedup-decision step shared by the text, embedding, image, audio,
+cross-modal and edit-distance near-dup pipelines: pairwise similarity
+edges in, per-node component label out (min node id reachable =
+representative). Extracted from the text clusters query so every
+modality reuses one implementation.
 
-Algorithm (Rastogi et al. 2013, "Finding Connected Components in
-MapReduce and Beyond" -- Hash-Min): every node starts labeled with
-itself; each iteration every node takes the min of its own label and
-its neighbors' labels; labels only ever decrease, so ``sum(label)`` is
-strictly monotone and a single scalar action per iteration detects the
-fixpoint.
+Algorithm: one Arrow collect of the pair set, then a union-find with
+path compression in which every root is its component's minimum node
+id, so the labels need no second pass. The labels go back to Spark as a
+local relation. There is no iteration cap: a 60-hop chain is labelled
+as exactly as a near-clique, where an iterated label propagation needs
+one round per hop of the longest shortest path.
 
-Scale notes (100 TB): only the PAIR-GRAPH NODES iterate -- the near-dup
-graph is orders of magnitude smaller than the corpus, which joins in
-exactly once afterwards (callers left-join; singletons keep
-themselves). Each iteration is one equi-join + min-aggregation on the
-node id -- one co-partitioned key throughout. ``localCheckpoint``
-truncates lineage per iteration (on a real cluster: ``checkpoint()`` to
-reliable storage) -- without it the plan doubles every round and
-Catalyst analysis time explodes. Iterations needed = eccentricity of
-each component's min node; near-dup clusters are near-cliques (2-4
-hops), far under the default cap.
+Memory bound: the driver holds the PAIR GRAPH (its edges and their
+distinct nodes), never the corpus. Callers left-join the corpus against
+the returned labels in Spark, so singletons never reach the driver. A
+near-dup pair graph is orders of magnitude smaller than the corpus that
+produced it (the dedup benchmark: ~100 pairs over 1,100 documents); a
+pair graph too large for one driver needs a distributed labelling.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
-CC_MAX_ITERS = 20
-
-# iteration shuffle width is sized to the EDGE SET, not the session
-# default: the near-dup graph is orders of magnitude smaller than the
-# corpus that produced it, and running every Hash-Min round at
-# corpus-width (32+ tasks per join/agg/checkpoint on a few hundred
-# edges) made the iteration loop cost ~2x the LSH pipeline itself at
-# sf0.1. One edge count at the persist boundary picks
-# min(defaultParallelism, ceil(edges / EDGES_PER_PARTITION)) partitions
-# -- a handful of rounds on 1 task locally; on a cluster the width
-# grows with the edge set but is capped at the session's core count
-# (more tasks than cores only adds scheduling overhead for an
-# iteration this cheap).
-EDGES_PER_PARTITION = 1_000_000
-
-# r12 (guide §3.1): every caller LEFT-joins the corpus-sized entity
-# table against the labels this operator returns, and labels cover only
-# pair-graph NODES -- orders of magnitude smaller than the corpus.
-# Catalyst cannot estimate a localCheckpoint's size, so it planned that
-# join sort-merge: TWO exchanges + sorts of the corpus side per cluster
-# query. The operator knows the edge count (it already counts edges to
-# size the iteration width), so it hints broadcast when the label set
-# is provably small. Semantics of the gate (ADVICE r12): ``n_edges``
-# is the DIRECTED count (the explode in hash_min_components emits both
-# directions, so n_edges = 2 x input pairs), and every label row is a
-# distinct ``src`` of some directed edge, so labels <= n_edges rows.
-# At the 4M gate that bounds the broadcast at ~4M x 16-byte rows
-# ~ 64 MB framed -- comfortably under the 8 GB / 512M-row broadcast cap
-# but large enough that shipping it everywhere stops paying. Above the
-# gate the sort-merge plan is the right one and the hint is omitted.
+# every caller LEFT-joins the corpus-sized entity table against the
+# labels this operator returns, and labels cover only pair-graph nodes,
+# so the operator hints broadcast when the label set is provably small.
+# The gate counts DIRECTED edges (2 x input pairs), and every label row
+# is an endpoint of some edge, so labels <= directed edges. At
+# the 4M gate that bounds the broadcast at ~4M x 16-byte rows ~ 64 MB
+# framed; above it the hint is omitted and the planner picks the join.
 BROADCAST_LABELS_MAX_EDGES = 4_000_000
 
 
-def hash_min_components(pairs: DataFrame, max_iters: int = CC_MAX_ITERS) -> DataFrame:
-    """(a, b) undirected edge pairs -> (node_id, rep) component labels.
+def hash_min_components(pairs: DataFrame) -> DataFrame:
+    """(a, b) undirected edge pairs -> (node_id, rep) component labels,
+    ``rep`` the minimum node id of the node's component.
 
     ``pairs`` must have exactly two like-typed columns (any names); the
-    output covers every node that appears in at least one edge --
+    output covers every non-NULL node of at least one edge, typed like
+    the first column. A pair with a NULL endpoint joins nothing, and
     callers left-join the full entity table and coalesce singletons to
-    themselves.
-    """
-    ca, cb = pairs.columns
-    # one Generate instead of union-of-two-projections: the union form
-    # referenced ``pairs`` twice, so the ENTIRE upstream near-dup
-    # pipeline (LSH candidates + verification) evaluated once per
-    # branch during the materializing count below (guide §1.2; the
-    # callers' internal persists only blunted, not removed, the second
-    # pass). The explode emits both edge directions from a single scan
-    # of the pair set -- identical rows.
-    edges_raw = (
-        pairs.select(
-            F.explode(F.array(
-                F.struct(F.col(ca).alias("src"), F.col(cb).alias("dst")),
-                F.struct(F.col(cb).alias("src"), F.col(ca).alias("dst")),
-            )).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .persist()
+    themselves."""
+    arrow = pairs.toArrow()
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in zip(arrow.column(0).to_pylist(), arrow.column(1).to_pylist()):
+        for x in (a, b):
+            if x is not None:
+                parent.setdefault(x, x)
+        if a is None or b is None:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+
+    nodes = list(parent)
+    id_type = arrow.schema.field(0).type
+    labels = pairs.sparkSession.createDataFrame(
+        pa.table({
+            "node_id": pa.array(nodes, id_type),
+            "rep": pa.array([find(n) for n in nodes], id_type),
+        }),
+        StructType([
+            StructField("node_id", pairs.schema[0].dataType),
+            StructField("rep", pairs.schema[0].dataType),
+        ]),
     )
-    # materialize the edge set once (the first iteration would have
-    # forced it anyway) and size the iteration width from its row count;
-    # localCheckpoint the width-repartitioned edges so every iteration
-    # reads them at that width instead of re-shuffling from the cache.
-    # Lifecycle: checkpoint blocks (edges + each superseded labels
-    # round) have no public release API from PySpark; they are freed by
-    # ContextCleaner once the Python references die when this function
-    # returns. The blocks are pair-graph-sized (edges x ~3 rounds), not
-    # corpus-sized -- on a production cluster the same loop would
-    # checkpoint() to reliable storage with
-    # spark.cleaner.referenceTracking doing the same reclamation.
-    n_edges = edges_raw.count()
-    width = max(1, min(
-        edges_raw.sparkSession.sparkContext.defaultParallelism,
-        (n_edges + EDGES_PER_PARTITION - 1) // EDGES_PER_PARTITION,
-    ))
-    # LAZY checkpoints throughout (guide §1.2: the iteration cost on a
-    # pair graph this small is Spark job overhead, not data): every
-    # materialization below is absorbed into the next convergence
-    # action, so the whole loop runs ONE job per round. The edges
-    # checkpoint is materialized by round 1's job; its repartition
-    # shuffle files are reused by every later reference, so the lazy
-    # spelling costs no recompute (r12: the eager edges checkpoint and
-    # the separate initial-labels job were pure job-overhead, ~0.3 s
-    # per cluster query at sf0.1).
-    edges = edges_raw.repartition(width, "dst").localCheckpoint(eager=False)
-    # Round 1 fused into initialization: labels start as the identity,
-    # so the first Hash-Min propagation min(self, neighbors) needs no
-    # join at all -- it is a single aggregation over the edge list
-    # (both directions are present, so every node appears as src).
-    labels = (
-        edges.groupBy("src")
-        .agg(F.min("dst").alias("mn"))
-        .select(
-            F.col("src").alias("node_id"),
-            F.least(F.col("src"), F.col("mn")).alias("rep"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    # Convergence is detected IN-ROUND: each propagation carries a
-    # ``changed`` flag (labels only ever decrease, so changed=0 is the
-    # fixpoint), and the one scalar action per round both materializes
-    # the round's checkpoint and tests it. The previous sum-compare
-    # spelling needed a full extra round after convergence just to
-    # observe the sum was unchanged -- one whole join+agg job saved on
-    # every near-clique graph (they converge in 1-2 rounds).
-    for _ in range(max_iters - 1):
-        nmin = (
-            edges.join(labels, edges["dst"] == labels["node_id"])
-            .groupBy("src")
-            .agg(F.min("rep").alias("nrep"))
-        )
-        stepped = (
-            labels.join(nmin, labels["node_id"] == nmin["src"], "left")
-            .select(
-                "node_id",
-                F.least(F.col("rep"), F.coalesce("nrep", "rep")).alias("rep"),
-                (F.coalesce("nrep", "rep") < F.col("rep")).alias("chg"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        n_changed = stepped.agg(F.sum(F.col("chg").cast("long"))).first()[0]
-        labels = stepped.select("node_id", "rep")
-        if not n_changed:
-            break
-    edges_raw.unpersist()
     # same rows either way; the hint only picks the join strategy for
     # the caller's corpus LEFT JOIN labels (see BROADCAST_LABELS_MAX_EDGES)
-    if n_edges <= BROADCAST_LABELS_MAX_EDGES:
+    if 2 * arrow.num_rows <= BROADCAST_LABELS_MAX_EDGES:
         return F.broadcast(labels)
     return labels

@@ -96,7 +96,7 @@ def q_audio_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_audio_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The audio-dedup DECISION completed: banded Hamming pairs ->
-    transitive clusters via the shared Hash-Min connected-components
+    transitive clusters via the shared connected-components
     operator, every document labeled with its component's min doc_id
     and ``keep`` marking the canonical clip -- what "dedup the audio
     shards" executes at 100 TB. Same plan spine as

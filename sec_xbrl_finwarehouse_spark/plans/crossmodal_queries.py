@@ -5,7 +5,7 @@ A training corpus is deduplicated per modality, but the DECISION is
 per-document: a doc re-uploaded with trivially edited text is caught
 by the image raster or the audio fingerprint even when the text
 Jaccard falls under threshold. This module unions the three modal
-pair graphs on doc_id and runs the shared Hash-Min
+pair graphs on doc_id and runs the shared
 connected-components operator ONCE, so transitivity works ACROSS
 modalities: A ~text~ B ~image~ C puts A and C in one cluster even
 though no single modality links them.
@@ -15,8 +15,8 @@ additive LLM-pipeline functionality.
 
 Scale shape: each modal pair graph is already sub-quadratic (banded
 LSH / banded Hamming -- see the per-modality modules); the union is
-edge-set-sized, the pair dedup shuffles survivors only, and the CC
-iteration width is sized to the merged edge set
+edge-set-sized, the pair dedup shuffles survivors only, and the
+components are labelled on the driver from the merged edge set alone
 (operators/connected_components.py). Nothing here adds a corpus-sized
 exchange on top of the per-modality pipelines.
 """
@@ -47,7 +47,7 @@ def cluster_union_pair_graphs(
 ) -> DataFrame:
     """Union (d1, d2) pair DataFrames from any number of evidence
     sources, drop duplicate edges (the same pair often survives in
-    several modalities), label components with the shared Hash-Min
+    several modalities), label components with the shared union-find
     operator, and left-join ``docs`` so singletons keep themselves.
     Factored out of the query so tests can feed planted pair graphs
     (e.g. a doc reachable only through an image edge)."""

@@ -725,7 +725,7 @@ SELECT v1, v2, cosine FROM pairs
 # ---- embedding dedup clusters (components over LSH near-dup pairs) ---------
 
 def q_emb_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs -> dedup clusters: the same Hash-Min
+    """Embedding near-dup pairs -> dedup clusters: the same
     connected-components operator the text pipeline uses
     (operators/connected_components.py), fed by the LSH-bucketed cosine
     pairs. Every vector maps to its component's min vec_id with ``keep``
@@ -1156,7 +1156,7 @@ def q_emb_kmeans_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial averages -- centroid-count x dimension rows, never the
     corpus. Driver holds nothing; iterations chain lazily and the fixed
     iteration count keeps the plan finite (a convergence-driven loop
-    would localCheckpoint per round like operators/connected_components).
+    would have to truncate lineage with a checkpoint per round).
     """
     e = _embeddings(spark, sf_dir).select("vec_id", "emb", "label")
 
@@ -1343,7 +1343,7 @@ WHERE rank <= {TOPK}
 
 def q_doc_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic deduplication: documents whose EMBEDDINGS
-    cluster together (LSH cosine pairs -> Hash-Min components, keyed by
+    cluster together (LSH cosine pairs -> connected components, keyed by
     doc_id == vec_id) are near-duplicates in meaning even when their
     n-gram overlap is low; within each semantic cluster the longest
     document survives (doc_id tie-break). Documents without an embedding

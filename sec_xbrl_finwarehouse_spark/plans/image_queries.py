@@ -248,16 +248,16 @@ def _fmt(sql: str) -> str:
 
 def q_image_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The perceptual-dedup DECISION completed: banded Hamming pairs ->
-    transitive clusters via the shared Hash-Min connected-components
+    transitive clusters via the shared connected-components
     operator (the same pairwise-to-decision step the Jaccard and
     edit-distance families ride), every document labeled with its
     component's min doc_id and ``keep`` marking the canonical copy.
     This is what an image-dedup pipeline actually EXECUTES at 100 TB:
     keep one representative per visual near-dup clique, drop the
     re-encodes/re-uploads. Documents outside every pair keep
-    themselves via the left join. Edge-sized iteration width,
-    localCheckpoint lineage truncation, scalar fixpoint action --
-    see operators/connected_components.py."""
+    themselves via the left join. The components are labelled on
+    the driver from the pair graph alone -- see
+    operators/connected_components.py."""
     from ..operators.connected_components import hash_min_components
 
     pairs = q_image_neardup(spark, sf_dir).select(

@@ -16,8 +16,14 @@ Scale notes (100 TB corpus):
   (explode shingles -> equi-join on shingle -> count); its cost is
   driven by document-frequency of the hottest shingle. The scale path
   is ``doc_minhash_lsh_dedup``: fixed-size signatures (one shuffle),
-  banded buckets, then exact verification ONLY on candidates -- the
-  standard sub-quadratic near-dup pipeline.
+  banded buckets, then exact verification ONLY on candidates, from
+  each candidate document's shingle array joined in by doc_id -- the
+  standard sub-quadratic near-dup pipeline. The verification shuffles
+  one array row per candidate side, never the exploded shingles, so
+  its cost is |candidates| x shingles-per-doc.
+* Dedup clusters label the verified pair graph on the driver
+  (operators/connected_components.py): the driver holds the pair
+  graph, never the corpus, which joins the labels in Spark.
 * MinHash params (128 hashes, 64 bands x 2 rows): P[miss | J=0.5]
   = (1 - 0.25)^64 ~= 1e-8, so the LSH output provably matches the
   exhaustive oracle on any data where near-dups sit at J >= 0.5, while
@@ -697,45 +703,31 @@ def shingles_exploded_of(docs: DataFrame) -> DataFrame:
     )
 
 
-def _jaccard_from_exploded(ex: DataFrame, pairs: DataFrame | None) -> DataFrame:
-    """Per-pair exact Jaccard from (doc_id, shingle) rows.
+def _jaccard_from_exploded(ex: DataFrame) -> DataFrame:
+    """Exact Jaccard of every pair sharing a shingle, from (doc_id,
+    shingle) rows: the exhaustive oracle baseline.
 
-    intersection = co-occurring shingle count per (d1, d2); union =
-    n1 + n2 - intersection with sizes from one count agg.
-
-    Two intersection plans, chosen by whether a candidate set exists:
-
-    * ``pairs is None`` (exhaustive oracle baseline): shingle self
-      equi-join -- cost driven by the document frequency of the hottest
-      shingle, the honest all-pairs lower bound.
-    * ``pairs`` given (LSH verify path): candidate-bounded join --
-      pairs ⋈ shingles(d1) on d1, then equi-join shingles(d2) on
-      (d2, shingle). Cost is |pairs| x shingles-per-doc, INDEPENDENT of
-      hot-shingle fan-out; a pair with an empty intersection drops out,
-      which is correct (its Jaccard is 0 < threshold). This is the shape
-      that survives 100 TB: verification work scales with what LSH
-      actually surfaced, never with corpus-wide shingle collisions.
+    intersection = co-occurring shingle count per (d1, d2) from a
+    shingle self equi-join -- cost driven by the document frequency of
+    the hottest shingle, the honest all-pairs lower bound; union =
+    n1 + n2 - intersection with sizes from one count agg. The LSH path
+    verifies its candidates on shingle arrays instead
+    (:func:`_verify_candidates`).
 
     ``ex`` is persisted (``_persist_hot``, MEMORY_AND_DISK): it feeds
-    three consumers (sizes + both intersection sides) and recomputing
-    the tokenize+shingle scan per consumer measured ~2x the whole
-    query's runtime. The persisted set is column-pruned (doc_id,
-    shingle) but corpus-sized at 100 TB, where it spills to disk."""
+    three consumers (sizes + both join sides) and recomputing the
+    tokenize+shingle scan per consumer measured ~2x the whole query's
+    runtime."""
     ex = _persist_hot(ex)
     sizes = ex.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
-    if pairs is None:
-        a = ex.alias("a")
-        b = ex.alias("b")
-        co = a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")))
-        inter = (
-            co.select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        )
-    else:
-        s1 = ex.select(F.col("doc_id").alias("d1"), "shingle")
-        s2 = ex.select(F.col("doc_id").alias("d2"), "shingle")
-        inter = pairs.join(s1, "d1").join(s2, ["d2", "shingle"])
-    inter = inter.groupBy("d1", "d2").agg(F.count("*").alias("n_inter"))
+    a = ex.alias("a")
+    b = ex.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
+               & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .agg(F.count("*").alias("n_inter"))
+    )
     return (
         inter.join(sizes.withColumnRenamed("doc_id", "d1")
                    .withColumnRenamed("n_sh", "n1"), "d1")
@@ -838,7 +830,7 @@ def q_doc_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     similarity expression differs. Emits both directions' containment
     plus Jaccard for triage, filtered on max(containment)."""
     ex = _doc_shingles_exploded(spark, sf_dir)
-    j = _jaccard_from_exploded(ex, None)
+    j = _jaccard_from_exploded(ex)
     c1 = (F.col("n_inter") / F.col("n1")).cast("double")
     c2 = (F.col("n_inter") / F.col("n2")).cast("double")
     return (
@@ -893,7 +885,7 @@ def q_doc_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant below."""
     ex = _doc_shingles_exploded(spark, sf_dir)
     return (
-        _jaccard_from_exploded(ex, None)
+        _jaccard_from_exploded(ex)
         .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
         .select("d1", "d2", "jaccard")
     )
@@ -969,10 +961,25 @@ def minhash_bands_of(ex: DataFrame) -> DataFrame:
     )
 
 
-def _lsh_candidates(ex: DataFrame) -> DataFrame:
-    """(doc_id, shingle) rows -> distinct (d1 < d2) candidate pairs: the
+def _doc_shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, shingles) rows, one per document, persisted: the
+    distinct shingle array of each document (empty below k tokens and
+    for NULL text). The LSH path explodes it for the band keys and
+    verifies candidates on the arrays themselves, so the corpus is
+    tokenized once per query."""
+    toks = _documents(spark, sf_dir).select(
+        "doc_id", _tokens(F.col("text")).alias("toks")
+    )
+    return _persist_hot(
+        toks.select("doc_id", _shingles(F.col("toks")).alias("shingles"))
+    )
+
+
+def _lsh_candidates(sh: DataFrame) -> DataFrame:
+    """(doc_id, shingles) rows -> distinct (d1 < d2) candidate pairs: the
     documents that share at least one LSH band key. One self-join on
     (band, bh) over the persisted band table."""
+    ex = sh.select("doc_id", F.explode("shingles").alias("shingle"))
     bands = _persist_hot(minhash_bands_of(ex))  # n_docs x 64 rows -- small even at scale
     a = bands.alias("a")
     b = bands.alias("b")
@@ -985,6 +992,25 @@ def _lsh_candidates(ex: DataFrame) -> DataFrame:
     )
 
 
+def _verify_candidates(sh: DataFrame, cand: DataFrame) -> DataFrame:
+    """Candidate (d1, d2) pairs -> (d1, d2, jaccard) pairs at J >=
+    {JACCARD_THRESHOLD}: exact Jaccard from the two documents' shingle
+    arrays, joined on d1 and on d2. Cost is |candidates| x
+    shingles-per-doc, independent of hot-shingle fan-out and with no
+    shuffle of exploded shingles; a pair with an empty intersection has
+    Jaccard 0 and drops out. The expression (and so every double) is
+    the exhaustive path's: n_inter / (n1 + n2 - n_inter)."""
+    s1 = sh.select(F.col("doc_id").alias("d1"), F.col("shingles").alias("s1"))
+    s2 = sh.select(F.col("doc_id").alias("d2"), F.col("shingles").alias("s2"))
+    n_inter = F.size(F.array_intersect("s1", "s2"))
+    jaccard = (n_inter / (F.size("s1") + F.size("s2") - n_inter)).cast("double")
+    return (
+        cand.join(s1, "d1").join(s2, "d2")
+        .select("d1", "d2", jaccard.alias("jaccard"))
+        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    )
+
+
 def q_doc_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dup: signatures -> banded buckets -> candidate
     pairs -> EXACT Jaccard verification on candidates only. Output
@@ -992,19 +1018,16 @@ def q_doc_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is what the oracle checks; with 64 bands x 2 rows the miss
     probability at J = 0.5 is (1 - 0.25)^64 ~= 1e-8.
 
-    Plan shape: hash each shingle ONCE (xxhash64 -> pmod p), derive the
-    128 signature values as affine permutations of that single hash
-    (see MINHASH_COEFFS), one groupBy(doc_id) with 128 partial mins, one
-    explode to band keys + self-join on (band, band_hash), then exact
-    Jaccard on the candidate pairs only (shingle equi-join semi-joined
-    down to candidates before the heavy aggregation). Everything is
-    built-in expressions -- no Python in the hot path."""
-    ex = _doc_shingles_exploded(spark, sf_dir)
-    return (
-        _jaccard_from_exploded(ex, _lsh_candidates(ex))
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("d1", "d2", "jaccard")
-    )
+    Plan shape: one persisted (doc_id, shingle array) frame; its
+    explode feeds the signatures (each shingle hashed ONCE, xxhash64 ->
+    pmod p, 128 affine permutations of that hash, see MINHASH_COEFFS,
+    one groupBy(doc_id) with 128 partial mins), one explode to band
+    keys + self-join on (band, band_hash), then exact Jaccard on the
+    candidate pairs only, from the same arrays
+    (:func:`_verify_candidates`). Everything is built-in expressions --
+    no Python in the hot path."""
+    sh = _doc_shingle_arrays(spark, sf_dir)
+    return _verify_candidates(sh, _lsh_candidates(sh))
 
 
 # same contract as the exhaustive query -> same oracle
@@ -1037,24 +1060,20 @@ def q_doc_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingles-per-doc), independent of corpus size; the pair set itself
     comes from the LSH path's banded candidates, never from an
     all-pairs join."""
-    ex = _persist_hot(_doc_shingles_exploded(spark, sf_dir))
-    # same pair pipeline as q_doc_minhash_lsh_dedup, but sharing THIS
-    # persisted shingle set (calling the query would re-scan + re-persist
-    # its own copy; measured ~2x the whole audit)
+    # same pair pipeline as q_doc_minhash_lsh_dedup, sharing THIS
+    # persisted shingle-array frame with the signatures below (calling
+    # the query would re-scan + re-persist its own copy)
+    sh = _doc_shingle_arrays(spark, sf_dir)
     # persisted: the candidate set feeds BOTH the exact-Jaccard verify
-    # chain and the signature doc-id semi-join below.
-    cand = _persist_hot(_lsh_candidates(ex))
-    pairs = (
-        _jaccard_from_exploded(ex, cand)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("d1", "d2", "jaccard")
-    )
+    # and the signature doc-id semi-join below.
+    cand = _persist_hot(_lsh_candidates(sh))
+    pairs = _verify_candidates(sh, cand)
     # r13 OPTIMIZATION (guide §1.2/§2.6): the signature doc set is
     # derived from the CANDIDATE pairs, not the verified pairs. Output
     # rows are identical -- verified pairs are a subset of candidates,
     # and the final inner joins below drop every non-pair signature --
     # but the broadcast doc-id build no longer sits ABOVE the whole
-    # 3-join verify chain, so (a) the verify chain is referenced once
+    # verify joins, so (a) the verify chain is referenced once
     # (its r12 persist and the serial barrier it forced are gone) and
     # (b) the signature aggregation runs CONCURRENTLY with the verify
     # chain inside the one output job instead of strictly after it.
@@ -1068,7 +1087,9 @@ def q_doc_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(cand.select(F.col("d2").alias("doc_id")))
         .distinct()
     )
-    hp = ex.join(F.broadcast(docs), "doc_id", "left_semi").select(
+    hp = sh.join(F.broadcast(docs), "doc_id", "left_semi").select(
+        "doc_id", F.explode("shingles").alias("shingle")
+    ).select(
         "doc_id",
         (
             F.conv(F.substring(F.md5("shingle"), 1, 12), 16, 10)
@@ -1183,10 +1204,10 @@ def q_doc_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     actual dedup decision (transitive: A~B, B~C dedups C against A even
     when A,C were never a pair).
 
-    The component labeling is the shared Hash-Min operator
+    The component labeling is the shared connected-components operator
     (operators/connected_components.py -- see its docstring for the
-    iteration/scale analysis); this query feeds it the LSH-verified
-    pair graph and left-joins the corpus so singletons keep themselves.
+    driver-memory bound); this query feeds it the LSH-verified pair
+    graph and left-joins the corpus so singletons keep themselves.
     """
     pairs = q_doc_minhash_lsh_dedup(spark, sf_dir).select("d1", "d2")
     labels = hash_min_components(pairs).withColumnRenamed(
@@ -1265,10 +1286,10 @@ def q_doc_dedup_keep_best(
     ``quality`` lets a composing query (doc_corpus_build) inject an
     already-persisted quality frame so the corpus is not re-tokenized
     here. When absent, the quality pass is persisted and materialized
-    from a side thread WHILE the cluster chain's Hash-Min actions run
-    on the main thread (guide §2.6 -- the CC loop's driver-blocking
-    rounds otherwise leave the cores idle for exactly the time the
-    quality tokenize pass needs)."""
+    from a side thread WHILE the cluster chain's jobs run on the main
+    thread (guide §2.6 -- its driver-blocking actions otherwise leave
+    the cores idle for exactly the time the quality tokenize pass
+    needs)."""
     if quality is None:
         quality = _persist_hot(
             q_doc_quality(spark, sf_dir).select("doc_id", "n_tokens")
@@ -1673,7 +1694,7 @@ def q_doc_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep_best for n_tokens) -- two full tokenize passes over the
     # corpus (guide §1.2: don't compute things twice). The shared frame
     # is persisted and materialized from a side thread while the dedup
-    # chain's Hash-Min actions block the main thread (guide §2.6).
+    # chain's jobs block the main thread (guide §2.6).
     shared_q = _persist_hot(
         q_doc_quality(spark, sf_dir).select("doc_id", "n_tokens", "keep")
     )
@@ -2674,9 +2695,9 @@ def q_doc_editdist_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     CLUSTERING, every document labeled with its connected component's
     min doc_id and ``keep`` marking the canonical record -- the same
     pairwise-to-decision step :func:`q_doc_dedup_clusters` performs for
-    the Jaccard family, riding the same shared Hash-Min operator
-    (operators/connected_components.py: edge-sized iteration width,
-    localCheckpoint lineage truncation, scalar fixpoint action).
+    the Jaccard family, riding the same shared connected-components
+    operator (operators/connected_components.py: one collect of the
+    pair graph, union-find on the driver).
     Documents outside every pair (including NULL-text docs, which the
     pair query excludes) keep themselves via the left join."""
     pairs = q_doc_editdist_neardup(spark, sf_dir).select(

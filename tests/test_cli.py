@@ -172,7 +172,7 @@ def test_cli_reingest_fact_under_new_accession_adds_no_row(
     assert sinks.read_table(spark, facts_path).count() == 9
 
 
-def test_cli_serve_responds(offline_env):
+def test_cli_serve_responds(offline_env, capsys):
     o = offline_env
     base = ["--env-file", o["env"]]
     cli.main(base + ["seed", "--tickers-json", o["tickers_json"]])
@@ -180,30 +180,31 @@ def test_cli_serve_responds(offline_env):
     cli.main(base + ["build"])
     cli.main(base + ["ratios"])
 
-    port = 8765
+    # port 0: the OS picks a free port, which serve prints once bound,
+    # so concurrent test sessions never contend for one fixed port
     t = threading.Thread(
         target=cli.main,
-        args=(base + ["serve", "--port", str(port)],),
+        args=(base + ["serve", "--port", "0"],),
         daemon=True,
     )
     t.start()
+    import re
     import time
     deadline = time.time() + 30
-    last = None
-    while time.time() < deadline:
-        try:
-            with urllib.request.urlopen(
-                f"http://127.0.0.1:{port}/company/TESTCO", timeout=5
-            ) as resp:
-                body = json.loads(resp.read())
-                assert resp.status == 200
-                assert body["ticker"] == "TESTCO"
-                assert body["cik"] == CIK10
-                return
-        except Exception as e:  # server still starting
-            last = e
-            time.sleep(0.5)
-    raise AssertionError(f"serve never came up: {last}")
+    out = ""
+    while (m := re.search(r"serving on http://127\.0\.0\.1:(\d+)", out)) is None:
+        assert time.time() < deadline, f"serve never came up: {out!r}"
+        time.sleep(0.5)
+        out += capsys.readouterr().out
+    port = int(m.group(1))
+    assert port != 0
+    with urllib.request.urlopen(
+        f"http://127.0.0.1:{port}/company/TESTCO", timeout=5
+    ) as resp:
+        body = json.loads(resp.read())
+        assert resp.status == 200
+        assert body["ticker"] == "TESTCO"
+        assert body["cik"] == CIK10
 
 
 def test_cli_missing_prereqs_fail_cleanly(tmp_path, monkeypatch):

@@ -126,3 +126,93 @@ def test_hash_min_components_broadcast_gate(spark, monkeypatch):
     monkeypatch.setattr(cc, "BROADCAST_LABELS_MAX_EDGES", -1)
     _, got_unhinted = labels_map()
     assert got_unhinted == got
+
+
+def _components_ref(nodes, pairs):
+    """Pure-Python reference: node -> min node of its component, by graph
+    search over the pairs with both endpoints non-NULL."""
+    adj = {n: set() for n in nodes}
+    for a, b in pairs:
+        if a is not None and b is not None:
+            adj[a].add(b)
+            adj[b].add(a)
+    rep = {}
+    for n in nodes:
+        if n in rep:
+            continue
+        comp, frontier = {n}, [n]
+        while frontier:
+            for y in adj[frontier.pop()]:
+                if y not in comp:
+                    comp.add(y)
+                    frontier.append(y)
+        for x in comp:
+            rep[x] = min(comp)
+    return rep
+
+
+def _caller_view(spark, pairs, nodes, id_type):
+    """What every caller sees: the entity table LEFT JOIN the labels,
+    singletons coalesced to themselves."""
+    from sec_xbrl_finwarehouse_spark.operators import connected_components as cc
+
+    pdf = spark.createDataFrame(pairs, f"a {id_type}, b {id_type}")
+    labels = cc.hash_min_components(pdf)
+    ents = spark.createDataFrame([(n,) for n in nodes], f"node_id {id_type}")
+    got = (ents.join(labels, "node_id", "left")
+           .select("node_id", F.coalesce("rep", "node_id").alias("rep"))
+           .collect())
+    return {r.node_id: r.rep for r in got}, labels
+
+
+def test_hash_min_components_long_path(spark):
+    """A 60-hop path labels every node with 0: no iteration cap stops
+    the labelling short of the far end of a long chain."""
+    import random
+
+    pairs = [(i, i + 1) if i % 2 else (i + 1, i) for i in range(60)]
+    random.Random(7).shuffle(pairs)
+    got, _ = _caller_view(spark, pairs, list(range(61)), "bigint")
+    assert got == {i: 0 for i in range(61)}
+
+
+def _random_graph(rng, ids):
+    """Seeded pair list over ``ids`` with self-loops, duplicate and
+    reversed edges, and pairs with one or both endpoints NULL."""
+    pairs = [tuple(rng.sample(ids, 2)) for _ in range(len(ids) * 2 // 3)]
+    pairs += [(x, x) for x in rng.sample(ids, 3)]                  # self-loops
+    pairs += rng.sample(pairs, 4)                                  # duplicates
+    pairs += [(b, a) for a, b in rng.sample(pairs, 4)]             # reversed
+    pairs += [(rng.choice(ids), None), (None, rng.choice(ids)), (None, None)]
+    rng.shuffle(pairs)
+    return pairs
+
+
+def test_hash_min_components_matches_reference(spark):
+    """Seeded random graphs, long and string ids: the callers' left-join
+    view equals the pure-Python reference, pairs with a NULL endpoint
+    connect nothing, and the labels hold exactly the non-NULL nodes of
+    the pairs."""
+    import random
+
+    for seed in range(3):
+        rng = random.Random(seed)
+        longs = rng.sample(range(10**12), 40)
+        strings = [f"d{x}" for x in rng.sample(range(1000), 35)] + ["é", "Z", ""]
+        for ids, id_type in ((longs, "bigint"), (strings, "string")):
+            pairs = _random_graph(rng, ids)
+            got, labels = _caller_view(spark, pairs, ids, id_type)
+            assert got == _components_ref(ids, pairs)
+            assert {r.node_id for r in labels.collect()} == {
+                x for p in pairs for x in p if x is not None}
+            assert labels.dtypes == [("node_id", id_type), ("rep", id_type)]
+
+
+def test_hash_min_components_persists_nothing(spark):
+    """The call leaves no persisted or checkpointed RDD behind."""
+    from sec_xbrl_finwarehouse_spark.operators import connected_components as cc
+
+    pairs = spark.createDataFrame([(1, 2), (2, 3), (5, 6)], "a long, b long")
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    cc.hash_min_components(pairs).collect()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before

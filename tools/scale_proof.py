@@ -189,9 +189,8 @@ NEARDUP_QUERIES = [
     # candidate density scales linearly like the other near-dup ops.
     "doc_editdist_neardup",
     # r12: the ER decision query -- the same blocking+verify core plus
-    # the Hash-Min closure over the verified pair graph; the closure's
-    # iteration count on a growing pair graph is the one thing the
-    # neardup datum above cannot see (VERDICT r11 weak entry #1)
+    # the connected-components closure over the verified pair graph,
+    # which the neardup datum above cannot see (VERDICT r11 weak entry #1)
     "doc_editdist_clusters",
     # r8: the MinHash chain's scale datums run here too -- their DuckDB
     # comparator is the exhaustive all-pairs oracle (O(n^2) list
@@ -254,7 +253,7 @@ NEARDUP_QUERIES = [
 # (audio_neardup) therefore grow quadratically in OUTPUT SIZE on this
 # corpus regardless of engine (real audio shards decorrelate far
 # better); the scale datum is the DECISION query instead, whose
-# output is corpus-sized and whose internal banded join + Hash-Min
+# output is corpus-sized and whose internal banded join + union-find
 # closure is the same plan shape proven linear on the image twin.
 NEARDUP_AUDIO_QUERIES = [
     "audio_dedup_clusters",
