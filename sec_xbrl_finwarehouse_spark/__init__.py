@@ -11,11 +11,11 @@ Layout:
     sinks       -- versioned parquet tables: atomic publish, upsert, insert-if-absent
     materialize -- the mart build (companies, statements_annual, ratios_annual)
     api, serving, cli -- the HTTP endpoints and the seed/ingest/build/ratios/serve CLI
-    streaming/  -- Structured Streaming variants of the event operators
 
 Everything is DataFrame/Spark-SQL first: no RDDs, no row-at-a-time Python
-UDFs in any hot path. Pandas UDFs appear only where built-ins genuinely
-cannot express the op (multimodal decode stubs).
+UDFs in any hot path. Arrow-batched pandas kernels appear only where
+built-ins genuinely cannot express the op (BPE, perceptual hashes,
+SEC HTTP fetches).
 """
 
 __version__ = "0.1.0"

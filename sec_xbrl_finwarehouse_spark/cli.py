@@ -135,7 +135,7 @@ def cmd_ingest(args) -> int:
     flatten/filter/dedup, then commit filings and facts with
     insert-if-absent semantics (ON CONFLICT DO NOTHING)."""
     from . import sinks
-    from .schemas import FACTS_NATURAL_KEY
+    from .schemas import FACTS_NATURAL_KEY, FACTS_SCHEMA
     from .sources.companyfacts import (
         dedup_facts,
         derive_filings,
@@ -185,10 +185,11 @@ def cmd_ingest(args) -> int:
         if n_spooled == 0:
             raise SystemExit("No companyfacts documents to ingest")
 
-        facts = dedup_facts(flatten_facts(
-            read_companyfacts_json(spark, spool)
-        ))
-        filings = derive_filings(facts)
+        # filings come from the flatten, before the dedup: two items
+        # that differ only in accession are one fact but two filings
+        flat = flatten_facts(read_companyfacts_json(spark, spool))
+        facts = dedup_facts(flat.select(*FACTS_SCHEMA.fieldNames()))
+        filings = derive_filings(flat)
         n_filings = sinks.append_if_absent(
             spark, os.path.join(warehouse, "filings"), filings,
             keys=["accession_no"],

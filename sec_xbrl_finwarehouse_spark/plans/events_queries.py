@@ -97,9 +97,9 @@ def _epoch_micros(c):
 def q_event_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour event-time window per event_type: count / sum / avg.
 
-    Uses the real ``F.window`` operator (same plan Structured Streaming
-    uses with a watermark; see streaming/events_stream.py) -- one hash
-    aggregation keyed (window, event_type), map-side partial combine.
+    Uses the real ``F.window`` operator (the plan Structured Streaming
+    uses with a watermark) -- one hash aggregation keyed
+    (window, event_type), map-side partial combine.
     """
     # NULL-ts guard, mirrored in the oracle: F.window silently DROPS
     # NULL-timestamp rows while date_trunc would keep a NULL bucket --
@@ -137,11 +137,11 @@ GROUP BY 1, 2
 def q_event_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessions with a 30-min inactivity gap.
 
-    Batch spelling of ``session_window`` (streaming twin in
-    streaming/events_stream.py): lag -> new-session flag -> running sum
-    = session id, then aggregate. Both windows and the final groupBy
-    share the one ``user_id`` hash-partitioning; the per-partition sort
-    is reused by both window functions (one shuffle total).
+    Batch spelling of ``session_window``: lag -> new-session flag ->
+    running sum = session id, then aggregate. Both windows and the final
+    groupBy share the one ``user_id`` hash-partitioning; the
+    per-partition sort is reused by both window functions (one shuffle
+    total).
     """
     return sessionize(_events(spark, sf_dir))
 

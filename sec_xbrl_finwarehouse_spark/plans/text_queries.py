@@ -690,14 +690,9 @@ def _doc_shingles_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
     slower at sf0.1 (the array-valued intermediate row defeats codegen).
     Short docs (< k tokens) contribute no rows -- explode of the empty
     array -- which downstream joins/aggs treat correctly."""
-    return shingles_exploded_of(_documents(spark, sf_dir))
-
-
-def shingles_exploded_of(docs: DataFrame) -> DataFrame:
-    """(doc_id, text) frame -> distinct (doc_id, shingle) rows; the
-    DataFrame-input twin of :func:`_doc_shingles_exploded`, for inputs
-    that are not a stored table (the decontamination index)."""
-    toks = docs.select("doc_id", _tokens(F.col("text")).alias("toks"))
+    toks = _documents(spark, sf_dir).select(
+        "doc_id", _tokens(F.col("text")).alias("toks")
+    )
     return toks.select(
         "doc_id", F.explode(_shingles(F.col("toks"))).alias("shingle")
     )
@@ -1531,13 +1526,10 @@ def q_doc_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~K/8 x the text bytes, so the gated broadcast stays well under
     driver memory): small/measured SFs keep the measured broadcast
     plan, larger or remote (size-unknown) sources let AQE pick the
-    strategy at runtime. A real deployment decontaminates against an
-    EXTERNAL eval suite, which is genuinely tiny -- that production
-    path is plans/decontam_index.py (eval shingles materialized once,
-    batches probed against the broadcast index). The per-doc
-    contaminated count is a distinct-agg over
-    matched shingles only, with per-doc partials completing map-side
-    because each doc's shingles explode inside one partition."""
+    strategy at runtime. The per-doc contaminated count is a
+    distinct-agg over matched shingles only, with per-doc partials
+    completing map-side because each doc's shingles explode inside one
+    partition."""
     first_hex = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
     is_train = first_hex.isin(*TRAIN_HEX)
     ex = _persist_hot(

@@ -23,6 +23,7 @@ import os
 import shutil
 import tempfile
 
+from pyspark.errors import PySparkRuntimeError
 from pyspark.sql import SparkSession
 
 # this process's private shuffle/spill directory, made on first use
@@ -60,6 +61,18 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
+    """The running session, unchanged, if this process has one (from
+    any thread); otherwise a new session with the settings below.
+
+    ``builder.getOrCreate()`` would apply its SQL confs to a running
+    session, so a second caller (the CLI inside a test process) would
+    silently re-tune the first caller's session. The arguments
+    therefore only shape a new session: stop the running one first to
+    start over with other settings."""
+    try:
+        return SparkSession.active()
+    except PySparkRuntimeError:
+        pass
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"
     nshuffle = shuffle_partitions or default_parallelism()

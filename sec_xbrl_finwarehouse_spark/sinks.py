@@ -44,9 +44,9 @@ checks ``_CURRENT`` against the version the writer read, stamps the
 ``_SEQ`` commit sequence, renames the staged directory into the root as
 ``v_<hex>`` and ``os.replace``-s the pointer. So the root only ever
 holds committed, stamped versions. The read-modify-write publishes
-(``upsert``, ``append_if_absent``, ``commit_meta_only``) always commit
-against the version they read: a publish that lands in between makes
-them raise :class:`ConcurrentWriteError` instead of losing its update.
+(``upsert``, ``append_if_absent``) always commit against the version
+they read: a publish that lands in between makes them raise
+:class:`ConcurrentWriteError` instead of losing its update.
 
 Audit columns (F12): ``created_at`` is assigned once when a key first
 enters the table; ``updated_at`` refreshes whenever an upsert overwrites
@@ -473,43 +473,10 @@ def _merge_with_audit(
 
 def _link_parts(src: str, dst: str) -> None:
     """Hard-link every part-file of the flat version directory ``src``
-    into ``dst`` -- the zero-copy data share of appends and meta-only
-    commits."""
+    into ``dst`` -- the zero-copy data share of appends."""
     for name in os.listdir(src):
         if name.endswith(".parquet") and not name.startswith("."):
             os.link(os.path.join(src, name), os.path.join(dst, name))
-
-
-def commit_meta_only(path: str, manifest_extra: dict[str, str]) -> None:
-    """Publish a new version with IDENTICAL data (hard links to the
-    current part-files) and updated ``manifest_extra`` — the
-    watermark-advance commit for incremental ingest: a run that found
-    work to record but no new rows (e.g. a re-listed source chunk whose
-    samples were all duplicates) must still move its watermark, or it
-    re-scans the same chunk forever. Commits against the version it
-    linked (:class:`ConcurrentWriteError` if another publish landed).
-
-    Prior ``_`` metadata files (watermarks and the like) are COPIED
-    forward, then overlaid with ``manifest_extra``. That carry-forward
-    is safe precisely BECAUSE the data is identical. Data-changing
-    publishes (append_if_absent, upsert) deliberately do NOT carry
-    metadata forward: it may describe files the new version no longer
-    holds."""
-    cur = current_data_dir(path)
-    if cur is None:
-        raise FileNotFoundError(f"no table at {path}: nothing to commit")
-    with _staging(path) as staged:
-        os.mkdir(staged)
-        _link_parts(cur, staged)
-        for name in os.listdir(cur):
-            if name.startswith("_") and os.path.isfile(os.path.join(cur, name)):
-                # COPIED, not linked: the overlay and the _SEQ stamp
-                # must never write through a shared inode into the old
-                # version
-                shutil.copyfile(os.path.join(cur, name),
-                                os.path.join(staged, name))
-        _commit(path, staged, os.path.basename(cur),
-                manifest_extra=manifest_extra)
 
 
 def append_if_absent(
@@ -518,7 +485,6 @@ def append_if_absent(
     incoming: DataFrame,
     keys: Sequence[str],
     audit: bool = True,
-    manifest_extra: dict[str, str] | None = None,
 ) -> int:
     """S6 as a stored-table write: ON CONFLICT (keys) DO NOTHING.
 
@@ -549,8 +515,7 @@ def append_if_absent(
     if audit:
         fresh = with_audit_cols(fresh)
     if existing is None:
-        write_replace(fresh, path, manifest_extra=manifest_extra,
-                      expect_version=expect)
+        write_replace(fresh, path, expect_version=expect)
         return 1
     # NULL-SAFE anti-join: a nullable key column (e.g. period_start on
     # stock facts) under plain equality NEVER matches its stored twin
@@ -576,7 +541,7 @@ def append_if_absent(
         if not new_parts:
             return 0  # pure duplicate: publish nothing
         _link_parts(os.path.join(path, expect), staged)
-        _commit(path, staged, expect, manifest_extra=manifest_extra)
+        _commit(path, staged, expect)
     return new_parts
 
 

@@ -172,6 +172,42 @@ def test_cli_reingest_fact_under_new_accession_adds_no_row(
     assert sinks.read_table(spark, facts_path).count() == 9
 
 
+def test_cli_ingest_keeps_every_filing_and_only_fact_columns(
+    spark, offline_env, tmp_path
+):
+    """Two items that differ only in accession are one fact (the
+    natural key has no accession) but two filings: ``filings`` comes
+    from the flatten, not from the deduped facts. ``facts`` stores
+    FACTS_SCHEMA's columns (plus the audit stamps), not the flatten's
+    ``fy``/``fp``."""
+    from sec_xbrl_finwarehouse_spark.schemas import FACTS_SCHEMA
+
+    o = offline_env
+    base = ["--env-file", o["env"], "--warehouse", o["warehouse"]]
+    assert cli.main(base + ["seed", "--tickers-json",
+                            o["tickers_json"]]) == 0
+    spool = tmp_path / "twins"
+    spool.mkdir()
+    (spool / f"{CIK10}.json").write_text(json.dumps({
+        "entityName": "TestCo",
+        "cik": 320193,
+        "facts": {"us-gaap": {"Revenues": {"units": {"USD": [
+            _fact(100.0, accn, "10-K", "2021-02-01",
+                  "2020-01-01", "2020-12-31")
+            for accn in ("a1", "a2")
+        ]}}}},
+    }))
+    assert cli.main(base + ["ingest", "--from-json", str(spool)]) == 0
+
+    filings = sinks.read_table(spark, o["warehouse"] + "/filings")
+    assert sorted(r["accession_no"] for r in filings.collect()) == \
+        ["a1", "a2"]
+    facts = sinks.read_table(spark, o["warehouse"] + "/facts")
+    assert facts.count() == 1
+    assert facts.columns == [*FACTS_SCHEMA.fieldNames(),
+                             sinks.CREATED_AT, sinks.UPDATED_AT]
+
+
 def test_cli_serve_responds(offline_env, capsys):
     o = offline_env
     base = ["--env-file", o["env"]]

@@ -249,69 +249,3 @@ def test_image_neardup_finds_planted_pair(spark):
         .collect()
     )
     assert [(r["d1"], r["d2"]) for r in pairs] == [(1, 2)]
-
-
-def test_webdataset_to_phash_end_to_end(spark, tmp_path):
-    """Integration: the multimodal ingest chain end-to-end -- PNG and
-    WAV payloads written as WebDataset tar shards, read back as
-    samples, routed through the media schema, and hashed by the REAL
-    decode kernels (image pHash + audio fingerprint). Near-identical
-    images land near in Hamming space across the full chain."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from sec_xbrl_finwarehouse_spark.functions.audiofp import (
-        audio_fingerprint_features,
-        audio_fingerprint_np,
-    )
-    from sec_xbrl_finwarehouse_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        decode_wav,
-    )
-    from sec_xbrl_finwarehouse_spark.sources.webdataset import (
-        read_webdataset_samples,
-        write_webdataset_shards,
-    )
-    from tests.test_multimodal import _encode_wav
-
-    rng = np.random.RandomState(11)
-    img = rng.randint(0, 256, (24, 24, 3)).astype(np.uint8)
-    near = np.clip(img.astype(np.int64) + 3, 0, 255).astype(np.uint8)
-    t = np.arange(4096) / 16000.0
-    wav = _encode_wav(
-        np.clip(np.sin(2 * np.pi * 440 * t) * 0.4, -0.99, 0.99), 16000
-    )
-    members = spark.createDataFrame(
-        [
-            ("a", "png", bytearray(_encode_png(img))),
-            ("b", "png", bytearray(_encode_png(near))),
-            ("c", "wav", bytearray(wav)),
-        ],
-        "key string, ext string, payload binary",
-    )
-    out = str(tmp_path / "wds")
-    manifest = write_webdataset_shards(members, out, n_shards=2).collect()
-    assert sum(r["n_members"] for r in manifest) == 3
-
-    samples = read_webdataset_samples(spark, f"{out}/*.tar")
-    assert samples.count() == 3
-    # samples -> the media frame the kernels consume
-    media_rows = []
-    for i, r in enumerate(sorted(samples.collect(), key=lambda r: r["key"])):
-        parts = r["parts"]
-        kind = "image" if "png" in parts else "audio"
-        media_rows.append(
-            (i, kind, bytes(parts.get("png") or parts.get("wav")),
-             (None,) * 6)
-        )
-    media = spark.createDataFrame(media_rows, MEDIA_SCHEMA)
-
-    img_out = {r["media_id"]: r["phash"]
-               for r in image_phash_features(media).collect()}
-    assert set(img_out) == {0, 1}
-    assert bin(img_out[0] ^ img_out[1]).count("1") <= 10  # near-dup pair
-
-    aud_out = audio_fingerprint_features(media).collect()
-    assert len(aud_out) == 1 and aud_out[0]["decoded_real"] is True
-    samples_pcm, _sr = decode_wav(wav)
-    assert aud_out[0]["afp"] == audio_fingerprint_np(samples_pcm)

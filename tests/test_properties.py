@@ -400,54 +400,6 @@ def test_dup_ngram_frac_matches_reference(spark, docs, tmp_path_factory,
             assert abs(r["dup_frac"] - n_dup / n_g) < 1e-6
 
 
-# ---- WebDataset writer/reader round-trip -----------------------------------
-
-_WDS_KEYS = st.builds(
-    lambda d, b: f"{d}/{b}" if d else b,
-    st.one_of(st.just(""), st.sampled_from(["dir", "dir.v2", "a/b"])),
-    st.text(alphabet="abc012_-", min_size=1, max_size=6),
-)
-
-wds_members_strategy = st.dictionaries(
-    _WDS_KEYS,
-    st.dictionaries(
-        st.sampled_from(["jpg", "txt", "json", "seg.png"]),
-        st.binary(min_size=0, max_size=64),
-        min_size=1, max_size=3,
-    ),
-    min_size=1, max_size=8,
-)
-
-
-@_SETTINGS
-@given(samples=wds_members_strategy)
-def test_webdataset_write_read_round_trip(spark, samples, tmp_path_factory):
-    """For ANY member frame with round-trippable keys (dot-free
-    basenames, dotted directories allowed), write -> read returns
-    exactly the input samples: every key in one shard, every ext ->
-    payload map intact, byte-for-byte."""
-    from sec_xbrl_finwarehouse_spark.sources.webdataset import (
-        read_webdataset_samples,
-        write_webdataset_shards,
-    )
-
-    rows = [
-        (key, ext, payload)
-        for key, parts in samples.items()
-        for ext, payload in parts.items()
-    ]
-    df = spark.createDataFrame(rows, "key string, ext string, payload binary")
-    out = str(tmp_path_factory.mktemp("wdsprop") / "out")
-    manifest = write_webdataset_shards(df, out, n_shards=3).collect()
-    assert sum(r["n_samples"] for r in manifest) == len(samples)
-    assert sum(r["n_members"] for r in manifest) == len(rows)
-    back = {
-        r["key"]: dict(r["parts"])
-        for r in read_webdataset_samples(spark, f"{out}/*.tar").collect()
-    }
-    assert back == samples
-
-
 kmv_batches = st.lists(
     st.lists(
         st.tuples(st.sampled_from(["g1", "g2"]), st.integers(0, 200)),

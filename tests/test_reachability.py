@@ -8,21 +8,16 @@ An ``ast`` import walk (imports inside functions count) from
 dead code that only its own tests keep alive; this test fails when one
 appears. No Spark needed.
 
-``KNOWN_UNREACHED`` lists the modules that predate this guard and still
-have no entry point: the streaming variants and the corpus-ingest
-sources, kept with their own tests until a later change wires them in
-or deletes them. The list may only shrink: the test fails when a module
-outside it is unreached, and also when a listed module is deleted or
-becomes reachable, so a stale entry cannot hide a new dead module.
-
 The name pass applies the same rule one level down: every public
 top-level function and class of every package module must be referenced
 (as a name, an attribute or an imported name -- matched by bare name)
 from a reached module, ``__spark_entry__.py`` or ``perfbench/``. String
 constants in ``perfbench/`` count too, because the tracer wraps
 functions by name. A name only ``tests/`` use is dead code its tests
-keep alive. ``KNOWN_TEST_ONLY`` freezes the names that predate the pass
-and shrinks like ``KNOWN_UNREACHED``.
+keep alive. ``KNOWN_TEST_ONLY`` freezes the names that predate the pass.
+It may only shrink: the test fails when a name outside it is used only
+by tests, and also when a listed name is deleted or becomes used, so a
+stale entry cannot hide a new dead name.
 """
 
 from __future__ import annotations
@@ -33,16 +28,6 @@ import os
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PACKAGE = "sec_xbrl_finwarehouse_spark"
 ENTRY_POINTS = ("__spark_entry__", f"{PACKAGE}.__main__", f"{PACKAGE}.api")
-KNOWN_UNREACHED = frozenset(f"{PACKAGE}.{m}" for m in (
-    "operators.skew",
-    "plans.decontam_index",
-    "sources.csv_docs",
-    "sources.webdataset",
-    "sources.webdataset_ingest",
-    "streaming",
-    "streaming.events_stream",
-))
-
 KNOWN_TEST_ONLY = frozenset(
     f"{PACKAGE}.{module}.{name}"
     for module, names in {
@@ -53,20 +38,6 @@ KNOWN_TEST_ONLY = frozenset(
         "functions.phash": ("image_phash_features",),
         "materialize": ("attach_warehouse", "build_all_marts",
                         "refresh_marts_incremental"),
-        "operators.skew": ("salted_join",),
-        "plans.decontam_index": ("build_decontam_index",
-                                 "decontaminate_incremental"),
-        "sinks": ("commit_meta_only",),
-        "sources.csv_docs": ("read_csv_docs",),
-        "sources.webdataset": ("read_webdataset_members",
-                               "read_webdataset_samples", "write_webdataset",
-                               "write_webdataset_shards"),
-        "sources.webdataset_ingest": ("ingest_webdataset_incremental",
-                                      "ingested_shards"),
-        "streaming.events_stream": ("click_view_stream_join", "dedup_stream",
-                                    "enrich_stream", "funnel_stream",
-                                    "sessionize_stream", "stream_events",
-                                    "user_running_totals", "windowed_counts"),
     }.items()
     for name in names
 )
@@ -135,11 +106,8 @@ def test_every_package_module_is_reached_from_an_entry_point():
     # cli imports sec_client only inside command bodies: the walk must
     # see imports inside functions
     assert f"{PACKAGE}.sources.sec_client" in reached
-    unreached = package_modules() - reached
-    new_dead = sorted(unreached - KNOWN_UNREACHED)
-    assert not new_dead, f"modules no entry point imports: {new_dead}"
-    stale = sorted(KNOWN_UNREACHED - unreached)
-    assert not stale, f"drop from KNOWN_UNREACHED (gone or reached): {stale}"
+    unreached = sorted(package_modules() - reached)
+    assert not unreached, f"modules no entry point imports: {unreached}"
 
 
 def _references(path: str, strings: bool = False) -> set[str]:

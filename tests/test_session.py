@@ -1,8 +1,10 @@
-"""Shuffle-directory choice of the session factory (no JVM started)."""
+"""The session factory: its shuffle-directory choice (no JVM started),
+and that a second call leaves a running session as it is."""
 
 from __future__ import annotations
 
 import os
+import threading
 
 from sec_xbrl_finwarehouse_spark import session
 
@@ -39,3 +41,27 @@ def test_private_local_dir_per_process_removed_at_exit(monkeypatch):
     finally:
         if os.path.isdir(d):
             os.rmdir(d)
+
+
+def test_get_spark_leaves_a_running_session_unchanged(spark):
+    """A second ``get_spark`` -- the CLI's, inside a process that already
+    holds a session, from the main thread or a server thread -- returns
+    that session without re-applying its own confs."""
+    confs = {"spark.sql.shuffle.partitions": "3",
+             "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    before = {k: spark.conf.get(k) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        got = [session.get_spark("sec-xbrl-finwarehouse-cli")]
+        t = threading.Thread(
+            target=lambda: got.append(session.get_spark("other-thread")))
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+        assert len(got) == 2
+        assert all(s is spark for s in got)
+        assert {k: spark.conf.get(k) for k in confs} == confs
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
