@@ -32,9 +32,8 @@ phash64_batch`) the WAV path uses after its int16 re-quantization.
 The sharing is structural, not copy-paste: both paths call the same
 function objects, asserted in tests/test_audiofp.py. The REAL
 decoded-PCM path (:func:`audio_fingerprint_features`) remains
-exercised against synthesized WAV fixtures through the real decoder,
-like the PNG/JPEG/GIF codec tests. No counterpart in
-`/root/reference/`.
+exercised against synthesized WAV fixtures through the real decoder.
+The reference warehouse has no counterpart.
 """
 
 from __future__ import annotations
@@ -267,11 +266,10 @@ def text_phash_afp_column(text_col):
 
 def audio_fingerprint_features(media: DataFrame) -> DataFrame:
     """Per-clip perceptual fingerprint over REAL decoded WAV PCM,
-    Arrow-batched -- the audio twin of
-    :func:`..functions.phash.image_phash_features`. Column-pruned to
-    (media_id, payload); non-WAV or too-short payloads yield
-    ``afp NULL, decoded_real false`` (undecodable clips are excluded,
-    never faked -- the multimodal family's contract)."""
+    Arrow-batched. Column-pruned to (media_id, payload); non-WAV or
+    too-short payloads yield ``afp NULL, decoded_real false``
+    (undecodable clips are excluded, never faked -- the multimodal
+    family's contract)."""
     from collections.abc import Iterator
 
     from .multimodal import decode_wav

@@ -1,4 +1,4 @@
-"""Multimodal (image/audio/video) column handling.
+"""Audio column handling.
 
 Media travel through the engine as opaque ``binary`` payload columns
 plus a typed metadata struct -- the standard lakehouse shape for
@@ -7,38 +7,23 @@ Spark never interprets them until an explicit decode/transform step).
 
 All per-byte work runs as Arrow-batched ``mapInPandas`` (vectorized
 numpy over each record batch -- never per-row Python). Codec support
-is stdlib-only by necessity (no PIL/librosa/ffmpeg in this container)
+is stdlib-only by necessity (no librosa/ffmpeg in this container)
 and REAL where the stdlib suffices:
 
-* PNG (8-bit gray/gray+a/RGB/RGBA, non-interlaced): full decode --
-  chunk walk, zlib IDAT inflate, scanline unfilter (all five filter
-  types) -- in :func:`decode_png`.
-* JPEG (baseline SOF0/1 AND progressive SOF2, 8-bit, any JFIF
-  subsampling): full decode -- Huffman scan (incl. progressive
-  spectral-selection / successive-approximation / EOB-run scans),
-  dequantize, vectorized IDCT, chroma upsample, YCbCr->RGB -- in
-  :mod:`.jpeg` (validated against the JVM's ImageIO to mean |diff|
-  < 0.5 intensity levels on real photos).
 * WAV (RIFF PCM 8/16-bit): full decode in :func:`decode_wav`.
 * MP3: REAL frame-header walk (exact frame count, VBR-correct bitrate
   and duration) in :mod:`.mp3` -- surfaced by :func:`audio_metadata`.
   PCM SYNTHESIS (Layer III huffman + IMDCT + filterbank) is out of
   stdlib scope, so :func:`audio_features` EXCLUDES compressed-codec
   clips rather than faking PCM from entropy-coded bytes: every row it
-  emits is a real decode. Same policy for :func:`sample_frames` --
-  real ISO-BMFF sample extraction for MP4, non-MP4 payloads excluded.
-* Exotic image variants (lossless/arithmetic JPEG) fall back to the
-  clearly-marked byte-stat stats (``decoded_real = false`` in
-  :func:`image_features`); a real codec drops into
-  ``_decode_rgb_stats`` without touching any plan.
+  emits is a real decode.
 
 Scale notes (100 TB of media): payloads dominate row size, so
 ``spark.sql.files.maxPartitionBytes`` (not row count) governs task
 sizing; mapInPandas streams record batches, so executor memory needs
 only one Arrow batch of payloads at a time. Set
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` down (e.g. 64) when
-payloads are MBs. Frame sampling explodes rows -- do it AFTER any
-filter on metadata so the explode never touches dropped media.
+payloads are MBs.
 """
 
 from __future__ import annotations
@@ -73,93 +58,10 @@ MEDIA_SCHEMA = StructType([
     ])),
 ])
 
-IMAGE_FEATURES_SCHEMA = (
-    "media_id long, n_bytes long, mean_byte double, std_byte double, "
-    "content_sha int, width int, height int, codec string, decoded_real boolean"
-)
-
 AUDIO_FEATURES_SCHEMA = (
     "media_id long, n_samples long, rms double, peak double, sample_rate int, "
     "codec string, decoded_real boolean"
 )
-
-FRAME_SCHEMA = (
-    "media_id long, frame_idx int, frame_bytes binary, "
-    "keyframe boolean, container string, extracted_real boolean"
-)
-
-
-_PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # gray, RGB, gray+alpha, RGBA
-
-
-def decode_png(payload: bytes) -> np.ndarray:
-    """REAL PNG decode, stdlib + numpy only: chunk walk, concatenated
-    IDAT zlib inflate, per-scanline unfilter (None/Sub/Up/Average/Paeth
-    per the PNG spec), returning an (h, w, channels) uint8 array.
-    Supports 8-bit depth, non-interlaced, color types 0/2/4/6 -- the
-    shapes training corpora actually store; anything else raises with
-    the offending parameter named."""
-    import struct
-    import zlib
-
-    if payload[:8] != _PNG_MAGIC:
-        raise ValueError("not a PNG payload")
-    pos, idat = 8, []
-    w = h = channels = None
-    while pos + 8 <= len(payload):
-        ln, typ = struct.unpack(">I4s", payload[pos:pos + 8])
-        pos += 8
-        data = payload[pos:pos + ln]
-        pos += ln + 4  # chunk + CRC
-        if typ == b"IHDR":
-            w, h, depth, color_type, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if depth != 8:
-                raise ValueError(f"unsupported PNG bit depth {depth}")
-            if interlace != 0:
-                raise ValueError("interlaced PNG not supported")
-            if color_type not in _PNG_CHANNELS:
-                raise ValueError(f"unsupported PNG color type {color_type}")
-            channels = _PNG_CHANNELS[color_type]
-        elif typ == b"IDAT":
-            idat.append(data)
-        elif typ == b"IEND":
-            break
-    raw = zlib.decompress(b"".join(idat))
-    stride = w * channels
-    img = np.empty((h, stride), dtype=np.uint8)
-    prev = np.zeros(stride, dtype=np.uint8)
-    bpp = channels
-    at = 0
-    for y in range(h):
-        ftype = raw[at]
-        line = np.frombuffer(raw, np.uint8, stride, at + 1).copy()
-        at += stride + 1
-        if ftype == 1:      # Sub: prefix-sum per pixel lane (mod-256 wrap)
-            lanes = line.reshape(-1, bpp)
-            np.add.accumulate(lanes, axis=0, dtype=np.uint8, out=lanes)
-        elif ftype == 2:    # Up
-            line += prev
-        elif ftype == 3:    # Average
-            for x in range(stride):
-                left = line[x - bpp] if x >= bpp else 0
-                line[x] = (int(line[x]) + (int(left) + int(prev[x])) // 2) & 0xFF
-        elif ftype == 4:    # Paeth
-            for x in range(stride):
-                a = int(line[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[x] = (int(line[x]) + pred) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"unknown PNG filter type {ftype}")
-        img[y] = line
-        prev = line
-    return img.reshape(h, w, channels)
 
 
 def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
@@ -194,56 +96,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     return a[:usable].reshape(-1, n_ch), sr
 
 
-_JPEG_MAGIC = b"\xff\xd8"
-
-
-def decode_image(payload: bytes) -> np.ndarray:
-    """Dispatch to the real stdlib decoder for the payload's container
-    (PNG or baseline JPEG); raises ValueError naming the gap otherwise."""
-    if payload[:8] == _PNG_MAGIC:
-        return decode_png(payload)
-    if payload[:2] == _JPEG_MAGIC:
-        from .jpeg import decode_jpeg
-
-        return decode_jpeg(payload)
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
-        from .gif import decode_gif
-
-        return decode_gif(payload)[0]["rgb"]
-    raise ValueError("unsupported image container (not PNG/JPEG/GIF)")
-
-
-def _decode_rgb_stats(payload: bytes) -> tuple[float, float, str, bool]:
-    """Pixel (mean, std, codec, decoded_real). REAL decode for PNG and
-    JPEG payloads (:func:`decode_png`, :mod:`.jpeg` -- baseline and
-    progressive); other formats, and JPEG variants the decoder rejects
-    (lossless/arithmetic), fall back to the deterministic byte-stat
-    fake.
-    ``decoded_real`` marks which path ran so downstream filters can
-    exclude fake-decoded rows."""
-    a, codec, real = None, "byte-stat-fake", False
-    if payload[:8] == _PNG_MAGIC:
-        a = decode_png(payload).astype(np.float64)
-        codec, real = "png", True
-    elif payload[:2] == _JPEG_MAGIC:
-        try:
-            a = decode_image(payload).astype(np.float64)
-            codec, real = "jpeg", True
-        except Exception:
-            a = None  # malformed variant: byte-stat fallback
-    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-        try:
-            a = decode_image(payload).astype(np.float64)
-            codec, real = "gif", True
-        except Exception:
-            a = None
-    if a is None:
-        a = np.frombuffer(payload, dtype=np.uint8).astype(np.float64)
-    if a.size == 0:
-        return 0.0, 0.0, codec, real
-    return float(a.mean()), float(a.std()), codec, real
-
-
 def _pcm_from_bytes(payload: bytes) -> tuple[np.ndarray | None, str]:
     """(mono-folded PCM samples, codec) -- REAL decode for RIFF/WAV
     payloads (:func:`decode_wav`, channel-averaged, scaled back to
@@ -256,39 +108,6 @@ def _pcm_from_bytes(payload: bytes) -> tuple[np.ndarray | None, str]:
         samples, _sr = decode_wav(payload)
         return samples.mean(axis=1) * 32768.0, "wav-pcm"
     return None, "undecodable"
-
-
-def image_features(media: DataFrame) -> DataFrame:
-    """Per-image byte statistics + a 32-bit content hash, via one
-    Arrow-batched pass over (media_id, payload, meta). Column-pruned:
-    only the three needed columns reach the scan."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            stats = [_decode_rgb_stats(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "n_bytes": [len(p) for p in pdf["payload"]],
-                "mean_byte": [s[0] for s in stats],
-                "std_byte": [s[1] for s in stats],
-                "content_sha": [
-                    int.from_bytes(
-                        __import__("hashlib").sha256(p).digest()[:4],
-                        "big", signed=True,
-                    )
-                    for p in pdf["payload"]
-                ],
-                "width": pdf["width"],
-                "height": pdf["height"],
-                "codec": [s[2] for s in stats],
-                "decoded_real": [s[3] for s in stats],
-            })
-
-    pruned = media.filter(F.col("kind") == "image").select(
-        "media_id", "payload",
-        F.col("meta.width").alias("width"), F.col("meta.height").alias("height"),
-    )
-    return pruned.mapInPandas(kernel, IMAGE_FEATURES_SCHEMA)
 
 
 def audio_features(media: DataFrame) -> DataFrame:
@@ -390,76 +209,3 @@ def audio_metadata(media: DataFrame) -> DataFrame:
         F.col("meta.duration_ms").alias("duration_ms"),
     )
     return pruned.mapInPandas(kernel, AUDIO_METADATA_SCHEMA)
-
-
-def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
-    """Video frame sampling, REAL for MP4 containers: the stdlib
-    ISO-BMFF parser (:mod:`.mp4`) locates the video track's sample
-    table (stsz/stsc/stco/stss), and every ``every_n``-th CODEC SAMPLE
-    is sliced out of the payload with its keyframe flag -- sample
-    boundaries and sync structure are what frame sampling needs; pixel
-    decode is a separate kernel. Payloads that are NOT parseable MP4
-    are EXCLUDED (every output row has ``extracted_real = true``):
-    fixed-size byte chunks of an arbitrary container are not frames,
-    and emitting them as such poisons any training-data consumer that
-    misses the flag. Row-explode happens inside the Arrow kernel, so
-    output batches stay bounded even for long videos."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .mp4 import parse_mp4_samples
-
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    samples = parse_mp4_samples(payload)
-                except Exception:
-                    samples = None
-                if samples is None:
-                    continue
-                for s in samples[::every_n]:
-                    rows.append((
-                        mid, s["index"],
-                        payload[s["offset"]:s["offset"] + s["size"]],
-                        s["keyframe"], "mp4", True,
-                    ))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "frame_bytes",
-                         "keyframe", "container", "extracted_real"],
-            )
-
-    pruned = media.filter(F.col("kind") == "video").select("media_id", "payload")
-    return pruned.mapInPandas(kernel, FRAME_SCHEMA)
-
-
-RESIZED_SCHEMA = "media_id long, width int, height int, channels int, pixels binary"
-
-
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize for PNG and baseline-JPEG payloads:
-    :func:`decode_image` + numpy nearest-neighbor index resample,
-    emitting raw interleaved uint8 pixel buffers with their dims -- the
-    tensor-ready layout a training loader consumes directly (no
-    re-encode; raw pixels compress fine under parquet's own codec).
-    Arrow-batched ``mapInPandas``; payload bytes for unsupported
-    formats raise ValueError naming the format gap rather than faking
-    resampled pixels."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                img = decode_image(payload)
-                h, w = img.shape[:2]
-                ys = (np.arange(height) * h) // height
-                xs = (np.arange(width) * w) // width
-                out = img[ys][:, xs]
-                rows.append((mid, width, height, img.shape[2], out.tobytes()))
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "width", "height", "channels", "pixels"],
-            )
-
-    pruned = media.filter(F.col("kind") == "image").select("media_id", "payload")
-    return pruned.mapInPandas(kernel, RESIZED_SCHEMA)

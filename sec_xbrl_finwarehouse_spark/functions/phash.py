@@ -28,8 +28,7 @@ KMV/HLL/CM sketches):
 
 Execution shape: the DCT is a dense 32x32 matrix sandwich -- numeric
 kernel work, not relational work -- so it runs as an Arrow-vectorized
-numpy batch (``einsum`` over the whole batch at once), exactly like
-the image/audio decode kernels in :mod:`.multimodal`. A pure
+numpy batch (``einsum`` over the whole batch at once). A pure
 column-expression spelling via nested higher-order functions was
 built and measured first: Catalyst has no let-binding inside lambda
 bodies, so every ``element_at`` re-evaluated the producing array
@@ -37,11 +36,14 @@ expression and the plan went super-linear in expression depth
 (minutes for 50 rows). The Arrow kernel is the same decision the LSH
 hyperplane projection made (embedding_queries), for the same reason.
 
-There is no counterpart in the reference (`/root/reference/` has no
-multimodal surface); this is the perceptual-dedup member of the
-LLM-training-data family, complementing the byte-level content hashes
-in :mod:`.multimodal` with a measure that survives re-encoding,
-resizing, and mild noise.
+The hashed grid is a deterministic raster of document text
+(:func:`raster32_np`): the corpus has no image column, so the driver
+queries in plans/image_queries.py hash text rasters, and the audio
+fingerprint (:mod:`.audiofp`) reuses :func:`phash64_batch` on its
+time-frequency grid. The reference warehouse has no multimodal
+surface, so there is no counterpart there; this is the perceptual-dedup
+member of the LLM-training-data family, a measure that survives
+substitution-class edits where exact content hashes do not.
 """
 
 from __future__ import annotations
@@ -50,8 +52,7 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import Column
 
 PHASH_N = 32       # downsampled grid side
 PHASH_D = 8        # low-frequency DCT block side
@@ -93,13 +94,6 @@ def phash64_batch(pix: np.ndarray) -> np.ndarray:
     return (bits * _POW2[None, :]).sum(axis=1).astype(np.int64)
 
 
-def phash64_np(pixels) -> int:
-    """Single-image convenience wrapper over :func:`phash64_batch`
-    (1024-value flat grid or 32x32)."""
-    return int(phash64_batch(np.asarray(pixels).reshape(1, PHASH_N,
-                                                        PHASH_N))[0])
-
-
 def codes255_np(text: str) -> np.ndarray:
     """Clamped character codes of a text -- the shared first step of
     BOTH deterministic media syntheses (the image raster below and the
@@ -119,11 +113,10 @@ def raster32_np(text: str) -> np.ndarray:
     CODEPOINTS (clamped to 255) in the OVERLAPPING window
     [max(c_p - w, 0), min(c_p + w, L)) around the anchor
     c_p = (p*L) >> 10, with half-width w = max(1, L >> 6) -- a boxcar
-    low-pass of the byte signal, the 1-D analogue of
-    :func:`gray32_np`'s area downsampling. The overlap matters: a
-    disjoint-slice raster was built first and measured BRITTLE (a
-    one-character substitution flipped ~16 hash bits, because
-    single-char pixels make a high-frequency signal whose low-order
+    low-pass of the byte signal, the 1-D analogue of an image's area
+    downsampling. The overlap matters: a disjoint-slice raster was
+    built first and measured BRITTLE (a one-character substitution
+    flipped ~16 hash bits, because single-char pixels make a high-frequency signal whose low-order
     DCT coefficients all sit near the median); the windowed mean
     smooths the signal so a substitution moves ~2 bits and the hash
     behaves perceptually. Edits that change LENGTH (insert/delete)
@@ -168,66 +161,3 @@ def text_phash_column(text_col: Column) -> Column:
         return pd.Series(phash64_batch(grids))
 
     return _phash(text_col)
-
-
-def gray32_np(img) -> np.ndarray:
-    """Integer grayscale + area-downsample of a decoded image buffer
-    (HxWx3 RGB or HxW gray, any size) to the 32x32 pHash grid --
-    ITU-R 601 luma with integer weights (299/587/114, floor-div 1000)
-    and per-block integer mean, so the full real-image path stays in
-    the exact-integer contract. Images smaller than 32px on a side
-    sample nearest rows/cols (blocks clamp to at least one pixel)."""
-    a = np.asarray(img, dtype=np.int64)
-    if a.ndim == 3:
-        g = (a[..., 0] * 299 + a[..., 1] * 587 + a[..., 2] * 114) // 1000
-    else:
-        g = a
-    h, w = g.shape
-    out = np.zeros((PHASH_N, PHASH_N), dtype=np.int64)
-    for i in range(PHASH_N):
-        r0 = min(i * h // PHASH_N, h - 1)
-        r1 = max((i + 1) * h // PHASH_N, r0 + 1)
-        for j in range(PHASH_N):
-            c0 = min(j * w // PHASH_N, w - 1)
-            c1 = max((j + 1) * w // PHASH_N, c0 + 1)
-            blk = g[r0:r1, c0:c1]
-            out[i, j] = int(blk.sum()) // blk.size
-    return out
-
-
-def image_phash_features(media: DataFrame) -> DataFrame:
-    """Per-image perceptual hash over REAL decoded pixels, Arrow-batched
-    (one :func:`~.multimodal.decode_image` + :func:`gray32_np` +
-    :func:`phash64_np` per payload) -- the multimodal-dedup feature
-    extractor. Column-pruned to (media_id, payload); payloads the
-    decoder rejects yield ``phash NULL, decoded_real false`` instead of
-    a fake, mirroring image_features' contract. Shard-parallel and
-    memory-bounded per batch like every kernel in multimodal.py."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
-    from .multimodal import decode_image
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            hashes, real = [], []
-            for payload in pdf["payload"]:
-                try:
-                    hashes.append(phash64_np(gray32_np(decode_image(payload))))
-                    real.append(True)
-                except Exception:
-                    hashes.append(None)
-                    real.append(False)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "phash": pd.array(hashes, dtype="Int64"),
-                "decoded_real": real,
-            })
-
-    pruned = media.filter(F.col("kind") == "image").select(
-        "media_id", "payload"
-    )
-    return pruned.mapInPandas(
-        kernel, "media_id long, phash long, decoded_real boolean"
-    )

@@ -13,18 +13,14 @@ Driver-checkable input: the test corpus ships no image files, so the
 driver queries raster each document's TEXT into a deterministic 32x32
 grayscale "thumbnail" (byte-signal boxcar downsample: pixel p averages
 the character codes in an overlapping window around the p/1024
-length-fraction of the text -- the 1-D analogue of the area
-downsampling gray32_np performs on real pixels; substitution-class
-edits, the analogue of image noise/re-encode, move ~2 hash bits --
-see raster32_np's docstring for the measured properties and the
-insert/delete caveat). The REAL decoded-pixel
-path (decode_image -> gray32_np -> phash64_np, Arrow-batched) is
-:func:`..functions.phash.image_phash_features`, exercised against the
-PNG/JPEG/GIF codec fixtures in tests/test_phash.py -- same hash
-kernel, byte-identical constants.
+length-fraction of the text -- the 1-D analogue of an image's area
+downsampling; substitution-class edits, the analogue of image
+noise/re-encode, move ~2 hash bits -- see raster32_np's docstring for
+the measured properties and the insert/delete caveat). The package
+decodes no image payloads: text rasters are the only pHash input.
 
-No counterpart in `/root/reference/` (the reference has no multimodal
-surface); this is additive LLM-pipeline functionality.
+The reference warehouse has no multimodal surface, so there is no
+counterpart there; this is additive LLM-pipeline functionality.
 
 Scale shape: raster + DCT run as ONE Arrow-vectorized numpy kernel
 (batched einsum -- map-side, zero shuffle, the same decision and for
@@ -35,9 +31,7 @@ functions/phash.py). The only shuffles are the (band, key) LSH
 exchange (fan-out 7 rows/doc, the query-side-only LSH cost model) and
 the final pair dedup, which sees only Hamming-verified survivors
 because the filter sits join-side of the distinct -- the same
-early-filter ordering measured on the SimHash twin. At 100 TB of real
-images the raster stage is replaced by the Arrow-batched decode
-kernel (image_phash_features) and everything downstream is unchanged.
+early-filter ordering measured on the SimHash twin.
 """
 
 from __future__ import annotations

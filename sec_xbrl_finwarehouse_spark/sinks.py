@@ -404,16 +404,15 @@ def upsert(
     path: str,
     incoming: DataFrame,
     keys: Sequence[str],
-    audit: bool = True,
     retain: int = 2,
     manifest_extra: dict[str, str] | None = None,
 ) -> None:
     """S5 as a stored-table write: ON CONFLICT (keys) DO UPDATE.
 
     Incoming rows overwrite stored rows on key collision; non-colliding
-    rows of both survive. With ``audit``, surviving stored rows keep
-    their timestamps, overwritten/new keys get ``updated_at = now`` and
-    ``created_at`` carried over from the stored row when the key existed
+    rows of both survive. Surviving stored rows keep their timestamps;
+    overwritten/new keys get ``updated_at = now`` and ``created_at``
+    carried over from the stored row when the key existed
     (db/schema.sql:61 + v3.py:175 semantics). The merge reads one
     version and commits only if that version is still current, so a
     publish that lands in between raises :class:`ConcurrentWriteError`
@@ -421,7 +420,7 @@ def upsert(
     """
     existing, expect = _snapshot(spark, path)
     write_replace(
-        _merge_with_audit(existing, incoming, keys, audit), path,
+        _merge_with_audit(existing, incoming, keys), path,
         manifest_extra=manifest_extra, retain=retain, expect_version=expect,
     )
 
@@ -459,13 +458,11 @@ def _merge_with_audit(
     existing: DataFrame | None,
     incoming: DataFrame,
     keys: Sequence[str],
-    audit: bool,
 ) -> DataFrame:
     """The upsert merge (latest wins on ``keys``) with the reference's
     audit semantics: created_at survives an overwrite, updated_at
     refreshes for upserted keys (db/schema.sql:61, v3.py:175)."""
-    if audit:
-        incoming = _stamp_audit(existing, incoming, keys)
+    incoming = _stamp_audit(existing, incoming, keys)
     if existing is None:
         return incoming
     return upsert_latest_wins(existing, incoming, keys)
@@ -484,7 +481,6 @@ def append_if_absent(
     path: str,
     incoming: DataFrame,
     keys: Sequence[str],
-    audit: bool = True,
 ) -> int:
     """S6 as a stored-table write: ON CONFLICT (keys) DO NOTHING.
 
@@ -511,9 +507,7 @@ def append_if_absent(
     equality for exact oracle parity with NOT EXISTS.
     """
     existing, expect = _snapshot(spark, path)
-    fresh = incoming.dropDuplicates(list(keys))
-    if audit:
-        fresh = with_audit_cols(fresh)
+    fresh = with_audit_cols(incoming.dropDuplicates(list(keys)))
     if existing is None:
         write_replace(fresh, path, expect_version=expect)
         return 1

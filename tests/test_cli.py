@@ -7,6 +7,7 @@ local company_tickers.json, ingest reads a local companyfacts spool."""
 from __future__ import annotations
 
 import json
+import os
 import threading
 import urllib.request
 
@@ -66,9 +67,14 @@ GOLDEN_DOC = {
 
 
 @pytest.fixture()
-def offline_env(tmp_path):
+def offline_env(tmp_path, monkeypatch):
     """A .env + local tickers map + companyfacts spool, ready for the
-    four-command pipeline."""
+    four-command pipeline. ``cli.load_env`` writes into ``os.environ``
+    without overriding what is already set, so the variables this .env
+    defines are cleared first (and again at teardown): each test reads
+    its own .env, not the one an earlier test loaded."""
+    for var in ("WAREHOUSE_DIR", "TICKERS", "SEC_USER_AGENT", "QUOTED"):
+        monkeypatch.delenv(var, raising=False)
     warehouse = tmp_path / "warehouse"
     env = tmp_path / ".env"
     env.write_text(
@@ -149,8 +155,6 @@ def test_cli_reingest_fact_under_new_accession_adds_no_row(
     filed but no accession number: a stored fact repeated under another
     filing is the same row, which ON CONFLICT DO NOTHING keeps once."""
     o = offline_env
-    # --warehouse: an earlier test's load_env may have left its own
-    # WAREHOUSE_DIR in os.environ, which wins over this test's .env
     base = ["--env-file", o["env"], "--warehouse", o["warehouse"]]
     assert cli.main(base + ["seed", "--tickers-json",
                             o["tickers_json"]]) == 0
@@ -215,6 +219,12 @@ def test_cli_serve_responds(offline_env, capsys):
     cli.main(base + ["ingest", "--from-json", o["spool"]])
     cli.main(base + ["build"])
     cli.main(base + ["ratios"])
+    # the .env's WAREHOUSE_DIR, not one an earlier test left in
+    # os.environ, decides where the tables land
+    for table in ("companies", "facts", "statements_annual",
+                  "ratios_annual"):
+        assert sinks.current_data_dir(
+            os.path.join(o["warehouse"], table)) is not None, table
 
     # port 0: the OS picks a free port, which serve prints once bound,
     # so concurrent test sessions never contend for one fixed port

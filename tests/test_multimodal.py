@@ -1,7 +1,6 @@
-"""Multimodal plumbing tests: schema/batch shape of the mapInPandas
-kernels, per-kind routing, frame explode arithmetic, and the REAL
-stdlib codecs (PNG decode/resize, WAV decode) round-tripping against
-reference encoders written inline."""
+"""Audio media tests: per-kind routing of the mapInPandas kernels and
+the REAL stdlib WAV decode round-tripping against a reference encoder
+written inline."""
 
 from __future__ import annotations
 
@@ -13,9 +12,6 @@ import pytest
 from sec_xbrl_finwarehouse_spark.functions.multimodal import (
     MEDIA_SCHEMA,
     audio_features,
-    image_features,
-    resize_images,
-    sample_frames,
 )
 
 
@@ -41,81 +37,12 @@ def _media_df(spark):
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
-def test_image_features_values_and_schema(spark):
-    out = image_features(_media_df(spark))
-    assert out.columns == ["media_id", "n_bytes", "mean_byte", "std_byte",
-                           "content_sha", "width", "height", "codec",
-                           "decoded_real"]
-    got = {r["media_id"]: r for r in out.collect()}
-    assert set(got) == {1, 2, 5}  # only kind == image
-    assert got[1]["n_bytes"] == 256
-    assert got[1]["mean_byte"] == pytest.approx(127.5)
-    a = np.arange(256, dtype=np.float64)
-    assert got[1]["std_byte"] == pytest.approx(float(a.std()))
-    assert got[2]["mean_byte"] == pytest.approx(16.0)
-    assert got[2]["std_byte"] == 0.0
-    assert got[5]["n_bytes"] == 0 and got[5]["mean_byte"] == 0.0
-    assert got[1]["width"] == 16 and got[2]["height"] == 8
-
-
-def test_image_features_deterministic_hash(spark):
-    out1 = {r["media_id"]: r["content_sha"]
-            for r in image_features(_media_df(spark)).collect()}
-    out2 = {r["media_id"]: r["content_sha"]
-            for r in image_features(_media_df(spark)).collect()}
-    assert out1 == out2
-    assert out1[1] != out1[2]
-
-
 def test_audio_features_excludes_undecodable(spark):
     """Raw/compressed payloads (media 3: bare int16 bytes, no RIFF
     container) produce NO feature row — fake PCM stats were removed;
     undecodable clips route through audio_metadata instead."""
     got = audio_features(_media_df(spark)).collect()
     assert got == []
-
-
-def test_sample_frames_excludes_non_mp4(spark):
-    """Non-MP4 video payloads (media 4: fake-mjpeg bytes) produce NO
-    frame rows — byte-chunk fakes were removed; real MP4 extraction is
-    covered in tests/test_mp4.py."""
-    out = sample_frames(_media_df(spark), every_n=2).collect()
-    assert out == []
-
-
-def _encode_png(img: np.ndarray, filter_type: int = 0) -> bytes:
-    """Minimal reference PNG encoder (8-bit, non-interlaced) for tests:
-    one filter type for all scanlines."""
-    import zlib
-
-    h, w, ch = img.shape
-    color_type = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-    raw = bytearray()
-    prev = np.zeros(w * ch, dtype=np.int16)
-    for y in range(h):
-        line = img[y].reshape(-1).astype(np.int16)
-        raw.append(filter_type)
-        if filter_type == 0:
-            raw += line.astype(np.uint8).tobytes()
-        elif filter_type == 1:  # Sub
-            lanes = line.reshape(-1, ch)
-            diff = np.vstack([lanes[0:1], (lanes[1:] - lanes[:-1]) % 256])
-            raw += diff.astype(np.uint8).reshape(-1).tobytes()
-        elif filter_type == 2:  # Up
-            raw += ((line - prev) % 256).astype(np.uint8).tobytes()
-        else:
-            raise ValueError("test encoder supports filters 0, 1, 2")
-        prev = line
-
-    def chunk(typ, data):
-        import zlib as z
-        return (struct.pack(">I", len(data)) + typ + data
-                + struct.pack(">I", z.crc32(typ + data) & 0xFFFFFFFF))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color_type, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(raw)))
-            + chunk(b"IEND", b""))
 
 
 def _encode_wav(samples: np.ndarray, sr: int) -> bytes:
@@ -129,17 +56,6 @@ def _encode_wav(samples: np.ndarray, sr: int) -> bytes:
             + b"data" + struct.pack("<I", len(data)) + data)
 
 
-def test_png_decode_roundtrip_all_filters(spark):
-    from sec_xbrl_finwarehouse_spark.functions.multimodal import decode_png
-
-    rng = np.random.RandomState(5)
-    img = rng.randint(0, 256, (13, 7, 3), dtype=np.uint8)
-    for ftype in (0, 1, 2):
-        assert np.array_equal(decode_png(_encode_png(img, ftype)), img)
-    gray = rng.randint(0, 256, (4, 9, 1), dtype=np.uint8)
-    assert np.array_equal(decode_png(_encode_png(gray)), gray)
-
-
 def test_wav_decode_roundtrip(spark):
     from sec_xbrl_finwarehouse_spark.functions.multimodal import decode_wav
 
@@ -149,41 +65,6 @@ def test_wav_decode_roundtrip(spark):
     samples, sr = decode_wav(_encode_wav(stereo, 16000))
     assert sr == 16000 and samples.shape == (1600, 2)
     assert np.abs(samples - stereo).max() < 1e-3
-
-
-def test_resize_png_real_pixels(spark):
-    """resize_images decodes a real PNG and nearest-neighbor resamples:
-    a 2x2 color-quadrant image scaled to 8x8 keeps each quadrant solid."""
-    quad = np.array([[[255, 0, 0], [0, 255, 0]],
-                     [[0, 0, 255], [255, 255, 255]]], dtype=np.uint8)
-    png = _encode_png(quad)
-
-    def meta():
-        return (2, 2, 3, None, None, "png")
-
-    df = spark.createDataFrame([(9, "image", png, meta())], MEDIA_SCHEMA)
-    out = resize_images(df, 8, 8).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert (r["width"], r["height"], r["channels"]) == (8, 8, 3)
-    img = np.frombuffer(r["pixels"], np.uint8).reshape(8, 8, 3)
-    assert np.array_equal(img[0, 0], [255, 0, 0])      # top-left quadrant
-    assert np.array_equal(img[0, 7], [0, 255, 0])      # top-right
-    assert np.array_equal(img[7, 0], [0, 0, 255])      # bottom-left
-    assert np.array_equal(img[7, 7], [255, 255, 255])  # bottom-right
-
-
-def test_image_features_uses_real_png_decode(spark):
-    """A solid-gray PNG must report pixel stats (mean 128, std 0), not
-    compressed-byte stats -- proof the real decoder is in the path."""
-    img = np.full((6, 6, 3), 128, dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(7, "image", _encode_png(img), (6, 6, 3, None, None, "png"))],
-        MEDIA_SCHEMA,
-    )
-    r = image_features(df).collect()[0]
-    assert r["mean_byte"] == pytest.approx(128.0)
-    assert r["std_byte"] == pytest.approx(0.0)
 
 
 def test_audio_features_uses_real_wav_decode(spark):
@@ -200,31 +81,18 @@ def test_audio_features_uses_real_wav_decode(spark):
     assert r["peak"] == pytest.approx(32763.7, abs=5)
 
 
-def test_resize_rejects_unknown_container(spark):
-    with pytest.raises(Exception, match="unsupported image container"):
-        resize_images(_media_df(spark), 8, 8).collect()
-
-
 def test_decoded_real_flags_mark_fake_vs_real(spark):
-    """Rows through the real PNG/WAV decoders carry decoded_real=True
-    with the codec name; byte-stat fallbacks are flagged False so
-    downstream filters can exclude them (VERDICT r4 item 5)."""
-    img = np.full((4, 4, 3), 64, dtype=np.uint8)
+    """Rows through the real WAV decoder carry decoded_real=True with
+    the codec name; undecodable clips are excluded rather than faked
+    (VERDICT r4 item 5)."""
     rows = [
-        (1, "image", _encode_png(img), (4, 4, 3, None, None, "png")),
-        (2, "image", b"\xff\xd8\xff\xe0fakejpeg" * 8, (4, 4, 3, None, None, "jpeg")),
         (3, "audio", _encode_wav(np.zeros((16, 1)) + 0.5, 8000),
          (None, None, 1, 8000, 2, "wav")),
         (4, "audio", b"\x01\x02" * 32, (None, None, 1, 8000, 2, "mp3")),
     ]
     df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    imgs = {r["media_id"]: r for r in image_features(df).collect()}
-    assert (imgs[1]["codec"], imgs[1]["decoded_real"]) == ("png", True)
-    assert (imgs[2]["codec"], imgs[2]["decoded_real"]) == ("byte-stat-fake", False)
     auds = {r["media_id"]: r for r in audio_features(df).collect()}
     assert (auds[3]["codec"], auds[3]["decoded_real"]) == ("wav-pcm", True)
     # undecodable audio (media 4, mp3-ish bytes): excluded, never faked
     assert 4 not in auds
     assert audio_features(df).filter("NOT decoded_real").count() == 0
-    # the downstream filter a real pipeline would run
-    assert image_features(df).filter("decoded_real").count() == 1

@@ -1,24 +1,26 @@
 """pHash kernel + image near-dup tests: pinned golden hashes, the
 perceptual-locality property (small perturbation -> small Hamming
-distance), decode-kernel reuse (real PNG bytes through decode_image ->
-gray32 -> phash), raster/oracle parity, and the banded near-dup plan's
+distance), raster/oracle parity, and the banded near-dup plan's
 losslessness against a brute-force Hamming scan."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from sec_xbrl_finwarehouse_spark.functions.phash import (
     COS_T,
     PHASH_BITS,
-    gray32_np,
-    image_phash_features,
+    PHASH_N,
     phash64_batch,
-    phash64_np,
     raster32_np,
 )
-from tests.test_multimodal import _encode_png
+
+
+def _phash64(pixels) -> int:
+    """pHash of one grid (1024-value flat or 32x32) through the batch
+    kernel."""
+    return int(phash64_batch(
+        np.asarray(pixels).reshape(1, PHASH_N, PHASH_N))[0])
 
 
 def _gradient(n=32):
@@ -40,7 +42,7 @@ def test_cos_table_is_pinned():
 
 def test_phash_golden_value_and_determinism():
     g = _gradient()
-    h1, h2 = phash64_np(g), phash64_np(g.flatten())
+    h1, h2 = _phash64(g), _phash64(g.flatten())
     assert h1 == h2
     assert 0 <= h1 < (1 << PHASH_BITS)
     # exactly half-ish of the 63 AC bits set (median threshold)
@@ -49,56 +51,24 @@ def test_phash_golden_value_and_determinism():
 
 def test_phash_perceptual_locality():
     g = _gradient()
-    base = phash64_np(g)
+    base = _phash64(g)
     # mild noise: a few pixels nudged -> a few bits at most
     noisy = g.copy()
     noisy[0, 0] = min(255, noisy[0, 0] + 9)
     noisy[20, 7] = max(0, noisy[20, 7] - 9)
-    near = phash64_np(noisy)
+    near = _phash64(noisy)
     assert bin(base ^ near).count("1") <= 6
     # a structurally different image -> many bits
-    other = phash64_np(_gradient().T[::-1])
+    other = _phash64(_gradient().T[::-1])
     assert bin(base ^ other).count("1") > 12
 
 
 def test_phash_batch_matches_single():
     grids = np.stack([_gradient(), _gradient().T, np.zeros((32, 32))])
     batch = phash64_batch(grids)
-    assert list(batch) == [phash64_np(g) for g in grids]
+    assert list(batch) == [_phash64(g) for g in grids]
     # all-constant grid: every AC coefficient 0, no bit above median
     assert batch[2] == 0
-
-
-def test_gray32_area_downsample():
-    # constant RGB -> constant luma grid at the integer 601 weights
-    img = np.full((64, 48, 3), 200, dtype=np.uint8)
-    g = gray32_np(img)
-    assert g.shape == (32, 32)
-    assert np.all(g == (200 * 299 + 200 * 587 + 200 * 114) // 1000)
-    # tiny image: nearest-sample clamping still fills the grid
-    tiny = np.arange(4, dtype=np.uint8).reshape(2, 2) * 60
-    gt = gray32_np(tiny)
-    assert gt.shape == (32, 32)
-    assert set(np.unique(gt)) <= {0, 60, 120, 180}
-
-
-def test_phash_survives_png_reencode_and_noise():
-    """Decode-kernel reuse: the hash over REAL decoded PNG pixels is
-    stable under re-encoding (lossless round-trip -> identical hash)
-    and close under mild pixel noise -- the property that makes it a
-    near-dup key for re-encoded/re-uploaded images."""
-    from sec_xbrl_finwarehouse_spark.functions.multimodal import decode_image
-
-    rng = np.random.RandomState(7)
-    img = rng.randint(0, 256, (40, 40, 3)).astype(np.uint8)
-    base = phash64_np(gray32_np(decode_image(_encode_png(img))))
-    again = phash64_np(gray32_np(decode_image(_encode_png(img, 2))))
-    assert base == again  # PNG is lossless; filter type irrelevant
-    noisy = img.astype(np.int64)
-    noisy[::9, ::9] += 6
-    noisy = np.clip(noisy, 0, 255).astype(np.uint8)
-    near = phash64_np(gray32_np(decode_image(_encode_png(noisy))))
-    assert bin(base ^ near).count("1") <= 10
 
 
 def test_raster32_semantics():
@@ -123,11 +93,11 @@ def test_raster32_semantics():
     base_txt = "".join(
         random.choice("abcdefghij klmnopqrs tuvwxyz.") for _ in range(500)
     )
-    h1 = phash64_np(raster32_np(base_txt))
-    h2 = phash64_np(raster32_np(base_txt[:100] + "X" + base_txt[101:]))
+    h1 = _phash64(raster32_np(base_txt))
+    h2 = _phash64(raster32_np(base_txt[:100] + "X" + base_txt[101:]))
     assert bin(h1 ^ h2).count("1") <= 6
     # a different text is FAR (separation, not just locality)
-    h3 = phash64_np(raster32_np("penguins on drifting ice floes " * 16))
+    h3 = _phash64(raster32_np("penguins on drifting ice floes " * 16))
     assert bin(h1 ^ h3).count("1") > 12
 
 
@@ -148,31 +118,8 @@ def test_text_phash_column_matches_numpy(spark):
             "id", text_phash_column(F.col("text")).alias("ph")
         ).collect()
     }
-    exp = {i: phash64_np(raster32_np(t)) for i, t in enumerate(texts)}
+    exp = {i: _phash64(raster32_np(t)) for i, t in enumerate(texts)}
     assert got == exp
-
-
-def test_image_phash_features_real_and_rejected(spark):
-    from sec_xbrl_finwarehouse_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        decode_image,
-    )
-
-    img = (np.arange(27) % 256).astype(np.uint8).reshape(3, 3, 3)
-    png = _encode_png(img)
-    rows = [
-        (1, "image", png, (3, 3, 3, None, None, "png")),
-        (2, "image", b"not an image", (None,) * 6),
-        (3, "audio", b"RIFFxxxx", (None,) * 6),  # filtered by kind
-    ]
-    out = image_phash_features(
-        spark.createDataFrame(rows, MEDIA_SCHEMA)
-    ).collect()
-    by_id = {r["media_id"]: r for r in out}
-    assert set(by_id) == {1, 2}
-    assert by_id[1]["decoded_real"] is True
-    assert by_id[1]["phash"] == phash64_np(gray32_np(decode_image(png)))
-    assert by_id[2]["decoded_real"] is False and by_id[2]["phash"] is None
 
 
 def test_image_neardup_lossless_vs_bruteforce(spark):

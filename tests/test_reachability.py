@@ -32,10 +32,7 @@ KNOWN_TEST_ONLY = frozenset(
     f"{PACKAGE}.{module}.{name}"
     for module, names in {
         "functions.audiofp": ("audio_fingerprint_features",),
-        "functions.multimodal": ("audio_features", "audio_metadata",
-                                 "image_features", "resize_images",
-                                 "sample_frames"),
-        "functions.phash": ("image_phash_features",),
+        "functions.multimodal": ("audio_features", "audio_metadata"),
         "materialize": ("attach_warehouse", "build_all_marts",
                         "refresh_marts_incremental"),
     }.items()
