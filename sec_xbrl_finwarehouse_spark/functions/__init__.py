@@ -62,10 +62,10 @@ def null_propagating_sub(a: Column, b: Column) -> Column:
     return a - b
 
 
-def form_priority(form: Column, preferred: str = "10-K") -> Column:
+def form_priority(form: Column) -> Column:
     """CASE WHEN form = '10-K' THEN 0 ELSE 1 END sort key
     (build_statements_annual.py:39; v2:44)."""
-    return F.when(form == preferred, F.lit(0)).otherwise(F.lit(1))
+    return F.when(form == "10-K", F.lit(0)).otherwise(F.lit(1))
 
 
 def dynamic_conjunction(preds: Sequence[Column]) -> Column:

@@ -2,23 +2,21 @@
 perceptual-dedup family (Chromaprint/Shazam territory, reduced to the
 engine's exact-integer contract).
 
-The construction composes what the repo already has: decoded PCM
-(:func:`.multimodal.decode_wav`) is framed, each frame projected onto
-the SAME quantized DCT basis the image pHash uses (functions/phash.py
-COS_T -- round(cos * 2**14), a shared constant), frame spectra are
-pooled into a 32x32 time-frequency ENERGY GRID normalized to [0, 255]
-by integer scaling, and that grid is hashed by the image kernel
-:func:`.phash.phash64_batch` verbatim. A re-encoded, resampled-in-
-amplitude, or mildly noisy copy of a clip lands within a few Hamming
-bits; different material lands far -- the banded Hamming join from
+An integer PCM buffer is framed, each frame projected onto the SAME
+quantized DCT basis the image pHash uses (functions/phash.py COS_T --
+round(cos * 2**14), a shared constant), frame spectra are pooled into
+a 32x32 time-frequency ENERGY GRID normalized to [0, 255] by integer
+scaling, and that grid is hashed by the image kernel
+:func:`.phash.phash64_batch` verbatim. An amplitude-scaled or mildly
+noisy copy of a clip lands within a few Hamming bits; different
+material lands far -- the banded Hamming join from
 plans/image_queries.py then works unchanged on the resulting hashes.
 
-Everything after the PCM floats is integer: samples are re-quantized
-to int16 once, frame spectra are |T @ frame| sums of int64 products,
-the grid normalization is ``e * 255 // max_e``, and phash64's
-arithmetic is already exact -- so equal payloads hash equally on any
-platform, and the locality properties are pinned by tests
-(tests/test_audiofp.py), not luck.
+Everything is integer: frame spectra are |T @ frame| sums of int64
+products, the grid normalization is ``e * 255 // max_e``, and
+phash64's arithmetic is already exact -- so equal buffers hash
+equally on any platform, and the locality properties are pinned by
+tests (tests/test_audiofp.py), not luck.
 
 Driver-checkable surface (r11): the test corpus ships no audio
 column, so -- exactly like the image family's deterministic text
@@ -26,22 +24,16 @@ raster (plans/image_queries.py) -- the driver queries synthesize
 deterministic PCM from each document's TEXT (:func:`text_pcm_np`: one
 integer sample per character, codepoint clamped to 255 -- the same
 byte signal the image raster reads, consumed as a 1-D waveform) and
-run it through the SAME integer sub-pipeline
-(:func:`_grid255_from_int_pcm` -> :func:`..functions.phash.
-phash64_batch`) the WAV path uses after its int16 re-quantization.
-The sharing is structural, not copy-paste: both paths call the same
-function objects, asserted in tests/test_audiofp.py. The REAL
-decoded-PCM path (:func:`audio_fingerprint_features`) remains
-exercised against synthesized WAV fixtures through the real decoder.
-The reference warehouse has no counterpart.
+hash it with :func:`_grid255_from_int_pcm` ->
+:func:`..functions.phash.phash64_batch`. No codec is implemented: a
+real audio column would be decoded to integer PCM upstream and enter
+the same two functions. The reference warehouse has no counterpart.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .phash import PHASH_N, _T, phash64_batch
 
@@ -104,9 +96,9 @@ def _grid255_from_int_pcm(pcm: np.ndarray) -> np.ndarray | None:
     -> 32-bin integer DCT magnitudes per frame -> frames pooled into
     32 equal time slots (integer mean, cumsum form) -> grid scaled by
     ``e * 255 // max_e`` (all-zero input yields the all-zero grid).
-    Both the WAV path (int16-requantized samples) and the text-PCM
-    driver path (:func:`text_pcm_np`) call THIS function -- the kernel
-    sharing is a single code path, asserted in tests."""
+    The single-hash (:func:`text_audiofp_column`) and fused
+    (:func:`text_phash_afp_column`) query kernels both call THIS
+    function."""
     pcm = np.asarray(pcm, dtype=np.int64)
     n_frames = len(pcm) // FP_FRAME
     if n_frames == 0:
@@ -123,24 +115,6 @@ def _grid255_from_int_pcm(pcm: np.ndarray) -> np.ndarray | None:
     if mx <= 0:
         return np.zeros((PHASH_N, PHASH_N), dtype=np.int64)
     return (grid * 255) // mx
-
-
-def audio_fingerprint_np(samples: np.ndarray) -> int | None:
-    """64-bit perceptual fingerprint of a mono-foldable PCM buffer
-    ((n, ch) float in [-1, 1) or 1-D), or None when the clip is too
-    short to fill one analysis frame.
-
-    Pipeline: mono fold -> int16 re-quantization ->
-    :func:`_grid255_from_int_pcm` ->
-    :func:`..functions.phash.phash64_batch`."""
-    a = np.asarray(samples, dtype=np.float64)
-    if a.ndim == 2:
-        a = a.mean(axis=1)
-    pcm = np.clip(np.round(a * 32767.0), -32768, 32767).astype(np.int64)
-    grid255 = _grid255_from_int_pcm(pcm)
-    if grid255 is None:
-        return None
-    return int(phash64_batch(grid255.reshape(1, PHASH_N, PHASH_N))[0])
 
 
 def text_pcm_np(text: str) -> np.ndarray:
@@ -199,7 +173,7 @@ def text_audiofp_column(text_col):
 
     # guide §4.4: the callers filter on ``afp IS NOT NULL``; pushing
     # that filter below the scan-parallelizing exchange substitutes the
-    # UDF into the pushed predicate, so every clip paid the decode+DCT
+    # UDF into the pushed predicate, so every clip paid the grid+DCT
     # kernel TWICE (observed: two ArrowEvalPython nodes in the
     # audio_neardup cache build, one below the pushed filter whose
     # fingerprint is discarded). Non-deterministic forbids the
@@ -263,38 +237,3 @@ def text_phash_afp_column(text_col):
 
     return _fused.asNondeterministic()(text_col)
 
-
-def audio_fingerprint_features(media: DataFrame) -> DataFrame:
-    """Per-clip perceptual fingerprint over REAL decoded WAV PCM,
-    Arrow-batched. Column-pruned to (media_id, payload); non-WAV or
-    too-short payloads yield ``afp NULL, decoded_real false``
-    (undecodable clips are excluded, never faked -- the multimodal
-    family's contract)."""
-    from collections.abc import Iterator
-
-    from .multimodal import decode_wav
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            fps, real = [], []
-            for payload in pdf["payload"]:
-                try:
-                    samples, _sr = decode_wav(payload)
-                    fp = audio_fingerprint_np(samples)
-                    fps.append(fp)
-                    real.append(fp is not None)
-                except Exception:
-                    fps.append(None)
-                    real.append(False)
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "afp": pd.array(fps, dtype="Int64"),
-                "decoded_real": real,
-            })
-
-    pruned = media.filter(F.col("kind") == "audio").select(
-        "media_id", "payload"
-    )
-    return pruned.mapInPandas(
-        kernel, "media_id long, afp long, decoded_real boolean"
-    )

@@ -53,15 +53,13 @@ def screener(
     min_net_margin: float | None = None,
     year: int | None = None,
     limit: int = 25,
-    deterministic: bool = True,
 ) -> DataFrame:
     """GET /screener (api.py:63-105): dynamic conjunctive filters over
     ratios join companies, ORDER BY fiscal_year DESC, roe DESC NULLS LAST,
     LIMIT clamped 1..200 (api.py:69).
 
-    ``deterministic`` appends cik ASC as a final sort key so rows tied at
-    the LIMIT boundary are stable across engines (the reference leaves
-    that tie to Postgres).
+    cik ASC is the final sort key so rows tied at the LIMIT boundary are
+    stable across engines (the reference leaves that tie to Postgres).
     """
     limit = max(1, min(200, limit))
     preds = []
@@ -74,15 +72,12 @@ def screener(
     if min_net_margin is not None:
         preds.append(F.col("net_margin") >= min_net_margin)
 
-    order = [F.col("fiscal_year").desc(), F.col("roe").desc_nulls_last()]
-    if deterministic:
-        order.append(F.col("cik").asc())
-
     return (
         ratios.filter(dynamic_conjunction(preds))
         .join(F.broadcast(companies.select("cik", "ticker", "name")), "cik", "inner")
         .select("cik", "ticker", "name", "fiscal_year", "roe", "fcf_margin", "net_margin")
-        .orderBy(*order)
+        .orderBy(F.col("fiscal_year").desc(), F.col("roe").desc_nulls_last(),
+                 F.col("cik").asc())
         .limit(limit)
         .select("ticker", "name", "fiscal_year", "roe", "fcf_margin", "net_margin")
     )

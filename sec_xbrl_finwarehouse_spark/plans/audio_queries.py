@@ -15,11 +15,7 @@ queries synthesize deterministic PCM from each document's TEXT
 (:func:`..functions.audiofp.text_pcm_np`: one integer sample per
 character, codepoint clamped to 255). Documents shorter than one
 analysis frame (FP_FRAME = 256 characters) fingerprint to NULL, in
-both engines. The REAL decoded-PCM path
-(:func:`..functions.audiofp.audio_fingerprint_features`) rides the
-WAV codec and shares :func:`.._grid255_from_int_pcm` verbatim -- the
-driver queries exercise the exact arithmetic the audio-shard dedup
-runs at 100 TB, minus only the decode step.
+both engines. No audio codec is implemented.
 
 No counterpart in `/root/reference/` (no multimodal surface); this is
 additive LLM-pipeline functionality.
@@ -30,9 +26,7 @@ measured Catalyst higher-order-function pathology). The only shuffles
 are the (band, key) LSH exchange (fan-out 7 rows/clip) and the final
 pair dedup, which sees only Hamming-verified survivors because the
 filter sits join-side of the distinct -- the ordering measured on the
-SimHash twin. At 100 TB of real audio the text-PCM stage is replaced
-by the Arrow-batched WAV/MP3 decode kernels and everything downstream
-is unchanged.
+SimHash twin.
 """
 
 from __future__ import annotations

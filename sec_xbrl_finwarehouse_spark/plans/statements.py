@@ -51,10 +51,10 @@ from ..schemas import (
 _ALL_TAGS = tuple(FLOW_TAGS) + tuple(STOCK_TAGS)
 
 
-def _dedup_order(deterministic: bool) -> list[Column]:
-    """ORDER BY filed DESC NULLS LAST (v3.py:64-66) plus, when asked,
-    ``value DESC`` so equal-`filed` ties are stable across engines (the
-    reference leaves them to Postgres's physical order).
+def _dedup_order() -> list[Column]:
+    """ORDER BY filed DESC NULLS LAST (v3.py:64-66) plus ``value DESC``
+    so equal-`filed` ties are stable across engines (the reference
+    leaves them to Postgres's physical order).
 
     ``value`` as the tiebreak is deliberate: rows tying on BOTH filed and
     value are interchangeable (only the value survives downstream), so
@@ -66,10 +66,7 @@ def _dedup_order(deterministic: bool) -> list[Column]:
     full-duplicate natural keys, and any id derived from them collides on
     rows with different values (measured -- it flips winners between
     engines)."""
-    order = [F.col("filed").desc_nulls_last()]
-    if deterministic:
-        order.append(F.col("value").desc())
-    return order
+    return [F.col("filed").desc_nulls_last(), F.col("value").desc()]
 
 
 def annual_flow_facts(facts: DataFrame) -> DataFrame:
@@ -127,19 +124,17 @@ def annual_facts_one_pass(facts: DataFrame) -> DataFrame:
     )
 
 
-def canonical_tag_values_v3(facts: DataFrame, deterministic: bool = True) -> DataFrame:
+def canonical_tag_values_v3(facts: DataFrame) -> DataFrame:
     """One (cik, fiscal_year, tag, value) per concept-year: W1 dedup on each
     side, then U1 union (v3.py:60-70, 95-105, 113)."""
     cols = ["cik", "fiscal_year", "tag", "value"]
-    order = _dedup_order(deterministic)
+    order = _dedup_order()
     flow = latest_wins(annual_flow_facts(facts), ["cik", "fiscal_year", "tag"], order)
     stock = latest_wins(annual_stock_facts(facts), ["cik", "fiscal_year", "tag"], order)
     return flow.select(*cols).unionByName(stock.select(*cols))
 
 
-def canonical_tag_values_v1v2(
-    facts: DataFrame, filings: DataFrame, deterministic: bool = True
-) -> DataFrame:
+def canonical_tag_values_v1v2(facts: DataFrame, filings: DataFrame) -> DataFrame:
     """v1/v2 path: borrow fiscal_year from filings (J1), keep FY periods,
     W2 dedup preferring 10-K then latest filed (v1.py:28-50; v2.py:33-57).
 
@@ -166,7 +161,7 @@ def canonical_tag_values_v1v2(
         joined,
         ["cik", "fiscal_year", "tag"],
         form_priority(F.col("form")),
-        _dedup_order(deterministic),
+        _dedup_order(),
     )
     return deduped.select("cik", "fiscal_year", "tag", "value")
 
@@ -302,7 +297,6 @@ def build_statements(
     facts: DataFrame,
     version: str = "v3",
     filings: DataFrame | None = None,
-    deterministic: bool = True,
     strategy: str = "argmax",
 ) -> DataFrame:
     """facts -> statements_annual (one row per cik x fiscal_year).
@@ -314,7 +308,7 @@ def build_statements(
     if version == "v3" and strategy == "argmax":
         wide = _wide_v3_argmax(facts)
     elif version == "v3":
-        long = canonical_tag_values_v3(facts, deterministic)
+        long = canonical_tag_values_v3(facts)
         wide = pivot_first(long, ["cik", "fiscal_year"], "tag", "value", _ALL_TAGS)
     elif version in ("v1", "v2"):
         if filings is None:
@@ -322,7 +316,7 @@ def build_statements(
         if strategy == "argmax":
             wide = _wide_v1v2_argmax(facts, filings)
         else:
-            long = canonical_tag_values_v1v2(facts, filings, deterministic)
+            long = canonical_tag_values_v1v2(facts, filings)
             wide = pivot_first(
                 long, ["cik", "fiscal_year"], "tag", "value", _ALL_TAGS
             )

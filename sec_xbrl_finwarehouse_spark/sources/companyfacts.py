@@ -10,8 +10,6 @@ scales to any number of documents: the only shuffle is the filings dedup.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,17 +23,12 @@ def read_companyfacts_json(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(COMPANYFACTS_SCHEMA).json(path, multiLine=True)
 
 
-def flatten_facts(
-    docs: DataFrame,
-    core_tags: Iterable[str] = CORE_TAGS,
-    taxonomy: str = "us-gaap",
-    unit: str = "USD",
-) -> DataFrame:
+def flatten_facts(docs: DataFrame) -> DataFrame:
     """One row per (company, tag, fact item), FACTS_SCHEMA shape.
 
     Semantics per ingest_facts.py:39-88:
-      * only ``taxonomy`` (default us-gaap, :41-46), only ``unit`` (USD, :51)
-      * tag whitelist ``core_tags`` (:47-48)
+      * only the us-gaap taxonomy (:41-46), only the USD unit (:51)
+      * tag whitelist ``CORE_TAGS`` (:47-48)
       * rows with NULL ``val`` dropped (:52-54)
       * ``float(val)`` -> double (:80), ``date.fromisoformat`` -> to_date (:36-37)
       * cik zero-padded to 10 (sec_client.py:28)
@@ -51,16 +44,16 @@ def flatten_facts(
             zero_pad_cik(F.col("cik")).alias("cik"),
             F.explode(F.col("facts")).alias("taxonomy", "tag_map"),
         )
-        .filter(F.col("taxonomy") == taxonomy)
+        .filter(F.col("taxonomy") == "us-gaap")
         .select("cik", "taxonomy", F.explode(F.col("tag_map")).alias("tag", "payload"))
-        .filter(F.col("tag").isin(list(core_tags)))
+        .filter(F.col("tag").isin(list(CORE_TAGS)))
     )
     items = (
         tags.select(
             "cik", "taxonomy", "tag",
             F.explode(F.col("payload.units")).alias("unit", "items"),
         )
-        .filter(F.col("unit") == unit)
+        .filter(F.col("unit") == "USD")
         .select("cik", "taxonomy", "tag", "unit", F.explode(F.col("items")).alias("it"))
         .filter(F.col("it.val").isNotNull())
     )

@@ -1,19 +1,16 @@
-"""Parquet star-schema loaders (driver test data, TESTDATA.md).
+"""Parquet star-schema table paths (test data, TESTDATA.md) and
+the small-scan parallelizer.
 
-Reads are plain ``spark.read.parquet`` so Catalyst predicate pushdown /
-column pruning reach the scan. Nothing here collects or caches --
-callers decide lifetimes.
+Callers read with plain ``spark.read.parquet`` so Catalyst predicate
+pushdown / column pruning reach the scan. Nothing here collects or
+caches -- callers decide lifetimes.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..schemas import STAR_TABLES
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from pyspark.sql import DataFrame
 
 
 def table_path(sf_dir: str, name: str) -> str:
@@ -126,18 +123,3 @@ def _footer_rows(paths: list[str], enough: int) -> int:
     except Exception:
         return -1
 
-
-def load_star_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = STAR_TABLES
-) -> dict[str, DataFrame]:
-    return {name: spark.read.parquet(table_path(sf_dir, name)) for name in names}
-
-
-def register_star_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = STAR_TABLES
-) -> dict[str, DataFrame]:
-    """Register each table as a temp view so Spark SQL text also works."""
-    dfs = load_star_tables(spark, sf_dir, names)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

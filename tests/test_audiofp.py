@@ -1,7 +1,7 @@
 """Audio perceptual fingerprint tests: determinism, the locality
-property (noise -> few Hamming bits, different material -> many),
-decode-kernel reuse through real WAV payloads, and the mapInPandas
-feature kernel's exclude-don't-fake contract."""
+property (noise and amplitude scaling -> few Hamming bits, different
+material -> many), and the text-PCM query path, all through the live
+kernel (``_grid255_from_int_pcm`` -> ``phash64_batch``)."""
 
 from __future__ import annotations
 
@@ -9,18 +9,30 @@ import numpy as np
 
 from sec_xbrl_finwarehouse_spark.functions.audiofp import (
     FP_FRAME,
-    audio_fingerprint_features,
-    audio_fingerprint_np,
-    )
-from tests.test_multimodal import _encode_wav
+    _grid255_from_int_pcm,
+    text_pcm_np,
+)
+from sec_xbrl_finwarehouse_spark.functions.phash import PHASH_N, phash64_batch
 
 
-def _clip(freqs, n=8192, sr=16000, amp=0.3, seed=None):
+def _int16(x):
+    return np.clip(np.round(x * 32767.0), -32768, 32767).astype(np.int64)
+
+
+def _clip(freqs, n=8192, sr=16000, amp=0.3, seed=None, scale=1.0):
+    """Integer (int16-quantized) PCM of a sum of sines."""
     t = np.arange(n) / sr
     x = sum(np.sin(2 * np.pi * f * t) for f in freqs) * amp / len(freqs)
     if seed is not None:
         x = x + np.random.RandomState(seed).normal(0, 0.01, n)
-    return np.clip(x, -0.999, 0.999)
+    return _int16(np.clip(x, -0.999, 0.999) * scale)
+
+
+def _fp(pcm):
+    grid = _grid255_from_int_pcm(pcm)
+    if grid is None:
+        return None
+    return int(phash64_batch(grid.reshape(1, PHASH_N, PHASH_N))[0])
 
 
 def _ham(a, b):
@@ -29,85 +41,36 @@ def _ham(a, b):
 
 def test_fingerprint_deterministic_and_bounded():
     x = _clip([440, 880, 1320])
-    fp = audio_fingerprint_np(x)
-    assert fp == audio_fingerprint_np(x)
+    fp = _fp(x)
+    assert fp == _fp(x)
     assert 0 <= fp < (1 << 63)
     # median thresholding sets roughly half the 63 bits
     assert 15 <= bin(fp).count("1") <= 48
 
 
 def test_fingerprint_too_short_is_none_and_silence_hashes():
-    assert audio_fingerprint_np(np.zeros(FP_FRAME - 1)) is None
-    assert audio_fingerprint_np(np.zeros(FP_FRAME * 40)) == 0
+    assert _fp(np.zeros(FP_FRAME - 1, dtype=np.int64)) is None
+    assert _fp(np.zeros(FP_FRAME * 40, dtype=np.int64)) == 0
 
 
 def test_fingerprint_locality_noise_vs_different_material():
-    base = audio_fingerprint_np(_clip([440, 880, 1320]))
-    noisy = audio_fingerprint_np(_clip([440, 880, 1320], seed=7))
-    other = audio_fingerprint_np(_clip([523, 1567, 2093]))
+    base = _fp(_clip([440, 880, 1320]))
+    noisy = _fp(_clip([440, 880, 1320], seed=7))
+    other = _fp(_clip([523, 1567, 2093]))
     assert _ham(base, noisy) <= 8
     assert _ham(base, other) > 14
-    # stereo fold: the same material as 2-channel lands identically
-    mono = _clip([440, 880, 1320])
-    stereo = np.stack([mono, mono], axis=1)
-    assert audio_fingerprint_np(stereo) == base
-
-
-def test_fingerprint_survives_wav_roundtrip_and_8bit():
-    from sec_xbrl_finwarehouse_spark.functions.multimodal import decode_wav
-
-    x = _clip([330, 660, 990])
-    fp_direct = audio_fingerprint_np(x)
-    samples16, _sr = decode_wav(_encode_wav(x, 16000))
-    fp16 = audio_fingerprint_np(samples16)
-    assert _ham(fp_direct, fp16) <= 4  # 16-bit quantization: ~0 bits
     # amplitude scaling (a re-mastered copy): grid is max-normalized
-    fp_quiet = audio_fingerprint_np(x * 0.5)
-    assert _ham(fp_direct, fp_quiet) <= 6
-
-
-def test_audio_fingerprint_features_kernel(spark):
-    from sec_xbrl_finwarehouse_spark.functions.multimodal import (
-        MEDIA_SCHEMA,
-        decode_wav,
-    )
-
-    wav = _encode_wav(_clip([440, 880]), 16000)
-    rows = [
-        (1, "audio", wav, (None,) * 6),
-        (2, "audio", b"not audio at all", (None,) * 6),
-        (3, "image", b"\x89PNG", (None,) * 6),  # filtered by kind
-        (4, "audio", _encode_wav(np.zeros(8), 16000), (None,) * 6),
-    ]
-    out = {
-        r["media_id"]: r
-        for r in audio_fingerprint_features(
-            spark.createDataFrame(rows, MEDIA_SCHEMA)
-        ).collect()
-    }
-    assert set(out) == {1, 2, 4}
-    samples, _ = decode_wav(wav)
-    assert out[1]["decoded_real"] is True
-    assert out[1]["afp"] == audio_fingerprint_np(samples)
-    assert out[2]["afp"] is None and out[2]["decoded_real"] is False
-    assert out[4]["afp"] is None and out[4]["decoded_real"] is False
+    fp = _fp(_clip([330, 660, 990]))
+    fp_quiet = _fp(_clip([330, 660, 990], scale=0.5))
+    assert _ham(fp, fp_quiet) <= 6
 
 
 def test_text_pcm_path_shares_wav_kernel_byte_identically():
     """r11 driver path contract: the text->PCM fingerprint is the SAME
-    code path the WAV path runs after int16 re-quantization -- feeding
-    the text codes through the float API (codes/32767 survive the
-    round-trip exactly, all values <= 255) must produce the identical
-    hash, and short texts are None in both spellings."""
-    from sec_xbrl_finwarehouse_spark.functions.audiofp import (
-        _grid255_from_int_pcm,
-        text_pcm_np,
-    )
-    from sec_xbrl_finwarehouse_spark.functions.phash import (
-        PHASH_N,
-        phash64_batch,
-    )
-
+    code path the clips above take after int16 quantization -- the
+    text codes survive the codes/32767 float round-trip exactly (all
+    values <= 255) and hash identically, and short texts are None in
+    both spellings."""
     text = ("the quick brown fox jumps over the lazy dog. " * 12)[:520]
     pcm = text_pcm_np(text)
     assert len(pcm) == len(text)
@@ -115,29 +78,19 @@ def test_text_pcm_path_shares_wav_kernel_byte_identically():
     assert abs(int(pcm.sum())) < len(pcm)  # zero-mean up to floor error
     grid = _grid255_from_int_pcm(pcm)
     direct = int(phash64_batch(grid.reshape(1, PHASH_N, PHASH_N))[0])
-    via_float = audio_fingerprint_np(pcm.astype(np.float64) / 32767.0)
+    via_float = _fp(_int16(pcm.astype(np.float64) / 32767.0))
     assert direct == via_float
 
     assert _grid255_from_int_pcm(text_pcm_np("x" * (FP_FRAME - 1))) is None
-    assert audio_fingerprint_np(np.zeros(FP_FRAME - 1)) is None
+    assert _fp(np.zeros(FP_FRAME - 1, dtype=np.int64)) is None
 
 
 def test_text_fingerprint_locality():
     """Substitution-class edits (the audio-noise analogue on the text
     PCM) move few hash bits; different material lands far -- the same
-    locality contract the WAV fixtures pin, now on the driver path."""
-    from sec_xbrl_finwarehouse_spark.functions.audiofp import (
-        _grid255_from_int_pcm,
-        text_pcm_np,
-    )
-    from sec_xbrl_finwarehouse_spark.functions.phash import (
-        PHASH_N,
-        phash64_batch,
-    )
-
+    locality contract the sine clips pin, now on the text-PCM path."""
     def fp(t):
-        g = _grid255_from_int_pcm(text_pcm_np(t))  # centered synthesis
-        return int(phash64_batch(g.reshape(1, PHASH_N, PHASH_N))[0])
+        return _fp(text_pcm_np(t))  # centered synthesis
 
     base = ("lorem ipsum dolor sit amet, consectetur adipiscing elit, "
             "sed do eiusmod tempor incididunt ut labore et dolore " * 8)

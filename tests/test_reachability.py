@@ -13,9 +13,11 @@ top-level function and class of every package module must be referenced
 (as a name, an attribute or an imported name -- matched by bare name)
 from a reached module, ``__spark_entry__.py`` or ``perfbench/``. String
 constants in ``perfbench/`` count too, because the tracer wraps
-functions by name. A name only ``tests/`` use is dead code its tests
-keep alive. ``KNOWN_TEST_ONLY`` freezes the names that predate the pass.
-It may only shrink: the test fails when a name outside it is used only
+functions by name. A package ``__init__.py`` counts only for what its
+code uses, not for the names it imports: a re-export is not a use. A
+name only ``tests/`` use is dead code its tests keep alive.
+``KNOWN_TEST_ONLY`` freezes the names that predate the pass. It may
+only shrink: the test fails when a name outside it is used only
 by tests, and also when a listed name is deleted or becomes used, so a
 stale entry cannot hide a new dead name.
 """
@@ -31,8 +33,6 @@ ENTRY_POINTS = ("__spark_entry__", f"{PACKAGE}.__main__", f"{PACKAGE}.api")
 KNOWN_TEST_ONLY = frozenset(
     f"{PACKAGE}.{module}.{name}"
     for module, names in {
-        "functions.audiofp": ("audio_fingerprint_features",),
-        "functions.multimodal": ("audio_features", "audio_metadata"),
         "materialize": ("attach_warehouse", "build_all_marts",
                         "refresh_marts_incremental"),
     }.items()
@@ -108,15 +108,17 @@ def test_every_package_module_is_reached_from_an_entry_point():
 
 
 def _references(path: str, strings: bool = False) -> set[str]:
-    """Bare names ``path`` uses: names, attributes, imported names and,
+    """Bare names ``path`` uses: names, attributes, imported names
+    (except in an ``__init__.py``, where an import is a re-export) and,
     with ``strings``, string constants."""
+    reexports = path.endswith("__init__.py")
     out: set[str] = set()
     for node in ast.walk(_parse(path)):
         if isinstance(node, ast.Name):
             out.add(node.id)
         elif isinstance(node, ast.Attribute):
             out.add(node.attr)
-        elif isinstance(node, ast.alias):
+        elif isinstance(node, ast.alias) and not reexports:
             out.add(node.name.rsplit(".", 1)[-1])
         elif strings and isinstance(node, ast.Constant) \
                 and isinstance(node.value, str):
