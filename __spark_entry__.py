@@ -22,24 +22,12 @@ from sec_xbrl_finwarehouse_spark.plans import (
     corpus_queries,
     crossmodal_queries,
     embedding_queries,
-    events_queries,
     image_queries,
     text_queries,
 )
 from sec_xbrl_finwarehouse_spark.plans import star_queries as sq
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
-
-# the 17 reference-parity star queries (the head of queries())
-STAR_PARITY = {
-    "statements_annual", "ratios_annual", "screener",
-    "window_dedup_latest", "pivot_wide", "flow_stock_union",
-    "window_dedup_priority", "coalesce_priority", "annual_period_filter",
-    "top_k_orders", "natural_key_dedup", "insert_if_absent",
-    "upsert_latest_wins", "statements_annual_v2", "statements_annual_v1",
-    "company_profile", "ratios_lookup",
-}
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: the full reference pipeline (ingest-shaped facts ->
@@ -68,7 +56,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "statements_annual_v1": sq.q_statements_annual_v1,
         "company_profile": sq.q_company_profile,              # J3
         "ratios_lookup": sq.q_ratios_lookup,                  # O1
-        **events_queries.QUERIES,
         **text_queries.QUERIES,
         **corpus_queries.QUERIES,
         **embedding_queries.QUERIES,
@@ -81,7 +68,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     return {
         **oracles.build_reference_oracles(),
-        **events_queries.ORACLES,
         **text_queries.ORACLES,
         **corpus_queries.ORACLES,
         **embedding_queries.ORACLES,

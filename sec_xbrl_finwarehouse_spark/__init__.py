@@ -7,7 +7,7 @@ Layout:
     sources/    -- parquet star-schema loaders, companyfacts JSON flatten, SEC HTTP client
     operators/  -- natural-key dedup, pivot, upsert, union-find connected components
     plans/      -- statements_annual (v1/v2/v3), ratios_annual, API query builders,
-                   star-schema facts adapter, text/event/embedding query packs
+                   star-schema facts adapter, text/corpus/embedding query packs
     sinks       -- versioned parquet tables: atomic publish, upsert, insert-if-absent
     materialize -- the mart build (companies, statements_annual, ratios_annual)
     api, serving, cli -- the HTTP endpoints and the seed/ingest/build/ratios/serve CLI

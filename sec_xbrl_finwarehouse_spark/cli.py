@@ -155,6 +155,20 @@ def cmd_ingest(args) -> int:
          companies.select("cik", "ticker").collect()),
         key=lambda x: x[1],
     )
+    # a facts table written by an older ingest carries the flatten's
+    # fy/fp; the insert-if-absent below cannot project new rows onto it
+    facts_path = os.path.join(warehouse, "facts")
+    stored = sinks.read_table(spark, facts_path)
+    known = (*FACTS_SCHEMA.fieldNames(), sinks.CREATED_AT, sinks.UPDATED_AT)
+    extra = [] if stored is None else [
+        c for c in stored.columns if c not in known
+    ]
+    if extra:
+        raise SystemExit(
+            f"{facts_path} has columns {extra} that FACTS_SCHEMA lacks: "
+            "it was written by an older ingest. Delete that directory "
+            "and run ingest again."
+        )
 
     # spool every company's document into one directory, then run the
     # flatten/dedup pipeline ONCE over the whole batch (the per-company
@@ -195,7 +209,7 @@ def cmd_ingest(args) -> int:
             keys=["accession_no"],
         )
         n_facts = sinks.append_if_absent(
-            spark, os.path.join(warehouse, "facts"), facts,
+            spark, facts_path, facts,
             keys=list(FACTS_NATURAL_KEY),
         )
         print(f"ingested {n_spooled} companies: "

@@ -524,11 +524,13 @@ def q_doc_ccnet_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores, computed as ONE scalar aggregate over the doc-count-sized
     score table and broadcast-crossed back (never an ntile/global-sort
     window, which would funnel every document through one task). At
-    extreme doc counts swap the exact percentile for the histogram
-    estimator (events_queries.q_event_histogram_quantiles' arithmetic)
-    -- the bucketing comparisons are unchanged. Empty docs (NULL xent)
-    get their own 'empty' bucket: CCNet drops them, and an explicit
-    label keeps that decision visible downstream.
+    extreme doc counts swap the exact percentile for a mergeable
+    fixed-width histogram: count scores per floor(xent / width) bin,
+    take a running sum over the bins, and interpolate linearly inside
+    the bin where the running count first reaches q*n, an error of at
+    most one bin width -- the bucketing comparisons are unchanged.
+    Empty docs (NULL xent) get their own 'empty' bucket: CCNet drops
+    them, and an explicit label keeps that decision visible downstream.
 
     The score frame is persisted (_persist_hot, MEMORY_AND_DISK): it
     feeds both the threshold aggregate and the final projection, and

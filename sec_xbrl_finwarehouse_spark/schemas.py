@@ -76,16 +76,6 @@ ANNUAL_FORMS: tuple[str, ...] = ("10-K", "20-F")  # v3.py:54
 # Warehouse table schemas (db/schema.sql)
 # --------------------------------------------------------------------------
 
-COMPANIES_SCHEMA = T.StructType([
-    T.StructField("cik", T.StringType(), False),
-    T.StructField("ticker", T.StringType(), True),
-    T.StructField("name", T.StringType(), True),
-    T.StructField("sic", T.StringType(), True),
-    T.StructField("sector", T.StringType(), True),
-    T.StructField("industry", T.StringType(), True),
-    T.StructField("created_at", T.TimestampType(), True),
-])
-
 FILINGS_SCHEMA = T.StructType([
     T.StructField("accession_no", T.StringType(), False),
     T.StructField("cik", T.StringType(), False),
@@ -109,21 +99,6 @@ FACTS_SCHEMA = T.StructType([
     T.StructField("form", T.StringType(), True),
     T.StructField("filed", T.DateType(), True),
     T.StructField("frame", T.StringType(), True),
-])
-
-STATEMENTS_ANNUAL_SCHEMA = T.StructType([
-    T.StructField("cik", T.StringType(), False),
-    T.StructField("fiscal_year", T.IntegerType(), False),
-    T.StructField("revenues", T.DoubleType(), True),
-    T.StructField("gross_profit", T.DoubleType(), True),
-    T.StructField("operating_income", T.DoubleType(), True),
-    T.StructField("net_income", T.DoubleType(), True),
-    T.StructField("total_assets", T.DoubleType(), True),
-    T.StructField("total_liabilities", T.DoubleType(), True),
-    T.StructField("total_equity", T.DoubleType(), True),
-    T.StructField("operating_cash_flow", T.DoubleType(), True),
-    T.StructField("capex", T.DoubleType(), True),
-    T.StructField("free_cash_flow", T.DoubleType(), True),
 ])
 
 RATIOS_ANNUAL_SCHEMA = T.StructType([

@@ -98,17 +98,6 @@ def get_spark(
         # (which DOES apply, it is read before JVM launch), spark-submit
         # users pass --driver-memory.
         .config("spark.ui.enabled", "false")
-        # The driver test parquet stores events.ts as TIMESTAMP(NANOS),
-        # which Spark's vectorized reader rejects outright; this legacy
-        # flag reads the raw int64 instead (queries then reconstruct
-        # micros via timestamp_micros(ts div 1000), matching DuckDB's
-        # coercion). Scoping it per-read is impossible (no
-        # DataFrameReader option exists), so it is a session default here
-        # AND set idempotently inside plans/events_queries._events --
-        # callers routinely hand the query builders an externally-built
-        # session (the driver's verify harness does), and without the
-        # conf every events read crashes (ADVICE r2).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         # Wide-schema codegen: whole-stage codegen silently disables when
         # a plan node carries more than spark.sql.codegen.maxFields

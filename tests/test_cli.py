@@ -212,6 +212,35 @@ def test_cli_ingest_keeps_every_filing_and_only_fact_columns(
                              sinks.CREATED_AT, sinks.UPDATED_AT]
 
 
+def test_cli_ingest_into_old_facts_table_names_the_fix(spark, offline_env):
+    """A facts table written by the older ingest, which stored the
+    flatten's ``fy``/``fp`` columns, stops ingest with a message naming
+    the table, the extra columns and the fix, not an analyzer error."""
+    from sec_xbrl_finwarehouse_spark.schemas import FACTS_NATURAL_KEY
+    from sec_xbrl_finwarehouse_spark.sources.companyfacts import (
+        dedup_facts,
+        flatten_facts,
+        read_companyfacts_json,
+    )
+
+    o = offline_env
+    base = ["--env-file", o["env"], "--warehouse", o["warehouse"]]
+    assert cli.main(base + ["seed", "--tickers-json",
+                            o["tickers_json"]]) == 0
+    facts_path = os.path.join(o["warehouse"], "facts")
+    old = dedup_facts(flatten_facts(read_companyfacts_json(spark, o["spool"])))
+    sinks.append_if_absent(spark, facts_path, old,
+                           keys=list(FACTS_NATURAL_KEY))
+    assert {"fy", "fp"} <= set(sinks.read_table(spark, facts_path).columns)
+
+    with pytest.raises(SystemExit) as exc:
+        cli.main(base + ["ingest", "--from-json", o["spool"]])
+    msg = str(exc.value)
+    assert facts_path in msg
+    assert "'fy'" in msg and "'fp'" in msg
+    assert "Delete" in msg
+
+
 def test_cli_serve_responds(offline_env, capsys):
     o = offline_env
     base = ["--env-file", o["env"]]

@@ -1,15 +1,14 @@
-"""Unit tests for the event-time analytics pack (plans/events_queries.py)
-on hand-built frames: sessionization gap edges, as-of tie semantics
-(ASOF is >=, equal-ts view matches), lag growth NULL rules, and the
-HLL++ approx-distinct scale path staying within its error bound."""
+"""Event-frame semantics on hand-built frames that call no package code:
+as-of tie semantics of the union + carry-forward window (ASOF is >=, an
+equal-ts view matches, a click before any view is dropped, users never
+cross) and Spark's HLL++ approx-distinct staying within its error
+bound."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 from pyspark.sql import functions as F
-
-from sec_xbrl_finwarehouse_spark.plans.events_queries import SESSION_GAP_SEC
 
 
 def _ts(minute: float) -> dt.datetime:
@@ -24,36 +23,10 @@ def _events(spark, rows):
     )
 
 
-def _sessionize(spark, df):
-    """Drive the PRODUCTION gaps-and-islands core (not a re-spelled
-    copy, which once drifted to plain unix_micros and could not catch
-    timezone bugs in the real _epoch_micros expression)."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import sessionize
-
-    return sessionize(df)
-
-
-def test_sessionize_gap_boundary(spark):
-    # exactly 30:00 gap -> SAME session (strict >); 30:00.000001 -> new
-    gap_min = SESSION_GAP_SEC / 60
-    rows = [
-        (1, 1, "view", 0.0, 1.0),
-        (2, 1, "view", gap_min, 1.0),                 # == gap: same session
-        (3, 1, "view", 2 * gap_min + 0.01, 1.0),      # > gap: new session
-    ]
-    out = {r["session_seq"]: r["n_events"]
-           for r in _sessionize(spark, _events(spark, rows)).collect()}
-    assert out == {1: 2, 2: 1}
-
-
-def test_sessionize_single_event_users(spark):
-    rows = [(1, 1, "view", 0.0, 1.0), (2, 2, "view", 5.0, 1.0)]
-    out = _sessionize(spark, _events(spark, rows)).collect()
-    assert len(out) == 2 and all(r["n_events"] == 1 for r in out)
-
-
 def _asof(spark, df):
-    """Apply q_event_asof_join's union+carry-forward logic in-memory."""
+    """As-of join of each click to the latest view at or before it, as a
+    union of views and clicks with the last non-null view id carried
+    forward per user."""
     from pyspark.sql import Window
 
     views = (
@@ -120,441 +93,3 @@ def test_approx_distinct_within_bound(spark):
         (F.col("id") % 5_000).alias("user_id"))
     approx = df.agg(F.approx_count_distinct("user_id", 0.01)).first()[0]
     assert abs(approx - 5_000) / 5_000 < 0.05
-
-
-# ---- interval (band) join --------------------------------------------------
-
-def _interval(spark, df, band_sec=300):
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import interval_join_counts
-    return {r["click_event_id"]: r["n_views"]
-            for r in interval_join_counts(df, band_sec).collect()}
-
-
-def test_interval_join_band_edges(spark):
-    # band is inclusive at exactly +/-300s; 300s + 1min is out
-    rows = [
-        (1, 1, "click", 10.0, 1.0),
-        (2, 1, "view", 5.0, 1.0),    # -5:00  = -300s  -> in
-        (3, 1, "view", 15.0, 1.0),   # +5:00  = +300s  -> in
-        (4, 1, "view", 16.0, 1.0),   # +6:00 out
-        (5, 1, "view", 4.0, 1.0),    # -6:00 out
-    ]
-    assert _interval(spark, _events(spark, rows)) == {1: 2}
-
-
-def test_interval_join_bucket_boundary(spark):
-    # view lands in the click's NEIGHBOR bucket (bucket width == band):
-    # click at 9:59, view at 5:01 -> dt = -4:58, in band, different bucket
-    rows = [
-        (1, 1, "click", 9.983, 1.0),
-        (2, 1, "view", 5.017, 1.0),
-    ]
-    assert _interval(spark, _events(spark, rows)) == {1: 1}
-
-
-def test_interval_join_zero_matches_kept(spark):
-    rows = [(1, 1, "click", 0.0, 1.0), (2, 2, "view", 0.0, 1.0)]
-    assert _interval(spark, _events(spark, rows)) == {1: 0}
-
-
-def test_interval_join_per_user_isolation(spark):
-    rows = [(1, 1, "click", 10.0, 1.0), (2, 2, "view", 10.0, 1.0)]
-    assert _interval(spark, _events(spark, rows)) == {1: 0}
-
-
-def test_interval_join_pair_counted_once(spark):
-    # same-bucket pair must not double count via the neighbor-bucket probes
-    rows = [(1, 1, "click", 10.0, 1.0), (2, 1, "view", 10.0, 1.0)]
-    assert _interval(spark, _events(spark, rows)) == {1: 1}
-
-
-def test_funnel_ordering_constraint(spark, tmp_path):
-    """A click BEFORE the user's first view must not advance the funnel;
-    equal timestamps count (>= semantics at every stage)."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import q_event_funnel
-
-    rows = [
-        # user 1: full ordered funnel view(0) -> click(5) -> purchase(9)
-        (1, 1, "view", 0.0, 1.0), (2, 1, "click", 5.0, 1.0), (3, 1, "purchase", 9.0, 1.0),
-        # user 2: click(0) precedes view(5) -> stage stops at 1
-        (4, 2, "click", 0.0, 1.0), (5, 2, "view", 5.0, 1.0),
-        # user 3: purchase before click -> stage 2 (view 0, click 5, purchase 3)
-        (6, 3, "view", 0.0, 1.0), (7, 3, "purchase", 3.0, 1.0), (8, 3, "click", 5.0, 1.0),
-        # user 4: never viewed -> stage 0
-        (9, 4, "signup", 1.0, 1.0),
-        # user 5: click at the exact view instant -> counts (>=)
-        (10, 5, "view", 2.0, 1.0), (11, 5, "click", 2.0, 1.0),
-    ]
-    df = _events(spark, rows)
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    df.coalesce(1).write.parquet(str(sf / "events.parquet"))
-    got = {r["user_id"]: r["stage"] for r in q_event_funnel(spark, str(sf)).collect()}
-    assert got == {1: 3, 2: 1, 3: 2, 4: 0, 5: 2}
-
-
-def test_retention_cohort_offsets(spark, tmp_path):
-    """Users cohorted by first-seen day; repeat activity counts at its
-    day offset; multiple events on one day count once."""
-    import datetime as dtm
-
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import q_event_retention
-
-    def day(d, h=0):
-        return dtm.datetime(2024, 1, d, h, 0, 0)
-
-    rows = [
-        (1, 1, "view", day(1), 1.0), (2, 1, "view", day(1, 5), 1.0),  # same day twice
-        (3, 1, "click", day(3), 1.0),                                 # offset 2
-        (4, 2, "view", day(1), 1.0),                                  # same cohort
-        (5, 2, "view", day(2), 1.0),                                  # offset 1
-        (6, 3, "view", day(2), 1.0),                                  # later cohort
-    ]
-    df = spark.createDataFrame(
-        rows, "event_id long, user_id long, event_type string, ts timestamp, value double")
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    df.coalesce(1).write.parquet(str(sf / "events.parquet"))
-    got = {(str(r["cohort_day"]), r["day_offset"]): r["n_users"]
-           for r in q_event_retention(spark, str(sf)).collect()}
-    assert got == {
-        ("2024-01-01", 0): 2,  # users 1,2 day-0 (dup same-day collapsed)
-        ("2024-01-01", 1): 1,  # user 2
-        ("2024-01-01", 2): 1,  # user 1
-        ("2024-01-02", 0): 1,  # user 3
-    }
-
-
-def test_transitions_counts_and_share(spark, tmp_path):
-    """Per-user ordered steps only: transitions never cross users, share
-    sums to 1 over the emitted matrix."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        q_event_transitions,
-    )
-
-    rows = [
-        # user 1: view -> click -> view  (steps: v->c, c->v)
-        (1, 1, "view", 0.0, 1.0), (2, 1, "click", 1.0, 1.0), (3, 1, "view", 2.0, 1.0),
-        # user 2: view -> click          (step: v->c)
-        (4, 2, "view", 0.0, 1.0), (5, 2, "click", 3.0, 1.0),
-        # user 3: single event, no step
-        (6, 3, "purchase", 0.0, 1.0),
-    ]
-    df = _events(spark, rows)
-    sf = tmp_path / "sf"
-    sf.mkdir()
-    df.coalesce(1).write.parquet(str(sf / "events.parquet"))
-    out = q_event_transitions(spark, str(sf)).collect()
-    got = {(r["from_type"], r["to_type"]): r["n_steps"] for r in out}
-    assert got == {("view", "click"): 2, ("click", "view"): 1}
-    assert abs(sum(r["share"] for r in out) - 1.0) < 1e-9
-
-
-def test_event_queries_timezone_invariant(spark):
-    """An externally-built session may run in any time zone; _events
-    pins spark.sql.session.timeZone to UTC so every ts-emitting query
-    is invariant (regression: NTZ casts and epoch conversions read wall
-    clocks through the SESSION zone — under America/New_York a DST
-    transition shifts epoch DIFFERENCES, splitting/merging sessions and
-    moving window buckets)."""
-    from sec_xbrl_finwarehouse_spark.plans import events_queries as ev
-
-    sf = "/root/testdata/sf0.001"
-    base_sess = {tuple(r) for r in ev.q_event_sessionize(spark, sf).collect()}
-    base_win = {tuple(r) for r in ev.q_event_window_agg(spark, sf).collect()}
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        ny_sess = {tuple(r) for r in ev.q_event_sessionize(spark, sf).collect()}
-        ny_win = {tuple(r) for r in ev.q_event_window_agg(spark, sf).collect()}
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    assert ny_sess == base_sess
-    assert ny_win == base_win
-
-
-def test_kmv_distinct_sketch_accuracy_and_small_exactness(spark, tmp_path):
-    """KMV sketch audit: a group with fewer than k distinct users
-    reports exactly; a 500-user group's estimate lands within the
-    sketch's statistical band (stderr ~ 1/sqrt(k-2) ~ 12.7% at k=64 --
-    the md5 hashes are fixed, so this is a deterministic assertion,
-    not a flaky one)."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        KMV_K,
-        q_event_kmv_distinct,
-    )
-
-    rows = [(i, i, "big", float(i % 60), 1.0) for i in range(500)]
-    rows += [(1000 + i, i % 10, "small", float(i), 1.0) for i in range(30)]
-    _events(spark, rows).write.parquet(str(tmp_path / "events.parquet"))
-    got = {
-        r["event_type"]: r
-        for r in q_event_kmv_distinct(spark, str(tmp_path)).collect()
-    }
-    small = got["small"]
-    assert small["n_exact"] == 10 < KMV_K
-    assert small["kmv_estimate"] == 10.0 and small["rel_err"] == 0.0
-    big = got["big"]
-    assert big["n_exact"] == 500
-    # ~4 sigma at k=64 (this corpus's fixed md5 draw sits at ~2.7
-    # sigma: estimate 674.8 -- deterministic, not flaky)
-    assert big["rel_err"] < 0.5, big
-    assert abs(abs(big["kmv_estimate"] - 500) / 500 - big["rel_err"]) < 1e-6
-
-
-def test_histogram_quantiles_interpolation_and_bound(spark, tmp_path):
-    """Uniform integers 0..99: every value occupies its own 0.25-wide
-    bin, so the sketch's interpolated estimate is bin_lo + 0.25 (mass
-    arithmetic) while the exact quantile_cont interpolates ranks --
-    both land within one bin width of each other, the deterministic
-    error bound the docstring promises for gap-free data."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        HIST_BIN_WIDTH,
-        q_event_histogram_quantiles,
-    )
-
-    rows = [(i, i, "u", float(i % 60), float(i)) for i in range(100)]
-    _events(spark, rows).write.parquet(str(tmp_path / "events.parquet"))
-    r = q_event_histogram_quantiles(spark, str(tmp_path)).collect()
-    assert len(r) == 1 and r[0]["n"] == 100
-    r = r[0]
-    # exact: quantile_cont over 0..99; est: hit bin of the q*n-th mass
-    assert r["p50_exact"] == 49.5 and r["p50_est"] == 49.25
-    assert r["p95_exact"] == 94.05 and r["p95_est"] == 94.25
-    assert r["p99_exact"] == 98.01 and r["p99_est"] == 98.25
-    for tag in ("p50", "p95", "p99"):
-        assert abs(r[f"{tag}_est"] - r[f"{tag}_exact"]) <= HIST_BIN_WIDTH
-        assert r[f"{tag}_err"] == round(
-            abs(r[f"{tag}_est"] - r[f"{tag}_exact"]) / r[f"{tag}_exact"], 6
-        )
-    assert r["p50_est"] <= r["p95_est"] <= r["p99_est"]
-
-
-def test_kmv_overlap_small_exact_and_big_band(spark, tmp_path):
-    """Theta-sketch intersection audit: two sub-k types estimate their
-    overlap exactly (theta=1.0, sketches exact); two 500-user types
-    with a 250-user overlap land inside the sketch's statistical band.
-    A zero-overlap pair still appears, estimated 0."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        KMV_K,
-        q_event_kmv_overlap,
-    )
-
-    rows = [(i, i, "big_a", float(i % 60), 1.0) for i in range(500)]
-    rows += [(1000 + i, 250 + i, "big_b", float(i % 60), 1.0)
-             for i in range(500)]
-    rows += [(2000 + i, i, "small_a", float(i), 1.0) for i in range(20)]
-    rows += [(2100 + i, 10 + i, "small_b", float(i), 1.0)
-             for i in range(20)]
-    rows += [(2200 + i, 900000 + i, "lonely", float(i), 1.0)
-             for i in range(5)]
-    _events(spark, rows).write.parquet(str(tmp_path / "events.parquet"))
-    got = {
-        (r["type_a"], r["type_b"]): r
-        for r in q_event_kmv_overlap(spark, str(tmp_path)).collect()
-    }
-    # all 10 unordered type pairs present
-    assert len(got) == 10
-    small = got[("small_a", "small_b")]
-    assert small["n_exact"] == 10 < KMV_K
-    assert small["kmv_estimate"] == 10.0 and small["rel_err"] == 0.0
-    big = got[("big_a", "big_b")]
-    assert big["n_exact"] == 250
-    # theta-intersection stderr is wide at k=64; the fixed md5 draw is
-    # deterministic, so this is a pinned assertion, not a flaky one
-    assert big["rel_err"] < 0.6, big
-    lonely = got[("big_a", "lonely")]
-    assert lonely["n_exact"] == 0 and lonely["kmv_estimate"] == 0.0
-
-
-def test_bloom_semijoin_no_false_negatives_and_fp_audit(spark, tmp_path):
-    """Bloom semi-join invariants on a corpus with known membership:
-    every true member passes (no false negatives -- the purchase row
-    itself must show n_pass == n_true == n_users), non-members can
-    only ever ADD passes (n_pass >= n_true), and the fp audit columns
-    are mutually consistent. With 100 build users in 4096 bits / 3
-    hashes the expected fp rate is ~(1-e^{-300/4096})^3 ~ 0.04%, so
-    the deterministic md5 draw staying under 5% is a safe pin."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        q_event_bloom_semijoin,
-    )
-
-    rows = [(i, i, "purchase", float(i % 60), 1.0) for i in range(100)]
-    # 'view': 100 purchasers + 900 non-purchasers
-    rows += [(1000 + i, i, "view", float(i % 60), 1.0) for i in range(100)]
-    rows += [(2000 + i, 10000 + i, "view", float(i % 60), 1.0)
-             for i in range(900)]
-    # 'error': disjoint from the build side entirely
-    rows += [(4000 + i, 90000 + i, "error", float(i % 60), 1.0)
-             for i in range(200)]
-    _events(spark, rows).write.parquet(str(tmp_path / "events.parquet"))
-    got = {r["event_type"]: r
-           for r in q_event_bloom_semijoin(spark, str(tmp_path)).collect()}
-    p = got["purchase"]
-    assert (p["n_users"], p["n_pass"], p["n_true"], p["n_false_pos"]) == (
-        100, 100, 100, 0
-    )
-    v = got["view"]
-    assert v["n_users"] == 1000 and v["n_true"] == 100
-    assert v["n_pass"] >= v["n_true"]
-    assert v["n_false_pos"] == v["n_pass"] - v["n_true"]
-    assert v["fp_rate"] == round(v["n_false_pos"] / 900, 6) < 0.05
-    e = got["error"]
-    assert e["n_true"] == 0 and e["fp_rate"] < 0.05
-
-
-def test_countmin_estimate_is_one_sided(spark, tmp_path):
-    """Count-Min's defining guarantee: collisions only ADD, so the
-    estimate NEVER undercounts (cm_estimate >= n_exact for every
-    ranked user), equality holds whenever a user's d cells are all
-    collision-free, and the ranking is the deterministic
-    (estimate DESC, user_id ASC) order."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        CM_TOPK,
-        q_event_cm_heavy_hitters,
-    )
-
-    rows = []
-    eid = 0
-    # skewed frequencies: user u makes (u % 7) * 10 + 1 events
-    for u in range(80):
-        for _ in range((u % 7) * 10 + 1):
-            rows.append((eid, u, "click", None, 1.0))
-            eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, "
-        "ts timestamp, value double",
-    ).write.parquet(str(tmp_path / "events.parquet"))
-
-    out = q_event_cm_heavy_hitters(spark, str(tmp_path)).collect()
-    assert 0 < len(out) <= CM_TOPK
-    assert all(r["cm_estimate"] >= r["n_exact"] for r in out)
-    assert all(r["over"] == r["cm_estimate"] - r["n_exact"] for r in out)
-    # ranking is by estimate desc with the user_id tiebreak
-    ranked = [(r["rank"], -r["cm_estimate"], r["user_id"]) for r in out]
-    assert ranked == sorted(ranked)
-    # the true heaviest band (61 events each) dominates the top ranks
-    top_exact = {r["n_exact"] for r in out[:5]}
-    assert max(top_exact) == 61
-
-
-def test_cm_sliding_sums_daily_counters_one_sided(spark, tmp_path):
-    """Windowed Count-Min semantics on a hand-built stream: window
-    counts ACCUMULATE across days (sum-monoid, the opposite of the HLL
-    window's idempotent max), the one-sided guarantee survives the
-    merge (estimate >= exact for every ranked row), and clean rows
-    estimate exactly."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        q_event_cm_sliding,
-    )
-
-    rows, eid = [], 0
-    # user 1: 3 events on day 0, 5 on day 1; user 2: 2 events day 0
-    for day, u, k in [(0, 1, 3), (1, 1, 5), (0, 2, 2)]:
-        for _ in range(k):
-            rows.append((eid, u, "click", day * 24 * 60.0, 1.0))
-            eid += 1
-    _events(spark, rows).write.parquet(str(tmp_path / "events.parquet"))
-    got = {(str(r["day"]), r["user_id"]): r
-           for r in q_event_cm_sliding(spark, str(tmp_path)).collect()}
-    assert got[("2024-01-01", 1)]["n_exact"] == 3
-    assert got[("2024-01-02", 1)]["n_exact"] == 8   # 3 + 5 accumulate
-    assert got[("2024-01-02", 2)]["n_exact"] == 2   # day-0 user in window
-    for r in got.values():
-        assert r["cm_estimate"] >= r["n_exact"]
-        assert r["over"] == r["cm_estimate"] - r["n_exact"]
-    # two users, no collisions at d=4 x w=128: estimates exact
-    assert got[("2024-01-02", 1)]["cm_estimate"] == 8
-
-
-def test_hll_sliding_merges_daily_registers_idempotently(spark, tmp_path):
-    """Sliding-window HLL semantics on a hand-built stream: the window
-    exact counts are the true trailing-window unions, a user active on
-    MANY window days counts once (register max is idempotent -- day 2's
-    estimate over two identical days equals the single-day estimate
-    exactly), and the estimate stays inside the m=256 error envelope
-    (deterministic fixture, so the bound is a regression pin)."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        q_event_hll_sliding,
-    )
-
-    rows, eid = [], 0
-    # day 0 and day 1: the SAME 300 users; day 2: 300 fresh users
-    for day in (0, 1):
-        for u in range(300):
-            rows.append((eid, u, "click", day * 24 * 60.0, 1.0))
-            eid += 1
-    for u in range(1000, 1300):
-        rows.append((eid, u, "click", 2 * 24 * 60.0, 1.0))
-        eid += 1
-    _events(spark, rows).write.parquet(str(tmp_path / "events.parquet"))
-    got = {str(r["day"]): r
-           for r in q_event_hll_sliding(spark, str(tmp_path)).collect()}
-    assert len(got) == 3
-    d0, d1, d2 = (got["2024-01-01"], got["2024-01-02"], got["2024-01-03"])
-    assert d0["n_exact"] == 300      # day 0 alone
-    assert d1["n_exact"] == 300      # day 0 ∪ day 1 = same users
-    assert d2["n_exact"] == 600      # + 300 fresh
-    # idempotent max-merge: identical register sets -> identical estimate
-    assert d1["hll_estimate"] == d0["hll_estimate"]
-    for r in got.values():
-        assert r["rel_err"] < 0.2    # ~3 sigma at m=256 (6.5% stderr)
-
-
-def test_ams_f2_single_user_is_exact(spark, tmp_path):
-    """With ONE distinct user every estimator is Z_j = ±n, so Z_j^2 =
-    n^2 = F2 exactly: the sketch degenerates to the exact answer, a
-    deterministic edge the estimator must hit with rel_err 0."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        q_event_ams_f2,
-    )
-
-    rows = [(i, 42, "click", None, 1.0) for i in range(7)]
-    spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, "
-        "ts timestamp, value double",
-    ).write.parquet(str(tmp_path / "events.parquet"))
-    [r] = q_event_ams_f2(spark, str(tmp_path)).collect()
-    assert r["f2_exact"] == 49
-    assert r["ams_estimate"] == 49.0
-    assert r["rel_err"] == 0.0
-
-
-def test_ams_f2_skewed_fixture_accuracy(spark, tmp_path):
-    """F2 audit on a skewed hand-built frame: f2_exact is the literal
-    sum of squared per-user counts, the median-of-means estimate lands
-    within the R=64/G=8 error envelope (within-group stderr
-    sqrt(2/8) ~ 50%; the 8-group median concentrates well inside it --
-    the fixture is deterministic, so this bound is a regression pin,
-    not a flaky statistical assertion), and rel_err is the recomputed
-    |est - exact| / exact."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        q_event_ams_f2,
-    )
-
-    rows = []
-    eid = 0
-    for u in range(60):
-        for _ in range((u % 5) * 8 + 1):  # counts 1, 9, 17, 25, 33
-            rows.append((eid, u, "click", None, 1.0))
-            eid += 1
-    for u in range(200):  # a flat singleton type: F2 = n
-        rows.append((eid, 10_000 + u, "view", None, 1.0))
-        eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, "
-        "ts timestamp, value double",
-    ).write.parquet(str(tmp_path / "events.parquet"))
-    got = {r["event_type"]: r
-           for r in q_event_ams_f2(spark, str(tmp_path)).collect()}
-    c = got["click"]
-    assert c["f2_exact"] == sum(((u % 5) * 8 + 1) ** 2 for u in range(60))
-    assert c["rel_err"] == round(
-        abs(c["ams_estimate"] - c["f2_exact"]) / c["f2_exact"], 6
-    )
-    assert c["rel_err"] < 0.5
-    v = got["view"]
-    assert v["f2_exact"] == 200
-    assert v["rel_err"] < 0.5

@@ -49,7 +49,7 @@ BNLJ_ALLOWED = {
     "emb_cosine_neardup", "emb_nearest_centroid", "emb_pq_ann_topk",
     "emb_hard_negatives", "emb_kmeans_iter", "emb_lsh_ann_topk",
     "emb_lsh_neardup", "doc_semantic_dedup", "doc_length_histogram",
-    "doc_domain_mix", "doc_tfidf_topk", "event_transitions",
+    "doc_domain_mix", "doc_tfidf_topk",
     "doc_unigram_logprob", "doc_mixture_sample",
     # r8: IVFPQ's one-row codebook array + the recall twin's exact
     # side; bigram LM's broadcast corpus-total cross join
@@ -57,10 +57,6 @@ BNLJ_ALLOWED = {
     # r8: ANN-path hard-negative mining rides the same one-row
     # codebook broadcast cross join as the IVFPQ search it reuses
     "emb_hard_negatives_ann",
-    # r8: the KMV overlap's type-pair spine is a broadcast cross join
-    # of two per-type aggregates (rows = distinct event types, bounded
-    # by the type vocabulary, never by event count)
-    "event_kmv_overlap",
     # r8: CCNet bucketing broadcast-crosses a one-row tercile aggregate
     # (and inherits the unigram LM's allowed broadcast cross join)
     "doc_ccnet_bucket",

@@ -139,14 +139,6 @@ def test_simhash_neardup_filters_before_dedup(spark, qmap):
     assert "bit_count" in join_line, plan[:2000]
 
 
-def test_funnel_single_user_partitioning(spark, qmap):
-    """Every funnel aggregation/join keys on user_id -- no shuffle may
-    hash on anything but user_id."""
-    plan = _plan(qmap["event_funnel"](spark, SF_DIR))
-    for m in re.finditer(r"Exchange hashpartitioning\(([^,]+)", plan):
-        assert m.group(1).startswith("user_id"), m.group(0)
-
-
 def test_pii_scan_is_map_only(spark, qmap):
     """PII scan/redaction is a pure projection: the only exchange is the
     small-file scan spreader, the operator itself adds none."""

@@ -398,146 +398,3 @@ def test_dup_ngram_frac_matches_reference(spark, docs, tmp_path_factory,
             assert r["dup_frac"] is None
         else:
             assert abs(r["dup_frac"] - n_dup / n_g) < 1e-6
-
-
-kmv_batches = st.lists(
-    st.lists(
-        st.tuples(st.sampled_from(["g1", "g2"]), st.integers(0, 200)),
-        min_size=0, max_size=40,
-    ),
-    min_size=1, max_size=4,
-)
-
-
-@given(batches=kmv_batches, order=st.randoms(use_true_random=False))
-@_SETTINGS
-def test_kmv_merge_is_order_and_replay_invariant(spark, batches, order):
-    """The semilattice property that makes ``kmv_k_smallest`` sketches
-    mergeable, under generated inputs: folding batches into a sketch
-    (k smallest distinct hashes of stored-sketch union batch) in ANY
-    order, with ANY batch replayed, yields the same sketch as one
-    build over everything -- including empty batches, duplicate values
-    within and across batches, and groups that never reach k."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        kmv_k_smallest,
-    )
-
-    k = 8  # small k so generated data crosses the truncation boundary
-
-    def frame(rows):
-        return spark.createDataFrame(rows, "g string, u long").select(
-            "g", F.md5(F.col("u").cast("string")).alias("h")
-        )
-
-    def merge(stored, batch):
-        return kmv_k_smallest(stored.unionByName(batch), ["g"], k).drop("rk")
-
-    empty = frame([])
-    # incremental, shuffled order, with the first batch replayed at the end
-    sequence = list(batches)
-    order.shuffle(sequence)
-    sequence.append(batches[0])
-    acc = empty
-    for b in sequence:
-        acc = merge(acc, frame(b))
-    got = sorted(map(tuple, acc.collect()))
-    # one-shot reference over the concatenation
-    all_rows = [r for b in batches for r in b]
-    want = sorted(map(tuple, merge(empty, frame(all_rows)).collect()))
-    assert got == want
-
-
-cm_batches = st.lists(
-    st.lists(
-        st.tuples(st.sampled_from(["g1", "g2"]), st.integers(0, 50)),
-        min_size=0, max_size=30,
-    ),
-    min_size=1, max_size=4,
-)
-
-
-@given(batches=cm_batches, order=st.randoms(use_true_random=False))
-@_SETTINGS
-def test_cm_merge_is_order_invariant_and_exactly_additive(
-    spark, batches, order
-):
-    """The monoid property ``event_cm_sliding``'s summed daily counters
-    rest on, under generated inputs: per-batch ``cm_with_cells``
-    counters merged by per-cell SUM in ANY order equal one build over
-    everything (commutative + associative), the total count equals
-    d x the row count exactly (every row increments exactly CM_D
-    cells), and -- why each day must fold exactly once -- merging a
-    batch twice visibly inflates its cells (addition is NOT
-    idempotent)."""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        CM_D,
-        cm_with_cells,
-    )
-
-    def frame(rows):
-        return (
-            cm_with_cells(
-                spark.createDataFrame(rows, "g string, u long"), "u"
-            )
-            .groupBy("g", "j", "pos")
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-
-    def merge(stored, batch):
-        return (
-            stored.unionByName(batch)
-            .groupBy("g", "j", "pos")
-            .agg(F.sum("c").alias("c"))
-        )
-
-    empty = frame([])
-    sequence = list(batches)
-    order.shuffle(sequence)
-    acc = empty
-    for b in sequence:
-        acc = merge(acc, frame(b))
-    got = sorted(map(tuple, acc.collect()))
-    all_rows = [r for b in batches for r in b]
-    want = sorted(map(tuple, merge(empty, frame(all_rows)).collect()))
-    assert got == want
-    assert sum(c for *_, c in got) == len(all_rows) * CM_D
-    if all_rows:
-        replayed = merge(acc, frame(batches[0]))
-        n2 = replayed.agg(F.sum("c")).collect()[0][0]
-        assert n2 == (len(all_rows) + len(batches[0])) * CM_D
-
-
-ams_counts = st.lists(st.integers(1, 9), min_size=1, max_size=6)
-
-
-@given(counts=ams_counts)
-@_SETTINGS
-def test_ams_single_user_types_estimate_exactly(spark, counts, tmp_path_factory):
-    """AMS degenerate exactness under generated inputs: when every
-    event_type holds ONE distinct user, every estimator is Z_j = ±n so
-    the median-of-means estimate equals F2 = n^2 exactly, whatever n.
-    (The generated corpus varies n per type; user ids vary so the sign
-    patterns differ across types -- exactness must hold regardless.)"""
-    from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-        q_event_ams_f2,
-    )
-
-    tmp = tmp_path_factory.mktemp("ams")
-    rows = []
-    eid = 0
-    for t, n in enumerate(counts):
-        for _ in range(n):
-            rows.append((eid, 1000 + t * 7, f"type_{t}", None, 1.0))
-            eid += 1
-    spark.createDataFrame(
-        rows,
-        "event_id long, user_id long, event_type string, "
-        "ts timestamp, value double",
-    ).write.mode("overwrite").parquet(str(tmp / "events.parquet"))
-    got = {r["event_type"]: r for r in q_event_ams_f2(spark, str(tmp)).collect()}
-    assert len(got) == len(counts)
-    for t, n in enumerate(counts):
-        r = got[f"type_{t}"]
-        assert r["f2_exact"] == n * n
-        assert r["ams_estimate"] == float(n * n)
-        assert r["rel_err"] == 0.0

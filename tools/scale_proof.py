@@ -10,7 +10,7 @@ report both engines' times. If the claim is right, the Spark/DuckDB
 ratio must FALL as data grows (fixed cost amortizes); a query whose
 ratio grows instead is genuinely slow and gets flagged.
 
-Amplification: 10 key-shifted copies of lineitem/orders/supplier/events/
+Amplification: 10 key-shifted copies of lineitem/orders/supplier/
 embeddings/documents (copy 0 unshifted, so point lookups like the
 profile ticker still resolve; join keys shift consistently so join
 cardinalities scale linearly). Document copies get a per-copy marker
@@ -59,7 +59,6 @@ SHIFTS = {  # table -> {column: stride}; strides exceed any source key
     "lineitem": {"l_orderkey": 10_000_000, "l_suppkey": 1_000_000},
     "orders": {"o_orderkey": 10_000_000, "o_custkey": 1_000_000},
     "supplier": {"s_suppkey": 1_000_000},
-    "events": {"user_id": 1_000_000},
     "embeddings": {"vec_id": 1_000_000},
     "documents": {"doc_id": 1_000_000},
 }
@@ -69,9 +68,8 @@ N_FILES = 8  # multi-file layout: scans parallelize without repartition
 QUERIES = [
     # floor-bound claims to prove
     "annual_period_filter", "upsert_latest_wins", "top_k_orders",
-    "event_window_agg", "event_asof_join", "emb_ann_topk",
-    "emb_ivf_ann_topk", "emb_lsh_ann_topk", "event_interval_join",
-    "event_sessionize", "emb_lsh_neardup", "event_funnel",
+    "emb_ann_topk", "emb_ivf_ann_topk", "emb_lsh_ann_topk",
+    "emb_lsh_neardup",
     # previously perf-weak: confirm the ratio trend at 10x
     "statements_annual", "ratios_annual", "screener",
     "window_dedup_latest", "pivot_wide",
@@ -80,7 +78,6 @@ QUERIES = [
     "doc_repetition", "doc_unigram_logprob", "doc_bigram_logprob",
     "doc_pii_scan",
     "doc_global_shuffle", "emb_int8_quantize", "emb_pq_ann_topk",
-    "event_transitions",
     # r5: paragraph dedup runs on the marker-amplified corpus ON
     # PURPOSE -- cross-copy paragraphs past each copy's first chunk are
     # identical, which is exactly the corpus-wide boilerplate workload
@@ -91,11 +88,9 @@ QUERIES = [
     # reason as paragraph dedup: cross-copy spans ARE the boilerplate
     # workload, and the shingle winner election stays linear in it
     "doc_span_dedup",
-    # r5 continuation: calendar densification + SCD2 run on the 10x
-    # event stream (user_id-shifted copies multiply the island count
-    # linearly); staged retrieval + mixture sampling on the amplified
-    # embeddings/documents
-    "event_gap_fill", "event_scd2", "emb_prefix_rerank_topk",
+    # r5 continuation: staged retrieval + mixture sampling on the
+    # amplified embeddings/documents
+    "emb_prefix_rerank_topk",
     "doc_mixture_sample",
     # r8: token-window chunking — map-side explode, floor-bound at sf0.1
     "doc_chunk",
@@ -118,34 +113,6 @@ QUERIES = [
     # label filter ahead of the pool cut; proves mining cost tracks the
     # ANN query cost, not the corpus sweep, as data grows
     "emb_hard_negatives_ann",
-    # r8: sketch family — KMV distinct (shuffle k-sized per group after
-    # the distinct audit) and histogram quantiles (shuffle bounded by
-    # range/width); user_id-shifted event copies multiply the distinct
-    # population linearly, the honest sketch workload
-    "event_kmv_distinct",
-    "event_kmv_overlap",
-    "event_histogram_quantiles",
-    # r9: HLL distinct — the register-array sibling; same honest
-    # workload as KMV (user_id-shifted copies multiply the distinct
-    # population linearly), state bounded at m=256 registers per group
-    "event_hll_distinct",
-    # r9: Count-Min heavy hitters — additive counter fold bounded at
-    # d*w cells per type; candidate audit side scales linearly
-    "event_cm_heavy_hitters",
-    # r9: AMS F2 — signed counter fold bounded at R rows per type; the
-    # user_id-shifted copies multiply the (type, user) pre-agg
-    # linearly, the honest moment-estimation workload
-    "event_ams_f2",
-    # r9: sliding-window HLL — daily register fold bounded at m rows
-    # per day, window merge over the register table only; user_id
-    # shifts multiply the per-day distinct population linearly
-    "event_hll_sliding",
-    # r9: sliding-window Count-Min — daily counter fold bounded at
-    # d*w cells per day, window merge sums the counter table only
-    "event_cm_sliding",
-    # r8: bloom semi-join — build and probe sides both scale linearly
-    # with the user_id-shifted copies; the bit table stays 4096 rows
-    "event_bloom_semijoin",
     # r8: A-ES weighted sampling — per-doc key + TakeOrdered, marker
     # amplification leaves the draw arithmetic untouched
     "doc_weighted_sample",
@@ -404,14 +371,6 @@ def build(spark, out_dir: str) -> None:
 
     for name, shifts in SHIFTS.items():
         src = spark.read.parquet(f"{SRC}/{name}.parquet")
-        if name == "events":
-            # normalize ts across the parquet flavors the driver has
-            # shipped -- the SHARED dispatch, so the scaled corpus and
-            # the query path can never canonicalize differently
-            from sec_xbrl_finwarehouse_spark.plans.events_queries import (
-                normalize_events_ts,
-            )
-            src = normalize_events_ts(src)
         parts = []
         for i in range(COPIES):
             c = src
