@@ -15,12 +15,13 @@ Scale notes (100 TB corpus):
 * The exhaustive Jaccard join is the *oracle-checkable* spelling
   (explode shingles -> equi-join on shingle -> count); its cost is
   driven by document-frequency of the hottest shingle. The scale path
-  is ``doc_minhash_lsh_dedup``: fixed-size signatures (one shuffle),
-  banded buckets, then exact verification ONLY on candidates, from
-  each candidate document's shingle array joined in by doc_id -- the
-  standard sub-quadratic near-dup pipeline. The verification shuffles
-  one array row per candidate side, never the exploded shingles, so
-  its cost is |candidates| x shingles-per-doc.
+  is ``doc_minhash_lsh_dedup``: band keys from one generator-fed
+  GROUP BY (doc_id, band) with two min() buffers (one shuffle), a
+  self-join on the keys, then exact verification ONLY on candidates,
+  from each candidate document's shingle array joined in by doc_id --
+  the standard sub-quadratic near-dup pipeline. The verification
+  shuffles one array row per candidate side, never the exploded
+  shingles, so its cost is |candidates| x shingles-per-doc.
 * Dedup clusters label the verified pair graph on the driver
   (operators/connected_components.py): the driver holds the pair
   graph, never the corpus, which joins the labels in Spark.
@@ -36,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.connected_components import hash_min_components
+from ..schemas import DOCUMENTS_SCHEMA
 from ..sources.tables import parallelize_scan, table_path
 from .sqlfrag import hex_prefix_bigint_sql, hex_prefix_frac_sql
 
@@ -129,12 +131,19 @@ def _documents(
     per-doc aggregations downstream reuse the exchange. No-op at real
     scale -- see :func:`parallelize_scan`.
 
+    The scan reads with the declared DOCUMENTS_SCHEMA, so building it
+    launches no Spark job (an inferred parquet schema costs one
+    footer-reading job per call).
+
     ``kernel=True`` for scans that feed an Arrow/pandas kernel: the
     split width is additionally row-aware (KERNEL_MIN_SPLIT_ROWS) so
     the kernel never receives near-empty Arrow batches (guide §4.2;
     the r12 anti-scaling fix -- see parallelize_scan)."""
     return parallelize_scan(
-        spark.read.parquet(table_path(sf_dir, "documents")), "doc_id",
+        spark.read.schema(DOCUMENTS_SCHEMA).parquet(
+            table_path(sf_dir, "documents")
+        ),
+        "doc_id",
         min_split_rows=KERNEL_MIN_SPLIT_ROWS if kernel else None,
     )
 
@@ -913,46 +922,63 @@ WHERE (len(list_intersect(a.shingles, b.shingles))::double
 
 # ---- MinHash + LSH near-dup (the scale path; same output contract) ---------
 
+# MINHASH_COEFFS grouped by LSH band, as one SQL literal of type
+# array<struct<a0, b0, a1, b1>> (bigints): a generator over it yields
+# one row per band carrying that band's coefficient pairs
+_MINHASH_BANDS_SQL = "array(" + ", ".join(
+    "named_struct(" + ", ".join(
+        f"'a{r}', {a}L, 'b{r}', {b}L"
+        for r, (a, b) in enumerate(MINHASH_COEFFS[i:i + MINHASH_BAND_ROWS])
+    ) + ")"
+    for i in range(0, MINHASH_HASHES, MINHASH_BAND_ROWS)
+) + ")"
+
+
+def _band_signatures(hashed: DataFrame) -> DataFrame:
+    """(doc_id, sh) rows, ``sh`` a shingle's base hash in [0, p) ->
+    (doc_id, band, h0, h1) rows: each document's MinHash signature, one
+    row per band, ``h<r>`` the min over the document's shingles of
+    ``(a * sh + b) mod p`` for the band's r-th coefficient pair.
+
+    ``posexplode`` over _MINHASH_BANDS_SQL turns each shingle into one
+    row per band, and one GROUP BY (doc_id, band) keeps a min() buffer
+    per band row, so the plan stays a few operators wide at any
+    MINHASH_HASHES. A GROUP BY doc_id with one min() per hash gives
+    the same values, but on this workload analysing, planning and
+    compiling its 128 aggregates cost more per query than the
+    executors spent on the data."""
+    mins = ", ".join(
+        f"min((c.a{r} * sh + c.b{r}) % {MINHASH_PRIME}L) AS h{r}"
+        for r in range(MINHASH_BAND_ROWS)
+    )
+    return hashed.sparkSession.sql(
+        f"""
+        SELECT doc_id, band, {mins}
+        FROM {{hashed}} LATERAL VIEW posexplode({_MINHASH_BANDS_SQL}) AS band, c
+        GROUP BY doc_id, band
+        """,
+        hashed=hashed,
+    )
+
+
 def minhash_bands_of(ex: DataFrame) -> DataFrame:
     """(doc_id, shingle) rows -> (doc_id, band, bh) LSH band keys.
 
     Hash each shingle ONCE (xxhash64 -> pmod p), derive the
     {MINHASH_HASHES} signature values as affine permutations of that
-    single hash (MINHASH_COEFFS), one groupBy(doc_id) with partial mins,
-    then explode to band keys (the input of :func:`_lsh_candidates`).
-
-    r12 OPTIMIZATION: composed as ONE ``spark.sql`` template instead of
-    ~400 Column objects (128 min terms + 64 band structs, each costing
-    ~10 py4j round-trips) -- the Column spelling spent 2.3 s of DRIVER
-    time per query composing this block (cProfile: 22k socket round
-    trips; guide §1.2 applied to the driver). Identical rows and schema
-    (differentially tested old-vs-new at sf0.1, diff 0)."""
-    mins = ", ".join(
-        f"min(({a}L * sh + {b}L) % {MINHASH_PRIME}L) AS h{i}"
-        for i, (a, b) in enumerate(MINHASH_COEFFS)
+    single hash (MINHASH_COEFFS), one row per (doc_id, band)
+    (:func:`_band_signatures`), and hash each band's values into its
+    key, ``bh = xxhash64(h0, h1)`` (the input of
+    :func:`_lsh_candidates`). tests/test_text.py keeps the earlier
+    128-aggregate spelling as the differential reference: the rows
+    are identical."""
+    hashed = ex.select(
+        "doc_id",
+        F.pmod(F.xxhash64("shingle"), F.lit(MINHASH_PRIME)).alias("sh"),
     )
-    n_bands = MINHASH_HASHES // MINHASH_BAND_ROWS
-    bands = ", ".join(
-        "struct({b} AS band, xxhash64({cols}) AS bh)".format(
-            b=b,
-            cols=", ".join(
-                f"h{b * MINHASH_BAND_ROWS + r}"
-                for r in range(MINHASH_BAND_ROWS)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    return ex.sparkSession.sql(
-        f"""
-        WITH hashed AS (
-          SELECT doc_id, pmod(xxhash64(shingle), {MINHASH_PRIME}) AS sh
-          FROM {{ex}}
-        ),
-        sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id)
-        SELECT doc_id, bk.band AS band, bk.bh AS bh
-        FROM sig LATERAL VIEW explode(array({bands})) AS bk
-        """,
-        ex=ex,
+    hs = [f"h{r}" for r in range(MINHASH_BAND_ROWS)]
+    return _band_signatures(hashed).select(
+        "doc_id", "band", F.xxhash64(*hs).alias("bh")
     )
 
 
@@ -1014,13 +1040,13 @@ def q_doc_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability at J = 0.5 is (1 - 0.25)^64 ~= 1e-8.
 
     Plan shape: one persisted (doc_id, shingle array) frame; its
-    explode feeds the signatures (each shingle hashed ONCE, xxhash64 ->
-    pmod p, 128 affine permutations of that hash, see MINHASH_COEFFS,
-    one groupBy(doc_id) with 128 partial mins), one explode to band
-    keys + self-join on (band, band_hash), then exact Jaccard on the
-    candidate pairs only, from the same arrays
-    (:func:`_verify_candidates`). Everything is built-in expressions --
-    no Python in the hot path."""
+    explode feeds the band keys (each shingle hashed ONCE, xxhash64 ->
+    pmod p, 128 affine permutations of that hash generated as rows,
+    see MINHASH_COEFFS, one GROUP BY (doc_id, band) with two partial
+    mins; :func:`minhash_bands_of`), a self-join on (band, band_hash),
+    then exact Jaccard on the candidate pairs only, from the same
+    arrays (:func:`_verify_candidates`). Everything is built-in
+    expressions -- no Python in the hot path."""
     sh = _doc_shingle_arrays(spark, sf_dir)
     return _verify_candidates(sh, _lsh_candidates(sh))
 
@@ -1054,7 +1080,14 @@ def q_doc_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate-doc ids), so the audit costs O(candidates x
     shingles-per-doc), independent of corpus size; the pair set itself
     comes from the LSH path's banded candidates, never from an
-    all-pairs join."""
+    all-pairs join.
+
+    Plan shape: a signature is one (doc_id, band, h0, h1) row per band,
+    from the same generator-fed aggregate as :func:`minhash_bands_of`
+    (:func:`_band_signatures`); the two documents' rows are joined on
+    ``band`` and ``jaccard_est`` is the count of agreeing values over
+    {MINHASH_HASHES}.0. No plan node carries a 128-wide row, so no stage
+    ships a MiB-sized task binary."""
     # same pair pipeline as q_doc_minhash_lsh_dedup, sharing THIS
     # persisted shingle-array frame with the signatures below (calling
     # the query would re-scan + re-persist its own copy)
@@ -1077,10 +1110,14 @@ def q_doc_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (64-band miss math in the module docstring), so the waste is
     # bounded and the r12 scale contract (audit cost independent of
     # corpus size) still holds.
+    # The doc ids stay un-deduplicated (a semi-join needs no distinct
+    # build side): with an aggregate under it, the optimizer injects a
+    # runtime bloom filter from a materialized shingle frame into this
+    # side, and the MiB-sized filter then ships in every stage's task
+    # binary (seen when q_doc_minhash_lsh_dedup ran first).
     docs = (
         cand.select(F.col("d1").alias("doc_id"))
         .unionByName(cand.select(F.col("d2").alias("doc_id")))
-        .distinct()
     )
     hp = sh.join(F.broadcast(docs), "doc_id", "left_semi").select(
         "doc_id", F.explode("shingles").alias("shingle")
@@ -1091,35 +1128,30 @@ def q_doc_minhash_jaccard_est(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("long") % MINHASH_PRIME
         ).alias("sh"),
     )
-    # r12 OPTIMIZATION: one SQL template instead of 128 composed min()
-    # Columns -- the Column spelling cost ~1.1 s of driver time per
-    # compose (py4j round-trips; see minhash_bands_of). Same rows.
-    mins = ", ".join(
-        f"min(({a}L * sh + {b}L) % {MINHASH_PRIME}L)"
-        for a, b in MINHASH_COEFFS
-    )
     # persisted: sig is joined twice below (d1 and d2 sides); without
     # the persist the md5 signature aggregation evaluates once per side
-    sig = _persist_hot(hp.sparkSession.sql(
-        f"SELECT doc_id, array({mins}) AS sig FROM {{hp}} GROUP BY doc_id",
-        hp=hp,
-    ))
+    sig = _persist_hot(_band_signatures(hp))
+
+    def side(doc: str, prefix: str) -> DataFrame:
+        return sig.select(
+            F.col("doc_id").alias(doc), "band",
+            *[F.col(f"h{r}").alias(f"{prefix}{r}")
+              for r in range(MINHASH_BAND_ROWS)],
+        )
+
+    # every document of a verified pair has a shingle, so both sides
+    # have a row for every band and the band join pairs them up exactly
+    agree = sum(
+        (F.col(f"x{r}") == F.col(f"y{r}")).cast("int")
+        for r in range(MINHASH_BAND_ROWS)
+    )
     j = (
-        pairs.join(
-            sig.select(F.col("doc_id").alias("d1"), F.col("sig").alias("sa")),
-            "d1",
-        )
-        .join(
-            sig.select(F.col("doc_id").alias("d2"), F.col("sig").alias("sb")),
-            "d2",
-        )
+        pairs.join(side("d1", "x"), "d1")
+        .join(side("d2", "y"), ["d2", "band"])
+        .groupBy("d1", "d2", "jaccard")
+        .agg(F.sum(agree).alias("agree"))
     )
-    agree = F.aggregate(
-        F.zip_with("sa", "sb", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
-    est = agree / F.lit(float(MINHASH_HASHES))
+    est = F.col("agree") / F.lit(float(MINHASH_HASHES))
     return j.select(
         "d1", "d2", "jaccard",
         est.alias("jaccard_est"),
@@ -1278,40 +1310,18 @@ def q_doc_dedup_keep_best(
     pass through with keep=true. One extra shuffle on cluster_rep over
     the cluster-member subset only.
 
-    ``quality`` lets a composing query (doc_corpus_build) inject an
-    already-persisted quality frame so the corpus is not re-tokenized
-    here. When absent, the quality pass is persisted and materialized
-    from a side thread WHILE the cluster chain's jobs run on the main
-    thread (guide §2.6 -- its driver-blocking actions otherwise leave
-    the cores idle for exactly the time the quality tokenize pass
-    needs)."""
+    ``n_tokens`` is q_doc_quality's token count, ``size(_tokens(text))``,
+    taken straight from the documents scan: one projection, no second
+    quality pass. ``quality`` lets a composing query (doc_corpus_build)
+    inject the quality frame it already holds instead."""
     if quality is None:
-        quality = _persist_hot(
-            q_doc_quality(spark, sf_dir).select("doc_id", "n_tokens")
+        quality = _documents(spark, sf_dir).select(
+            "doc_id", F.size(_tokens(F.col("text"))).alias("n_tokens")
         )
-        from concurrent.futures import ThreadPoolExecutor
-
-        from pyspark.util import inheritable_thread_target
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-
-            def _materialize() -> None:
-                spark.sparkContext.setJobDescription(
-                    "doc_dedup_keep_best: quality pass"
-                )
-                quality.count()
-
-            fut = pool.submit(inheritable_thread_target(spark)(_materialize))
-            clusters = q_doc_dedup_clusters(spark, sf_dir).select(
-                "doc_id", "cluster_rep"
-            )
-            fut.result()
-    else:
-        quality = quality.select("doc_id", "n_tokens")
-        clusters = q_doc_dedup_clusters(spark, sf_dir).select(
-            "doc_id", "cluster_rep"
-        )
-    j = clusters.join(quality, "doc_id")
+    clusters = q_doc_dedup_clusters(spark, sf_dir).select(
+        "doc_id", "cluster_rep"
+    )
+    j = clusters.join(quality.select("doc_id", "n_tokens"), "doc_id")
     w = Window.partitionBy("cluster_rep").orderBy(
         F.col("n_tokens").desc(), F.col("doc_id").asc()
     )

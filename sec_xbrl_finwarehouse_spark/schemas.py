@@ -114,6 +114,17 @@ RATIOS_ANNUAL_SCHEMA = T.StructType([
     T.StructField("asset_turnover", T.DoubleType(), True),
 ])
 
+# the ``documents`` table of the test data (TESTDATA.md). Declared so a scan
+# launches no schema-inference job; a file without some of these
+# columns reads them as NULL.
+DOCUMENTS_SCHEMA = T.StructType([
+    T.StructField("doc_id", T.LongType(), True),
+    T.StructField("text", T.StringType(), True),
+    T.StructField("lang", T.StringType(), True),
+    T.StructField("source", T.StringType(), True),
+    T.StructField("n_chars", T.LongType(), True),
+])
+
 # --------------------------------------------------------------------------
 # Nested companyfacts document (SEC XBRL JSON; ingest_facts.py:39-63)
 # facts: taxonomy -> tag -> {units: unit -> [fact...]}

@@ -99,16 +99,6 @@ def get_spark(
         # users pass --driver-memory.
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Wide-schema codegen: whole-stage codegen silently disables when
-        # a plan node carries more than spark.sql.codegen.maxFields
-        # (default 100) fields. The MinHash signature aggregation holds
-        # 128 min() buffers and the statements pivot ~12 wide columns x
-        # struct fields -- measured 27% faster on the signature stage
-        # with the limit raised (3.38 s -> 2.47 s at sf0.1; the default
-        # plan showed ZERO WholeStageCodegen spans). 400 covers every
-        # plan in this engine while still guarding against pathological
-        # thousand-column codegen blowups.
-        .config("spark.sql.codegen.maxFields", "400")
     )
     # Shuffle/spill files on tmpfs when available: this host's disk is
     # intermittently IO-throttled (load spikes with 97% idle CPU), which

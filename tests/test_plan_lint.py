@@ -84,13 +84,26 @@ ARROW_ALLOWED = {
 }
 
 
+# Spark's whole-stage codegen limit (spark.sql.codegen.maxFields,
+# default 100): a plan node with more nested output fields than this
+# runs interpreted. The session keeps the default.
+CODEGEN_MAX_FIELDS = 100
+
+
 @pytest.fixture(scope="module")
-def plans(spark):
-    out = {}
-    for name, fn in entrymod.queries().items():
-        out[name] = fn(spark, SF_DIR)._jdf.queryExecution()\
-            .executedPlan().toString()
-    return out
+def query_executions(spark):
+    return {
+        name: fn(spark, SF_DIR)._jdf.queryExecution()
+        for name, fn in entrymod.queries().items()
+    }
+
+
+@pytest.fixture(scope="module")
+def plans(query_executions):
+    return {
+        name: qe.executedPlan().toString()
+        for name, qe in query_executions.items()
+    }
 
 
 def test_no_banned_plan_nodes_anywhere(plans):
@@ -117,6 +130,60 @@ def test_arrow_udfs_only_in_lsh_family(plans):
         if "ArrowEvalPython" in plan and name not in ARROW_ALLOWED
     ]
     assert offenders == [], offenders
+
+
+def _nested_fields(dt) -> int:
+    """Field count of a data type (its JSON form), as Spark's
+    WholeStageCodegenExec counts it against the codegen limit."""
+    if isinstance(dt, dict):
+        kind = dt["type"]
+        if kind == "struct":
+            return sum(_nested_fields(f["type"]) for f in dt["fields"])
+        if kind == "array":
+            return _nested_fields(dt["elementType"])
+        if kind == "map":
+            return (_nested_fields(dt["keyType"])
+                    + _nested_fields(dt["valueType"]))
+    return 1
+
+
+def _widest_node(plan) -> int:
+    """Most nested output fields of any node of a physical plan,
+    counting the plans of cached relations and adaptive plans too."""
+    import json
+
+    width = _nested_fields(json.loads(plan.schema().json()))
+    subplans = [plan.children().apply(i) for i in range(plan.children().size())]
+    subplans += [plan.innerChildren().apply(i)
+                 for i in range(plan.innerChildren().size())]
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        subplans.append(plan.inputPlan())
+    for sub in subplans:
+        if sub.getClass().getName().startswith("org.apache.spark.sql.execution"):
+            width = max(width, _widest_node(sub))
+    return width
+
+
+def test_widest_node_counter_self_check(spark):
+    """Negative control: a 128-aggregate GROUP BY (the shape of the
+    old MinHash signature) must count past the limit, so the gate
+    below cannot pass by counting nothing."""
+    from pyspark.sql import functions as F
+
+    wide = spark.range(10).groupBy((F.col("id") % 2).alias("k")).agg(
+        *[F.min(F.col("id") + i).alias(f"m{i}") for i in range(128)]
+    )
+    assert _widest_node(wide._jdf.queryExecution().sparkPlan()) > 128
+
+
+def test_no_plan_node_past_the_codegen_field_limit(query_executions):
+    """Every ``queries()`` plan stays inside whole-stage codegen at Spark's
+    default field limit, so the session needs no raised limit."""
+    offenders = {
+        name: w for name, qe in query_executions.items()
+        if (w := _widest_node(qe.sparkPlan())) > CODEGEN_MAX_FIELDS
+    }
+    assert offenders == {}, offenders
 
 
 def _marker_idx(line: str) -> int:

@@ -166,6 +166,59 @@ def test_minhash_lsh_matches_exhaustive_pairs(spark, tmp_path):
         spark.catalog.clearCache()
 
 
+def _reference_bands(ex):
+    """The 128-aggregate spelling of :func:`minhash_bands_of` that the
+    generator-fed plan replaced: one GROUP BY doc_id with a min() per
+    hash, then one struct per band. Kept as the reference the band
+    keys must reproduce row for row."""
+    from sec_xbrl_finwarehouse_spark.plans import text_queries as tq
+
+    p, r = tq.MINHASH_PRIME, tq.MINHASH_BAND_ROWS
+    mins = ", ".join(
+        f"min(({a}L * sh + {b}L) % {p}L) AS h{i}"
+        for i, (a, b) in enumerate(tq.MINHASH_COEFFS)
+    )
+    bands = ", ".join(
+        "struct({b} AS band, xxhash64({cols}) AS bh)".format(
+            b=b, cols=", ".join(f"h{b * r + k}" for k in range(r)))
+        for b in range(tq.MINHASH_HASHES // r)
+    )
+    return ex.sparkSession.sql(
+        f"""
+        WITH hashed AS (
+          SELECT doc_id, pmod(xxhash64(shingle), {p}) AS sh FROM {{ex}}
+        ),
+        sig AS (SELECT doc_id, {mins} FROM hashed GROUP BY doc_id)
+        SELECT doc_id, bk.band AS band, bk.bh AS bh
+        FROM sig LATERAL VIEW explode(array({bands})) AS bk
+        """,
+        ex=ex,
+    )
+
+
+def test_minhash_bands_match_the_128_aggregate_reference(spark):
+    """minhash_bands_of returns exactly the (doc_id, band, bh) rows of
+    the 128-aggregate reference, with the same schema, on seeded
+    corpora with planted near-copies, identical docs, docs under 3
+    tokens and NULL, empty and blank text."""
+    from sec_xbrl_finwarehouse_spark.plans import text_queries as tq
+
+    for seed in (1, 2):
+        toks = _docs(spark, _seeded_dedup_corpus(seed)).select(
+            "doc_id", _tokens(F.col("text")).alias("toks")
+        )
+        ex = toks.select(
+            "doc_id", F.explode(_shingles(F.col("toks"))).alias("shingle")
+        )
+        got, want = tq.minhash_bands_of(ex), _reference_bands(ex)
+        assert got.schema == want.schema
+        want_rows = sorted(tuple(r) for r in want.collect())
+        assert sorted(tuple(r) for r in got.collect()) == want_rows
+        n_docs = ex.select("doc_id").distinct().count()
+        n_bands = tq.MINHASH_HASHES // tq.MINHASH_BAND_ROWS
+        assert len(want_rows) == n_docs * n_bands and n_docs >= 30
+
+
 def test_dedup_clusters_transitive_chain(spark, tmp_path):
     """A~B and B~C (but A!~C directly) must land in ONE cluster with the
     min doc_id as rep; unrelated docs keep themselves."""
@@ -302,6 +355,54 @@ def test_keep_best_prefers_longest_in_cluster(spark, tmp_path):
     shutil.rmtree(sf, ignore_errors=True)
 
 
+def test_keep_best_persists_at_most_two_frames(spark, tmp_path):
+    """One keep-best collect leaves at most two RDDs persisted (the
+    shingle arrays and the band table of the pair pipeline): it takes
+    n_tokens from the documents scan and persists no quality frame."""
+    from sec_xbrl_finwarehouse_spark.plans import text_queries as tq
+
+    base = [f"w{i}" for i in range(40)]
+    texts = [" ".join(base), " ".join(base + ["x1", "x2"]),
+             " ".join(f"q{i}" for i in range(30))]
+    sf = tmp_path / "sf"
+    sf.mkdir()
+    _docs(spark, texts).coalesce(1).write.parquet(str(sf / "documents.parquet"))
+
+    spark.catalog.clearCache()
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    rows = tq.q_doc_dedup_keep_best(spark, str(sf)).collect()
+    added = persisted().size() - before
+    spark.catalog.clearCache()
+    assert len(rows) == 3
+    assert added <= 2
+
+
+def test_documents_scan_starts_no_job(spark):
+    """Building the documents scan runs no Spark job (its schema is
+    declared, not inferred from the parquet footers), and it reads the
+    same rows as a plain parquet read."""
+    from sec_xbrl_finwarehouse_spark.plans import text_queries as tq
+
+    sf = "/root/testdata/sf0.001"
+    sc = spark.sparkContext
+    drain = sc._jsc.sc().listenerBus().waitUntilEmpty
+    group = "documents-scan"
+    drain()
+    sc.setJobGroup(group, "build the documents scan")
+    try:
+        docs = tq._documents(spark, sf)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    drain()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    plain = spark.read.parquet(f"{sf}/documents.parquet")
+    assert docs.columns == plain.columns
+    assert sorted(map(tuple, docs.collect())) == sorted(map(tuple, plain.collect()))
+
+
 def test_corpus_build_selection_conjunction(spark, tmp_path):
     """selected = quality_keep AND dedup_keep: a high-quality near-dup
     that loses keep-best is excluded; a low-quality singleton is
@@ -330,9 +431,9 @@ def test_corpus_build_selection_conjunction(spark, tmp_path):
 @pytest.mark.parametrize("query", ["q_doc_dedup_keep_best",
                                    "q_doc_corpus_build"])
 def test_side_thread_jobs_stay_in_callers_job_group(spark, tmp_path, query):
-    """Both queries run their quality pass on a side thread. Every job
-    the call starts (side thread included) lands in the caller's job
-    group, so per-group accounting and cancelJobGroup see all of it."""
+    """Every job the call starts, corpus-build's side-thread quality
+    pass included, lands in the caller's job group, so per-group
+    accounting and cancelJobGroup see all of it."""
     from sec_xbrl_finwarehouse_spark.plans import text_queries as tq
 
     base = [f"w{i}" for i in range(40)]
